@@ -10,11 +10,13 @@ import scala.jdk.CollectionConverters._
   * own integration tests do exactly this —
   * `integration_tests/dbt_project.yml:29-92`) or a real HTTP client.
   *
-  * Connectors are invoked from executors inside UDF/mapPartitions closures,
-  * so implementations must be Serializable. Spark may retry tasks: real
-  * implementations need idempotency keys (we pass a stable per-record
-  * `rowKey` for exactly that — SURVEY §7 hard part (5)); the mocks are
-  * stateless per record so retries are naturally idempotent.
+  * Connectors are invoked from executors inside UDF closures, so
+  * implementations must be Serializable. Spark may retry a task; a retry
+  * re-calls the connector for every record of the partition, and no
+  * idempotency key is passed, so a retried record reaches the remote
+  * twice. The mocks return canned payloads but count calls and staged
+  * batches in `MockState`, so a retry shows up in their counters.
+  * Keyed, exactly-once delivery is ROADMAP item 2.
   */
 trait SalesforceBulkApi extends Serializable {
   /** Ref U-SF1 (`salesforce_bulk_load.sql:15`) → job metadata JSON. */
@@ -45,8 +47,8 @@ trait SfmcApi extends Serializable {
   * HTTP calls fail transiently, and a failed UDF call otherwise fails the
   * task, which makes Spark retry the WHOLE partition (re-pushing every
   * record in it). Retrying per call keeps the blast radius to one record.
-  * Real deployments combine this with per-record idempotency keys on the
-  * remote side (the traits' scaladoc covers why).
+  * A retried call whose first attempt did reach the remote is delivered
+  * twice (no idempotency key; see the traits' scaladoc).
   */
 class RetryingSalesforceApi(
     delegate: SalesforceBulkApi,

@@ -25,8 +25,7 @@ final case class SalesforceConfig(
     objectName: String,
     loadType: String = "upsert",
     externalIdField: Option[String] = None,
-    serialLoad: Boolean = false,
-    fullRefresh: Boolean = false) extends PushConfig {
+    serialLoad: Boolean = false) extends PushConfig {
   val app = "salesforce"
   require(Set("delete", "hardDelete", "insert", "update", "upsert")(loadType),
     s"invalid load_type '$loadType'")
@@ -48,8 +47,7 @@ final case class MarketingCloudConfig(
     forceCheck: Boolean = false,
     encrypted: Boolean = false,
     gpgPublicKey: Option[String] = None,
-    batchSize: Int = 100,
-    fullRefresh: Boolean = false) extends PushConfig {
+    batchSize: Int = 100) extends PushConfig {
   val app = "marketing_cloud"
   require(Set("AddOnly", "UpdateOnly", "AddAndUpdate", "Overwrite")(importType),
     s"invalid import_type '$importType'")

@@ -725,8 +725,8 @@ object Dedup {
     *
     * Scale shape: base reduces to its DISTINCT fingerprint index — 16
     * bytes/doc, the thing a production pipeline keeps as a bucketed
-    * table (then this join is exchange-free on the base side, see
-    * `tracking.BucketedTrackingTable` for the same pattern) — and all
+    * table (then this join is exchange-free on the base side: a scan
+    * bucketed by the join key needs no shuffle) — and all
     * per-doc work is O(|delta|): the first-in-batch window and the
     * index join both key on the delta's fingerprints. The base corpus
     * text is never re-read beyond the one fingerprint scan.

@@ -6,7 +6,9 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import graft.connector.SfmcApi
 import graft.model.{MarketingCloudConfig, PushModel}
-import graft.tracking.TrackingTable
+import graft.tracking.{TrackingStore, TrackingTable}
+import org.json4s._
+import org.json4s.jackson.JsonMethods.compact
 
 /** EP-SFMC: the Marketing Cloud data-extension upload
   * (`macros/apps/marketing_cloud.sql` +
@@ -40,17 +42,10 @@ final class MarketingCloudPush(
     spark: SparkSession,
     api: SfmcApi,
     tasks: TrackingTable,
-    logs: graft.tracking.TrackingStore) {
+    logs: TrackingStore) {
 
   def run(model: PushModel, cfg: MarketingCloudConfig): PushReport = {
-    val source0 = model.build(spark)
-    val record = source0.schema.fields.find(_.name.equalsIgnoreCase("record"))
-      .getOrElse(throw new IllegalArgumentException(
-        s"model ${model.name} must produce a RECORD column"))
-    val recs = (record.dataType match {
-      case _: StructType => source0.select(to_json(col(record.name)).as("record"))
-      case _ => source0.select(col(record.name).cast("string").as("record"))
-    })
+    val recs = Record.of(model, model.build(spark))
 
     // 3. Global numbering without a global sort: zipWithIndex (0-based → 1-based).
     val numbered = {
@@ -68,13 +63,15 @@ final class MarketingCloudPush(
       if (total == 0) return PushReport(model.name, skippedEmpty = true, None, 0)
 
       // 2. Ensure the data extension exists (ref :21-31; config per README.md:77-88).
-      val fieldsJson = cfg.dataExtensionFields.map(m =>
-        m.map { case (k, v) => s""""$k":"$v"""" }.mkString("{", ",", "}")).mkString("[", ",", "]")
-      val manageConfig =
-        s"""{"operation":"ensure_exists","data_extension_name":"${cfg.dataExtensionName}",""" +
-          s""""data_extension_path":"${cfg.dataExtensionPath.getOrElse("")}",""" +
-          s""""data_extension_fields":$fieldsJson,"force_check":${cfg.forceCheck}}"""
-      api.manageDataExtension(manageConfig)
+      def obj(m: Map[String, String]): JObject =
+        JObject(m.map { case (k, v) => k -> JString(v) }.toList)
+      api.manageDataExtension(compact(JObject(
+        "operation" -> JString("ensure_exists"),
+        "data_extension_name" -> JString(cfg.dataExtensionName),
+        "data_extension_path" -> JString(cfg.dataExtensionPath.getOrElse("")),
+        "data_extension_properties" -> obj(cfg.dataExtensionProperties),
+        "data_extension_fields" -> JArray(cfg.dataExtensionFields.map(obj).toList),
+        "force_check" -> JBool(cfg.forceCheck))))
 
       // 4. Batch + stage (ref :56-63 unencrypted; :86-104 encrypted).
       // Encrypted path: records → CSV (U-G2) → ordered GPG chain
@@ -121,9 +118,10 @@ final class MarketingCloudPush(
       val nBatches = stagedRows / batchSize + (if (batchSize > 1) 1 else 0)
 
       // 6. Import + blocking poll (ref :68).
-      val importConfig =
-        s"""{"data_extension_name":"${cfg.dataExtensionName}","import_type":"${cfg.importType}",""" +
-          s""""file_location_external_key":"${cfg.fileLocationExternalKey}"}"""
+      val importConfig = compact(JObject(
+        "data_extension_name" -> JString(cfg.dataExtensionName),
+        "import_type" -> JString(cfg.importType),
+        "file_location_external_key" -> JString(cfg.fileLocationExternalKey)))
       val importId = api.deImport(importConfig, stageId)
       require(api.awaitResultsPoll(importId), s"SFMC import $importId did not complete")
 

@@ -2,10 +2,11 @@ package graft.push
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 import graft.connector.{SalesforceBulkApi, SfmcApi}
 import graft.model._
-import graft.tracking.{BucketedTrackingTable, PartitionedTrackingTable, TrackingStore, TrackingTable}
+import graft.tracking.{TrackingStore, TrackingTable}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -27,46 +28,18 @@ final class PushMaterializer(
     spark: SparkSession,
     trackingBase: String,
     sfdc: SalesforceBulkApi,
-    sfmc: SfmcApi,
-    partitionedLogs: Boolean = false,
-    bucketedLogs: Boolean = false,
-    logBuckets: Int = 32) {
-
-  require(!(partitionedLogs && bucketedLogs),
-    "choose one log layout: partitionedLogs (pruned per-task scans) or bucketedLogs (shuffle-free record anti-joins)")
+    sfmc: SfmcApi) {
 
   val sfdcTasks: TrackingTable = TrackingTable.sfdcLoadTasks(spark, trackingBase)
   val sfmcTasks: TrackingTable = TrackingTable.sfmcLoadTasks(spark, trackingBase)
-  // Bucketed tables are catalog-managed; derive a legal, base-unique name.
-  private def logTableName(logical: String): String =
-    s"${logical}_${Integer.toHexString(trackingBase.hashCode).replace('-', 'n')}"
-  // Log tables grow one row per pushed record forever; `partitionedLogs`
-  // hive-partitions them by load_task_name so each run appends to (and a
-  // model's incremental anti-join prunes to) exactly one partition;
-  // `bucketedLogs` clusters them by `record` so the incremental
-  // whole-record anti-join never shuffles the log side.
-  val sfdcLogs: TrackingStore =
-    if (partitionedLogs)
-      new PartitionedTrackingTable(spark, s"$trackingBase/sfdc_load_task_logs",
-        Schemas.sfdcLoadTaskLogs, "job_log_entry_id", "load_task_name")
-    else if (bucketedLogs)
-      new BucketedTrackingTable(spark, logTableName("sfdc_load_task_logs"),
-        Schemas.sfdcLoadTaskLogs, "job_log_entry_id", "record", logBuckets)
-    else TrackingTable.sfdcLoadTaskLogs(spark, trackingBase)
-  val sfmcLogs: TrackingStore =
-    if (partitionedLogs)
-      new PartitionedTrackingTable(spark, s"$trackingBase/sfmc_load_task_logs",
-        Schemas.sfmcLoadTaskLogs, "job_log_entry_id", "load_task_name")
-    else if (bucketedLogs)
-      new BucketedTrackingTable(spark, logTableName("sfmc_load_task_logs"),
-        Schemas.sfmcLoadTaskLogs, "job_log_entry_id", "record", logBuckets)
-    else TrackingTable.sfmcLoadTaskLogs(spark, trackingBase)
+  val sfdcLogs: TrackingStore = TrackingTable.sfdcLoadTaskLogs(spark, trackingBase)
+  val sfmcLogs: TrackingStore = TrackingTable.sfmcLoadTaskLogs(spark, trackingBase)
 
   /** The reference's incremental-model pattern (`contacts_load.sql:32-37`:
     * `RECORD not in (select logs.RECORD ... where success)`) as an engine
     * helper: records of `source` not yet successfully pushed under
-    * `taskName`. With `bucketedLogs` the log side of this anti-join is
-    * read pre-partitioned by `record` — no exchange on the big side.
+    * `taskName`. `logs` is any [[TrackingStore]], so a caller may pass a
+    * wrapped log table.
     */
   def unsyncedRecords(source: DataFrame, logs: TrackingStore, taskName: String): DataFrame = {
     val pushed = logs.read()
@@ -98,7 +71,7 @@ final class PushMaterializer(
     * pre-dispatch defaults.
     */
   def runLegacy(model: PushModel): PushReport = model.config match {
-    case c: SalesforceConfig => new SalesforcePush(spark, sfdc, sfdcTasks, sfdcLogs).run(model, c)
+    case _: SalesforceConfig => run(model)
     case other => throw new IllegalArgumentException(
       s"load_task materialization is Salesforce-only, got '${other.app}'")
   }
@@ -112,6 +85,23 @@ private[push] object Json {
       case JNothing | JNull => null
       case other => other.values.toString
     }
+}
+
+private[push] object Record {
+  /** The model's single `record` string column. Model contract: exactly
+    * one RECORD column (README.md:73), either a struct (the
+    * OBJECT_CONSTRUCT form, rendered with `to_json`) or a ready JSON
+    * string.
+    */
+  def of(model: PushModel, df: DataFrame): DataFrame = {
+    val record = df.schema.fields.find(_.name.equalsIgnoreCase("record"))
+      .getOrElse(throw new IllegalArgumentException(
+        s"model ${model.name} must produce a RECORD column"))
+    record.dataType match {
+      case _: StructType => df.select(to_json(col(record.name)).as("record"))
+      case _ => df.select(col(record.name).cast("string").as("record"))
+    }
+  }
 }
 
 /** EP1: the Salesforce bulk-load pipeline
@@ -137,20 +127,10 @@ final class SalesforcePush(
     spark: SparkSession,
     api: SalesforceBulkApi,
     tasks: TrackingTable,
-    logs: graft.tracking.TrackingStore) {
+    logs: TrackingStore) {
 
   def run(model: PushModel, cfg: SalesforceConfig): PushReport = {
-    val source0 = model.build(spark)
-    // Model contract: exactly one RECORD column (README.md:73); accept a
-    // struct (OBJECT_CONSTRUCT form) or a ready JSON string.
-    val record = source0.schema.fields.find(_.name.equalsIgnoreCase("record"))
-      .getOrElse(throw new IllegalArgumentException(
-        s"model ${model.name} must produce a RECORD column"))
-    val source = (record.dataType match {
-      case _: org.apache.spark.sql.types.StructType =>
-        source0.select(to_json(col(record.name)).as("record"))
-      case _ => source0.select(col(record.name).cast("string").as("record"))
-    }).persist(StorageLevel.MEMORY_AND_DISK)
+    val source = Record.of(model, model.build(spark)).persist(StorageLevel.MEMORY_AND_DISK)
 
     try {
       // Zero-row short-circuit probe (salesforce.sql:7-17). count() (not

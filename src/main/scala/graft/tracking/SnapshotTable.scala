@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.util.AtomicSwap
 
 /** dbt-snapshot materialization (SCD type 2, `check` strategy) — the
   * remaining dbt table-with-history surface next to the reference's
@@ -22,9 +23,9 @@ import org.apache.spark.sql.types._
   * Plan shape: one full-outer join keyed on `keyCol` between the current
   * (open) rows and the incoming batch; closed history unions back
   * untouched. One shuffle per side of the join; history never
-  * re-shuffles. At 100 TB the table would be partitioned so only
-  * key-ranges present in `incoming` rewrite (same evolution path as
-  * PartitionedTrackingTable); the join/interval semantics are identical.
+  * re-shuffles. Every run rewrites the whole table; at 100 TB it would be
+  * partitioned so only key-ranges present in `incoming` rewrite, with
+  * identical join/interval semantics.
   *
   * Change detection is null-safe equality (`<=>`) over `checkCols`, so a
   * NULL→value or value→NULL transition counts as a change, like dbt's
@@ -39,9 +40,18 @@ final class SnapshotTable(
   private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def dataPath = new Path(path, "data")
 
-  def exists: Boolean = fs.exists(dataPath)
+  /** Restores the data left as backup by a swap that crashed between its
+    * two renames, so a crash never reads as "no table yet".
+    */
+  def exists: Boolean = {
+    AtomicSwap.recover(fs, dataPath)
+    fs.exists(dataPath)
+  }
 
-  def read(): DataFrame = spark.read.parquet(dataPath.toString)
+  def read(): DataFrame = {
+    AtomicSwap.recover(fs, dataPath)
+    spark.read.parquet(dataPath.toString)
+  }
 
   /** Time travel — the point of keeping SCD2 history: the table exactly
     * as it stood at `ts` (rows whose interval covers it). A pure filter,
@@ -104,16 +114,9 @@ final class SnapshotTable(
       .unionByName(withValidity(opened, asOf)))
   }
 
-  /** Same tmp-dir + rename dance as TrackingTable.atomicWrite: the full
-    * result lands before the live data is touched.
+  /** The swap TrackingTable uses ([[AtomicSwap]]): the full result lands
+    * before the live data is touched.
     */
-  private def atomicWrite(df: DataFrame): Unit = {
-    val tmp = new Path(path, s"tmp_${System.nanoTime()}")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    val backup = new Path(path, "data__backup")
-    if (fs.exists(backup)) fs.delete(backup, true)
-    if (fs.exists(dataPath)) fs.rename(dataPath, backup)
-    fs.rename(tmp, dataPath)
-    fs.delete(backup, true)
-  }
+  private def atomicWrite(df: DataFrame): Unit =
+    AtomicSwap.swapIn(fs, dataPath) { tmp => df.write.mode("overwrite").parquet(tmp.toString) }
 }

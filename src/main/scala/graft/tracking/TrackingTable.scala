@@ -1,13 +1,14 @@
 package graft.tracking
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Storage-agnostic tracking-table contract shared by the flat and the
-  * partitioned implementations — the seam the push pipelines write
-  * through (and where Delta/Iceberg MERGE would slot in).
+/** Storage-agnostic tracking-table contract: the seam a caller wraps
+  * around a [[TrackingTable]] (timing, fault injection, a future
+  * Delta/Iceberg MERGE) and hands to the push pipelines or to
+  * `PushMaterializer.unsyncedRecords`.
   */
 trait TrackingStore {
   def read(): DataFrame
@@ -17,7 +18,7 @@ trait TrackingStore {
 
   /** Small-file compaction. Append-heavy stores accumulate one file set
     * per run forever; periodic compaction keeps scan/list cost bounded.
-    * Data-identical rewrite; layout-specific file targeting below.
+    * Data-identical rewrite.
     */
   def compact(): Unit
 }
@@ -37,8 +38,10 @@ trait TrackingStore {
   * fullRefresh`) is storage-agnostic.
   *
   * Scale: upsert = `existing LEFT ANTI incoming UNION incoming` — one
-  * shuffle on the key; with the table partitioned by a key prefix only
-  * touched partitions need rewriting (v2: partition-pruned rewrite).
+  * shuffle on the key and a full rewrite, which suits the task tables
+  * (one row per job). The log tables (one row per pushed record) only
+  * take `append`, which writes new files unless the incoming batch
+  * widens a column.
   */
 final class TrackingTable(
     spark: SparkSession,
@@ -106,15 +109,10 @@ final class TrackingTable(
     * rows with the same `uniqueKey`; everything else is preserved.
     */
   def upsert(incoming: DataFrame): Unit = {
-    createIfMissing()
     val existing = read()
     val widened = widen(existing.schema, incoming.schema)
-    def conform(df: DataFrame): DataFrame =
-      df.select(widened.map(f =>
-        (if (df.columns.exists(_.equalsIgnoreCase(f.name))) col(f.name).cast(f.dataType)
-        else lit(null).cast(f.dataType)).as(f.name)): _*)
-    val in = conform(incoming)
-    val kept = conform(existing)
+    val in = conform(incoming, widened)
+    val kept = conform(existing, widened)
       .join(in.select(col(uniqueKey)), Seq(uniqueKey), "left_anti")
     atomicWrite(kept.unionByName(in))
   }
@@ -129,18 +127,21 @@ final class TrackingTable(
     * scale). Only a widening schema change falls back to the rewrite.
     */
   def append(incoming: DataFrame): Unit = {
-    createIfMissing()
     val existing = read()
     val widened = widen(existing.schema, incoming.schema)
-    def conform(df: DataFrame): DataFrame =
-      df.select(widened.map(f =>
-        (if (df.columns.exists(_.equalsIgnoreCase(f.name))) col(f.name).cast(f.dataType)
-        else lit(null).cast(f.dataType)).as(f.name)): _*)
     if (widened == existing.schema)
-      conform(incoming).write.mode("append").parquet(dataPath.toString)
+      conform(incoming, widened).write.mode("append").parquet(dataPath.toString)
     else
-      atomicWrite(conform(existing).unionByName(conform(incoming)))
+      atomicWrite(conform(existing, widened).unionByName(conform(incoming, widened)))
   }
+
+  /** Project `df` onto `target`: matching columns (case-insensitive) are
+    * cast to the target type, missing ones become typed NULLs.
+    */
+  private def conform(df: DataFrame, target: StructType): DataFrame =
+    df.select(target.map(f =>
+      (if (df.columns.exists(_.equalsIgnoreCase(f.name))) col(f.name).cast(f.dataType)
+      else lit(null).cast(f.dataType)).as(f.name)): _*)
 
   /** Update-with-join (A6) — ref `salesforce_bulk_load.sql:52-56`:
     * `update t set col = f(u.*) from u where t.key = u.key`. `updates`
@@ -177,180 +178,6 @@ final class TrackingTable(
     graft.util.AtomicSwap.swapIn(fs, dataPath) { tmp =>
       df.write.mode("overwrite").parquet(tmp.toString)
     }
-}
-
-/** Partition-pruned tracking table — the 100 TB form of M2.
-  *
-  * The plain TrackingTable rewrites the whole relation on every upsert;
-  * fine for job-count-sized tables, fatal for the log table (one row per
-  * pushed record, forever). This variant hive-partitions the data by
-  * `partitionCol` (for the reference's log tables the natural key is
-  * `load_task_name` — each push run touches exactly one partition) and
-  * uses dynamic partition overwrite so an upsert:
-  *   1. prunes the read to the partitions present in `incoming`
-  *      (`PartitionFilters` on the parquet scan — verified in
-  *      TrackingTableSpec);
-  *   2. rewrites ONLY those partitions; untouched partition directories
-  *      keep their files byte-for-byte.
-  */
-final class PartitionedTrackingTable(
-    spark: SparkSession,
-    val path: String,
-    val schema: StructType,
-    val uniqueKey: String,
-    val partitionCol: String) extends TrackingStore {
-
-  private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-  def exists: Boolean = fs.exists(new Path(path))
-
-  def read(): DataFrame =
-    if (!exists) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else spark.read.schema(schema).parquet(path)
-
-  /** Explicit rebuild (the drop-omnata-task-tables branch). */
-  def fullRefresh(): Unit =
-    if (exists) fs.delete(new Path(path), true)
-
-  /** Upsert = delete-matching-keys + insert, scoped to the incoming
-    * partitions only.
-    */
-  def upsert(incoming: DataFrame): Unit = {
-    val in = incoming.select(schema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-    if (!exists) {
-      in.write.partitionBy(partitionCol).parquet(path)
-      return
-    }
-    // Driver-side partition list: |touched partitions| values, not rows.
-    val touched = in.select(partitionCol).distinct().collect().map(_.get(0))
-    val existingTouched = read()
-      .filter(col(partitionCol).isin(touched.toIndexedSeq: _*)) // → partition pruning
-      .join(in.select(col(uniqueKey)), Seq(uniqueKey), "left_anti")
-    // Per-write option, not session conf: a concurrent writer in the same
-    // session never observes the mutated mode, and there is no
-    // save/restore race.
-    existingTouched.unionByName(in)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol).parquet(path)
-  }
-
-  /** Append without key reconciliation (the in-run log insert path) —
-    * creates/extends only the touched partition directories.
-    */
-  def append(incoming: DataFrame): Unit = {
-    val in = incoming.select(schema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-    in.write.mode("append").partitionBy(partitionCol).parquet(path)
-  }
-
-  /** Compact only FRAGMENTED partitions (more than one data file) into
-    * one file each; already-compact partitions keep their files
-    * byte-for-byte — at scale this is the nightly housekeeping pass over
-    * a log table that gains one file set per push run.
-    */
-  def compact(): Unit = {
-    if (!exists) return
-    val prefix = s"$partitionCol="
-    val fragmented = fs.listStatus(new Path(path))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .filter(s => fs.listStatus(s.getPath)
-        .count(_.getPath.getName.endsWith(".parquet")) > 1)
-      .map(s => java.net.URLDecoder.decode(
-        s.getPath.getName.substring(prefix.length), "UTF-8"))
-    if (fragmented.isEmpty) return
-    read().filter(col(partitionCol).isin(fragmented.toSeq: _*))
-      .repartition(col(partitionCol)) // one task (→ one file) per partition
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol).parquet(path)
-  }
-}
-
-/** Bucket-clustered tracking table — the shuffle-free-anti-join form of
-  * the log store.
-  *
-  * The recurring join at scale is the incremental push's anti-join: every
-  * run, the model excludes records already logged as successful
-  * (`accounts_load.sql:23-28`, README.md:144-176). The log table grows one
-  * row per pushed record forever, so at 100 TB it is the BIG side of that
-  * join — and with plain parquet it re-shuffles on every run. Storing the
-  * log as a parquet table bucketed by the anti-join key (`record`) makes
-  * the log side exchange-free: the scan's output partitioning already
-  * matches the join key, so only the (per-run-sized) incoming side
-  * shuffles. BucketedTrackingTableSpec asserts the plan shape.
-  *
-  * Appends stay O(incoming): new files land in their buckets; no rewrite.
-  * Spark requires bucketed data to live in a catalog-managed table, hence
-  * `table` (a table name) instead of a path.
-  */
-final class BucketedTrackingTable(
-    spark: SparkSession,
-    val table: String,
-    val schema: StructType,
-    val uniqueKey: String,
-    val bucketKey: String,
-    val buckets: Int = 32) extends TrackingStore {
-
-  private def exists: Boolean = spark.catalog.tableExists(table)
-
-  private def conform(df: DataFrame): DataFrame =
-    df.select(schema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-
-  private def writer(df: DataFrame, mode: String) =
-    df.write.mode(mode).format("parquet")
-      .bucketBy(buckets, bucketKey).sortBy(bucketKey)
-
-  def createIfMissing(): Unit = if (!exists) {
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    writer(empty, "overwrite").saveAsTable(table)
-  }
-
-  def read(): DataFrame = { createIfMissing(); spark.table(table) }
-
-  def append(incoming: DataFrame): Unit = {
-    createIfMissing()
-    writer(conform(incoming), "append").saveAsTable(table)
-  }
-
-  /** Crash-safe rewrite: the full result is written to a staging table
-    * BEFORE the live table is touched, then swapped in via rename (the
-    * managed-table analogue of TrackingTable.atomicWrite's tmp-dir
-    * dance). A failure mid-write leaves the live table intact; a failure
-    * between drop and rename leaves the data recoverable in `__tmp`.
-    */
-  private def safeOverwrite(df: DataFrame): Unit = {
-    val tmp = table + "__tmp"
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    writer(df, "overwrite").saveAsTable(tmp)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-  }
-
-  def upsert(incoming: DataFrame): Unit = {
-    createIfMissing()
-    val in = conform(incoming)
-    val kept = read().join(in.select(col(uniqueKey)), Seq(uniqueKey), "left_anti")
-    safeOverwrite(kept.unionByName(in))
-  }
-
-  def fullRefresh(): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    createIfMissing()
-  }
-
-  /** Rewrite into one file per bucket (appends leave one file set per
-    * run; bucket file counts grow unbounded otherwise). The bucketed
-    * writer emits one file per (task, bucket) pair, so a single write
-    * task yields exactly one file per non-empty bucket. At 100 TB a
-    * compaction pass would shard this across bucket subsets (one job
-    * per shard) — the single-task funnel here is the minimal correct
-    * form.
-    */
-  def compact(): Unit = {
-    if (!exists) return
-    safeOverwrite(read().coalesce(1))
-  }
 }
 
 object TrackingTable {

@@ -84,10 +84,58 @@ class MarketingCloudSpec extends SparkTestBase {
     assert(sfmc.stagedBatchCount === 0)
   }
 
+  test("ensure_exists and import configs are valid JSON for any name; properties are sent (U-MC1)") {
+    val sfmc = new MarketingCloudSpec.ConfigRecordingApi
+    val mat = new PushMaterializer(spark, tmpDir("mc-cfg"), new MockSalesforceBulkApi(), sfmc)
+    val name = "Contacts \"VIP\" \\ DE"
+    val m = PushModel("contacts_cfg",
+      MarketingCloudConfig(name,
+        dataExtensionPath = Some("Shared\\\"Data\""),
+        dataExtensionFields = Seq(Map("name" -> "Say \"hi\"", "type" -> "Text")),
+        dataExtensionProperties = Map("IsSendable" -> "true", "Note" -> "a\\b"),
+        fileLocationExternalKey = "FTP \\ \"main\""),
+      s => s.range(3).select(to_json(struct(col("id"))).as("record")))
+    assert(mat.run(m).recordsPushed === 3)
+
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.parse
+    val Seq(manage) = sfmc.manageConfigs.toArray.toSeq.map(_.toString)
+    val Seq(imp) = sfmc.importConfigs.toArray.toSeq.map(_.toString)
+    def str(j: JValue): String = j.asInstanceOf[JString].s
+    val mj = parse(manage)
+    assert(str(mj \ "operation") === "ensure_exists")
+    assert(str(mj \ "data_extension_name") === name)
+    assert(str(mj \ "data_extension_path") === "Shared\\\"Data\"")
+    assert(str((mj \ "data_extension_fields")(0) \ "name") === "Say \"hi\"")
+    assert(str(mj \ "data_extension_properties" \ "IsSendable") === "true")
+    assert(str(mj \ "data_extension_properties" \ "Note") === "a\\b")
+    assert((mj \ "force_check") === JBool(false))
+    val ij = parse(imp)
+    assert(str(ij \ "data_extension_name") === name)
+    assert(str(ij \ "import_type") === "AddAndUpdate")
+    assert(str(ij \ "file_location_external_key") === "FTP \\ \"main\"")
+  }
+
   test("config validation mirrors the reference's README constraints") {
     intercept[IllegalArgumentException](MarketingCloudConfig("DE", importType = "Nope"))
     intercept[IllegalArgumentException](MarketingCloudConfig("DE", encrypted = true))
     intercept[IllegalArgumentException](SalesforceConfig("Account", "upsert", None))
     intercept[IllegalArgumentException](SalesforceConfig("Account", "replace"))
+  }
+}
+
+object MarketingCloudSpec {
+  /** Records the configuration JSON that each config call receives. */
+  class ConfigRecordingApi extends MockSfmcApi {
+    val manageConfigs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val importConfigs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    override def manageDataExtension(configurationJson: String): String = {
+      manageConfigs.add(configurationJson)
+      super.manageDataExtension(configurationJson)
+    }
+    override def deImport(configurationJson: String, stageId: String): String = {
+      importConfigs.add(configurationJson)
+      super.deImport(configurationJson, stageId)
+    }
   }
 }

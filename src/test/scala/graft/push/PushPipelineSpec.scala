@@ -65,43 +65,6 @@ class PushPipelineSpec extends SparkTestBase {
     assert(mat.sfdcLogs.read().count() === n)
   }
 
-  test("partitionedLogs: per-task partitions, pruned anti-join, idempotent rerun") {
-    val base = tmpDir("pushp")
-    val sfdc = new MockSalesforceBulkApi()
-    val mat = new PushMaterializer(spark, base,
-      sfdc, new MockSfmcApi(), partitionedLogs = true)
-    def model(name: String) = PushModel(name,
-      SalesforceConfig("Account", "insert"),
-      (s: SparkSession) => {
-        val recs = s.read.parquet(s"$sf/customer.parquet")
-          .select(to_json(struct(
-            col("c_name").as("Name"),
-            col("c_custkey").cast("string").as("AccountID__c"))).as("record"))
-        val logsRoot = new java.io.File(s"$base/sfdc_load_task_logs")
-        if (!logsRoot.exists()) recs
-        else {
-          // incremental anti-join filtered to THIS task's partition —
-          // with the hive layout this is a pruned scan of one directory
-          val logs = s.read.parquet(logsRoot.toString)
-            .filter(col("load_task_name") === name &&
-              get_json_object(col("result"), "$.success") === "true")
-            .select(get_json_object(col("record"), "$.AccountID__c").as("logged_id"))
-          recs.join(logs,
-            get_json_object(col("record"), "$.AccountID__c") === logs("logged_id"),
-            "left_anti")
-        }
-      })
-    assert(mat.run(model("task_a")).recordsPushed === 150)
-    assert(mat.run(model("task_b")).recordsPushed === 150)
-    assert(new java.io.File(s"$base/sfdc_load_task_logs/load_task_name=task_a").exists())
-    assert(new java.io.File(s"$base/sfdc_load_task_logs/load_task_name=task_b").exists())
-    assert(mat.sfdcLogs.read().count() === 300)
-    // rerun of task_a is empty (its own partition filters it out) while
-    // task_b's rows are untouched
-    assert(mat.run(model("task_a")).skippedEmpty)
-    assert(sfdc.loadBatchCalls.get() === 300)
-  }
-
   test("dropTaskTables rebuilds the tracking tables; the next run re-pushes everything") {
     val base = tmpDir("push")
     val sfdc = new MockSalesforceBulkApi()
@@ -227,13 +190,45 @@ class PushPipelineSpec extends SparkTestBase {
     assert(e.getMessage.contains("hubspot"))
   }
 
+  // The RECORD contract (README.md:73) as a table: both apps × a struct
+  // RECORD (the OBJECT_CONSTRUCT form), a pre-rendered JSON string, or no
+  // RECORD column at all. The column is named in upper case, as in the
+  // reference's models.
+  private val recordApps = Seq[(PushConfig, PushMaterializer => graft.tracking.TrackingStore)](
+    SalesforceConfig("Account", "insert") -> (_.sfdcLogs),
+    MarketingCloudConfig("DE") -> (_.sfmcLogs))
+
+  private def recordModel(cfg: PushConfig, form: String) = PushModel(s"rec_$form", cfg, s => {
+    val customers = s.read.parquet(s"$sf/customer.parquet")
+    val fields = struct(col("c_name").as("Name"), col("c_custkey").cast("string").as("AccountID__c"))
+    form match {
+      case "struct" => customers.select(fields.as("RECORD"))
+      case "string" => customers.select(to_json(fields).as("RECORD"))
+      case "none" => customers.select(col("c_custkey"))
+    }
+  })
+
+  private def freshMat() =
+    new PushMaterializer(spark, tmpDir("push"), new MockSalesforceBulkApi(), new MockSfmcApi())
+
   test("model without a RECORD column is rejected (README.md:73 contract)") {
-    val mat = new PushMaterializer(spark, tmpDir("push"),
-      new MockSalesforceBulkApi(), new MockSfmcApi())
-    val m = PushModel("norec",
-      SalesforceConfig("Account", "insert"),
-      s => s.range(3).toDF("id"))
-    intercept[IllegalArgumentException](mat.run(m))
+    for ((cfg, _) <- recordApps) {
+      val e = intercept[IllegalArgumentException](freshMat().run(recordModel(cfg, "none")))
+      assert(e.getMessage.contains("must produce a RECORD column"), cfg.app)
+    }
+  }
+
+  test("struct and JSON-string RECORDs log identical record strings on both apps") {
+    for ((cfg, logs) <- recordApps) {
+      val Seq(fromStruct, fromString) = Seq("struct", "string").map { form =>
+        val mat = freshMat()
+        assert(mat.run(recordModel(cfg, form)).recordsPushed === 150, s"${cfg.app} $form")
+        logs(mat).read().select("record").collect().map(_.getString(0)).sorted.toSeq
+      }
+      assert(fromStruct.size === 150)
+      assert(fromStruct.head.startsWith("{\"Name\":"), cfg.app)
+      assert(fromStruct === fromString, cfg.app)
+    }
   }
 
   test("legacy load_task materialization routes to the Salesforce path (M3)") {

@@ -2,6 +2,8 @@ package graft.tracking
 
 import java.sql.Timestamp
 import graft.SparkTestBase
+import graft.util.AtomicSwap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
 class SnapshotTableSpec extends SparkTestBase {
@@ -38,6 +40,22 @@ class SnapshotTableSpec extends SparkTestBase {
       (2L, "B", t1, None),
       (3L, "C", t1, None),
       (4L, "D", t2, None)))
+  }
+
+  test("a swap that crashed between its two renames keeps the history") {
+    val s = snap()
+    s.snapshot(Seq((1L, "A", 10), (2L, "B", 20)).toDF("id", "seg", "score"), t1)
+    s.snapshot(Seq((1L, "A2", 10), (2L, "B", 20)).toDF("id", "seg", "score"), t2)
+    // the crash: live data renamed to the backup, the new data not yet in
+    val data = new Path(s.path, "data")
+    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(data, AtomicSwap.backupFor(data)))
+    s.snapshot(Seq((1L, "A2", 10), (2L, "B2", 20)).toDF("id", "seg", "score"), t3)
+    val rows = s.read().orderBy("id", "valid_from").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getTimestamp(3), Option(r.getTimestamp(4))))
+    assert(rows === Array(
+      (1L, "A", t1, Some(t2)), (1L, "A2", t2, None),
+      (2L, "B", t1, Some(t3)), (2L, "B2", t3, None)))
   }
 
   test("re-running the identical batch is a no-op (idempotent snapshots)") {
