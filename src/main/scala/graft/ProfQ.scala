@@ -36,10 +36,13 @@ object ProfQ {
     @volatile var capturing = false
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = if (capturing) {
-        // prefer the explicit job description (operator entry points /
-        // Bench label their jobs, guide §1.5) over the call site
+        // prefer a graft job label (`graft:<name>`, guide §1.5) over the
+        // call site; any other description — e.g. Structured Streaming's
+        // per-run `id = … runId = …` — would split one call site into
+        // many keys
         val site = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description"))
+            .filter(_.startsWith("graft:"))
             .orElse(Option(p.getProperty("callSite.short")))).getOrElse("?")
         recs.synchronized {
           recs(e.jobId) = new Rec(e.jobId, site, e.time)

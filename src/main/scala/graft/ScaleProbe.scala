@@ -611,7 +611,7 @@ object ScaleProbe {
           println(line); report ++= line + "\n"
         }
         // PERSISTED-path code quality at EQUAL bytes/vector (8 B codes):
-        // residual codes (IvfPqIndex) vs raw codes (PqIndex), both
+        // residual codes (kCells set) vs raw codes (flat), both
         // recall@50 against the exact L2 truth over index contents.
         // nprobe = kCells isolates ENCODING quality (no read-prune
         // loss) — the FAISS IndexIVFPQ recall upgrade; nprobe=8 shows
@@ -629,8 +629,8 @@ object ScaleProbe {
             val recRaw = ops.Pq.recallAtK(spark, rawIdx, qv, 50)
             val tRaw = (System.nanoTime() - t0) / 1e9
             t0 = System.nanoTime()
-            val resIdx = ops.Pq.buildIndexResidual(emb, resDir,
-              kCells = 32, m = 8, kSub = 256, iters = 2)
+            val resIdx = ops.Pq.buildIndex(emb, resDir,
+              m = 8, kSub = 256, iters = 2, kCells = Some(32))
             val recResFull = ops.Pq.recallAtKResidual(spark, resIdx, qv, 50, nprobe = 32)
             val recRes8 = ops.Pq.recallAtKResidual(spark, resIdx, qv, 50, nprobe = 8)
             val tRes = (System.nanoTime() - t0) / 1e9

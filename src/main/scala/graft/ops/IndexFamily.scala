@@ -39,10 +39,10 @@ final case class MergeReport(tier: Int, merged: Seq[String],
 
 /** The shared mutation surface of a persisted index family — ONE
   * implementation of the verb choreography (append / upsert / CDC /
-  * deleteIds / compact / deleteWhere) that [[Ivf]], [[Pq]] (flat and
-  * residual) and [[LexIndex]] each used to carry as near-parallel
-  * copies. The protocol invariants live HERE, once, so a fix cannot
-  * reach one family and miss the others (the drift that motivated
+  * deleteIds / compact / deleteWhere) that [[Ivf]], [[Pq]] and
+  * [[LexIndex]] each used to carry as near-parallel copies. The
+  * protocol invariants live HERE, once, so a fix cannot reach one
+  * family and miss the others (the drift that motivated
   * [[graft.util.IndexMaint]] for the commit layer, now lifted to the
   * verb layer):
   *
@@ -191,11 +191,12 @@ private[ops] trait IndexFamily {
     */
   protected def compactSurvivors(spark: SparkSession, path: String): DataFrame
 
-  /** Write the survivor rows (seg dropped) as the new `seg=base`,
-    * including any per-segment sidecars derived from them.
+  /** Write the survivor rows (seg dropped) of live generation `gen` as
+    * the new `seg=base`, including any per-segment sidecars derived from
+    * them.
     */
   protected def writeSurvivorStage(spark: SparkSession, survivors: DataFrame,
-      segBase: String): Unit
+      segBase: String, gen: String): Unit
 
   /** Enforce the duplicate-id invariant over the fresh survivors —
     * default: row-per-id families count the just-written stage (never
@@ -306,7 +307,7 @@ private[ops] trait IndexFamily {
             // an id — its older copies are tombstoned, hence dropped)
             if (!uniqueCheckReadsStage)
               requireUniqueSurvivors(spark, survivors, target, path)
-            writeSurvivorStage(spark, survivors.drop("seg"), target)
+            writeSurvivorStage(spark, survivors.drop("seg"), target, gen)
             if (uniqueCheckReadsStage)
               requireUniqueSurvivors(spark, survivors, target, path)
             Some(m)
@@ -392,7 +393,7 @@ private[ops] trait IndexFamily {
       val stage = IndexMaint.newStageDir(path, "compact")
       val segBase = s"$stage/seg=base"
       if (!uniqueCheckReadsStage) requireUniqueSurvivors(spark, withSeg, segBase, path)
-      writeSurvivorStage(spark, withSeg.drop("seg"), segBase)
+      writeSurvivorStage(spark, withSeg.drop("seg"), segBase, gen)
       if (uniqueCheckReadsStage) requireUniqueSurvivors(spark, withSeg, segBase, path)
       writeGenSidecars(spark, stage, gen, hadDeletes)
       IndexMaint.writeConsolidatedTokens(stage, IndexMaint.appliedTokens(gen))

@@ -42,7 +42,7 @@ object Ivf extends IndexFamily {
       path: String): DataFrame = indexData(spark, path)
 
   override protected def writeSurvivorStage(spark: SparkSession,
-      survivors: DataFrame, segBase: String): Unit =
+      survivors: DataFrame, segBase: String, gen: String): Unit =
     survivors.repartition(col("cid"))
       .write.mode("overwrite").partitionBy("cid").parquet(segBase)
 
@@ -277,8 +277,8 @@ object Ivf extends IndexFamily {
 
   private val CentroidSidecar = "_ivf_centroids.txt"
 
-  /** private[ops]: the residual IVF-PQ index ([[Pq.IvfPqIndex]]) persists
-    * its coarse quantizer with the same sidecar.
+  /** private[ops]: a residual IVF-PQ generation ([[Pq.PqIndex]] with a
+    * coarse quantizer) persists its centroids with the same sidecar.
     */
   private[ops] def writeCentroids(genDir: String, cs: Seq[Array[Float]]): Unit = {
     val body = cs.map(_.mkString(",")).mkString("\n")
@@ -292,6 +292,14 @@ object Ivf extends IndexFamily {
       java.nio.charset.StandardCharsets.UTF_8)
     body.split("\n").toSeq.map(_.split(",").map(_.toFloat))
   }
+
+  /** The generation's centroids, or None when it has no centroid
+    * sidecar (a flat PQ generation).
+    */
+  private[ops] def readCentroidsOpt(genDir: String): Option[Seq[Array[Float]]] =
+    if (java.nio.file.Files.exists(java.nio.file.Paths.get(genDir, CentroidSidecar)))
+      Some(readCentroids(genDir))
+    else None
 
   /** The index's live data as a DataFrame — resolves the live
     * generation once and reads it, MINUS its tombstoned ids (every

@@ -111,7 +111,7 @@ object LexIndex extends IndexFamily {
       "doc_id", compactLabel(path))
 
   override protected def writeSurvivorStage(spark: SparkSession,
-      survivors: DataFrame, segBase: String): Unit = {
+      survivors: DataFrame, segBase: String, gen: String): Unit = {
     survivors.repartition(col("tb"))
       .sortWithinPartitions(col("term"), col("doc_id"))
       .write.mode("overwrite").partitionBy("tb").parquet(segBase)

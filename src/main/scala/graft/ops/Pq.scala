@@ -111,7 +111,7 @@ object Pq {
     * applies ([[Ivf.nearestLocal]] ≡ NearestCentroid), then the shared
     * per-subspace trainer runs over the residuals. Shared by the
     * per-call query ([[ivfPqResidualAt]]) and the persisted index
-    * ([[buildIndexResidual]] / [[rebalanceResidual]]).
+    * ([[buildIndex]] / [[rebalance]] with a coarse quantizer).
     */
   private def residualCodebooksFromSample(emb: DataFrame,
       cents: Seq[Array[Float]], m: Int, kSub: Int, iters: Int): Seq[Seq[Array[Double]]] = {
@@ -556,11 +556,26 @@ object Pq {
   // object-store deployment would re-encode from), per-subspace fit
   // stats ride a build-time sidecar, and [[pqDriftStats]]/[[rebalance]]
   // close the detect→repair loop.
+  //
+  // One handle and one verb set serve both encodings — flat PQ and the
+  // residual IVF-PQ layout (FAISS `IndexIVFPQ`): Jégou et al. 2011
+  // present IVFADC as ADC plus an optional coarse quantizer, and the
+  // quantizer is generation data like the codebooks. The encoding
+  // changes exactly four things: the encode, the stored-code error, the
+  // segment layout and the generation sidecars. Only the screens stay
+  // two kernels, because they are two algorithms.
 
   /** Handle to a persisted PQ index: parquet of
-    * (vec_id, embedding, c0 … c(m-1)) plus the codebook sidecar.
+    * (vec_id, embedding, …metadata, c0 … c(m-1)) plus the codebook
+    * sidecar. `coarse` is the encoding: `None` is flat PQ (codes of the
+    * raw vectors, plain parquet); `Some(centroids)` is residual IVF-PQ
+    * (codes of each vector's residual `v − c(cell)`, a `cid`-partitioned
+    * layout and a centroid sidecar). Every verb reads the quantizer from
+    * the generation it touches, not from the handle, so a handle held
+    * across another handle's [[rebalance]] still scores correctly.
     */
-  final case class PqIndex(path: String, codebooks: Seq[Seq[Array[Double]]])
+  final case class PqIndex(path: String, codebooks: Seq[Seq[Array[Double]]],
+      coarse: Option[Seq[Array[Float]]])
 
   /** Per-subspace occupancy and mean squared quantization error — the
     * bounded (m rows) health summary. Quantization error is THE fit
@@ -622,6 +637,32 @@ object Pq {
       }
   }
 
+  /** The quantizer generation `gen` of the index at `path` was encoded
+    * with, as a handle — the centroid sidecar exists exactly for
+    * residual generations, so it IS the encoding.
+    */
+  private def indexAt(path: String, gen: String): PqIndex =
+    PqIndex(path, readCodebooks(gen), Ivf.readCentroidsOpt(gen))
+
+  /** [[indexAt]] for a screen kernel, refused unless `gen` holds the
+    * encoding the kernel scores.
+    */
+  private def quantizerFor(path: String, gen: String, residual: Boolean,
+      kernel: String): PqIndex = {
+    val q = indexAt(path, gen)
+    val (want, have) =
+      if (residual) ("residual IVF-PQ", "flat PQ") else ("flat PQ", "residual IVF-PQ")
+    require(q.coarse.isDefined == residual,
+      s"$kernel scores $want codes; $path holds $have codes")
+    q
+  }
+
+  /** Write the quantizer sidecars of a generation being staged. */
+  private def writeQuantizer(stage: String, q: PqIndex): Unit = {
+    q.coarse.foreach(Ivf.writeCentroids(stage, _))
+    writeCodebooks(stage, q.codebooks)
+  }
+
   /** (vec_id, embedding, …metadata, c0 … c(m-1), d0 … d(m-1)) — codes
     * AND their quantization errors from ONE NearestCentroidSq per
     * subspace. Extra input columns pass through: the metadata a
@@ -640,11 +681,50 @@ object Pq {
     emb.select(col("vec_id") +: col("embedding") +: (extras ++ cols): _*)
   }
 
+  /** One scan: coarse cell, double residual, m residual codes AND their
+    * quantization errors (the encode-time fit stats).
+    */
+  private def residualEncodeWithD2(emb: DataFrame, cents: Seq[Array[Float]],
+      cbs: Seq[Seq[Array[Double]]]): DataFrame = {
+    val m = cbs.size
+    val subDim = cbs.head.head.length
+    val extras = emb.columns.toIndexedSeq
+      .filter(c => c != "vec_id" && c != "embedding").map(col)
+    val centLit = typedLit(cents.map(_.toSeq))
+    val assigned0 = emb
+      .withColumn("cid", ArrayExprs.nearestCentroid(col("embedding"), cents))
+      .withColumn("cent", element_at(centLit, col("cid") + 1))
+      .withColumn("resid",
+        zip_with(col("embedding"), col("cent"),
+          (x, cc) => x.cast("double") - cc.cast("double")))
+    val cols = (0 until m).flatMap { s =>
+      val nc = ArrayExprs.nearestCentroidSqD(
+        slice(col("resid"), s * subDim + 1, subDim), cbs(s))
+      Seq(nc.getField("cid").as(s"c$s"), nc.getField("dist2").as(s"d$s"))
+    }
+    assigned0.select(col("vec_id") +: col("embedding") +: col("cid") +:
+      (extras ++ cols): _*)
+  }
+
+  /** Encode against `q`'s quantizer in its encoding. */
+  private def codesWithD2(emb: DataFrame, q: PqIndex): DataFrame =
+    q.coarse.fold(encodeWithD2(emb, q.codebooks))(
+      residualEncodeWithD2(emb, _, q.codebooks))
+
   /** Drop the d0 … d(m-1) error columns after the fit-stat aggregate —
     * what a generation's data files store (everything else rides).
     */
   private def dropD2(encoded: DataFrame, m: Int): DataFrame =
     encoded.drop((0 until m).map(s => s"d$s"): _*)
+
+  /** Land encoded rows as one segment directory in `q`'s layout: flat
+    * codes are plain parquet, residual codes partition by cell so a
+    * probed screen reads only its cells.
+    */
+  private def writeCodes(codes: DataFrame, dir: String, q: PqIndex): Unit = {
+    val w = codes.write.mode("overwrite")
+    if (q.coarse.isDefined) w.partitionBy("cid").parquet(dir) else w.parquet(dir)
+  }
 
   private def subStatsOf(encoded: DataFrame, m: Int): Seq[SubStats] = {
     val aggs = (0 until m).flatMap(s =>
@@ -654,189 +734,6 @@ object Pq {
       if (r.isNullAt(2 * s + 1)) Double.NaN else r.getDouble(2 * s + 1)))
   }
 
-  /** The index's live data as a DataFrame — the [[Ivf.indexData]]
-    * reader contract: the resolved generation survives one subsequent
-    * rebalance (the commit keeps the predecessor), so in-flight queries
-    * never observe a half-swapped directory. Tombstoned ids are
-    * subtracted here, so every ADC/residual screen honors deletes
-    * through the one shared read.
-    */
-  def indexData(spark: SparkSession, path: String): DataFrame =
-    indexDataAt(spark, graft.util.IndexMaint.liveGen(path))
-
-  /** [[indexData]] against an ALREADY-RESOLVED generation — what a
-    * multi-read query (screen + rerank fetch) threads through so both
-    * reads observe the SAME generation: two independent `liveGen`
-    * resolves around a concurrent rebalance/compact/deleteWhere commit
-    * would silently drop screened candidates from the rerank join
-    * (fewer than k rows, or a wrong final order).
-    */
-  private def indexDataAt(spark: SparkSession, gen: String): DataFrame =
-    graft.util.IndexMaint.minusTombstones(spark.read.parquet(gen), gen)
-
-  /** Build the persisted index: train sub-codebooks, encode in one
-    * scan, stage codes + raw vectors + the codebook and encode-time
-    * fit-stats sidecars as a complete generation, commit with one
-    * atomic pointer flip (the [[graft.util.IndexMaint]] protocol —
-    * a rebuild supersedes prior generations and their tokens).
-    */
-  def buildIndex(base: DataFrame, path: String, m: Int, kSub: Int,
-      iters: Int, buildKey: Option[String] = None): PqIndex =
-    graft.util.IndexMaint.withMutation(path, op = "build") {
-      val cbs = trainCodebooks(base, m, kSub, iters)
-      val encoded = encodeWithD2(base, cbs).localCheckpoint()
-      val stage = graft.util.IndexMaint.newStageDir(path, "build")
-      dropD2(encoded, m)
-        .write.mode("overwrite").parquet(s"$stage/seg=base")
-      writeCodebooks(stage, cbs)
-      writeSubStats(stage, subStatsOf(encoded, m))
-      buildKey.foreach(graft.util.IndexMaint.writeBuildKey(stage, _))
-      graft.util.IndexMaint.commitGeneration(path, stage)
-      PqIndex(path, cbs)
-    }
-
-  /** [[buildIndex]] memoized per (path, source fingerprint, shape) for
-    * the session — the [[Ivf.buildIndexCached]] pattern: the build is
-    * deterministic, so one derivation serves every consumer in the JVM
-    * while the filesystem fingerprint invalidates the memo if the
-    * source is rewritten. Production holds the [[PqIndex]] handle. A
-    * memo miss whose persisted build key matches the live generation's
-    * REOPENS it (read-only — [[Ivf.buildIndexCached]]'s contract: a
-    * miss must never retrain and rewrite a durable index); rebuild only
-    * on true staleness.
-    */
-  def buildIndexCached(base: DataFrame, srcDir: String, path: String,
-      m: Int, kSub: Int, iters: Int): PqIndex = {
-    val fp = graft.util.Fs.dirFingerprint(srcDir)
-    val key = (path, fp, m, kSub, iters)
-    val diskKey = s"pq|src=$fp|m=$m|kSub=$kSub|iters=$iters"
-    pqIndexCache.memoized(key, graft.util.IndexMaint.lockFor(path))(
-      k => k._1 == path && k != key) {
-      if (graft.util.IndexMaint.liveGenOpt(path)
-        .exists(g => graft.util.IndexMaint.readBuildKey(g).contains(diskKey)))
-        loadIndex(path)
-      else buildIndex(base, path, m, kSub, iters, Some(diskKey))
-    }
-  }
-
-  private[ops] def dropBuildMemo(path: String): Unit =
-    pqIndexCache.evict(_._1 == path)
-
-  private val pqIndexCache =
-    new graft.util.BoundedCache[(String, Long, Int, Int, Int), PqIndex](
-      Ivf.IndexCacheBound)
-
-  /** Reopen an index. No recovery dance ([[Ivf.loadIndex]] contract):
-    * generation commits are atomic pointer flips, so the live
-    * generation is always complete.
-    */
-  def loadIndex(path: String): PqIndex =
-    graft.util.IndexMaint.lockFor(path).synchronized {
-      PqIndex(path, readCodebooks(graft.util.IndexMaint.liveGen(path)))
-    }
-
-  private def encodeBatchCols(index: PqIndex, batch: DataFrame): DataFrame =
-    dropD2(encodeWithD2(batch, index.codebooks), index.codebooks.size)
-
-  /** The flat-PQ side of the shared [[IndexFamily]] verb choreography:
-    * encode = code assignment against the LIVE generation's codebooks,
-    * layout = plain parquet (codes are m bytes/vector — `numFiles`
-    * bounds the compacted rewrite), fit baseline recomputed over the
-    * survivors' stored codes when rows were dropped.
-    */
-  private final class FlatFamily(numFiles: Int) extends IndexFamily {
-    override protected def cdcContext(token: String): String = s"applyCdc($token)"
-    override protected def compactLabel(path: String): String = s"compactIndex($path)"
-
-    override protected def encodeToStage(gen: String, batch: DataFrame,
-        stage: String): Unit = {
-      val path = java.nio.file.Paths.get(gen).getParent.toString
-      encodeBatchCols(PqIndex(path, readCodebooks(gen)), batch)
-        .write.mode("overwrite").parquet(stage)
-    }
-
-    override protected def compactSurvivors(spark: SparkSession,
-        path: String): DataFrame = indexData(spark, path)
-
-    override protected def writeSurvivorStage(spark: SparkSession,
-        survivors: DataFrame, segBase: String): Unit =
-      survivors.repartition(numFiles).write.mode("overwrite").parquet(segBase)
-
-    override protected def writeGenSidecars(spark: SparkSession, stage: String,
-        gen: String, hadDeletes: Boolean): Unit = {
-      val cbs = readCodebooks(gen)
-      writeCodebooks(stage, cbs)
-      // codes are unchanged, so the encode-time fit baseline is carried
-      // — compaction must not reset the drift reference. Deletion is
-      // the exception: recomputed from the just-written survivor stage,
-      // never a second old-generation scan through the anti-join
-      if (hadDeletes)
-        writeSubStats(stage, subStatsOf(withStoredCodeD2(
-          spark.read.parquet(s"$stage/seg=base"), cbs), cbs.size))
-      else writeSubStats(stage, readSubStats(gen))
-    }
-
-    override protected def afterCommit(path: String): Unit =
-      pqIndexCache.evict(_._1 == path)
-  }
-
-  private val flatFamily = new FlatFamily(numFiles = 1)
-
-  /** Encode a new batch against the FROZEN codebooks and commit it as
-    * an anonymous segment — O(Δ). This is the path that erodes fit
-    * under shift. Replayable callers use [[appendBatchIdempotent]].
-    */
-  def appendBatch(index: PqIndex, batch: DataFrame): Unit =
-    flatFamily.appendAnonSegment(index.path, batch)
-
-  /** Compact the live generation's accrued append segments into one
-    * re-laid-out segment WITHOUT re-encoding — [[Ivf.compactIndex]]'s
-    * contract on the flat code layout: same codebooks, same codes, same
-    * applied tokens, fewer files. Streaming ingest commits one file set
-    * per micro-batch; after B batches every ADC screen opens B footers
-    * for what is logically one relation. `numFiles` bounds the rewrite
-    * (default one file per shuffle partition of codes — m bytes/vector
-    * packs millions of codes per file at scale).
-    */
-  def compactIndex(spark: SparkSession, index: PqIndex,
-      numFiles: Int = 1, sweepKey: Option[String] = None): PqIndex =
-    compactCore(spark, index, numFiles, doomed = None, sweepKey)
-
-  /** One size-tiered merge step on the flat code layout
-    * ([[IndexFamily.mergeSmallSegments]]) — the bounded-write-
-    * amplification maintenance step for streamed code appends; the
-    * handle stays valid (codebooks and fit baseline carry verbatim).
-    */
-  def mergeSegments(spark: SparkSession, index: PqIndex,
-      policy: MergePolicy = MergePolicy()): Option[MergeReport] =
-    flatFamily.mergeSmallSegments(spark, index.path, policy)
-
-  /** Structural + data fsck of a flat-PQ index
-    * ([[IndexFamily.fsckIndex]]).
-    */
-  def fsckIndex(spark: SparkSession, path: String): (Seq[String], Seq[String]) =
-    flatFamily.fsckIndex(spark, path)
-
-  /** Bulk delete by predicate — the [[Ivf.deleteWhere]] retention path
-    * on the PQ codes: one filtered compaction instead of a
-    * corpus-scale tombstone list.
-    */
-  def deleteWhere(spark: SparkSession, index: PqIndex,
-      doomed: org.apache.spark.sql.Column): PqIndex =
-    compactCore(spark, index, numFiles = 1, Some(doomed))
-
-  private def compactCore(spark: SparkSession, index: PqIndex,
-      numFiles: Int, doomed: Option[org.apache.spark.sql.Column],
-      sweepKey: Option[String] = None): PqIndex = {
-    val committed = new FlatFamily(numFiles)
-      .compactGeneration(spark, index.path, doomed, sweepKey)
-    PqIndex(index.path, readCodebooks(committed))
-  }
-
-  /** Current per-subspace fit vs the build-time sidecar: one index scan
-    * into an m-row aggregate. Codes are frozen-nearest, so recomputing
-    * NearestCentroidSq's dist2 IS the assigned entry's error.
-    */
   /** Recompute each stored vector's quantization error from its stored
     * codes — codes are frozen-nearest, so the ASSIGNED entry's distance
     * IS the fit stat: resolve it from c0..c(m-1) via the plan-riding
@@ -862,65 +759,290 @@ object Pq {
     data.select((col("vec_id") +: dCols): _*)
   }
 
+  /** [[withStoredCodeD2]] on the residual layout: the stored (cid,
+    * c0..c(m-1)) resolve the residual and its assigned entries in-plan.
+    */
+  private def withStoredCodeD2Residual(data: DataFrame,
+      cents: Seq[Array[Float]], cbs: Seq[Seq[Array[Double]]]): DataFrame = {
+    val m = cbs.size
+    val subDim = cbs.head.head.length
+    val centLit = typedLit(cents.map(_.toSeq))
+    val cbLit = typedLit(cbs.map(_.map(_.toSeq)))
+    val resid = zip_with(col("embedding"), element_at(centLit, col("cid") + 1),
+      (x, cc) => x.cast("double") - cc.cast("double"))
+    val dCols = (0 until m).map { s =>
+      val entry = element_at(element_at(cbLit, s + 1), col(s"c$s") + 1)
+      aggregate(
+        zip_with(slice(resid, s * subDim + 1, subDim), entry,
+          (x, y) => (x - y) * (x - y)),
+        lit(0.0), (acc, v) => acc + v).as(s"d$s")
+    }
+    data.select((col("vec_id") +: dCols): _*)
+  }
+
+  /** Stored-code fit stats of `data` under `q`'s quantizer. */
+  private def storedSubStats(data: DataFrame, q: PqIndex): Seq[SubStats] =
+    subStatsOf(q.coarse.fold(withStoredCodeD2(data, q.codebooks))(
+      withStoredCodeD2Residual(data, _, q.codebooks)), q.codebooks.size)
+
+  /** The index's live data as a DataFrame — the [[Ivf.indexData]]
+    * reader contract: the resolved generation survives one subsequent
+    * rebalance (the commit keeps the predecessor), so in-flight queries
+    * never observe a half-swapped directory. Tombstoned ids are
+    * subtracted here, so every ADC/residual screen honors deletes
+    * through the one shared read.
+    */
+  def indexData(spark: SparkSession, path: String): DataFrame =
+    indexDataAt(spark, graft.util.IndexMaint.liveGen(path))
+
+  /** [[indexData]] against an ALREADY-RESOLVED generation — what a
+    * multi-read query (screen + rerank fetch) threads through so both
+    * reads observe the SAME generation: two independent `liveGen`
+    * resolves around a concurrent rebalance/compact/deleteWhere commit
+    * would silently drop screened candidates from the rerank join
+    * (fewer than k rows, or a wrong final order).
+    */
+  private def indexDataAt(spark: SparkSession, gen: String): DataFrame =
+    graft.util.IndexMaint.minusTombstones(spark.read.parquet(gen), gen)
+
+  /** Train a quantizer on `data` — the coarse cells first when `kCells`
+    * is set, then the sub-codebooks on the SAME sample draw (raw slices,
+    * or residuals to the new cells) — encode `data` in one scan and
+    * stage it as `stage`'s base segment with the quantizer and
+    * encode-time fit-stat sidecars. What [[buildIndex]] and
+    * [[rebalance]] share.
+    */
+  private def stageTrained(data: DataFrame, path: String, stage: String,
+      m: Int, kSub: Int, iters: Int, kCells: Option[Int]): PqIndex = {
+    val coarse = kCells.map(Ivf.kmeansCentroids(data, _, iters))
+    val cbs = coarse.fold(trainCodebooks(data, m, kSub, iters))(
+      residualCodebooksFromSample(data, _, m, kSub, iters))
+    val q = PqIndex(path, cbs, coarse)
+    val encoded = codesWithD2(data, q).localCheckpoint()
+    writeCodes(dropD2(encoded, m), s"$stage/seg=base", q)
+    writeQuantizer(stage, q)
+    writeSubStats(stage, subStatsOf(encoded, m))
+    q
+  }
+
+  /** Build the persisted index: train the quantizer, encode in one
+    * scan, stage codes + raw vectors + the quantizer and encode-time
+    * fit-stats sidecars as a complete generation, commit with one
+    * atomic pointer flip (the [[graft.util.IndexMaint]] protocol — a
+    * rebuild supersedes prior generations and their tokens). `kCells`
+    * picks the encoding: None builds flat PQ, Some(k) a residual
+    * IVF-PQ index over k coarse cells.
+    */
+  def buildIndex(base: DataFrame, path: String, m: Int, kSub: Int,
+      iters: Int, kCells: Option[Int] = None,
+      buildKey: Option[String] = None): PqIndex =
+    graft.util.IndexMaint.withMutation(path, op = "build") {
+      val stage = graft.util.IndexMaint.newStageDir(path, "build")
+      val index = stageTrained(base, path, stage, m, kSub, iters, kCells)
+      buildKey.foreach(graft.util.IndexMaint.writeBuildKey(stage, _))
+      graft.util.IndexMaint.commitGeneration(path, stage)
+      index
+    }
+
+  /** [[buildIndex]] memoized per (path, source fingerprint, shape) for
+    * the session — the [[Ivf.buildIndexCached]] pattern: the build is
+    * deterministic, so one derivation serves every consumer in the JVM
+    * while the filesystem fingerprint invalidates the memo if the
+    * source is rewritten. Production holds the [[PqIndex]] handle. A
+    * memo miss whose persisted build key matches the live generation's
+    * REOPENS it (read-only — [[Ivf.buildIndexCached]]'s contract: a
+    * miss must never retrain and rewrite a durable index); rebuild only
+    * on true staleness.
+    */
+  def buildIndexCached(base: DataFrame, srcDir: String, path: String,
+      m: Int, kSub: Int, iters: Int, kCells: Option[Int] = None): PqIndex = {
+    val fp = graft.util.Fs.dirFingerprint(srcDir)
+    val key = (path, fp, kCells, m, kSub, iters)
+    // the on-disk key format of each encoding is what existing indexes
+    // were stamped with — changing it turns every reopen into a rebuild
+    val diskKey = kCells.fold(s"pq|src=$fp|m=$m|kSub=$kSub|iters=$iters")(kc =>
+      s"ivfpq|src=$fp|kCells=$kc|m=$m|kSub=$kSub|iters=$iters")
+    buildMemo.memoized(key, graft.util.IndexMaint.lockFor(path))(
+      k => k._1 == path && k != key) {
+      if (graft.util.IndexMaint.liveGenOpt(path)
+        .exists(g => graft.util.IndexMaint.readBuildKey(g).contains(diskKey)))
+        loadIndex(path)
+      else buildIndex(base, path, m, kSub, iters, kCells, Some(diskKey))
+    }
+  }
+
+  private[ops] def dropBuildMemo(path: String): Unit =
+    buildMemo.evict(_._1 == path)
+
+  private val buildMemo =
+    new graft.util.BoundedCache[(String, Long, Option[Int], Int, Int, Int), PqIndex](
+      Ivf.IndexCacheBound)
+
+  /** Reopen an index in the encoding its live generation was built
+    * with. No recovery dance ([[Ivf.loadIndex]] contract): generation
+    * commits are atomic pointer flips, so the live generation is always
+    * complete.
+    */
+  def loadIndex(path: String): PqIndex =
+    graft.util.IndexMaint.lockFor(path).synchronized {
+      indexAt(path, graft.util.IndexMaint.liveGen(path))
+    }
+
+  /** The [[IndexFamily]] verb choreography for both encodings: every
+    * hook reads the quantizer — and with it the encoding — from the
+    * generation it writes against, so a stale handle can neither commit
+    * codes from a superseded quantizer nor a segment in the wrong
+    * layout. The fit baseline carries through a rewrite unless rows
+    * were dropped.
+    */
+  private object Family extends IndexFamily {
+    override protected def cdcContext(token: String): String = s"applyCdc($token)"
+    override protected def compactLabel(path: String): String = s"compactIndex($path)"
+
+    private def genIndex(gen: String): PqIndex =
+      indexAt(java.nio.file.Paths.get(gen).getParent.toString, gen)
+
+    override protected def encodeToStage(gen: String, batch: DataFrame,
+        stage: String): Unit = {
+      val q = genIndex(gen)
+      writeCodes(dropD2(codesWithD2(batch, q), q.codebooks.size), stage, q)
+    }
+
+    override protected def compactSurvivors(spark: SparkSession,
+        path: String): DataFrame = indexData(spark, path)
+
+    // flat codes are m bytes/vector, so one file holds millions of
+    // them; residual codes re-land as one directory per cell
+    override protected def writeSurvivorStage(spark: SparkSession,
+        survivors: DataFrame, segBase: String, gen: String): Unit = {
+      val q = genIndex(gen)
+      writeCodes(if (q.coarse.isDefined) survivors.repartition(col("cid"))
+        else survivors.repartition(1), segBase, q)
+    }
+
+    override protected def writeGenSidecars(spark: SparkSession, stage: String,
+        gen: String, hadDeletes: Boolean): Unit = {
+      val q = genIndex(gen)
+      writeQuantizer(stage, q)
+      // codes are unchanged, so the encode-time fit baseline is carried
+      // — compaction must not reset the drift reference. Deletion is
+      // the exception: recomputed from the just-written survivor stage,
+      // never a second old-generation scan through the anti-join
+      if (hadDeletes)
+        writeSubStats(stage, storedSubStats(spark.read.parquet(s"$stage/seg=base"), q))
+      else writeSubStats(stage, readSubStats(gen))
+    }
+
+    override protected def afterCommit(path: String): Unit = dropBuildMemo(path)
+  }
+
+  /** Encode a new batch against the FROZEN quantizer and commit it as
+    * an anonymous segment — O(Δ). This is the path that erodes fit
+    * under shift. Replayable callers use [[appendBatchIdempotent]].
+    */
+  def appendBatch(index: PqIndex, batch: DataFrame): Unit =
+    Family.appendAnonSegment(index.path, batch)
+
+  /** Compact the live generation's accrued append segments into one
+    * re-laid-out segment WITHOUT re-encoding — [[Ivf.compactIndex]]'s
+    * contract: same quantizer, same codes, same fit baseline, same
+    * applied tokens, fewer files. Streaming ingest commits one file set
+    * per micro-batch; after B batches every screen opens B footers for
+    * what is logically one relation. Flat codes re-land as one file,
+    * residual codes as one file per cell.
+    */
+  def compactIndex(spark: SparkSession, index: PqIndex,
+      sweepKey: Option[String] = None): PqIndex =
+    indexAt(index.path, Family.compactGeneration(spark, index.path, None, sweepKey))
+
+  /** One size-tiered merge step ([[IndexFamily.mergeSmallSegments]]) —
+    * the bounded-write-amplification maintenance step for streamed code
+    * appends; the handle stays valid (quantizer and fit baseline carry
+    * verbatim).
+    */
+  def mergeSegments(spark: SparkSession, index: PqIndex,
+      policy: MergePolicy = MergePolicy()): Option[MergeReport] =
+    Family.mergeSmallSegments(spark, index.path, policy)
+
+  /** Structural + data fsck of a PQ index ([[IndexFamily.fsckIndex]]). */
+  def fsckIndex(spark: SparkSession, path: String): (Seq[String], Seq[String]) =
+    Family.fsckIndex(spark, path)
+
+  /** Bulk delete by predicate — the [[Ivf.deleteWhere]] retention path
+    * on the PQ codes: one filtered compaction instead of a
+    * corpus-scale tombstone list.
+    */
+  def deleteWhere(spark: SparkSession, index: PqIndex,
+      doomed: org.apache.spark.sql.Column): PqIndex =
+    indexAt(index.path, Family.compactGeneration(spark, index.path, Some(doomed)))
+
+  /** Current per-subspace fit vs the build-time sidecar: one index scan
+    * into an m-row aggregate, scored with the live generation's own
+    * quantizer and compared to that generation's baseline. Codes are
+    * frozen-nearest, so the assigned entry's error IS the fit stat; on
+    * the residual layout it is the residual's error. Shifted appends
+    * push vectors (or residuals) away from every codebook entry and
+    * meanD2 grows before recall visibly dies.
+    */
   def pqDriftStats(spark: SparkSession, index: PqIndex): PqDriftReport = {
     driftScans.incrementAndGet()
     val gen = graft.util.IndexMaint.liveGen(index.path)
-    // live contents only (indexData subtracts tombstones): deleted rows
-    // are no longer served, so they must not count toward fit either
+    // live contents only (tombstones subtracted): deleted rows are no
+    // longer served, so they must not count toward fit either
     PqDriftReport(build = readSubStats(gen),
-      now = subStatsOf(withStoredCodeD2(indexData(spark, index.path),
-        index.codebooks), index.codebooks.size))
+      now = storedSubStats(indexDataAt(spark, gen), indexAt(index.path, gen)))
   }
 
-  /** Retrain the sub-codebooks from a bounded sample of the index's
-    * CURRENT contents, re-encode every vector in one scan into a
-    * STAGED new generation (data + sidecars + carried applied tokens),
-    * commit with one atomic pointer flip. The previous generation
-    * survives until the next commit, so concurrent readers are safe.
-    * Same per-path monitor + cross-process lease as the build.
+  /** Retrain the quantizer from a bounded sample of the index's
+    * CURRENT contents — on the residual layout the COMPOSED repair:
+    * coarse retrain, then the sub-codebooks on the new residuals — and
+    * re-encode every vector in one scan into a STAGED new generation
+    * (data + sidecars + carried applied tokens), committed with one
+    * atomic pointer flip. The shape (m, kSub, kCells) is the live
+    * generation's. The previous generation survives until the next
+    * commit, so concurrent readers are safe. Same per-path monitor +
+    * cross-process lease as the build.
     */
   def rebalance(spark: SparkSession, index: PqIndex, iters: Int = 2): PqIndex =
     graft.util.IndexMaint.withMutation(index.path, op = "rebalance") {
       val gen = graft.util.IndexMaint.liveGen(index.path)
-      val m = index.codebooks.size
-      val kSub = index.codebooks.head.size
+      val old = indexAt(index.path, gen)
+      val m = old.codebooks.size
       // survivors only (tombstones reclaimed here too); metadata rides,
-      // stale codes dropped before the re-encode
-      val data = indexData(spark, index.path)
-        .drop("seg").drop((0 until m).map(s => s"c$s"): _*)
-      val cbs = trainCodebooks(data, m, kSub, iters)
-      val encoded = encodeWithD2(data, cbs).localCheckpoint()
+      // stale cell and code columns dropped before the re-encode
+      val stale = old.coarse.map(_ => "cid").toSeq ++ (0 until m).map(s => s"c$s")
+      val data = indexDataAt(spark, gen).drop("seg").drop(stale: _*)
       val stage = graft.util.IndexMaint.newStageDir(index.path, "rebalance")
-      dropD2(encoded, m)
-        .write.mode("overwrite").parquet(s"$stage/seg=base")
-      writeCodebooks(stage, cbs)
-      writeSubStats(stage, subStatsOf(encoded, m))
+      val fresh = stageTrained(data, index.path, stage, m,
+        old.codebooks.head.size, iters, old.coarse.map(_.size))
       graft.util.IndexMaint.writeConsolidatedTokens(stage,
         graft.util.IndexMaint.appliedTokens(gen))
       // carried ([[Ivf.rebalance]] rationale): a later cached-build
-      // miss must reopen the repaired codebooks, not undo them
+      // miss must reopen the repaired quantizer, not undo it
       graft.util.IndexMaint.carryDerivationKeys(gen, stage)
       graft.util.IndexMaint.commitGeneration(index.path, stage)
-      pqIndexCache.evict(_._1 == index.path)
-      PqIndex(index.path, cbs)
+      dropBuildMemo(index.path)
+      fresh
     }
 
   /** Fully DISTRIBUTED ADC screen of a `(vec_id, embedding)` delta
-    * batch against the persisted codes — no driver-side LUTs: the m×kSub
-    * codebook rides the plan as a literal (m·kSub·subDim doubles — for
-    * m=4/kSub=256/sub=16 that is 131 kB, broadcast-class metadata), the
-    * small delta side broadcasts, and each (candidate, query) pair sums
-    * m subspace distances computed from the code-resolved entry. This is
-    * the formulation a streaming ingest loop needs: per-batch work is
-    * O(codes × Δ) with only code BYTES read — PQ prunes bytes, not
-    * reads; compose with the IVF coarse quantizer ([[ivfPqAnn]]) when
-    * read pruning is also required.
+    * batch against the persisted flat codes — no driver-side LUTs: the
+    * live generation's m×kSub codebook rides the plan as a literal
+    * (m·kSub·subDim doubles — for m=4/kSub=256/sub=16 that is 131 kB,
+    * broadcast-class metadata), the small delta side broadcasts, and
+    * each (candidate, query) pair sums m subspace distances computed
+    * from the code-resolved entry. This is the formulation a streaming
+    * ingest loop needs: per-batch work is O(codes × Δ) with only code
+    * BYTES read — PQ prunes bytes, not reads; the residual layout's
+    * [[screenBatchResidual]] prunes both.
     */
   def screenBatchAdc(spark: SparkSession, index: PqIndex, delta: DataFrame,
       k: Int): DataFrame = {
-    val m = index.codebooks.size
-    val subDim = index.codebooks.head.head.length
-    val cbLit = typedLit(index.codebooks.map(_.map(_.toSeq)))
+    val gen = graft.util.IndexMaint.liveGen(index.path)
+    val cbs = quantizerFor(index.path, gen, residual = false, "screenBatchAdc").codebooks
+    val m = cbs.size
+    val subDim = cbs.head.head.length
+    val cbLit = typedLit(cbs.map(_.map(_.toSeq)))
     val q = broadcast(delta
       .select(col("vec_id").as("query_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("qvec")))
@@ -932,7 +1054,7 @@ object Pq {
         lit(0.0), (acc, v) => acc + v)
     }.reduceLeft(_ + _)
     val w = Window.partitionBy(col("query_id")).orderBy(col("d2").asc, col("vec_id"))
-    indexData(spark, index.path).crossJoin(q)
+    indexDataAt(spark, gen).crossJoin(q)
       .select(col("query_id"), col("vec_id"), d2.as("d2"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -951,11 +1073,13 @@ object Pq {
     * token stage together and commit by ONE atomic segment rename, so
     * an at-least-once replay either re-runs a crashed stage (commits
     * once) or detects the committed token (no-ops) — no
-    * applied-but-unrecorded state exists. [[rebalance]] carries applied
+    * applied-but-unrecorded state exists. Encoding resolves the LIVE
+    * generation's quantizer and layout, so a stale handle cannot commit
+    * codes from a superseded generation. [[rebalance]] carries applied
     * tokens into the new generation.
     */
   def appendBatchIdempotent(index: PqIndex, batch: DataFrame, token: String): Boolean =
-    flatFamily.appendSegment(index.path, batch, token)
+    Family.appendSegment(index.path, batch, token)
 
   /** Delete-then-insert in ONE leased mutation — the
     * [[Ivf.upsertBatchIdempotent]] contract on the PQ index: tombstone
@@ -965,7 +1089,7 @@ object Pq {
     * only torn crash state (see the IVF variant's scaladoc).
     */
   def upsertBatchIdempotent(index: PqIndex, batch: DataFrame, token: String): Boolean =
-    flatFamily.upsertSegment(index.path, batch, token)
+    Family.upsertSegment(index.path, batch, token)
 
   /** Apply one CDC micro-batch — the [[Ivf.applyCdcIdempotent]]
     * contract on the PQ index: delete+upsert ids tombstoned across the
@@ -975,15 +1099,15 @@ object Pq {
     * later re-insert).
     */
   def applyCdcIdempotent(index: PqIndex, batch: DataFrame, token: String): Boolean =
-    flatFamily.cdcSegment(index.path, batch, token)
+    Family.cdcSegment(index.path, batch, token)
 
   /** Delete ids from the index ([[Ivf.deleteIds]] contract): logical
-    * tombstone now — honored immediately by every ADC screen through
+    * tombstone now — honored immediately by every screen through
     * [[indexData]] — physical reclamation at [[compactIndex]] /
     * [[rebalance]]; a later append of the same id re-inserts it.
     */
   def deleteIds(index: PqIndex, ids: Seq[Long]): Int =
-    flatFamily.deleteIdsCore(org.apache.spark.sql.SparkSession.active,
+    Family.deleteIdsCore(org.apache.spark.sql.SparkSession.active,
       index.path, ids)
 
   /** [[pqDriftStats]] invocation counter — the amortization evidence
@@ -991,7 +1115,7 @@ object Pq {
     */
   private[graft] val driftScans = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** ADC top-k of raw query vectors against the persisted codes —
+  /** ADC top-k of raw query vectors against the persisted flat codes —
     * the recall probe PqSpec and ScaleProbe measure drift with.
     * `candFilter` (a predicate over the index's metadata columns)
     * lands on the index scan BEFORE ranking — filtered search prunes
@@ -1000,19 +1124,23 @@ object Pq {
   def adcTopK(spark: SparkSession, index: PqIndex,
       queryVecs: Seq[(Long, Array[Double])], k: Int,
       candFilter: Option[Column] = None): DataFrame =
-    adcTopKAt(spark, index, queryVecs, k, candFilter,
+    adcTopKAt(spark, index.path, queryVecs, k, candFilter,
       graft.util.IndexMaint.liveGen(index.path))
 
-  private def adcTopKAt(spark: SparkSession, index: PqIndex,
+  /** [[adcTopK]] against one resolved generation: LUTs from ITS
+    * codebooks, codes from its tombstone-subtracted read.
+    */
+  private def adcTopKAt(spark: SparkSession, path: String,
       queryVecs: Seq[(Long, Array[Double])], k: Int,
       candFilter: Option[Column], gen: String): DataFrame =
-    adcTopKOver(spark, index.codebooks, queryVecs, k, candFilter,
-      indexDataAt(spark, gen))
+    adcTopKOver(spark,
+      quantizerFor(path, gen, residual = false, "adcTopK").codebooks,
+      queryVecs, k, candFilter, indexDataAt(spark, gen))
 
   /** The ADC fold over an EXPLICIT (codebooks, codes) pair — the live
-    * path passes the handle's codebooks and the live
-    * tombstone-subtracted read; a pinned snapshot passes the manifest's
-    * view ([[adcTopKAsOf]]).
+    * path passes the live generation's codebooks and tombstone-
+    * subtracted read; a pinned snapshot passes the manifest's view
+    * ([[adcTopKAsOf]]).
     */
   private def adcTopKOver(spark: SparkSession,
       codebooks: Seq[Seq[Array[Double]]],
@@ -1060,13 +1188,12 @@ object Pq {
   }
 
   /** Materialize the snapshot pinned as `label` into `destRoot` as a
-    * STANDALONE code index ([[graft.util.IndexMaint.exportSnapshot]]):
-    * works for BOTH the flat and the residual IVF-PQ layouts, since
-    * every root sidecar either family keeps (codebooks, coarse
-    * quantizer, derivation keys) is immutable within a generation —
-    * the carried copies are the pin-time values, so live [[adcTopK]] /
-    * [[screenTopKResidual]] reads of the export ≡ the as-of readers
-    * against the pin.
+    * STANDALONE code index ([[graft.util.IndexMaint.exportSnapshot]]) in
+    * either encoding: every root sidecar (codebooks, the residual
+    * layout's coarse quantizer, derivation keys) is immutable within a
+    * generation, so the carried copies are the pin-time values and live
+    * [[adcTopK]] / [[screenTopKResidual]] reads of the export ≡ the
+    * as-of readers against the pin.
     */
   def exportIndexSnapshot(path: String, label: String, destRoot: String): String =
     graft.util.IndexMaint.exportSnapshot(path, label, destRoot)
@@ -1082,7 +1209,9 @@ object Pq {
       throw new IllegalArgumentException(
         s"no snapshot pinned as '$label' under $path"))
     val genDir = graft.util.IndexMaint.snapshotGenDir(path, snap)
-    adcTopKOver(spark, readCodebooks(genDir), queryVecs, k, None,
+    adcTopKOver(spark,
+      quantizerFor(path, genDir, residual = false, "adcTopKAsOf").codebooks,
+      queryVecs, k, None,
       graft.util.IndexMaint.snapshotView(spark, genDir, snap,
         idCol = "vec_id"))
   }
@@ -1147,7 +1276,7 @@ object Pq {
     // the filter applies at the SCREEN (bytes pruned before ranking);
     // the rerank fetch joins on screened ids, so it inherits the filter
     exactRerank(spark, gen,
-      adcTopKAt(spark, index, queryVecs, rr, candFilter, gen), queryVecs, k)
+      adcTopKAt(spark, index.path, queryVecs, rr, candFilter, gen), queryVecs, k)
   }
 
   /** The exact rerank both persisted reranks share: the screened
@@ -1176,7 +1305,16 @@ object Pq {
     * stored vectors — the dial a PQ user watches rot under shift.
     */
   def recallAtK(spark: SparkSession, index: PqIndex,
-      queryVecs: Seq[(Long, Array[Double])], k: Int): Double = {
+      queryVecs: Seq[(Long, Array[Double])], k: Int): Double =
+    recallVsExact(spark, index, queryVecs, k, adcTopK(spark, index, queryVecs, k))
+
+  /** The share of the exact L2 top-k over the index's stored vectors
+    * that `approx` (a top-k page of the same queries) recovers — the
+    * exact half both recall dials share.
+    */
+  private def recallVsExact(spark: SparkSession, index: PqIndex,
+      queryVecs: Seq[(Long, Array[Double])], k: Int,
+      approx: => DataFrame): Double = {
     import spark.implicits._
     val qDf = queryVecs.map { case (id, q) => (id, q) }.toDF("query_id", "qvec")
     val exact = indexData(spark, index.path)
@@ -1190,11 +1328,10 @@ object Pq {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("vec_id"))
       .localCheckpoint()
-    val approx = adcTopK(spark, index, queryVecs, k)
-      .select(col("query_id"), col("vec_id"))
+    val hits = approx.select(col("query_id"), col("vec_id"))
     val denom = exact.count()
     if (denom == 0) 1.0
-    else exact.join(approx, Seq("query_id", "vec_id")).count().toDouble / denom
+    else exact.join(hits, Seq("query_id", "vec_id")).count().toDouble / denom
   }
 
   // ---- residual IVF-PQ ------------------------------------------------------
@@ -1466,226 +1603,15 @@ object Pq {
       |SELECT query_id, rank, vec_id, d2 FROM ranked WHERE rank <= 5
       |ORDER BY query_id, rank""".stripMargin
 
-  // ---- persisted residual IVF-PQ index --------------------------------------
+  // ---- persisted residual IVF-PQ screens -------------------------------------
   //
-  // The production form of [[ivfPqResidual]]: the FAISS IndexIVFPQ
-  // layout as a real table — cid-partitioned parquet of
-  // (vec_id, embedding, c0 … c(m-1)) residual codes, with the coarse
-  // centroids, residual sub-codebooks and encode-time fit stats as
-  // generation sidecars. Composes BOTH scale dials durably: a screen
-  // reads ~nprobe/kCells of the partitions (read pruning) and scores
-  // code BYTES via per-cell residual LUTs (byte pruning). Maintenance
-  // follows the [[PqIndex]] loop — appends erode fit, the residual
-  // drift dial sees it, [[rebalanceResidual]] runs the COMPOSED repair:
-  // coarse retrain → residual sub-codebook retrain → one-scan re-encode
-  // → atomic generation commit with carried tokens.
-
-  /** Handle: index root + coarse centroids + residual sub-codebooks. */
-  final case class IvfPqIndex(path: String, centroids: Seq[Array[Float]],
-      codebooks: Seq[Seq[Array[Double]]])
-
-  /** One scan: coarse cell, double residual, m residual codes AND their
-    * quantization errors (the encode-time fit stats).
-    */
-  private def residualEncodeWithD2(emb: DataFrame, cents: Seq[Array[Float]],
-      cbs: Seq[Seq[Array[Double]]]): DataFrame = {
-    val m = cbs.size
-    val subDim = cbs.head.head.length
-    val extras = emb.columns.toIndexedSeq
-      .filter(c => c != "vec_id" && c != "embedding").map(col)
-    val centLit = typedLit(cents.map(_.toSeq))
-    val assigned0 = emb
-      .withColumn("cid", ArrayExprs.nearestCentroid(col("embedding"), cents))
-      .withColumn("cent", element_at(centLit, col("cid") + 1))
-      .withColumn("resid",
-        zip_with(col("embedding"), col("cent"),
-          (x, cc) => x.cast("double") - cc.cast("double")))
-    val cols = (0 until m).flatMap { s =>
-      val nc = ArrayExprs.nearestCentroidSqD(
-        slice(col("resid"), s * subDim + 1, subDim), cbs(s))
-      Seq(nc.getField("cid").as(s"c$s"), nc.getField("dist2").as(s"d$s"))
-    }
-    assigned0.select(col("vec_id") +: col("embedding") +: col("cid") +:
-      (extras ++ cols): _*)
-  }
-
-  /** Build the persisted residual index — the [[buildIndex]] protocol
-    * with the coarse quantizer trained first and the sub-codebooks
-    * trained on the SAME sample draw's residuals.
-    */
-  def buildIndexResidual(base: DataFrame, path: String, kCells: Int,
-      m: Int, kSub: Int, iters: Int,
-      buildKey: Option[String] = None): IvfPqIndex =
-    graft.util.IndexMaint.withMutation(path, op = "build") {
-      val cents = Ivf.kmeansCentroids(base, kCells, iters)
-      val cbs = residualCodebooksFromSample(base, cents, m, kSub, iters)
-      val encoded = residualEncodeWithD2(base, cents, cbs).localCheckpoint()
-      val stage = graft.util.IndexMaint.newStageDir(path, "build")
-      dropD2(encoded, m)
-        .write.mode("overwrite").partitionBy("cid").parquet(s"$stage/seg=base")
-      Ivf.writeCentroids(stage, cents)
-      writeCodebooks(stage, cbs)
-      writeSubStats(stage, subStatsOf(encoded, m))
-      buildKey.foreach(graft.util.IndexMaint.writeBuildKey(stage, _))
-      graft.util.IndexMaint.commitGeneration(path, stage)
-      IvfPqIndex(path, cents, cbs)
-    }
-
-  def loadIndexResidual(path: String): IvfPqIndex =
-    graft.util.IndexMaint.lockFor(path).synchronized {
-      val gen = graft.util.IndexMaint.liveGen(path)
-      IvfPqIndex(path, Ivf.readCentroids(gen), readCodebooks(gen))
-    }
-
-  def appliedTokensResidual(index: IvfPqIndex): Set[String] =
-    graft.util.IndexMaint.appliedTokens(graft.util.IndexMaint.liveGen(index.path))
-
-  /** Token-guarded O(Δ) append — the [[appendBatchIdempotent]] contract
-    * on the residual layout: the batch's cells + residual codes stage
-    * with the token and commit by one atomic segment rename; encoding
-    * resolves the LIVE generation's quantizer + codebooks so a stale
-    * handle cannot commit codes from a superseded generation.
-    */
-  /** The residual side of the shared [[IndexFamily]] verb choreography:
-    * encode = residual re-encoding against the LIVE coarse quantizer +
-    * codebooks, layout = cell-partitioned, fit baseline recomputed on
-    * the residual stats when rows were dropped.
-    */
-  private object ResidualFamily extends IndexFamily {
-    override protected def cdcContext(token: String): String =
-      s"applyCdcResidual($token)"
-    override protected def compactLabel(path: String): String =
-      s"compactIndexResidual($path)"
-
-    override protected def encodeToStage(gen: String, batch: DataFrame,
-        stage: String): Unit = {
-      val cents = Ivf.readCentroids(gen)
-      val cbs = readCodebooks(gen)
-      dropD2(residualEncodeWithD2(batch, cents, cbs), cbs.size)
-        .write.mode("overwrite").partitionBy("cid").parquet(stage)
-    }
-
-    override protected def compactSurvivors(spark: SparkSession,
-        path: String): DataFrame = indexData(spark, path)
-
-    override protected def writeSurvivorStage(spark: SparkSession,
-        survivors: DataFrame, segBase: String): Unit =
-      survivors.repartition(col("cid"))
-        .write.mode("overwrite").partitionBy("cid").parquet(segBase)
-
-    override protected def writeGenSidecars(spark: SparkSession, stage: String,
-        gen: String, hadDeletes: Boolean): Unit = {
-      val cents = Ivf.readCentroids(gen)
-      val cbs = readCodebooks(gen)
-      Ivf.writeCentroids(stage, cents)
-      writeCodebooks(stage, cbs)
-      // fit baseline carried unless rows were dropped (the delete
-      // exception — recomputed from the just-written survivor stage)
-      if (hadDeletes)
-        writeSubStats(stage, subStatsOf(withStoredCodeD2Residual(
-          spark.read.parquet(s"$stage/seg=base"), cents, cbs), cbs.size))
-      else writeSubStats(stage, readSubStats(gen))
-    }
-
-    override protected def afterCommit(path: String): Unit =
-      ivfPqIndexCache.evict(_._1 == path)
-  }
-
-  def appendBatchIdempotentResidual(index: IvfPqIndex, batch: DataFrame,
-      token: String): Boolean =
-    ResidualFamily.appendSegment(index.path, batch, token)
-
-  /** Delete-then-insert on the residual index — the
-    * [[Ivf.upsertBatchIdempotent]] contract with residual re-encoding
-    * against the live coarse quantizer + codebooks.
-    */
-  def upsertBatchIdempotentResidual(index: IvfPqIndex, batch: DataFrame,
-      token: String): Boolean =
-    ResidualFamily.upsertSegment(index.path, batch, token)
-
-  /** Apply one CDC micro-batch on the residual index — the
-    * [[Ivf.applyCdcIdempotent]] contract with residual re-encoding
-    * against the live coarse quantizer + codebooks.
-    */
-  def applyCdcIdempotentResidual(index: IvfPqIndex, batch: DataFrame,
-      token: String): Boolean =
-    ResidualFamily.cdcSegment(index.path, batch, token)
-
-  /** Delete ids from the residual index ([[Ivf.deleteIds]] contract). */
-  def deleteIdsResidual(index: IvfPqIndex, ids: Seq[Long]): Int =
-    ResidualFamily.deleteIdsCore(org.apache.spark.sql.SparkSession.active,
-      index.path, ids)
-
-  /** Residual-fit drift: recompute each stored vector's residual
-    * quantization error from (embedding, cid, c0 … c(m-1)) against the
-    * FROZEN codebooks — one index scan into an m-row aggregate,
-    * compared to the encode-time sidecar. Same dial semantics as
-    * [[pqDriftStats]]: shifted appends push residuals away from every
-    * codebook entry and meanD2 grows before recall visibly dies.
-    */
-  /** [[withStoredCodeD2]] on the residual layout: the stored (cid,
-    * c0..c(m-1)) resolve the residual and its assigned entries in-plan.
-    */
-  private def withStoredCodeD2Residual(data: DataFrame,
-      cents: Seq[Array[Float]], cbs: Seq[Seq[Array[Double]]]): DataFrame = {
-    val m = cbs.size
-    val subDim = cbs.head.head.length
-    val centLit = typedLit(cents.map(_.toSeq))
-    val cbLit = typedLit(cbs.map(_.map(_.toSeq)))
-    val resid = zip_with(col("embedding"), element_at(centLit, col("cid") + 1),
-      (x, cc) => x.cast("double") - cc.cast("double"))
-    val dCols = (0 until m).map { s =>
-      val entry = element_at(element_at(cbLit, s + 1), col(s"c$s") + 1)
-      aggregate(
-        zip_with(slice(resid, s * subDim + 1, subDim), entry,
-          (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, v) => acc + v).as(s"d$s")
-    }
-    data.select((col("vec_id") +: dCols): _*)
-  }
-
-  def ivfPqDriftStats(spark: SparkSession, index: IvfPqIndex): PqDriftReport = {
-    driftScans.incrementAndGet()
-    val gen = graft.util.IndexMaint.liveGen(index.path)
-    // live contents only: indexData subtracts tombstones
-    PqDriftReport(build = readSubStats(gen),
-      now = subStatsOf(withStoredCodeD2Residual(indexData(spark, index.path),
-        index.centroids, index.codebooks), index.codebooks.size))
-  }
-
-  /** The COMPOSED repair: coarse retrain from a bounded sample of
-    * current contents → residual sub-codebook retrain on the new
-    * residuals → one-scan re-encode → atomic generation commit with
-    * carried tokens.
-    */
-  def rebalanceResidual(spark: SparkSession, index: IvfPqIndex,
-      iters: Int = 2): IvfPqIndex =
-    graft.util.IndexMaint.withMutation(index.path, op = "rebalance") {
-      val gen = graft.util.IndexMaint.liveGen(index.path)
-      val m = index.codebooks.size
-      val kSub = index.codebooks.head.size
-      // survivors only (tombstones reclaimed); metadata rides, stale
-      // cell/code columns dropped before the composed re-encode
-      val data = indexData(spark, index.path)
-        .drop("seg", "cid").drop((0 until m).map(s => s"c$s"): _*)
-      val cents = Ivf.kmeansCentroids(data, index.centroids.size, iters)
-      val cbs = residualCodebooksFromSample(data, cents, m, kSub, iters)
-      val encoded = residualEncodeWithD2(data, cents, cbs).localCheckpoint()
-      val stage = graft.util.IndexMaint.newStageDir(index.path, "rebalance")
-      dropD2(encoded, m)
-        .write.mode("overwrite").partitionBy("cid").parquet(s"$stage/seg=base")
-      Ivf.writeCentroids(stage, cents)
-      writeCodebooks(stage, cbs)
-      writeSubStats(stage, subStatsOf(encoded, m))
-      graft.util.IndexMaint.writeConsolidatedTokens(stage,
-        graft.util.IndexMaint.appliedTokens(gen))
-      // carried ([[Ivf.rebalance]] rationale): a later cached-build
-      // miss must reopen the composed repair, not undo it
-      graft.util.IndexMaint.carryDerivationKeys(gen, stage)
-      graft.util.IndexMaint.commitGeneration(index.path, stage)
-      ivfPqIndexCache.evict(_._1 == index.path)
-      IvfPqIndex(index.path, cents, cbs)
-    }
+  // The production form of [[ivfPqResidual]]: a [[PqIndex]] built with
+  // `kCells` — the FAISS IndexIVFPQ layout as a real table. Its screens
+  // compose BOTH scale dials durably: a screen reads ~nprobe/kCells of
+  // the cell partitions (read pruning) and scores code BYTES via
+  // per-cell residual LUTs (byte pruning). Every other verb is the
+  // shared one above: appends erode fit, [[pqDriftStats]] sees it and
+  // [[rebalance]] runs the composed repair.
 
   /** Probed-cell ADC screen of raw query vectors against the persisted
     * residual codes: per (query, probed cell) the query's RESIDUAL LUT
@@ -1694,23 +1620,28 @@ object Pq {
     * ~nprobe/kCells of its partitions, and each candidate costs m
     * lookups summed — both dials, one plan.
     */
-  def screenTopKResidual(spark: SparkSession, index: IvfPqIndex,
+  def screenTopKResidual(spark: SparkSession, index: PqIndex,
       queryVecs: Seq[(Long, Array[Double])], k: Int, nprobe: Int,
       candFilter: Option[Column] = None): DataFrame =
-    screenTopKResidualAt(spark, index, queryVecs, k, nprobe, candFilter,
+    screenTopKResidualAt(spark, index.path, queryVecs, k, nprobe, candFilter,
       graft.util.IndexMaint.liveGen(index.path))
 
-  private def screenTopKResidualAt(spark: SparkSession, index: IvfPqIndex,
+  /** [[screenTopKResidual]] against one resolved generation: probes and
+    * LUTs from ITS quantizer, codes from its tombstone-subtracted read.
+    */
+  private def screenTopKResidualAt(spark: SparkSession, path: String,
       queryVecs: Seq[(Long, Array[Double])], k: Int, nprobe: Int,
-      candFilter: Option[Column], gen: String): DataFrame =
-    screenTopKResidualOver(spark, index.centroids, index.codebooks,
+      candFilter: Option[Column], gen: String): DataFrame = {
+    val q = quantizerFor(path, gen, residual = true, "screenTopKResidual")
+    screenTopKResidualOver(spark, q.coarse.get, q.codebooks,
       queryVecs, k, nprobe, candFilter,
       cids => indexDataAt(spark, gen).filter(col("cid").isin(cids: _*)))
+  }
 
   /** The residual screen over an EXPLICIT (coarse quantizer, codebooks,
-    * candidate provider) triple — the live path passes the handle's
-    * sidecars and the live tombstone-subtracted read; a pinned snapshot
-    * passes the manifest's view ([[screenTopKResidualAsOf]]).
+    * candidate provider) triple — the live path passes the live
+    * generation's sidecars and tombstone-subtracted read; a pinned
+    * snapshot passes the manifest's view ([[screenTopKResidualAsOf]]).
     */
   private def screenTopKResidualOver(spark: SparkSession,
       centroids: Seq[Array[Float]], codebooks: Seq[Seq[Array[Double]]],
@@ -1772,8 +1703,9 @@ object Pq {
       throw new IllegalArgumentException(
         s"no snapshot pinned as '$label' under $path"))
     val genDir = graft.util.IndexMaint.snapshotGenDir(path, snap)
-    screenTopKResidualOver(spark, Ivf.readCentroids(genDir),
-      readCodebooks(genDir), queryVecs, k, nprobe, candFilter = None,
+    val q = quantizerFor(path, genDir, residual = true, "screenTopKResidualAsOf")
+    screenTopKResidualOver(spark, q.coarse.get, q.codebooks,
+      queryVecs, k, nprobe, candFilter = None,
       cids => graft.util.IndexMaint.snapshotView(spark, genDir, snap,
         idCol = "vec_id").filter(col("cid").isin(cids: _*)))
   }
@@ -1791,21 +1723,21 @@ object Pq {
     val emb = c.ref("embeddings").select(col("vec_id"), col("embedding"))
     val base = emb.filter(col("vec_id") % 10 =!= 0)
     val path = graft.util.Fs.sessionTempDir("ivfpq_index_asof", dir)
-    val index = buildIndexResidualCached(base, s"$dir/embeddings.parquet",
-      path, kCells = 16, m = 4, kSub = 16, iters = 0)
+    val index = buildIndexCached(base, s"$dir/embeddings.parquet",
+      path, m = 4, kSub = 16, iters = 0, kCells = Some(16))
     graft.util.IndexMaint.pinLiveIfAbsent(path, "pre")
     // one-shot post-pin wave (sweepOnce — the ivfAsOf rationale)
     graft.util.IndexMaint.sweepOnce(path, s"$dir/embeddings.parquet",
       "wave|rqasofq") {
       val doomed = base.filter(col("vec_id") % 7 === 3)
         .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
-      deleteIdsResidual(index, doomed)
+      deleteIds(index, doomed)
       val donor = emb.select(col("vec_id").as("did"), col("embedding").as("demb"))
       val wave = base.filter(col("vec_id") % 9 === 4)
         .join(donor, col("did") === col("vec_id") + 1)
         .select(col("vec_id"), col("demb").as("embedding"))
-      upsertBatchIdempotentResidual(loadIndexResidual(path), wave, "rqasofq:ups")
-      compactIndexResidual(spark, loadIndexResidual(path), Some("wave|rqasofq"))
+      upsertBatchIdempotent(loadIndex(path), wave, "rqasofq:ups")
+      compactIndex(spark, loadIndex(path), Some("wave|rqasofq"))
       ()
     }
     val queryVecs = emb
@@ -1828,13 +1760,13 @@ object Pq {
     * with `candFilter`: the filter prunes the screen's bytes, and the
     * rerank inherits it through the screened-id join.
     */
-  def rerankTopKResidual(spark: SparkSession, index: IvfPqIndex,
+  def rerankTopKResidual(spark: SparkSession, index: PqIndex,
       queryVecs: Seq[(Long, Array[Double])], k: Int, rr: Int, nprobe: Int,
       candFilter: Option[Column] = None): DataFrame = {
     // ONE generation resolve for screen AND rerank fetch (indexDataAt)
     val gen = graft.util.IndexMaint.liveGen(index.path)
     exactRerank(spark, gen,
-      screenTopKResidualAt(spark, index, queryVecs, rr, nprobe, candFilter, gen),
+      screenTopKResidualAt(spark, index.path, queryVecs, rr, nprobe, candFilter, gen),
       queryVecs, k)
   }
 
@@ -1842,21 +1774,24 @@ object Pq {
     * (the [[screenBatchAdc]] contract on the residual layout): probe
     * ranking, per-(query, cell) residuals and per-candidate ADC
     * distances all ride the plan as expressions over the broadcast
-    * probe relation and the centroid/codebook literals; no driver LUT
-    * is ever materialized, so a streaming micro-batch of any width
-    * screens without driver round-trips. The only driver-side value is
-    * the probed-cid list (≤ kCells ints) that statically prunes the
-    * index scan — the same bounded collect every probed screen makes.
-    * Distances are bit-identical to [[screenTopKResidual]] (PqSpec
-    * pins it): the per-subspace fold replays `adcLut`'s accumulation
-    * order.
+    * probe relation and the live generation's centroid/codebook
+    * literals; no driver LUT is ever materialized, so a streaming
+    * micro-batch of any width screens without driver round-trips. The
+    * only driver-side value is the probed-cid list (≤ kCells ints) that
+    * statically prunes the index scan — the same bounded collect every
+    * probed screen makes. Distances are bit-identical to
+    * [[screenTopKResidual]] (PqSpec pins it): the per-subspace fold
+    * replays `adcLut`'s accumulation order.
     */
-  def screenBatchResidual(spark: SparkSession, index: IvfPqIndex,
+  def screenBatchResidual(spark: SparkSession, index: PqIndex,
       delta: DataFrame, k: Int, nprobe: Int): DataFrame = {
     import spark.implicits._
-    val m = index.codebooks.size
-    val subDim = index.codebooks.head.head.length
-    val centDf = index.centroids.zipWithIndex.map { case (v, i) => (i, v) }
+    val gen = graft.util.IndexMaint.liveGen(index.path)
+    val q = quantizerFor(index.path, gen, residual = true, "screenBatchResidual")
+    val cents = q.coarse.get
+    val m = q.codebooks.size
+    val subDim = q.codebooks.head.head.length
+    val centDf = cents.zipWithIndex.map { case (v, i) => (i, v) }
       .toDF("cid", "cent")
     // Probe list per batch vector — the Ivf.screenBatchProbed ranking
     // (dot / |centroid| over float-widened doubles, ties on low cid).
@@ -1874,13 +1809,13 @@ object Pq {
     val probedCids = probes.select("cid").distinct()
       .collect().map(_.getInt(0)).sorted
     // Per-(query, probed cell) residual, computed in-plan.
-    val centLit = typedLit(index.centroids.map(_.toSeq))
+    val centLit = typedLit(cents.map(_.toSeq))
     val qr = zip_with(
       expr("transform(embedding, x -> CAST(x AS DOUBLE))"),
       element_at(centLit, col("cid") + 1),
       (x, c) => x - c.cast("double"))
     val probeRel = probes.select(col("query_id"), col("cid"), qr.as("qr"))
-    val cbLit = typedLit(index.codebooks.map(_.map(_.toSeq)))
+    val cbLit = typedLit(q.codebooks.map(_.map(_.toSeq)))
     val d2 = (0 until m).map { s =>
       val entry = element_at(element_at(cbLit, s + 1), col(s"c$s") + 1)
       aggregate(
@@ -1889,7 +1824,7 @@ object Pq {
         lit(0.0), (acc, v) => acc + v)
     }.reduceLeft(_ + _)
     val w = Window.partitionBy(col("query_id")).orderBy(col("d2").asc, col("vec_id"))
-    indexData(spark, index.path)
+    indexDataAt(spark, gen)
       .filter(col("cid").isin(probedCids.toIndexedSeq: _*))
       .join(broadcast(probeRel), Seq("cid"))
       .select(col("query_id"), col("vec_id"), d2.as("d2"))
@@ -1899,95 +1834,14 @@ object Pq {
       .orderBy("query_id", "rank")
   }
 
-  /** [[Ivf.compactIndex]] on the residual layout: re-land the live
-    * generation's append segments as ONE cell-partitioned segment with
-    * the quantizer, sub-codebooks, fit baseline and applied tokens
-    * carried verbatim — O(N) rewrite, O(1) semantics, between
-    * rebalances.
-    */
-  def compactIndexResidual(spark: SparkSession, index: IvfPqIndex,
-      sweepKey: Option[String] = None): IvfPqIndex =
-    compactCoreResidual(spark, index, doomed = None, sweepKey)
-
-  /** One size-tiered merge step on the residual layout
-    * ([[IndexFamily.mergeSmallSegments]]) — handle stays valid
-    * (quantizer, codebooks and fit baseline carry verbatim).
-    */
-  def mergeSegmentsResidual(spark: SparkSession, index: IvfPqIndex,
-      policy: MergePolicy = MergePolicy()): Option[MergeReport] =
-    ResidualFamily.mergeSmallSegments(spark, index.path, policy)
-
-  /** Structural + data fsck of a residual index
-    * ([[IndexFamily.fsckIndex]]).
-    */
-  def fsckIndexResidual(spark: SparkSession,
-      path: String): (Seq[String], Seq[String]) =
-    ResidualFamily.fsckIndex(spark, path)
-
-  /** Bulk delete by predicate on the residual index — the
-    * [[Ivf.deleteWhere]] retention path.
-    */
-  def deleteWhereResidual(spark: SparkSession, index: IvfPqIndex,
-      doomed: org.apache.spark.sql.Column): IvfPqIndex =
-    compactCoreResidual(spark, index, Some(doomed))
-
-  private def compactCoreResidual(spark: SparkSession, index: IvfPqIndex,
-      doomed: Option[org.apache.spark.sql.Column],
-      sweepKey: Option[String] = None): IvfPqIndex = {
-    val committed = ResidualFamily.compactGeneration(spark, index.path, doomed,
-      sweepKey)
-    IvfPqIndex(index.path, Ivf.readCentroids(committed), readCodebooks(committed))
-  }
-
   /** Measured ADC recall@k of the persisted residual screen against the
     * exact L2 top-k over the index's stored vectors — the ScaleProbe
     * dial comparing residual vs raw codes at equal bytes/vector.
     */
-  def recallAtKResidual(spark: SparkSession, index: IvfPqIndex,
-      queryVecs: Seq[(Long, Array[Double])], k: Int, nprobe: Int): Double = {
-    import spark.implicits._
-    val qDf = queryVecs.map { case (id, q) => (id, q) }.toDF("query_id", "qvec")
-    val exact = indexData(spark, index.path)
-      .select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(qDf))
-      .withColumn("d2", expr(
-        """aggregate(zip_with(embedding, qvec, (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),
-          |CAST(0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("d2").asc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("vec_id"))
-      .localCheckpoint()
-    val approx = screenTopKResidual(spark, index, queryVecs, k, nprobe)
-      .select(col("query_id"), col("vec_id"))
-    val denom = exact.count()
-    if (denom == 0) 1.0
-    else exact.join(approx, Seq("query_id", "vec_id")).count().toDouble / denom
-  }
-
-  /** [[buildIndexResidual]] memoized per (path, source fingerprint,
-    * shape) — the [[buildIndexCached]] pattern for the residual layout.
-    */
-  def buildIndexResidualCached(base: DataFrame, srcDir: String, path: String,
-      kCells: Int, m: Int, kSub: Int, iters: Int): IvfPqIndex = {
-    val fp = graft.util.Fs.dirFingerprint(srcDir)
-    val key = (path, fp, kCells, m, kSub, iters)
-    val diskKey = s"ivfpq|src=$fp|kCells=$kCells|m=$m|kSub=$kSub|iters=$iters"
-    ivfPqIndexCache.memoized(key, graft.util.IndexMaint.lockFor(path))(
-      k => k._1 == path && k != key) {
-      if (graft.util.IndexMaint.liveGenOpt(path)
-        .exists(g => graft.util.IndexMaint.readBuildKey(g).contains(diskKey)))
-        loadIndexResidual(path)
-      else buildIndexResidual(base, path, kCells, m, kSub, iters, Some(diskKey))
-    }
-  }
-
-  private[ops] def dropResidualBuildMemo(path: String): Unit =
-    ivfPqIndexCache.evict(_._1 == path)
-
-  private val ivfPqIndexCache =
-    new graft.util.BoundedCache[(String, Long, Int, Int, Int, Int), IvfPqIndex](
-      Ivf.IndexCacheBound)
+  def recallAtKResidual(spark: SparkSession, index: PqIndex,
+      queryVecs: Seq[(Long, Array[Double])], k: Int, nprobe: Int): Double =
+    recallVsExact(spark, index, queryVecs, k,
+      screenTopKResidual(spark, index, queryVecs, k, nprobe))
 
   /** Registered `sim_ivfpq_residual_incremental`: the persisted
     * residual index under the oracle — the base corpus
@@ -2006,9 +1860,9 @@ object Pq {
       kCells: Int, nprobe: Int, m: Int, kSub: Int): DataFrame = {
     val c = Catalog(spark, dir)
     val emb = c.ref("embeddings").select(col("vec_id"), col("embedding"))
-    val index = buildIndexResidualCached(emb.filter(col("vec_id") % 10 =!= 0),
-      s"$dir/embeddings.parquet",
-      graft.util.Fs.sessionTempDir("ivfpq_index", dir), kCells, m, kSub, iters = 0)
+    val index = buildIndexCached(emb.filter(col("vec_id") % 10 =!= 0),
+      s"$dir/embeddings.parquet", graft.util.Fs.sessionTempDir("ivfpq_index", dir),
+      m, kSub, iters = 0, kCells = Some(kCells))
     val queryVecs = emb
       .filter(col("vec_id") % 10 === 0 && col("vec_id") < 500)
       .orderBy(col("vec_id")).collect()
@@ -2020,7 +1874,7 @@ object Pq {
 
   /** Registered `sim_ivfpq_filtered`: FILTERED search on the persisted
     * residual index — the full production vector-store query: metadata
-    * (`label`) rides the index files ([[buildIndexResidual]]
+    * (`label`) rides the index files ([[buildIndex]]
     * pass-through), the predicate lands on the scan UNDER the probed-cid
     * partition filter ([[screenTopKResidual]]'s `candFilter`), residual
     * ADC prunes the bytes, and the probe list widens 4 → 8 for the
@@ -2036,9 +1890,9 @@ object Pq {
     val c = Catalog(spark, dir)
     val emb = c.ref("embeddings")
       .select(col("vec_id"), col("embedding"), col("label"))
-    val index = buildIndexResidualCached(emb.filter(col("vec_id") % 10 =!= 0),
-      s"$dir/embeddings.parquet",
-      graft.util.Fs.sessionTempDir("ivfpq_index_lbl", dir), kCells, m, kSub, iters = 0)
+    val index = buildIndexCached(emb.filter(col("vec_id") % 10 =!= 0),
+      s"$dir/embeddings.parquet", graft.util.Fs.sessionTempDir("ivfpq_index_lbl", dir),
+      m, kSub, iters = 0, kCells = Some(kCells))
     val queryVecs = emb
       .filter(col("vec_id") % 10 === 0 && col("vec_id") < 500)
       .orderBy(col("vec_id")).collect()
@@ -2064,9 +1918,9 @@ object Pq {
       kCells: Int, nprobe: Int, m: Int, kSub: Int): DataFrame = {
     val c = Catalog(spark, dir)
     val emb = c.ref("embeddings").select(col("vec_id"), col("embedding"))
-    val index = buildIndexResidualCached(emb.filter(col("vec_id") % 10 =!= 0),
-      s"$dir/embeddings.parquet",
-      graft.util.Fs.sessionTempDir("ivfpq_index", dir), kCells, m, kSub, iters = 0)
+    val index = buildIndexCached(emb.filter(col("vec_id") % 10 =!= 0),
+      s"$dir/embeddings.parquet", graft.util.Fs.sessionTempDir("ivfpq_index", dir),
+      m, kSub, iters = 0, kCells = Some(kCells))
     val queryVecs = emb
       .filter(col("vec_id") % 10 === 0 && col("vec_id") < 500)
       .orderBy(col("vec_id")).collect()

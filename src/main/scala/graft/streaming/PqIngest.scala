@@ -1,19 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import graft.ops.Pq
 
 /** Streaming PQ ingest WITH codebook maintenance — [[IvfIngest]]'s
-  * contract on the byte-prune index: every arriving micro-batch is
-  * (1) ADC-screened against the CURRENT codes (fully distributed — the
-  * codebook rides the plan, no driver LUTs), (2) encoded against the
-  * frozen sub-codebooks and appended O(Δ), and — every `checkEvery`-th
-  * applied batch — (3) the m-row quantization-error drift check runs;
-  * when [[Pq.PqDriftReport.drifted]] fires, the sub-codebooks retrain
-  * from a bounded sample of current contents and every vector re-encodes
-  * in one scan behind an atomic generation commit, so later batches
-  * screen against codes that actually fit the drifted distribution.
+  * contract on the byte-prune index, in either encoding: every arriving
+  * micro-batch is (1) screened against the CURRENT codes by the
+  * caller's `screen` — [[Pq.screenBatchAdc]] on a flat index,
+  * [[Pq.screenBatchResidual]] (read pruning × byte pruning) on a
+  * residual one, both fully distributed with no driver LUTs — (2)
+  * encoded against the frozen quantizer and appended O(Δ), and — every
+  * `checkEvery`-th applied batch — (3) the m-row quantization-error
+  * drift check runs; when [[Pq.PqDriftReport.drifted]] fires,
+  * [[Pq.rebalance]] retrains the quantizer (on a residual index: coarse
+  * cells, then residual codebooks) from a bounded sample of current
+  * contents and re-encodes every vector in one scan behind an atomic
+  * generation commit, so later batches screen against codes that
+  * actually fit the drifted distribution.
   *
   * Replay safety and amortization follow [[IvfIngest]] exactly: the
   * screen result lands in a `batch_id=<id>` partition in overwrite
@@ -32,9 +36,12 @@ object PqIngest {
       appended: Long, meanD2: Double, checked: Boolean, drifted: Boolean,
       rebalanced: Boolean, replayed: Boolean)
 
+  /** `screen(index, batch)` ranks one pinned micro-batch against the
+    * index's current codes — the only encoding-specific step.
+    */
   def ingestStream(spark: SparkSession, srcDir: String, index0: Pq.PqIndex,
-      k: Int, sinkDir: String, checkEvery: Int = 4,
-      compactEvery: Int = 0,
+      screen: (Pq.PqIndex, DataFrame) => DataFrame, sinkDir: String,
+      checkEvery: Int = 4, compactEvery: Int = 0,
       mergePolicy: Option[graft.ops.MergePolicy] = None): Seq[BatchReport] = {
     require(checkEvery >= 1, s"checkEvery must be >= 1, got $checkEvery")
     require(compactEvery >= 0, s"compactEvery must be >= 0, got $compactEvery")
@@ -59,8 +66,7 @@ object PqIngest {
             replayed = true)
         } else {
           val pinned = batch.localCheckpoint()
-          val screened = Pq.screenBatchAdc(spark, index, pinned, k)
-            .localCheckpoint()
+          val screened = screen(index, pinned).localCheckpoint()
           screened.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$id")
           val fresh = Pq.appendBatchIdempotent(index, pinned, token = token)
           // durable cadence over THIS STREAM's tokens only (`ingest:`
@@ -81,69 +87,6 @@ object PqIngest {
           // size-tiered alternative ([[IvfIngest]] rationale)
           else if (fresh)
             mergePolicy.foreach(p => Pq.mergeSegments(spark, index, p))
-          reports += BatchReport(id, screened.count(), pinned.count(),
-            dr.map(_.meanD2Now).getOrElse(Double.NaN),
-            checked = check, drifted = fire, rebalanced = fire,
-            replayed = false)
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$sinkDir.ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    reports.toSeq
-  }
-
-  /** [[ingestStream]] on the PERSISTED RESIDUAL index — the same
-    * screen→append→maintain loop with both scale dials durable: every
-    * micro-batch is screened by the fully distributed probed-cell
-    * residual ADC ([[Pq.screenBatchResidual]] — read pruning × byte
-    * pruning, no driver LUTs), appended O(Δ) against the frozen coarse
-    * quantizer + sub-codebooks, and on the durable `checkEvery` cadence
-    * the residual-fit drift dial runs; a firing triggers the COMPOSED
-    * repair ([[Pq.rebalanceResidual]]: coarse retrain → residual
-    * codebook retrain → one-scan re-encode → atomic commit). Replay
-    * safety, token durability and the amortization story are
-    * [[ingestStream]]'s verbatim.
-    */
-  def ingestStreamResidual(spark: SparkSession, srcDir: String,
-      index0: Pq.IvfPqIndex, k: Int, nprobe: Int, sinkDir: String,
-      checkEvery: Int = 4, compactEvery: Int = 0,
-      mergePolicy: Option[graft.ops.MergePolicy] = None): Seq[BatchReport] = {
-    require(checkEvery >= 1, s"checkEvery must be >= 1, got $checkEvery")
-    require(compactEvery >= 0, s"compactEvery must be >= 0, got $compactEvery")
-    val schema = spark.read.parquet(srcDir).schema
-    var index = index0
-    val reports = scala.collection.mutable.ArrayBuffer.empty[BatchReport]
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = src.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val token = s"ingest:$id"
-        val applied0 = Pq.appliedTokensResidual(index)
-        if (applied0.contains(token)) {
-          reports += BatchReport(id, -1L, -1L, Double.NaN,
-            checked = false, drifted = false, rebalanced = false,
-            replayed = true)
-        } else {
-          val pinned = batch.localCheckpoint()
-          val screened = Pq.screenBatchResidual(spark, index, pinned, k, nprobe)
-            .localCheckpoint()
-          screened.write.mode("overwrite").parquet(s"$sinkDir/batch_id=$id")
-          val fresh = Pq.appendBatchIdempotentResidual(index, pinned, token = token)
-          val streamApplied = applied0.count(_.startsWith("ingest:")) +
-            (if (fresh) 1 else 0)
-          val check = fresh && streamApplied % checkEvery == 0
-          val dr = if (check) Some(Pq.ivfPqDriftStats(spark, index)) else None
-          val fire = dr.exists(_.drifted())
-          if (fire) index = Pq.rebalanceResidual(spark, index)
-          // maintenance only on a FRESH batch ([[IvfIngest]] rationale)
-          else if (fresh && compactEvery > 0 && streamApplied % compactEvery == 0)
-            index = Pq.compactIndexResidual(spark, index)
-          // size-tiered alternative ([[IvfIngest]] rationale)
-          else if (fresh) mergePolicy.foreach(p =>
-            Pq.mergeSegmentsResidual(spark, index, p))
           reports += BatchReport(id, screened.count(), pinned.count(),
             dr.map(_.meanD2Now).getOrElse(Double.NaN),
             checked = check, drifted = fire, rebalanced = fire,

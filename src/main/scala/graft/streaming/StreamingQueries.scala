@@ -439,10 +439,10 @@ object StreamingQueries {
     import graft.ops.Pq
     val emb = graft.catalog.Catalog(spark, dir).ref("embeddings")
       .select(col("vec_id"), col("embedding"))
-    val index = Pq.buildIndexResidualCached(emb.filter(col("vec_id") % 10 =!= 0),
+    val index = Pq.buildIndexCached(emb.filter(col("vec_id") % 10 =!= 0),
       s"$dir/embeddings.parquet",
       graft.util.Fs.sessionTempDir("ivfpq_index", dir),
-      kCells = 16, m = 4, kSub = 16, iters = 0)
+      m = 4, kSub = 16, iters = 0, kCells = Some(16))
     drainScreenStream(spark,
       emb.filter(col("vec_id") % 10 === 0 && col("vec_id") < 500), "d2",
       batch => Pq.screenBatchResidual(spark, index, batch, k = 5, nprobe = 4))

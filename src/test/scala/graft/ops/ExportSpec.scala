@@ -309,30 +309,30 @@ class ExportSpec extends SparkTestBase {
     // ---- residual IVF-PQ ----
     locally {
       val base = tmpDir("lc_rpq")
-      Pq.buildIndexResidual(vecs(0 until 80), s"$base/src",
-        kCells = 2, m = 4, kSub = 8, iters = 1)
+      Pq.buildIndex(vecs(0 until 80), s"$base/src",
+        m = 4, kSub = 8, iters = 1, kCells = Some(2))
       Pq.pinIndex(s"$base/src", "rel")
       val d = s"$base/exp"
       Pq.exportIndexSnapshot(s"$base/src", "rel", d)
-      assert(Pq.appendBatchIdempotentResidual(Pq.loadIndexResidual(d),
+      assert(Pq.appendBatchIdempotent(Pq.loadIndex(d),
         vecs(100 until 104), "lc:a"))
-      assert(Pq.applyCdcIdempotentResidual(Pq.loadIndexResidual(d),
+      assert(Pq.applyCdcIdempotent(Pq.loadIndex(d),
         vecs(110 until 113).withColumn("op", org.apache.spark.sql.functions.lit("insert"))
           .unionByName(vecs(5 until 6).withColumn("op",
             org.apache.spark.sql.functions.lit("delete"))), "lc:c"))
-      assert(Pq.appendBatchIdempotentResidual(Pq.loadIndexResidual(d),
+      assert(Pq.appendBatchIdempotent(Pq.loadIndex(d),
         vecs(120 until 124), "lc:b"))
-      assert(Pq.mergeSegmentsResidual(spark, Pq.loadIndexResidual(d), P).isDefined)
+      assert(Pq.mergeSegments(spark, Pq.loadIndex(d), P).isDefined)
       val queries = (0 until 2).map { i =>
         (i.toLong, Array.fill(8)(new scala.util.Random(400 + i).nextGaussian()))
       }
-      val page = Pq.screenTopKResidual(spark, Pq.loadIndexResidual(d),
+      val page = Pq.screenTopKResidual(spark, Pq.loadIndex(d),
         queries, k = 4, nprobe = 2).collect().map(_.toString).sorted.toSeq
       Pq.pinIndex(d, "post")
-      Pq.deleteIdsResidual(Pq.loadIndexResidual(d), Seq(110L))
+      Pq.deleteIds(Pq.loadIndex(d), Seq(110L))
       assert(Pq.screenTopKResidualAsOf(spark, d, "post", queries, k = 4,
         nprobe = 2).collect().map(_.toString).sorted.toSeq === page)
-      assert(Pq.fsckIndexResidual(spark, d)._1.isEmpty)
+      assert(Pq.fsckIndex(spark, d)._1.isEmpty)
     }
   }
 
@@ -380,20 +380,20 @@ class ExportSpec extends SparkTestBase {
   test("residual IVF-PQ: exported coarse quantizer + codebooks + codes serve the pin-time screen live") {
     val base = tmpDir("exp_rpq")
     val path = s"$base/src"
-    val index = Pq.buildIndexResidual(vecs(0 until 160), path,
-      kCells = 4, m = 4, kSub = 8, iters = 2)
-    Pq.appendBatchIdempotentResidual(index, vecs(300 until 320), "exp:pre")
+    val index = Pq.buildIndex(vecs(0 until 160), path,
+      m = 4, kSub = 8, iters = 2, kCells = Some(4))
+    Pq.appendBatchIdempotent(index, vecs(300 until 320), "exp:pre")
     Pq.pinIndex(path, "rel")
     val queries = (0 until 3).map { i =>
       (i.toLong, Array.fill(8)(new scala.util.Random(200 + i).nextGaussian()))
     }
     val want = Pq.screenTopKResidualAsOf(spark, path, "rel", queries,
       k = 4, nprobe = 3).collect().map(_.toString).sorted.toSeq
-    Pq.deleteIdsResidual(index, Seq(11L, 12L))
-    Pq.upsertBatchIdempotentResidual(index, vecs(30 until 34), "exp:u")
+    Pq.deleteIds(index, Seq(11L, 12L))
+    Pq.upsertBatchIdempotent(index, vecs(30 until 34), "exp:u")
     val dest = s"$base/export"
     Pq.exportIndexSnapshot(path, "rel", dest)
-    val got = Pq.screenTopKResidual(spark, Pq.loadIndexResidual(dest),
+    val got = Pq.screenTopKResidual(spark, Pq.loadIndex(dest),
       queries, k = 4, nprobe = 3).collect().map(_.toString).sorted.toSeq
     assert(got === want)
   }

@@ -178,18 +178,18 @@ class MergeSpec extends SparkTestBase {
     assert(Pq.fsckIndex(spark, fp)._1.isEmpty)
     // residual
     val rp = tmpDir("merge_pq") + "/res"
-    val ridx = Pq.buildIndexResidual(base, rp, kCells = 4, m = 4, kSub = 16, iters = 1)
+    val ridx = Pq.buildIndex(base, rp, m = 4, kSub = 16, iters = 1, kCells = Some(4))
     (0 until 4).foreach { b =>
-      Pq.appendBatchIdempotentResidual(ridx,
+      Pq.appendBatchIdempotent(ridx,
         vecs(400 + b * 10 until 400 + b * 10 + 4), s"rm:$b")
     }
     val rpage = Pq.screenBatchResidual(spark, ridx, qv, k = 5, nprobe = 4)
       .collect().map(_.toString).sorted.toSeq
-    val rr = Pq.mergeSegmentsResidual(spark, ridx, P).get
+    val rr = Pq.mergeSegments(spark, ridx, P).get
     assert(rr.merged.size === 4 && rr.newSeg.isDefined)
-    assert(Pq.screenBatchResidual(spark, Pq.loadIndexResidual(rp), qv, k = 5, nprobe = 4)
+    assert(Pq.screenBatchResidual(spark, Pq.loadIndex(rp), qv, k = 5, nprobe = 4)
       .collect().map(_.toString).sorted.toSeq === rpage)
-    assert(Pq.fsckIndexResidual(spark, rp)._1.isEmpty)
+    assert(Pq.fsckIndex(spark, rp)._1.isEmpty)
   }
 
   test("pinned snapshots survive a merge: the as-of page is bit-identical and the pinned generation is retained") {

@@ -317,8 +317,8 @@ class PqSpec extends SparkTestBase {
     val tmp = tmpDir("pq_res_screen")
     (0 until 300).map(i => (i.toLong, Array.fill(32)(rnd.nextGaussian().toFloat)))
       .toDF("vec_id", "embedding").write.parquet(s"$tmp/base")
-    val index = Pq.buildIndexResidual(spark.read.parquet(s"$tmp/base"),
-      s"$tmp/index", kCells = 8, m = 4, kSub = 8, iters = 2)
+    val index = Pq.buildIndex(spark.read.parquet(s"$tmp/base"),
+      s"$tmp/index", m = 4, kSub = 8, iters = 2, kCells = Some(8))
     // float source vectors so both paths widen the SAME values to double
     val qf = (0 until 5).map(q => ((900 + q).toLong, Array.fill(32)(rnd.nextGaussian().toFloat)))
     val qvecs = qf.map { case (id, v) => (id, v.map(_.toDouble)) }
@@ -342,11 +342,11 @@ class PqSpec extends SparkTestBase {
     val tmp = tmpDir("ivfpq_drift")
     (0 until 400).map(i => (i.toLong, around(cBase(i % 8), 0.3f)))
       .toDF("vec_id", "embedding").write.parquet(s"$tmp/base")
-    val index0 = Pq.buildIndexResidual(spark.read.parquet(s"$tmp/base"),
-      s"$tmp/index", kCells = 8, m = 4, kSub = 16, iters = 2)
+    val index0 = Pq.buildIndex(spark.read.parquet(s"$tmp/base"),
+      s"$tmp/index", m = 4, kSub = 16, iters = 2, kCells = Some(8))
     // fresh index: the stored-code residual drift path reproduces the
     // encode-time stats (same folds, avg partition-reorder tolerance)
-    val dr0 = Pq.ivfPqDriftStats(spark, index0)
+    val dr0 = Pq.pqDriftStats(spark, index0)
     assert(!dr0.drifted(), s"fresh residual index must not drift: ${dr0.meanD2Build} -> ${dr0.meanD2Now}")
     assert(math.abs(dr0.meanD2Now - dr0.meanD2Build)
         <= 1e-9 * math.max(1.0, dr0.meanD2Build),
@@ -355,8 +355,8 @@ class PqSpec extends SparkTestBase {
     val cShift = Array.fill(8)(Array.fill(dim)(rnd.nextGaussian().toFloat * 5f))
     val wave = (1000 until 1500).map(i => (i.toLong, around(cShift(i % 8), 0.3f)))
       .toDF("vec_id", "embedding").localCheckpoint()
-    assert(Pq.appendBatchIdempotentResidual(index0, wave, token = "ingest:w"))
-    val dr1 = Pq.ivfPqDriftStats(spark, index0)
+    assert(Pq.appendBatchIdempotent(index0, wave, token = "ingest:w"))
+    val dr1 = Pq.pqDriftStats(spark, index0)
     assert(dr1.drifted(),
       s"shifted appends must fire the residual dial: ${dr1.meanD2Build} -> ${dr1.meanD2Now}")
     // probed-cell recall@50 on shifted queries rots, the COMPOSED
@@ -365,18 +365,18 @@ class PqSpec extends SparkTestBase {
       ((9000 + q).toLong, around(cShift(q % 8), 0.3f).map(_.toDouble))
     }
     val before = Pq.recallAtKResidual(spark, index0, queries, 50, nprobe = 2)
-    val rebuilt = Pq.rebalanceResidual(spark, index0, iters = 2)
+    val rebuilt = Pq.rebalance(spark, index0, iters = 2)
     val after = Pq.recallAtKResidual(spark, rebuilt, queries, 50, nprobe = 2)
     assert(after > before,
       s"composed rebalance must improve shifted recall: $before -> $after")
     assert(after >= 0.8, s"post-rebalance residual recall@50 too low: $after")
-    assert(!Pq.ivfPqDriftStats(spark, rebuilt).drifted(),
+    assert(!Pq.pqDriftStats(spark, rebuilt).drifted(),
       "composed rebalance must leave a healthy index")
     // replay of the pre-rebalance token still no-ops (tokens carried)
-    assert(!Pq.appendBatchIdempotentResidual(rebuilt, wave, token = "ingest:w"),
+    assert(!Pq.appendBatchIdempotent(rebuilt, wave, token = "ingest:w"),
       "applied tokens must survive the composed rebalance")
-    val reopened = Pq.loadIndexResidual(s"$tmp/index")
-    assert(reopened.centroids.length === 8 && reopened.codebooks.size === 4)
+    val reopened = Pq.loadIndex(s"$tmp/index")
+    assert(reopened.coarse.map(_.length) === Some(8) && reopened.codebooks.size === 4)
     assert(Pq.indexData(spark, s"$tmp/index").count() === 900L)
   }
 
@@ -394,8 +394,8 @@ class PqSpec extends SparkTestBase {
     (0 until 400).map(i => (i.toLong,
       cBase(i % 8).map(x => x + rnd.nextGaussian().toFloat * 0.3f)))
       .toDF("vec_id", "embedding").write.parquet(s"$tmp/base")
-    val index = Pq.buildIndexResidual(spark.read.parquet(s"$tmp/base"),
-      s"$tmp/index", kCells = 8, m = 4, kSub = 8, iters = 2)
+    val index = Pq.buildIndex(spark.read.parquet(s"$tmp/base"),
+      s"$tmp/index", m = 4, kSub = 8, iters = 2, kCells = Some(8))
     val q = Seq((9000L,
       cBase(3).map(x => (x + rnd.nextGaussian().toFloat * 0.3f).toDouble).toArray))
     val res = Pq.screenTopKResidual(spark, index, q, k = 5, nprobe = 2)
@@ -584,8 +584,8 @@ class PqSpec extends SparkTestBase {
   test("residual rerank: exact stored-vector distances where residual ADC tie-collapses; self at 0, copy right behind") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val idxPath = tmpDir("ivfpq_rr")
-    val index = Pq.buildIndexResidual(emb, idxPath, kCells = 8, m = 4,
-      kSub = 8, iters = 2)
+    val index = Pq.buildIndex(emb, idxPath, m = 4,
+      kSub = 8, iters = 2, kCells = Some(8))
     val queryVecs = emb.filter(col("vec_id") < 5).orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray.map(_.toDouble))).toSeq
     val got = Pq.rerankTopKResidual(spark, index, queryVecs, k = 10, rr = 80,
@@ -653,33 +653,33 @@ class PqSpec extends SparkTestBase {
   test("deletes on the residual index: screen + rerank honor them; a new append re-inserts; replay cannot resurrect") {
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val idxPath = tmpDir("ivfpq_del")
-    val index = Pq.buildIndexResidual(emb.filter(col("vec_id") < 320), idxPath,
-      kCells = 8, m = 4, kSub = 8, iters = 2)
+    val index = Pq.buildIndex(emb.filter(col("vec_id") < 320), idxPath,
+      m = 4, kSub = 8, iters = 2, kCells = Some(8))
     val batch = emb.filter(col("vec_id") >= 320).localCheckpoint()
-    assert(Pq.appendBatchIdempotentResidual(index, batch, token = "ingest:c"))
+    assert(Pq.appendBatchIdempotent(index, batch, token = "ingest:c"))
     val queryVecs = emb.filter(col("vec_id") < 5).orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray.map(_.toDouble))).toSeq
     val doomed = Seq(320L, 321L)
-    Pq.deleteIdsResidual(index, doomed)
+    Pq.deleteIds(index, doomed)
     val scr = Pq.screenTopKResidual(spark, index, queryVecs, k = 10, nprobe = 8).collect()
     assert(!scr.exists(r => doomed.contains(r.getLong(2))))
     val rr = Pq.rerankTopKResidual(spark, index, queryVecs, k = 10, rr = 40, nprobe = 8).collect()
     assert(!rr.exists(r => doomed.contains(r.getLong(2))))
     // the REPLAY of the applied batch no-ops: deletes survive it
-    assert(!Pq.appendBatchIdempotentResidual(index, batch, token = "ingest:c"))
+    assert(!Pq.appendBatchIdempotent(index, batch, token = "ingest:c"))
     assert(Pq.indexData(spark, idxPath).filter(col("vec_id") === 320L).count() === 0)
     // a genuinely NEW append re-inserts 320 (later insert wins); 321 stays gone
-    assert(Pq.appendBatchIdempotentResidual(index,
+    assert(Pq.appendBatchIdempotent(index,
       emb.filter(col("vec_id") === 320L), token = "readd:1"))
     assert(Pq.indexData(spark, idxPath).filter(col("vec_id") === 320L).count() === 1)
     assert(Pq.indexData(spark, idxPath).filter(col("vec_id") === 321L).count() === 0)
     // residual compaction reclaims the remaining tombstone physically
-    val compacted = Pq.compactIndexResidual(spark, index)
+    val compacted = Pq.compactIndex(spark, index)
     val liveGen = graft.util.IndexMaint.liveGen(idxPath)
     assert(graft.util.IndexMaint.readTombstones(liveGen).isEmpty)
     assert(spark.read.parquet(liveGen).filter(col("vec_id") === 321L).count() === 0)
     assert(Pq.indexData(spark, idxPath).count() === 324)
-    assert(Pq.ivfPqDriftStats(spark, compacted).build.map(_.n).sum === 324L * 4)
+    assert(Pq.pqDriftStats(spark, compacted).build.map(_.n).sum === 324L * 4)
   }
 
   test("upsert == delete-then-insert composed, on the flat and residual indexes; replay no-ops; the rerank serves the new vector") {
@@ -703,23 +703,23 @@ class PqSpec extends SparkTestBase {
     assert(Pq.indexData(spark, a.path).count() === 320)
     // residual IVF-PQ: same claim, plus the exact rerank serving the
     // re-embedded vector at the head of its donor's query
-    val ra = Pq.buildIndexResidual(base, tmpDir("ivfpq_ups_a"),
-      kCells = 8, m = 4, kSub = 8, iters = 2)
-    val rb = Pq.buildIndexResidual(base, tmpDir("ivfpq_ups_b"),
-      kCells = 8, m = 4, kSub = 8, iters = 2)
-    assert(Pq.upsertBatchIdempotentResidual(ra, batch, "ups:1"))
-    Pq.deleteIdsResidual(rb, Seq(10L, 11L, 12L))
-    assert(Pq.appendBatchIdempotentResidual(rb, batch, "ups:1"))
+    val ra = Pq.buildIndex(base, tmpDir("ivfpq_ups_a"),
+      m = 4, kSub = 8, iters = 2, kCells = Some(8))
+    val rb = Pq.buildIndex(base, tmpDir("ivfpq_ups_b"),
+      m = 4, kSub = 8, iters = 2, kCells = Some(8))
+    assert(Pq.upsertBatchIdempotent(ra, batch, "ups:1"))
+    Pq.deleteIds(rb, Seq(10L, 11L, 12L))
+    assert(Pq.appendBatchIdempotent(rb, batch, "ups:1"))
     assert(Pq.screenTopKResidual(spark, ra, queryVecs, k = 10, nprobe = 8)
       .collect().map(_.toString).sorted.toSeq
       === Pq.screenTopKResidual(spark, rb, queryVecs, k = 10, nprobe = 8)
         .collect().map(_.toString).sorted.toSeq,
-      "residual upsert must equal deleteIdsResidual + append composed")
+      "residual upsert must equal deleteIds + append composed")
     val rr = Pq.rerankTopKResidual(spark, ra, queryVecs, k = 10, rr = 40, nprobe = 8)
       .collect()
     assert(rr.exists(r => r.getLong(0) == 0L && r.getLong(2) == 10L && r.getInt(1) <= 2),
       "the exact rerank must serve the re-embedded vector at the head")
-    assert(!Pq.upsertBatchIdempotentResidual(ra, batch, "ups:1"))
+    assert(!Pq.upsertBatchIdempotent(ra, batch, "ups:1"))
     assert(Pq.indexData(spark, ra.path).count() === 320)
   }
 
@@ -753,23 +753,23 @@ class PqSpec extends SparkTestBase {
     assert(!Pq.applyCdcIdempotent(a, cdc, "cdc:1"))
     assert(Pq.indexData(spark, a.path).count() === 320 - 3 + 2)
     // residual IVF-PQ
-    val ra = Pq.buildIndexResidual(base, tmpDir("ivfpq_cdc_a"),
-      kCells = 8, m = 4, kSub = 8, iters = 2)
-    val rb = Pq.buildIndexResidual(base, tmpDir("ivfpq_cdc_b"),
-      kCells = 8, m = 4, kSub = 8, iters = 2)
-    assert(Pq.applyCdcIdempotentResidual(ra, cdc, "cdc:1"))
-    Pq.deleteIdsResidual(rb, Seq(0L, 1L, 2L))
-    assert(Pq.appendBatchIdempotentResidual(rb,
+    val ra = Pq.buildIndex(base, tmpDir("ivfpq_cdc_a"),
+      m = 4, kSub = 8, iters = 2, kCells = Some(8))
+    val rb = Pq.buildIndex(base, tmpDir("ivfpq_cdc_b"),
+      m = 4, kSub = 8, iters = 2, kCells = Some(8))
+    assert(Pq.applyCdcIdempotent(ra, cdc, "cdc:1"))
+    Pq.deleteIds(rb, Seq(0L, 1L, 2L))
+    assert(Pq.appendBatchIdempotent(rb,
       emb.filter(col("vec_id").isin(320L, 321L))
         .select((col("vec_id") + 580L).as("vec_id"), col("embedding")), "x:1"))
-    assert(Pq.upsertBatchIdempotentResidual(rb, emb.filter(col("vec_id") === 322L)
+    assert(Pq.upsertBatchIdempotent(rb, emb.filter(col("vec_id") === 322L)
       .select(lit(10L).as("vec_id"), col("embedding")), "x:2"))
     assert(Pq.screenTopKResidual(spark, ra, queryVecs, k = 10, nprobe = 8)
       .collect().map(_.toString).sorted.toSeq
       === Pq.screenTopKResidual(spark, rb, queryVecs, k = 10, nprobe = 8)
         .collect().map(_.toString).sorted.toSeq,
       "residual CDC must equal the composed mutations")
-    assert(!Pq.applyCdcIdempotentResidual(ra, cdc, "cdc:1"))
+    assert(!Pq.applyCdcIdempotent(ra, cdc, "cdc:1"))
     assert(Pq.indexData(spark, ra.path).count() === 320 - 3 + 2)
   }
 
@@ -788,13 +788,13 @@ class PqSpec extends SparkTestBase {
       === Pq.adcTopK(spark, b2, queryVecs, k = 10).collect().map(_.toString).sorted.toSeq)
     assert(graft.util.IndexMaint.readTombstones(
       graft.util.IndexMaint.liveGen(a2.path)).isEmpty)
-    val ra = Pq.buildIndexResidual(base, tmpDir("ivfpq_dw_a"),
-      kCells = 8, m = 4, kSub = 8, iters = 2)
-    val rb = Pq.buildIndexResidual(base, tmpDir("ivfpq_dw_b"),
-      kCells = 8, m = 4, kSub = 8, iters = 2)
-    val ra2 = Pq.deleteWhereResidual(spark, ra, col("vec_id") % 4 === 1)
-    Pq.deleteIdsResidual(rb, doomedIds)
-    val rb2 = Pq.compactIndexResidual(spark, rb)
+    val ra = Pq.buildIndex(base, tmpDir("ivfpq_dw_a"),
+      m = 4, kSub = 8, iters = 2, kCells = Some(8))
+    val rb = Pq.buildIndex(base, tmpDir("ivfpq_dw_b"),
+      m = 4, kSub = 8, iters = 2, kCells = Some(8))
+    val ra2 = Pq.deleteWhere(spark, ra, col("vec_id") % 4 === 1)
+    Pq.deleteIds(rb, doomedIds)
+    val rb2 = Pq.compactIndex(spark, rb)
     assert(Pq.screenTopKResidual(spark, ra2, queryVecs, k = 10, nprobe = 8)
       .collect().map(_.toString).sorted.toSeq
       === Pq.screenTopKResidual(spark, rb2, queryVecs, k = 10, nprobe = 8)
@@ -816,8 +816,8 @@ class PqSpec extends SparkTestBase {
       cBase(i % 8).map(x => x + rnd.nextGaussian().toFloat * 0.3f), i % 4))
       .toDF("vec_id", "embedding", "label").write.parquet(s"$tmp/base")
     // metadata pass-through: label lands in the index files
-    val index = Pq.buildIndexResidual(spark.read.parquet(s"$tmp/base"),
-      s"$tmp/index", kCells = 8, m = 4, kSub = 8, iters = 2)
+    val index = Pq.buildIndex(spark.read.parquet(s"$tmp/base"),
+      s"$tmp/index", m = 4, kSub = 8, iters = 2, kCells = Some(8))
     val labels = spark.read.parquet(s"$tmp/base").collect()
       .map(r => r.getLong(0) -> r.getInt(2)).toMap
     val q = Seq((9000L,
@@ -871,5 +871,60 @@ class PqSpec extends SparkTestBase {
     assert(Pq.adcTopKAsOf(spark, path, "pre", queryVecs, k = 5)
       .collect().map(_.toString).sorted.toSeq === atPin,
       "the pinned generation must survive the rewrite's reap")
+  }
+
+  test("a handle held across another handle's rebalance scores with the live generation's quantizer") {
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val path = tmpDir("pq_stale") + "/index"
+    val h0 = Pq.buildIndex(emb, path, m = 4, kSub = 8, iters = 0)
+    Pq.rebalance(spark, Pq.loadIndex(path))
+    val fresh = Pq.loadIndex(path)
+    assert(fresh.codebooks.map(_.map(_.toSeq)) !== h0.codebooks.map(_.map(_.toSeq)),
+      "the rebalance must have retrained the codebooks")
+    val qf = emb.filter(col("vec_id") < 5).orderBy("vec_id")
+      .select((col("vec_id") + 9000L).as("vec_id"), col("embedding")).localCheckpoint()
+    val queryVecs = qf.collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray.map(_.toDouble))).toSeq
+    def page(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(page(Pq.adcTopK(spark, h0, queryVecs, k = 10))
+      === page(Pq.adcTopK(spark, fresh, queryVecs, k = 10)),
+      "the stale handle must score the new codes with the new codebooks")
+    assert(page(Pq.screenBatchAdc(spark, h0, qf, k = 10))
+      === page(Pq.screenBatchAdc(spark, fresh, qf, k = 10)))
+    assert(Pq.pqDriftStats(spark, h0) === Pq.pqDriftStats(spark, fresh),
+      "drift must be measured against the live generation's quantizer and baseline")
+  }
+
+  test("the encoding comes from disk: a reopened residual index appends into its cells; each screen refuses the other encoding") {
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val path = tmpDir("ivfpq_reopen") + "/index"
+    Pq.buildIndex(emb.filter(col("vec_id") < 320), path, m = 4, kSub = 8,
+      iters = 2, kCells = Some(8))
+    assert(Pq.loadIndex(path).coarse.map(_.size) === Some(8))
+    val appended = emb.filter(col("vec_id") >= 320).localCheckpoint()
+    assert(Pq.appendBatchIdempotent(Pq.loadIndex(path), appended, "disk:a"))
+    assert(Pq.indexData(spark, path).filter(col("cid").isNull).count() === 0L,
+      "the appended segment must be cell-partitioned like the base")
+    val queryVecs = appended.orderBy("vec_id").collect()
+      .map(r => (r.getLong(0) + 9000L, r.getSeq[Float](1).toArray.map(_.toDouble))).toSeq
+    // every cell probed, whole index ranked: each appended vector is
+    // served, and scores its own query at the page minimum — its codes
+    // are the per-subspace argmin of its residual
+    val page = Pq.screenTopKResidual(spark, Pq.loadIndex(path), queryVecs,
+      k = 325, nprobe = 8).collect()
+    queryVecs.foreach { case (q, _) =>
+      val rows = page.filter(_.getLong(0) == q)
+      val own = rows.find(_.getLong(2) == q - 9000L)
+      assert(own.isDefined, s"appended vector ${q - 9000L} not served")
+      assert(own.get.getDouble(3) === rows.map(_.getDouble(3)).min)
+    }
+    assert(Pq.fsckIndex(spark, path)._1.isEmpty)
+    intercept[IllegalArgumentException](
+      Pq.adcTopK(spark, Pq.loadIndex(path), queryVecs, k = 5))
+    val flat = Pq.buildIndex(emb, tmpDir("pq_flat_refuse") + "/index",
+      m = 4, kSub = 8, iters = 0)
+    assert(flat.coarse.isEmpty)
+    intercept[IllegalArgumentException](
+      Pq.screenTopKResidual(spark, flat, queryVecs, k = 5, nprobe = 2))
   }
 }

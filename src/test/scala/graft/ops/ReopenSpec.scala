@@ -172,13 +172,13 @@ class ReopenSpec extends SparkTestBase {
     val src = writeEmb(80, 8, 17)
     val emb = spark.read.parquet(src)
     val path = tmpDir("reopen_ivfpq")
-    Pq.buildIndexResidualCached(emb, src, path,
-      kCells = 2, m = 2, kSub = 4, iters = 1)
+    Pq.buildIndexCached(emb, src, path,
+      m = 2, kSub = 4, iters = 1, kCells = Some(2))
     val gen0 = IndexMaint.liveGenOpt(path).get
     val before = snapshot(path)
-    Pq.dropResidualBuildMemo(path)
-    val reopened = Pq.buildIndexResidualCached(emb, src, path,
-      kCells = 2, m = 2, kSub = 4, iters = 1)
+    Pq.dropBuildMemo(path)
+    val reopened = Pq.buildIndexCached(emb, src, path,
+      m = 2, kSub = 4, iters = 1, kCells = Some(2))
     assert(IndexMaint.liveGenOpt(path).contains(gen0), "no pointer flip")
     assert(snapshot(path) === before,
       "a miss with a matching key must leave the generation byte-identical")

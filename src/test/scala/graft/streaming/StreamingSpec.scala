@@ -714,8 +714,8 @@ class StreamingSpec extends SparkTestBase {
         java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
     }
     val scans0 = graft.ops.Pq.driftScans.get()
-    val reports = graft.streaming.PqIngest.ingestStream(
-      spark, srcDir, index0, k = 10, s"$tmp/sink")
+    val reports = graft.streaming.PqIngest.ingestStream(spark, srcDir, index0,
+      (ix, b) => graft.ops.Pq.screenBatchAdc(spark, ix, b, k = 10), s"$tmp/sink")
     // amortization: 4 applied batches at checkEvery=4 -> ONE drift scan
     assert(graft.ops.Pq.driftScans.get() - scans0 === 1L)
     assert(reports.length === 4 && reports.count(_.checked) === 1)
@@ -796,9 +796,9 @@ class StreamingSpec extends SparkTestBase {
     val tmp = tmpDir("ivfpq_ingest")
     (0 until 400).map(i => (i.toLong, around(cBase(i % 8), 0.3f)))
       .toDF("vec_id", "embedding").write.parquet(s"$tmp/base")
-    val index0 = graft.ops.Pq.buildIndexResidual(
+    val index0 = graft.ops.Pq.buildIndex(
       spark.read.parquet(s"$tmp/base"), s"$tmp/index",
-      kCells = 8, m = 4, kSub = 16, iters = 2)
+      m = 4, kSub = 16, iters = 2, kCells = Some(8))
     val tOff = Array.fill(dim)(6f)
     val cShift = Array.fill(8)(Array.tabulate(dim)(j =>
       tOff(j) + rnd.nextGaussian().toFloat * 1.2f))
@@ -820,8 +820,9 @@ class StreamingSpec extends SparkTestBase {
         java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
     }
     val scans0 = graft.ops.Pq.driftScans.get()
-    val reports = graft.streaming.PqIngest.ingestStreamResidual(
-      spark, srcDir, index0, k = 10, nprobe = 4, s"$tmp/sink")
+    val reports = graft.streaming.PqIngest.ingestStream(spark, srcDir, index0,
+      (ix, b) => graft.ops.Pq.screenBatchResidual(spark, ix, b, k = 10, nprobe = 4),
+      s"$tmp/sink")
     // amortization holds on the residual loop: 4 applied batches at
     // checkEvery=4 -> ONE residual drift scan
     assert(graft.ops.Pq.driftScans.get() - scans0 === 1L)
@@ -832,8 +833,8 @@ class StreamingSpec extends SparkTestBase {
       s"the checked shifted batch must fire the residual-fit dial: $reports")
     // the composed repair leaves a healthy index serving the shifted
     // distribution from residual codes
-    val repaired = graft.ops.Pq.loadIndexResidual(s"$tmp/index")
-    assert(!graft.ops.Pq.ivfPqDriftStats(spark, repaired).drifted())
+    val repaired = graft.ops.Pq.loadIndex(s"$tmp/index")
+    assert(!graft.ops.Pq.pqDriftStats(spark, repaired).drifted())
     val queries = (0 until 10).map { q =>
       ((9000 + q).toLong, around(cShift(q % 8), 0.3f).map(_.toDouble))
     }
