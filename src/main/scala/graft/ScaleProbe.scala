@@ -833,12 +833,14 @@ object ScaleProbe {
         // checkEvery=2: the O(index) drift scan runs on every SECOND
         // applied batch — half the maintenance scans of the per-batch
         // loop, and the shifted wave still gets caught and repaired
-        val reports = streaming.IvfIngest.ingestStream(spark, srcDir, index0,
-          k = 10, nprobe = 4, s"$idir/sink", checkEvery = 2)
+        val reports = streaming.Ingest.drain(spark, srcDir, index0,
+          ops.Ivf.appendIngest, Some(streaming.Ingest.Screen(
+            (i, b) => ops.Ivf.screenBatch(spark, i, b, k = 10, nprobe = 4),
+            s"$idir/sink")), checkEvery = 2)
         val tot = (System.nanoTime() - t0) / 1e9
         val scans = ops.Ivf.driftScans.get() - scans0
         val per = reports.map(r =>
-          f"b${r.batchId}%d(${if (r.checked) f"cos=${r.meanCos}%.3f" else "unchecked"}${if (r.rebalanced) " REBALANCED" else ""})")
+          f"b${r.batchId}%d(${if (r.checked) f"cos=${r.drift}%.3f" else "unchecked"}${if (r.rebalanced) " REBALANCED" else ""})")
           .mkString(" ")
         val line = f"PROBE ivf_ingest_stream    $tot%7.2f s batches=${reports.length} driftScans=$scans (checkEvery=2) $per"
         println(line); report ++= line + "\n"
@@ -884,8 +886,10 @@ object ScaleProbe {
         val t0 = System.nanoTime()
         val ingest = new Thread(() => try {
           // checkEvery high: the CONCURRENT rebalance is thread B's job
-          streaming.IvfIngest.ingestStream(spark, srcDir, index0,
-            k = 5, nprobe = 4, s"$wdir/sink", checkEvery = 100)
+          streaming.Ingest.drain(spark, srcDir, index0, ops.Ivf.appendIngest,
+            Some(streaming.Ingest.Screen(
+              (i, b) => ops.Ivf.screenBatch(spark, i, b, k = 5, nprobe = 4),
+              s"$wdir/sink")), checkEvery = 100)
           ()
         } catch { case t: Throwable => errs.add(t); () })
         val rebalance = new Thread(() => try {
@@ -1512,7 +1516,7 @@ object ScaleProbe {
 
     // Postings CDC at 8x — the steepest file-growth family (an append
     // touches up to 64 tb partitions): drive the SAME six insert
-    // batches through DocIngest twice, without and with the
+    // batches through the ingest loop twice, without and with the
     // compactEvery cadence, and record live-generation file counts.
     // The bounded run proves per-bucket file growth stays flat however
     // long the stream runs; the unbounded run is the counterfactual.
@@ -1536,14 +1540,14 @@ object ScaleProbe {
         val p0 = s"$cdcBase/idx0"
         ops.LexIndex.buildIndex(docs8, p0)
         val fBase = filesOf(p0)
-        graft.streaming.DocIngest.ingestStreamDocs(spark, stageSrc("s0"), p0,
-          compactEvery = 0)
+        graft.streaming.Ingest.drain(spark, stageSrc("s0"), p0,
+          ops.LexIndex.docIngest, compactEvery = 0)
         val fGrow = filesOf(p0)
         val p1 = s"$cdcBase/idx1"
         ops.LexIndex.buildIndex(docs8, p1)
         val tD0 = System.nanoTime()
-        graft.streaming.DocIngest.ingestStreamDocs(spark, stageSrc("s1"), p1,
-          compactEvery = 3)
+        graft.streaming.Ingest.drain(spark, stageSrc("s1"), p1,
+          ops.LexIndex.docIngest, compactEvery = 3)
         val tDrain = (System.nanoTime() - tD0) / 1e9
         val fBound = filesOf(p1)
         val rows = ops.LexIndex.bm25TopK(spark, p1,
@@ -1620,7 +1624,7 @@ object ScaleProbe {
     // the primary 100 TB stream, since real corpora mutate: 24
     // tombstone-heavy op-tagged batches (each deletes one base stratum,
     // re-embeds another, inserts a third) drain through the actual
-    // CdcIngest loop twice, once under compactEvery=4 (full-generation
+    // ingest loop twice, once under compactEvery=4 (full-generation
     // rewrites) and once under the size-tiered merge policy. Rewritten
     // bytes come from the loop's own maintBytes telemetry — the number
     // an operator watches in production. Serving must come out
@@ -1655,14 +1659,14 @@ object ScaleProbe {
           spark.read.parquet(graft.util.IndexMaint.liveGen(path)).inputFiles.length
         val queries = emb1.filter(col("vec_id") < 3).localCheckpoint()
         def drain(tag: String, compactEvery: Int,
-            mp: Option[ops.MergePolicy]): (Seq[graft.streaming.CdcIngest.BatchReport], Double, String) = {
+            mp: Option[ops.MergePolicy]): (Seq[graft.streaming.Ingest.BatchReport], Double, String) = {
           val p = s"$cBase/$tag"
           ops.Ivf.buildIndex(emb8, p, kCells = 16, iters = 0)
           val src = graft.util.Fs.stageBatchFiles(cBase, s"src_$tag",
             (0 until 24).map(mkBatch))
           val t0 = System.nanoTime()
-          val reps = graft.streaming.CdcIngest.ingestStreamCdc(spark, src,
-            ops.Ivf.loadIndex(p), checkEvery = 100,
+          val reps = graft.streaming.Ingest.drain(spark, src,
+            ops.Ivf.loadIndex(p), ops.Ivf.cdcIngest, checkEvery = 100,
             compactEvery = compactEvery, mergePolicy = mp)
           ((reps, (System.nanoTime() - t0) / 1e9, p))
         }
@@ -1697,7 +1701,7 @@ object ScaleProbe {
     // partitions), so the family where the maintenance plan matters
     // most: 24 tombstone-heavy op-tagged doc batches (delete a base
     // stratum, re-crawl another with donor text, insert a third)
-    // through the actual DocIngest loop, once under compactEvery=4 and
+    // through the actual ingest loop, once under compactEvery=4 and
     // once under the tiered merge. Bytes from the loop's maintBytes
     // telemetry; serving page and scoring constants must come out
     // identical.
@@ -1723,14 +1727,14 @@ object ScaleProbe {
         def filesOf(path: String): Int =
           spark.read.parquet(graft.util.IndexMaint.liveGen(path)).inputFiles.length
         def drain(tag: String, compactEvery: Int,
-            mp: Option[ops.MergePolicy]): (Seq[graft.streaming.DocIngest.BatchReport], Double, String) = {
+            mp: Option[ops.MergePolicy]): (Seq[graft.streaming.Ingest.BatchReport], Double, String) = {
           val p = s"$dBase/$tag"
           ops.LexIndex.buildIndex(docs8, p)
           val src = graft.util.Fs.stageBatchFiles(dBase, s"src_$tag",
             (0 until 24).map(mkBatch))
           val t0 = System.nanoTime()
-          val reps = graft.streaming.DocIngest.ingestStreamDocs(spark, src, p,
-            compactEvery = compactEvery, mergePolicy = mp)
+          val reps = graft.streaming.Ingest.drain(spark, src, p,
+            ops.LexIndex.docIngest, compactEvery = compactEvery, mergePolicy = mp)
           ((reps, (System.nanoTime() - t0) / 1e9, p))
         }
         val (repsA, tA, pa) = drain("compact", 4, None)
@@ -2161,7 +2165,7 @@ object ScaleProbe {
     report ++= "  behind 31 idle cores. The spread line is the cluster-relevant\n"
     report ++= "  number: isolated_cold is the max rows ANY reducer sees (the\n"
     report ++= "  hub's edges never shuffle), i.e. the absent straggler/OOM.\n"
-    report ++= "- bm25_cdc_8x: six insert batches through DocIngest. An append\n"
+    report ++= "- bm25_cdc_8x: six insert batches through the ingest loop. An append\n"
     report ++= "  touches up to 64 tb partitions, so the postings index is the\n"
     report ++= "  steepest file-growth family; the compactEvery=3 cadence\n"
     report ++= "  re-lands accrued segments and the final file count stays at the\n"
@@ -2177,7 +2181,7 @@ object ScaleProbe {
     report ++= "  the two maintenance strategies.\n"
     report ++= "- cdc_tiered_merge_24: the same comparison on the LONG-LIVED CDC\n"
     report ++= "  shape — 24 tombstone-heavy batches (delete + donor-upsert +\n"
-    report ++= "  insert strata) through the actual CdcIngest loop. Rewritten\n"
+    report ++= "  insert strata) through the actual ingest loop. Rewritten\n"
     report ++= "  bytes are the loop's own per-batch maintBytes telemetry; the\n"
     report ++= "  tiered run must rewrite less in total, stay bounded per batch\n"
     report ++= "  (maxPerBatch is the dial), and serve an identical page. Merge-\n"
@@ -2185,7 +2189,7 @@ object ScaleProbe {
     report ++= "  re-lands minus its own pairs, so the mutation-heavy stream\n"
     report ++= "  reclaims as it merges instead of deferring to a full compact.\n"
     report ++= "- doc_cdc_tiered_merge_24: the same tombstone-heavy CDC comparison\n"
-    report ++= "  on the LEXICAL family through DocIngest — the steepest file-\n"
+    report ++= "  on the LEXICAL family through the ingest loop — the steepest file-\n"
     report ++= "  growth index, where an append touches up to 64 tb partitions.\n"
     report ++= "  Serving page AND scoring constants asserted identical between\n"
     report ++= "  the two maintenance strategies; bytes from maintBytes telemetry.\n"

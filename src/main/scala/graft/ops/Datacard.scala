@@ -410,11 +410,12 @@ object Datacard {
     // state carries BOTH metric rows by construction (statify emits the
     // pair per doc), so the grouped shape keeps exactly the sources the
     // old inner-join pair kept, with identical values.
+    // `samples` comes from a groupBy, so every row has m >= 1
     val pickv = expr(
-      """IF(m = 0, NULL, element_at(sample, cast(least(greatest(
+      """element_at(sample, cast(least(greatest(
         |  ((n * IF(metric = 'chars', 50, 95) + 99) div 100
         |     + shiftleft(cast(1 as bigint), cast(level as int)) - 1)
-        |    div shiftleft(cast(1 as bigint), cast(level as int)), 1), m) as int)))""".stripMargin)
+        |    div shiftleft(cast(1 as bigint), cast(level as int)), 1), m) as int))""".stripMargin)
     val picks = samples.select(col("source"), col("metric"), pickv.as("v"))
       .groupBy("source").agg(
         max(when(col("metric") === "chars", col("v"))).as("p50_chars_est"),

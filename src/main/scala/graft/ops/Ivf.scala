@@ -568,6 +568,26 @@ object Ivf extends IndexFamily {
   def applyCdcIdempotent(index: IvfIndex, batch: DataFrame, token: String): Boolean =
     cdcSegment(index.path, batch, token)
 
+  /** The [[graft.streaming.Ingest]] loop's verbs for a screened append
+    * stream (`ingest:` tokens, [[appendBatchIdempotent]]): the drift
+    * check is [[driftStats]] (statistic: `meanCosNow`), repaired by
+    * [[rebalance]].
+    */
+  val appendIngest: graft.streaming.Ingest.Family[IvfIndex] =
+    graft.streaming.Ingest.Family(prefix = "ingest", path = _.path,
+      apply = appendBatchIdempotent,
+      drift = Some { (spark, index) =>
+        val d = driftStats(spark, index)
+        (d.drifted(), d.meanCosNow)
+      },
+      rebalance = (spark, index) => rebalance(spark, index),
+      compact = (spark, index) => compactIndex(spark, index),
+      merge = (spark, index, p) => mergeSegments(spark, index, p))
+
+  /** [[appendIngest]] for a CDC stream (`cdc:` tokens, [[applyCdcIdempotent]]). */
+  val cdcIngest: graft.streaming.Ingest.Family[IvfIndex] =
+    appendIngest.copy(prefix = "cdc", apply = applyCdcIdempotent)
+
   /** [[buildIndex]] memoized per (path, source fingerprint, kCells,
     * iters) for the session — the [[BpeTrain.trainedMerges]] pattern:
     * the build is deterministic, so one derivation serves every
@@ -793,7 +813,8 @@ object Ivf extends IndexFamily {
   /** Measure drift: the index's CURRENT per-cell stats against the
     * build-time sidecar. O(index scan) work, k rows of metadata out.
     * Run it per append WAVE, not per micro-batch: the scan is O(index),
-    * so an ingest loop amortizes it (see IvfIngest's `checkEvery`).
+    * so an ingest loop amortizes it (see [[graft.streaming.Ingest]]'s
+    * `checkEvery`).
     * Reader-safe against a concurrent rebalance: the generation is
     * resolved once and survives one subsequent commit (the
     * [[indexData]] contract).

@@ -566,6 +566,19 @@ object LexIndex extends IndexFamily {
   def applyCdcDocs(path: String, batch: DataFrame, token: String): Boolean =
     cdcSegment(path, batch, token)
 
+  /** The [[graft.streaming.Ingest]] loop's verbs for a document CDC
+    * stream (`docs:` tokens, [[applyCdcDocs]]). The lexical index has no
+    * drift check: its stats are exact, not a trained quantizer, so the
+    * only maintenance is segment hygiene — steepest on this family,
+    * since an append touches up to 64 `tb` partitions.
+    */
+  val docIngest: graft.streaming.Ingest.Family[String] =
+    graft.streaming.Ingest.Family(prefix = "docs", path = identity,
+      apply = applyCdcDocs, drift = None,
+      rebalance = (_, path) => path,
+      compact = (spark, path) => { compactIndex(spark, path); path },
+      merge = (spark, path, p) => mergeSegments(spark, path, p))
+
   /** The live postings relation (partition columns `seg`, `tb`), MINUS
     * tombstoned docs — the [[Ivf.indexData]] reader contract: every
     * read path honors takedowns through this one read, so a new
@@ -1897,7 +1910,7 @@ object LexIndex extends IndexFamily {
     * (inserts: +1000000-keyed copies of the %11==0 docs; deletes: the
     * %7==3 non-upsert stratum; upserts: %5==2 docs re-crawled with
     * their successor's text — all real table values) drain through
-    * [[graft.streaming.DocIngest]], each applied as one atomic
+    * [[graft.streaming.Ingest]] ([[docIngest]]), each applied as one atomic
     * token-guarded mutation. The oracle is the in-memory BM25 twin
     * over the EFFECTIVE corpus: hash equality proves deleted postings
     * left stats, df and ranks, upserted docs score with their new
@@ -1929,8 +1942,8 @@ object LexIndex extends IndexFamily {
     graft.util.IndexMaint.drainOnce(path, Seq(s"$dir/documents.parquet"),
       "drain|docsq") {
       val tmp = java.nio.file.Files.createTempDirectory("stream_bm25_cdc").toString
-      try graft.streaming.DocIngest.ingestStreamDocs(spark,
-        graft.util.Fs.stageBatchFiles(tmp, "src", batches), path)
+      try graft.streaming.Ingest.drain(spark,
+        graft.util.Fs.stageBatchFiles(tmp, "src", batches), path, docIngest)
       finally graft.util.Fs.deleteRecursively(tmp)
       ()
     }
@@ -2135,8 +2148,8 @@ object LexIndex extends IndexFamily {
   /** Registered `search_hybrid_cdc`: the FUSED page after a CDC drain —
     * the actually-served artifact of a live RAG stack. The same
     * op-tagged mutation wave lands on BOTH indexes as two CDC streams
-    * (documents through [[graft.streaming.DocIngest]], vectors through
-    * [[graft.streaming.CdcIngest]]): inserts (+1000000-keyed copies of
+    * through [[graft.streaming.Ingest]] (documents by [[docIngest]],
+    * vectors by [[Ivf.cdcIngest]]): inserts (+1000000-keyed copies of
     * the %11==0 docs with their embeddings), deletes (the %7==3
     * non-upsert stratum from both sides), upserts (%5==2 re-crawled
     * with the successor's text AND re-embedded with the successor's
@@ -2190,13 +2203,14 @@ object LexIndex extends IndexFamily {
       "drain|hcdcq") {
       val tmp = java.nio.file.Files.createTempDirectory("hybrid_cdc").toString
       try {
-        graft.streaming.DocIngest.ingestStreamDocs(spark,
-          graft.util.Fs.stageBatchFiles(tmp, "docsrc", docBatches), lexPath)
+        graft.streaming.Ingest.drain(spark,
+          graft.util.Fs.stageBatchFiles(tmp, "docsrc", docBatches), lexPath,
+          docIngest)
         // checkEvery past the stream length: a drift-fired rebalance would
         // retrain the quantizer the oracle froze (the stream_ivf_cdc note)
-        graft.streaming.CdcIngest.ingestStreamCdc(spark,
+        graft.streaming.Ingest.drain(spark,
           graft.util.Fs.stageBatchFiles(tmp, "vecsrc", vecBatches),
-          Ivf.loadIndex(vecPath), checkEvery = 100)
+          Ivf.loadIndex(vecPath), Ivf.cdcIngest, checkEvery = 100)
       } finally graft.util.Fs.deleteRecursively(tmp)
       ()
     }

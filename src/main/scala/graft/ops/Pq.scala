@@ -1064,10 +1064,6 @@ object Pq {
 
   // ---- idempotent append + instrumentation (streaming replay safety) --------
 
-  /** Tokens of batches already folded into the index. */
-  def appliedTokens(index: PqIndex): Set[String] =
-    graft.util.IndexMaint.appliedTokens(graft.util.IndexMaint.liveGen(index.path))
-
   /** [[appendBatch]] guarded by a per-batch token (the
     * [[Ivf.appendBatchIdempotent]] contract): the encoded batch and its
     * token stage together and commit by ONE atomic segment rename, so
@@ -1080,6 +1076,22 @@ object Pq {
     */
   def appendBatchIdempotent(index: PqIndex, batch: DataFrame, token: String): Boolean =
     Family.appendSegment(index.path, batch, token)
+
+  /** The [[graft.streaming.Ingest]] loop's verbs for a screened append
+    * stream (`ingest:` tokens, [[appendBatchIdempotent]]), in either
+    * encoding: the drift check is [[pqDriftStats]] (statistic:
+    * `meanD2Now`), repaired by [[rebalance]].
+    */
+  val appendIngest: graft.streaming.Ingest.Family[PqIndex] =
+    graft.streaming.Ingest.Family(prefix = "ingest", path = _.path,
+      apply = appendBatchIdempotent,
+      drift = Some { (spark, index) =>
+        val d = pqDriftStats(spark, index)
+        (d.drifted(), d.meanD2Now)
+      },
+      rebalance = (spark, index) => rebalance(spark, index),
+      compact = (spark, index) => compactIndex(spark, index),
+      merge = (spark, index, p) => mergeSegments(spark, index, p))
 
   /** Delete-then-insert in ONE leased mutation — the
     * [[Ivf.upsertBatchIdempotent]] contract on the PQ index: tombstone

@@ -144,8 +144,10 @@ final class MarketingCloudPush(
           .select(col("job_id"), col("load_task_name"), col("object_name"),
             col("operation"), current_timestamp().as("creation_time"),
             col("result").as("creation_metadata"))
-        tasks.upsert(taskRow)
+        // logs first: a task row then implies its logs landed, which is
+        // what StreamingPush's replay guard reads
         logs.append(result.drop("rn"))
+        tasks.upsert(taskRow)
         val n = result.count()
         PushReport(model.name, skippedEmpty = false, Some(jobId), n, nBatches)
       } finally result.unpersist()

@@ -224,9 +224,14 @@ object FileStreams {
   * Exactly-once across restarts: `foreachBatch` is at-least-once — after
   * a crash between the push and the checkpoint commit, the SAME batchId
   * is replayed. The task table doubles as the transaction log: a batch
-  * whose task name (`model#batchId`) already has a task row was pushed
+  * whose task name (`model#batchId`) has a FINISHED task row was pushed
   * by a previous incarnation and is skipped, so external side effects
-  * fire once per batch id.
+  * fire once per batch id. Finished, not merely present: Salesforce
+  * writes its task row before the loads, so a push that failed midway
+  * leaves a row with a null `close_metadata` (stamped only after the log
+  * append) and its redelivery pushes again; Marketing Cloud writes its
+  * task row after the log append, so any row means the logs landed.
+  * Both checks read only the small task table, never the log.
   */
 final class StreamingPush(
     spark: SparkSession,
@@ -249,8 +254,12 @@ final class StreamingPush(
     */
   def pushBatch(batch: DataFrame, batchId: Long): PushReport = {
     val taskName = s"$modelName#$batchId"
+    val finished = config match {
+      case _: graft.model.MarketingCloudConfig => lit(true)
+      case _ => col("close_metadata").isNotNull
+    }
     val already = !taskTable.read()
-      .filter(org.apache.spark.sql.functions.col("load_task_name") === taskName)
+      .filter(col("load_task_name") === taskName && finished)
       .isEmpty
     val report =
       if (already) PushReport(taskName, skippedEmpty = true, None, 0)

@@ -453,7 +453,7 @@ object StreamingQueries {
     * (inserts: +1000000-keyed copies of the query stratum; deletes: the
     * %7==2 non-upsert stratum; upserts: %9==4 ids re-embedded with
     * their successor's vector — all real table values, id-disjoint by
-    * construction) drain through [[graft.streaming.CdcIngest]] against
+    * construction) drain through [[graft.streaming.Ingest]] against
     * the persisted IVF index, each applied as one atomic token-guarded
     * mutation. The final screen must equal the closed form over the
     * EFFECTIVE corpus with the frozen build-time quantizer: hash
@@ -492,9 +492,9 @@ object StreamingQueries {
       // checkEvery past the stream length: the maintenance cadence is
       // exercised in specs; here a drift-triggered rebalance would
       // retrain the quantizer the oracle froze at build time
-      try CdcIngest.ingestStreamCdc(spark,
+      try Ingest.drain(spark,
         graft.util.Fs.stageBatchFiles(tmp, "src", batches),
-        Ivf.loadIndex(index.path), checkEvery = 100)
+        Ivf.loadIndex(index.path), Ivf.cdcIngest, checkEvery = 100)
       finally graft.util.Fs.deleteRecursively(tmp)
       ()
     }

@@ -383,6 +383,36 @@ class StreamingSpec extends SparkTestBase {
     assert(sp.pushBatch(batch, batchId = 8L).recordsPushed === 20)
   }
 
+  test("StreamingPush: a batch whose push failed after its task row landed is pushed again on redelivery") {
+    class FailingLoads extends MockSalesforceBulkApi {
+      @volatile var failing = true
+      override def loadBatch(jobId: String, recordJson: String, wait: Boolean): String = {
+        if (failing && recordJson.contains("\"acct13\""))
+          throw new RuntimeException("connector timeout")
+        super.loadBatch(jobId, recordJson, wait)
+      }
+    }
+    val sfdc = new FailingLoads
+    val mat = new PushMaterializer(spark, tmpDir("stream-failed-push"), sfdc, new MockSfmcApi())
+    val sp = new StreamingPush(spark, mat,
+      SalesforceConfig("Account", "insert"), "retry_accounts")
+    val batch = (1 to 20).map(i => s"""{"Name":"acct$i"}""").toDF("record")
+
+    intercept[Exception](sp.pushBatch(batch, batchId = 7L))
+    // the failed push left its task row (written before the loads), no logs
+    assert(mat.sfdcTasks.read()
+      .filter(col("load_task_name") === "retry_accounts#7").count() === 1)
+    assert(mat.sfdcLogs.read().count() === 0)
+    // foreachBatch redelivers batch 7: it must push, not be skipped
+    sfdc.failing = false
+    val calls0 = sfdc.loadBatchCalls.get()
+    val retry = sp.pushBatch(batch, batchId = 7L)
+    assert(!retry.skippedEmpty && retry.recordsPushed === 20)
+    assert(sfdc.loadBatchCalls.get() - calls0 === 20)
+    assert(mat.sfdcLogs.read()
+      .filter(col("load_task_name") === "retry_accounts#7").count() === 20)
+  }
+
   test("StreamingPush drives the Marketing Cloud pipeline too (config dispatch)") {
     implicit val sqlCtx = spark.sqlContext
     val sfmc = new MockSfmcApi()
@@ -501,8 +531,8 @@ class StreamingSpec extends SparkTestBase {
       java.nio.file.Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
     }
-    val reports = graft.streaming.CdcIngest.ingestStreamCdc(
-      spark, srcDir, index0, checkEvery = 2)
+    val reports = graft.streaming.Ingest.drain(
+      spark, srcDir, index0, graft.ops.Ivf.cdcIngest, checkEvery = 2)
     assert(reports.length === 3 && reports.forall(!_.replayed))
     assert(reports.map(r => (r.inserted, r.upserted, r.deleted)) ===
       Seq((0L, 0L, 10L), (5L, 0L, 0L), (0L, 3L, 0L)))
@@ -529,9 +559,9 @@ class StreamingSpec extends SparkTestBase {
     // … and a FULL stream replay (fresh checkpoint, same files — the
     // at-least-once worst case) no-ops on every token: the replayed
     // delete must NOT re-hide the re-inserted id
-    val replay = graft.streaming.CdcIngest.ingestStreamCdc(spark, srcDir,
-      graft.ops.Ivf.loadIndex(s"$tmp/index"), checkEvery = 2,
-      checkpointDir = s"$tmp/ckpt2")
+    val replay = graft.streaming.Ingest.drain(spark, srcDir,
+      graft.ops.Ivf.loadIndex(s"$tmp/index"), graft.ops.Ivf.cdcIngest,
+      checkEvery = 2, checkpointDir = s"$tmp/ckpt2")
     assert(replay.length === 3 && replay.forall(_.replayed))
     val data = graft.ops.Ivf.indexData(spark, s"$tmp/index")
     assert(data.filter(col("vec_id") === 10L).count() === 1,
@@ -565,8 +595,8 @@ class StreamingSpec extends SparkTestBase {
       java.nio.file.Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
     }
-    val reports = graft.streaming.DocIngest.ingestStreamDocs(
-      spark, srcDir, path, compactEvery = 3)
+    val reports = graft.streaming.Ingest.drain(
+      spark, srcDir, path, graft.ops.LexIndex.docIngest, compactEvery = 3)
     assert(reports.map(r => (r.inserted, r.upserted, r.deleted)) ===
       Seq((0L, 0L, 10L), (5L, 0L, 0L), (0L, 2L, 0L)))
     // the 3rd applied batch compacted: one segment, tombstones reclaimed
@@ -584,8 +614,9 @@ class StreamingSpec extends SparkTestBase {
     // … and a FULL stream replay (fresh checkpoint) no-ops every token:
     // tokens survive compaction, so even the compacted delete cannot
     // re-hide the re-inserted doc
-    val replay = graft.streaming.DocIngest.ingestStreamDocs(
-      spark, srcDir, path, compactEvery = 3, checkpointDir = s"$tmp/ckpt2")
+    val replay = graft.streaming.Ingest.drain(
+      spark, srcDir, path, graft.ops.LexIndex.docIngest, compactEvery = 3,
+      checkpointDir = s"$tmp/ckpt2")
     assert(replay.length === 3 && replay.forall(_.replayed))
     val alpha = graft.ops.LexIndex.bm25TopK(spark, path, Seq("q" -> "alpha"), 200)
     assert(alpha.filter(col("doc_id") === 3L).count() === 1L,
@@ -645,8 +676,10 @@ class StreamingSpec extends SparkTestBase {
         java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
     }
     val scans0 = graft.ops.Ivf.driftScans.get()
-    val reports = graft.streaming.IvfIngest.ingestStream(
-      spark, srcDir, index0, k = 10, nprobe = 1, s"$tmp/sink")
+    val reports = graft.streaming.Ingest.drain(
+      spark, srcDir, index0, graft.ops.Ivf.appendIngest, Some(graft.streaming.Ingest.Screen(
+        (i, b) => graft.ops.Ivf.screenBatch(spark, i, b, k = 10, nprobe = 1),
+        s"$tmp/sink")))
     // the O(index) drift check is AMORTIZED (default checkEvery=4):
     // four applied batches cost ONE index scan, not four — and the
     // shifted wave still gets caught and repaired below
@@ -714,8 +747,9 @@ class StreamingSpec extends SparkTestBase {
         java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
     }
     val scans0 = graft.ops.Pq.driftScans.get()
-    val reports = graft.streaming.PqIngest.ingestStream(spark, srcDir, index0,
-      (ix, b) => graft.ops.Pq.screenBatchAdc(spark, ix, b, k = 10), s"$tmp/sink")
+    val reports = graft.streaming.Ingest.drain(spark, srcDir, index0,
+      graft.ops.Pq.appendIngest, Some(graft.streaming.Ingest.Screen(
+        (ix, b) => graft.ops.Pq.screenBatchAdc(spark, ix, b, k = 10), s"$tmp/sink")))
     // amortization: 4 applied batches at checkEvery=4 -> ONE drift scan
     assert(graft.ops.Pq.driftScans.get() - scans0 === 1L)
     assert(reports.length === 4 && reports.count(_.checked) === 1)
@@ -764,8 +798,10 @@ class StreamingSpec extends SparkTestBase {
     val pre = batches.head.toDF("vec_id", "embedding").localCheckpoint()
     assert(graft.ops.Ivf.appendBatchIdempotent(index0, pre, token = "ingest:0"))
     val n0 = graft.ops.Ivf.indexData(spark, s"$tmp/index").count()
-    val reports = graft.streaming.IvfIngest.ingestStream(
-      spark, srcDir, index0, k = 5, nprobe = 2, s"$tmp/sink", checkEvery = 1)
+    val reports = graft.streaming.Ingest.drain(
+      spark, srcDir, index0, graft.ops.Ivf.appendIngest, Some(graft.streaming.Ingest.Screen(
+        (i, b) => graft.ops.Ivf.screenBatch(spark, i, b, k = 5, nprobe = 2),
+        s"$tmp/sink")), checkEvery = 1)
     assert(reports.length === 2)
     // batch 0 replays: skipped whole — no append (row count moves only
     // by batch 1), no drift check, and NO sink partition for it (its
@@ -773,9 +809,9 @@ class StreamingSpec extends SparkTestBase {
     // re-screen here would self-match every vector at rank 1)
     assert(reports(0).replayed && !reports(0).checked,
       s"replayed batch must be skipped whole: ${reports(0)}")
-    assert(reports(0).appended === -1L && reports(0).screenedPairs === -1L,
+    assert(reports(0).inserted === -1L && reports(0).screenedPairs === -1L,
       s"a replayed batch's counts are UNKNOWN, not zero: ${reports(0)}")
-    assert(!reports(1).replayed && reports(1).appended === 20L)
+    assert(!reports(1).replayed && reports(1).inserted === 20L)
     assert(graft.ops.Ivf.indexData(spark, s"$tmp/index").count() === n0 + 20L)
     val sinkBatches = spark.read.parquet(s"$tmp/sink")
       .select("batch_id").distinct().collect().map(_.getInt(0)).toSet
@@ -820,9 +856,10 @@ class StreamingSpec extends SparkTestBase {
         java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
     }
     val scans0 = graft.ops.Pq.driftScans.get()
-    val reports = graft.streaming.PqIngest.ingestStream(spark, srcDir, index0,
-      (ix, b) => graft.ops.Pq.screenBatchResidual(spark, ix, b, k = 10, nprobe = 4),
-      s"$tmp/sink")
+    val reports = graft.streaming.Ingest.drain(spark, srcDir, index0,
+      graft.ops.Pq.appendIngest, Some(graft.streaming.Ingest.Screen(
+        (ix, b) => graft.ops.Pq.screenBatchResidual(spark, ix, b, k = 10, nprobe = 4),
+        s"$tmp/sink")))
     // amortization holds on the residual loop: 4 applied batches at
     // checkEvery=4 -> ONE residual drift scan
     assert(graft.ops.Pq.driftScans.get() - scans0 === 1L)
@@ -871,9 +908,10 @@ class StreamingSpec extends SparkTestBase {
       java.nio.file.Files.setLastModifiedTime(dst,
         java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
     }
-    val reports = graft.streaming.IvfIngest.ingestStream(
-      spark, srcDir, index0, k = 5, nprobe = 2, s"$tmp/sink",
-      checkEvery = 100, compactEvery = 2)
+    val reports = graft.streaming.Ingest.drain(
+      spark, srcDir, index0, graft.ops.Ivf.appendIngest, Some(graft.streaming.Ingest.Screen(
+        (i, b) => graft.ops.Ivf.screenBatch(spark, i, b, k = 5, nprobe = 2),
+        s"$tmp/sink")), checkEvery = 100, compactEvery = 2)
     assert(reports.length === 4 && reports.forall(!_.replayed))
     // after the 4th batch the cadence compacted at batches 2 and 4:
     // the live generation holds ONE re-landed segment, not base + 4
@@ -908,9 +946,10 @@ class StreamingSpec extends SparkTestBase {
         .toDF("vec_id", "embedding")
     }
     val srcDir = graft.util.Fs.stageBatchFiles(tmp, "src", batches)
-    val reports = graft.streaming.IvfIngest.ingestStream(
-      spark, srcDir, index0, k = 5, nprobe = 2, s"$tmp/sink",
-      checkEvery = 100,
+    val reports = graft.streaming.Ingest.drain(
+      spark, srcDir, index0, graft.ops.Ivf.appendIngest, Some(graft.streaming.Ingest.Screen(
+        (i, b) => graft.ops.Ivf.screenBatch(spark, i, b, k = 5, nprobe = 2),
+        s"$tmp/sink")), checkEvery = 100,
       mergePolicy = Some(graft.ops.MergePolicy(factor = 4, minMerge = 4, maxMerge = 8)))
     assert(reports.length === 9 && reports.forall(!_.replayed))
     // tiers filled at batches 4 and 8 (at this toy scale parquet
@@ -960,8 +999,8 @@ class StreamingSpec extends SparkTestBase {
       tagged(vecs(930 until 935), "insert"))
     val srcDir = graft.util.Fs.stageBatchFiles(tmp, "src", batches)
     val mp = Some(graft.ops.MergePolicy(factor = 4, minMerge = 4, maxMerge = 8))
-    val reports = graft.streaming.CdcIngest.ingestStreamCdc(
-      spark, srcDir, index0, checkEvery = 100, mergePolicy = mp)
+    val reports = graft.streaming.Ingest.drain(spark, srcDir, index0,
+      graft.ops.Ivf.cdcIngest, checkEvery = 100, mergePolicy = mp)
     assert(reports.length === 6 && reports.forall(!_.replayed))
     assert(reports.count(_.maintBytes > 0) >= 1,
       s"a tiered merge must have fired mid-stream: ${reports.map(_.maintBytes)}")
@@ -981,15 +1020,15 @@ class StreamingSpec extends SparkTestBase {
     // a FULL stream replay (fresh checkpoint) no-ops on every token —
     // including the merged batches', now in the consolidated sidecar —
     // and charges zero maintenance IO
-    val replay = graft.streaming.CdcIngest.ingestStreamCdc(spark, srcDir,
-      graft.ops.Ivf.loadIndex(s"$tmp/index"), checkEvery = 100,
-      checkpointDir = s"$tmp/ckpt2", mergePolicy = mp)
+    val replay = graft.streaming.Ingest.drain(spark, srcDir,
+      graft.ops.Ivf.loadIndex(s"$tmp/index"), graft.ops.Ivf.cdcIngest,
+      checkEvery = 100, checkpointDir = s"$tmp/ckpt2", mergePolicy = mp)
     assert(replay.length === 6 && replay.forall(_.replayed))
     assert(replay.forall(_.maintBytes === 0L))
     assert(graft.ops.Ivf.indexData(spark, s"$tmp/index").count() === 84L)
     // serving equals a merge-free twin of the same drain, page for page
     val cmp0 = graft.ops.Ivf.buildIndex(base, s"$tmp/cmp", kCells = 2, iters = 1)
-    graft.streaming.CdcIngest.ingestStreamCdc(spark, srcDir, cmp0,
+    graft.streaming.Ingest.drain(spark, srcDir, cmp0, graft.ops.Ivf.cdcIngest,
       checkEvery = 100, checkpointDir = s"$tmp/ckpt3")
     val queries = vecs(500 until 503).localCheckpoint()
     def page(p: String): Seq[String] =
@@ -1027,8 +1066,8 @@ class StreamingSpec extends SparkTestBase {
     val myHash = System.identityHashCode(monitor)
     var gen0 = ""
     val fut = monitor.synchronized {
-      val f = Future(graft.streaming.CdcIngest.ingestStreamCdc(
-        spark, srcDir, index0, checkEvery = 100, compactEvery = 1))
+      val f = Future(graft.streaming.Ingest.drain(spark, srcDir, index0,
+        graft.ops.Ivf.cdcIngest, checkEvery = 100, compactEvery = 1))
       val mx = java.lang.management.ManagementFactory.getThreadMXBean
       val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
       def streamBlocked: Boolean = mx.dumpAllThreads(false, false).exists(ti =>
@@ -1079,8 +1118,8 @@ class StreamingSpec extends SparkTestBase {
       tagged((930 until 935).map(i => (i.toLong, s"alpha more o$i")), "insert"))
     val srcDir = graft.util.Fs.stageBatchFiles(tmp, "src", batches)
     val mp = Some(graft.ops.MergePolicy(factor = 4, minMerge = 4, maxMerge = 8))
-    val reports = graft.streaming.DocIngest.ingestStreamDocs(
-      spark, srcDir, s"$tmp/index", mergePolicy = mp)
+    val reports = graft.streaming.Ingest.drain(
+      spark, srcDir, s"$tmp/index", graft.ops.LexIndex.docIngest, mergePolicy = mp)
     assert(reports.length === 6 && reports.forall(!_.replayed))
     assert(reports.count(_.maintBytes > 0) >= 1,
       s"a tiered merge must have fired mid-stream: ${reports.map(_.maintBytes)}")
@@ -1105,14 +1144,14 @@ class StreamingSpec extends SparkTestBase {
     // a FULL stream replay (fresh checkpoint) no-ops on every token —
     // including the merged batches', now in the consolidated sidecar —
     // and charges zero maintenance IO
-    val replay = graft.streaming.DocIngest.ingestStreamDocs(spark, srcDir,
-      s"$tmp/index", checkpointDir = s"$tmp/ckpt2", mergePolicy = mp)
+    val replay = graft.streaming.Ingest.drain(spark, srcDir, s"$tmp/index",
+      graft.ops.LexIndex.docIngest, checkpointDir = s"$tmp/ckpt2", mergePolicy = mp)
     assert(replay.length === 6 && replay.forall(_.replayed))
     assert(replay.forall(_.maintBytes === 0L))
     // serving equals a merge-free twin of the same drain, page for page,
     // and the scoring constants agree exactly
     graft.ops.LexIndex.buildIndex(base, s"$tmp/cmp")
-    graft.streaming.DocIngest.ingestStreamDocs(spark, srcDir, s"$tmp/cmp",
+    graft.streaming.Ingest.drain(spark, srcDir, s"$tmp/cmp", graft.ops.LexIndex.docIngest,
       checkpointDir = s"$tmp/ckpt3")
     def page(p: String): Seq[String] =
       graft.ops.LexIndex.bm25TopK(spark, p,
