@@ -10,8 +10,12 @@ import scala.jdk.CollectionConverters._
   * own integration tests do exactly this —
   * `integration_tests/dbt_project.yml:29-92`) or a real HTTP client.
   *
-  * Connectors are invoked from executors inside UDF closures, so
-  * implementations must be Serializable. Spark may retry a task; a retry
+  * Connectors are invoked from executors inside task closures, so
+  * implementations must be Serializable. The per-record calls
+  * (`loadBatch`, `fetchResults`) are made concurrently from several
+  * threads of one task (`graft.push.InFlight`), so implementations must
+  * be thread-safe; every executor-side call sees its task's
+  * `TaskContext`. Spark may retry a task; a retry
   * re-calls the connector for every record of the partition, and no
   * idempotency key is passed, so a retried record reaches the remote
   * twice. The mocks return canned payloads but count calls and staged
@@ -44,7 +48,7 @@ trait SfmcApi extends Serializable {
 }
 
 /** Transient-failure retry wrapper for the Salesforce connector — remote
-  * HTTP calls fail transiently, and a failed UDF call otherwise fails the
+  * HTTP calls fail transiently, and a failed call otherwise fails the
   * task, which makes Spark retry the WHOLE partition (re-pushing every
   * record in it). Retrying per call keeps the blast radius to one record.
   * A retried call whose first attempt did reach the remote is delivered
@@ -81,7 +85,7 @@ class RetryingSalesforceApi(
 
 /** JVM-wide mock telemetry, keyed per mock instance id.
   *
-  * Spark serializes task closures even in local mode, so a UDF that
+  * Spark serializes task closures even in local mode, so a task that
   * captures a mock connector mutates a deserialized COPY — instance
   * fields on the driver's mock never move. Routing the mutable state
   * through a static registry keyed by the instance's id makes

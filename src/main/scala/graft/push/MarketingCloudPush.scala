@@ -29,7 +29,9 @@ import org.json4s.jackson.JsonMethods.compact
   *  5. `any_value(stage_id)` (`:64-66`) — all batches return the same id;
   *  6. `SFMC_DE_IMPORT` + `SFMC_AWAIT_RESULTS_POLL` (`:68`) — driver-side,
   *     the poll blocks (the reference never mocks it; SURVEY §5);
-  *  7. per-row `SFMC_FETCH_RESULTS(stage_id, rn)` (`:81,116`) — UDF;
+  *  7. per-row `SFMC_FETCH_RESULTS(stage_id, rn)` (`:81,116`) — one
+  *     call per record in `mapPartitions`, up to [[InFlight.Window]] in
+  *     flight per task;
   *  8. `insert all when row_number=1 then into tasks into logs else into
   *     logs` (`:37-42`) → one cached result plan, two appends.
   *
@@ -128,9 +130,12 @@ final class MarketingCloudPush(
       // 7-8. Fetch per-row results; single pass feeds tasks AND logs
       // (`insert all`, ref :37-42) — cache, then two appends.
       val jobId = stageId + "-" + importId
-      val fetchUdf = udf((rn: Long) => apiRef.fetchResults(stageId, rn))
-      val result = numbered
-        .withColumn("result", fetchUdf(col("rn")))
+      import spark.implicits._
+      val result = numbered.as[(Long, String)]
+        .mapPartitions(rows => InFlight.map(rows, InFlight.Window) { case (rn, rec) =>
+          (rn, rec, apiRef.fetchResults(stageId, rn))
+        })
+        .toDF("rn", "record", "result")
         .select(
           lit(jobId).as("job_id"),
           expr("uuid()").as("job_log_entry_id"),

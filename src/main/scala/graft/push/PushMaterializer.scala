@@ -113,15 +113,19 @@ private[push] object Record {
   *    close per SURVEY §4);
   *  - `create temp table` job metadata → one driver-side connector call,
   *    stamped onto rows as literals (a degenerate broadcast — J2);
-  *  - per-row `SFDC_BULK_API_LOAD_BATCH(...)` → executor-side UDF over the
-  *    connector (rows stay distributed; no collect);
+  *  - per-row `SFDC_BULK_API_LOAD_BATCH(...)` → one connector call per
+  *    record in `mapPartitions`, up to [[InFlight.Window]] calls in
+  *    flight per task (rows stay distributed; no collect);
   *  - task/log `insert into` → TrackingTable.append;
-  *  - `update ... from` close stamp → TrackingTable.updateJoin (A6).
+  *  - `update ... from` close stamp → TrackingTable.updateJoin (A6). A
+  *    failure between job create and close closes the remote job and
+  *    leaves the stamp unset.
   *
   * Scale: the only materialization is the log append; records never pass
-  * through the driver. `serial_load=true` forces one partition (the
-  * API's serial mode); otherwise per-partition parallel calls, which is
-  * what the Bulk API's Parallel concurrencyMode means.
+  * through the driver. `serial_load=true` forces one partition and one
+  * call at a time (the API's Serial mode); otherwise each partition keeps
+  * up to [[InFlight.Window]] calls in flight, which is what the Bulk
+  * API's Parallel concurrencyMode means.
   */
 final class SalesforcePush(
     spark: SparkSession,
@@ -147,33 +151,43 @@ final class SalesforcePush(
       // Job create — driver-side, once (salesforce_bulk_load.sql:13-18).
       val meta = api.createJob(cfg.loadType, cfg.objectName, cfg.serialLoad, cfg.externalIdField)
       val jobId = Json.strField(meta, "id")
-
-      // Task insert (salesforce_bulk_load.sql:21-31).
       import spark.implicits._
-      val taskRow = Seq((jobId, model.name, cfg.objectName, cfg.loadType,
-        cfg.externalIdField.orNull, meta))
-        .toDF("job_id", "load_task_name", "object_name", "operation",
-          "external_id_field", "creation_metadata")
-        .withColumn("creation_time", current_timestamp())
-        .withColumn("close_metadata", lit(null).cast("string"))
-      tasks.upsert(taskRow)
+      try {
+        // Task insert (salesforce_bulk_load.sql:21-31).
+        val taskRow = Seq((jobId, model.name, cfg.objectName, cfg.loadType,
+          cfg.externalIdField.orNull, meta))
+          .toDF("job_id", "load_task_name", "object_name", "operation",
+            "external_id_field", "creation_metadata")
+          .withColumn("creation_time", current_timestamp())
+          .withColumn("close_metadata", lit(null).cast("string"))
+        tasks.upsert(taskRow)
 
-      // Per-row load + log insert (salesforce_bulk_load.sql:34-48).
-      val apiRef = api
-      val loadUdf = udf((rec: String) => apiRef.loadBatch(jobId, rec, true))
-      val pushed = (if (cfg.serialLoad) source.coalesce(1) else source)
-        .withColumn("result", loadUdf(col("record")))
-        .select(
-          lit(jobId).as("job_id"),
-          expr("uuid()").as("job_log_entry_id"), // ref: UUID_STRING() at :40
-          lit(model.name).as("load_task_name"),
-          lit(cfg.objectName).as("object_name"),
-          lit(cfg.loadType).as("operation"),
-          lit(cfg.externalIdField.orNull).as("external_id_field"),
-          col("record"), col("result"))
-      logs.append(pushed)
-      // One log row per source record (the source is fully cached above).
-      val n = total
+        // Per-record load + log insert (salesforce_bulk_load.sql:34-48).
+        val apiRef = api
+        val window = if (cfg.serialLoad) 1 else InFlight.Window
+        val pushed = (if (cfg.serialLoad) source.coalesce(1) else source)
+          .as[String]
+          .mapPartitions(recs => InFlight.map(recs, window)(rec =>
+            (rec, apiRef.loadBatch(jobId, rec, true))))
+          .toDF("record", "result")
+          .select(
+            lit(jobId).as("job_id"),
+            expr("uuid()").as("job_log_entry_id"), // ref: UUID_STRING() at :40
+            lit(model.name).as("load_task_name"),
+            lit(cfg.objectName).as("object_name"),
+            lit(cfg.loadType).as("operation"),
+            lit(cfg.externalIdField.orNull).as("external_id_field"),
+            col("record"), col("result"))
+        logs.append(pushed)
+      } catch {
+        case e: Throwable =>
+          // Close the remote job, but leave the task row unstamped: the
+          // push did not finish, so StreamingPush's replay guard pushes
+          // a redelivered batch again.
+          try api.closeJob(jobId, true)
+          catch { case c: Throwable => e.addSuppressed(c) }
+          throw e
+      }
 
       // Close + stamp (salesforce_bulk_load.sql:51-56).
       val closeMeta = api.closeJob(jobId, true)
@@ -181,7 +195,8 @@ final class SalesforcePush(
         Seq((jobId, closeMeta)).toDF("job_id", "close_metadata"),
         Seq("close_metadata"))
 
-      PushReport(model.name, skippedEmpty = false, Some(jobId), n)
+      // One log row per source record (the source is fully cached above).
+      PushReport(model.name, skippedEmpty = false, Some(jobId), total)
     } finally source.unpersist()
   }
 }

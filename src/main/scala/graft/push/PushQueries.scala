@@ -236,7 +236,7 @@ object PushQueries {
       |FROM rns GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** Oracle-checked END-TO-END push: runs the real EP1 pipeline (probe →
-    * createJob → per-row connector UDF → tracking-table writes → close)
+    * createJob → per-record connector calls → tracking-table writes → close)
     * against mock connectors in a throwaway tracking dir, then returns
     * the deterministic projection of the log table it wrote. The oracle
     * knows exactly what the pipeline must produce for every record, so

@@ -116,6 +116,49 @@ class MarketingCloudSpec extends SparkTestBase {
     assert(str(ij \ "file_location_external_key") === "FTP \\ \"main\"")
   }
 
+  // Overlapped fetches (InFlight): the probe mock sleeps a row-dependent
+  // 0-2 ms, so calls finish out of input order.
+  private def probeMat(api: Probes.SfmcProbe) =
+    new PushMaterializer(spark, tmpDir("mc-probe"), new MockSalesforceBulkApi(), api)
+
+  test("overlapped fetches: every log row's result answers its own record") {
+    val mat = probeMat(new Probes.SfmcProbe)
+    assert(mat.run(contactsModel).recordsPushed === 150)
+    val logs = mat.sfmcLogs.read()
+    assert(logs.count() === 150)
+    assert(logs.filter(!(get_json_object(col("result"), "$.ContactNumber") <=>
+      get_json_object(col("record"), "$.ContactNumber"))).count() === 0)
+  }
+
+  test("overlapped fetches: more than one call at a time, at most a window per partition") {
+    val api = new Probes.SfmcProbe
+    assert(probeMat(api).run(contactsModel).recordsPushed === 150)
+    val s = api.stats
+    assert(s.calls.get() === 150)
+    assert(s.peak.get() > 1)
+    assert(s.peak.get() <= InFlight.Window * s.partitions.size)
+  }
+
+  test("overlapped fetches: every call sees the TaskContext of the log-append task") {
+    import scala.jdk.CollectionConverters._
+    val api = new Probes.SfmcProbe
+    val mat = probeMat(api)
+    val written = Probes.rowsWrittenByStage(spark)(mat.run(contactsModel))
+    assert(api.stats.noContext.get() === 0)
+    val Seq(stage) = api.stats.stages.asScala.toSeq
+    assert(written.get(stage) === Some(150L), s"stage $stage wrote ${written.get(stage)}")
+  }
+
+  test("overlapped fetches: a call that throws fails the push with its cause; no call runs after") {
+    val api = new Probes.SfmcProbe(failKey = 77)
+    val e = intercept[Exception](probeMat(api).run(contactsModel))
+    assert(Probes.messages(e).exists(_.contains("probe failure on record 77")))
+    val calls = api.stats.calls.get()
+    assert(api.stats.active.get() === 0, "in-flight calls must have stopped")
+    Thread.sleep(100)
+    assert(api.stats.calls.get() === calls)
+  }
+
   test("config validation mirrors the reference's README constraints") {
     intercept[IllegalArgumentException](MarketingCloudConfig("DE", importType = "Nope"))
     intercept[IllegalArgumentException](MarketingCloudConfig("DE", encrypted = true))

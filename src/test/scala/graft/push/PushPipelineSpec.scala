@@ -141,11 +141,13 @@ class PushPipelineSpec extends SparkTestBase {
   }
 
   test("RetryingSalesforceApi absorbs transient connector failures per record") {
-    // flaky delegate: every odd-numbered call throws
+    // flaky delegate: the first attempt of every record throws (keyed on
+    // the record, so overlapping calls cannot race on a shared counter)
     class Flaky extends graft.connector.MockSalesforceBulkApi {
+      private val attempted = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
       override def loadBatch(jobId: String, rec: String, wait: Boolean): String = {
         val n = super.loadBatch(jobId, rec, wait) // counts the attempt
-        if (loadBatchCalls.get() % 2 == 1)
+        if (attempted.add(rec))
           throw new RuntimeException("transient 503")
         n
       }
@@ -161,24 +163,64 @@ class PushPipelineSpec extends SparkTestBase {
     assert(flaky.loadBatchCalls.get() === 300) // every record: 1 failure + 1 success
   }
 
+  // Overlapped connector calls (InFlight): the probe mock sleeps a
+  // record-dependent 0-2 ms, so calls finish out of input order.
+  private def probeModel(serial: Boolean = false, partitions: Int = 1) =
+    PushModel("probe_accounts", SalesforceConfig("Account", "insert", serialLoad = serial),
+      s => s.read.parquet(s"$sf/customer.parquet").repartition(partitions)
+        .select(to_json(struct(col("c_name").as("Name"),
+          col("c_custkey").cast("string").as("AccountID__c"))).as("record")))
+
+  private def probeMat(api: Probes.SalesforceProbe) =
+    new PushMaterializer(spark, tmpDir("push-probe"), api, new MockSfmcApi())
+
+  test("overlapped loads: every log row's result answers its own record") {
+    val mat = probeMat(new Probes.SalesforceProbe)
+    assert(mat.run(probeModel()).recordsPushed === 150)
+    val logs = mat.sfdcLogs.read()
+    assert(logs.count() === 150)
+    assert(logs.filter(!(get_json_object(col("result"), "$.id") <=>
+      get_json_object(col("record"), "$.AccountID__c"))).count() === 0)
+  }
+
   test("serial_load pushes through one partition; parallel load uses many (README.md:71)") {
-    import PushPipelineSpec.{PartitionRecordingApi, Seen}
-    def model(serial: Boolean) = PushModel("accounts_load",
-      SalesforceConfig("Account", "insert", serialLoad = serial),
-      s => s.read.parquet(s"$sf/customer.parquet").repartition(4)
-        .select(to_json(struct(col("c_name").as("Name"))).as("record")))
+    // serial_load: one partition, one call at a time; otherwise every
+    // partition is kept and each overlaps up to a window of calls (the
+    // one-partition case shows the overlap comes from the task itself).
+    for ((serial, partitions) <- Seq(true -> 4, false -> 4, false -> 1)) {
+      val api = new Probes.SalesforceProbe
+      assert(probeMat(api).run(probeModel(serial, partitions)).recordsPushed === 150)
+      val s = api.stats
+      assert(s.calls.get() === 150)
+      if (serial) {
+        assert(s.partitions.size === 1, s"serial load must funnel to one partition, saw ${s.partitions}")
+        assert(s.peak.get() === 1, "serial_load must make one call at a time")
+      } else {
+        assert(s.partitions.size === partitions, s"parallel load must keep partitions, saw ${s.partitions}")
+        assert(s.peak.get() > 1, s"parallel load must overlap calls ($partitions partitions)")
+        assert(s.peak.get() <= InFlight.Window * s.partitions.size)
+      }
+    }
+  }
 
-    val serialMat = new PushMaterializer(spark, tmpDir("push-ser"),
-      new PartitionRecordingApi, new MockSfmcApi())
-    Seen.pids.clear()
-    assert(serialMat.run(model(serial = true)).recordsPushed === 150)
-    assert(Seen.pids.size === 1, s"serial load must funnel to one partition, saw ${Seen.pids}")
+  test("overlapped loads: every call sees the TaskContext of the log-append task") {
+    import scala.jdk.CollectionConverters._
+    val api = new Probes.SalesforceProbe
+    val mat = probeMat(api)
+    val written = Probes.rowsWrittenByStage(spark)(mat.run(probeModel()))
+    assert(api.stats.noContext.get() === 0)
+    val Seq(stage) = api.stats.stages.asScala.toSeq
+    assert(written.get(stage) === Some(150L), s"stage $stage wrote ${written.get(stage)}")
+  }
 
-    val parMat = new PushMaterializer(spark, tmpDir("push-par"),
-      new PartitionRecordingApi, new MockSfmcApi())
-    Seen.pids.clear()
-    assert(parMat.run(model(serial = false)).recordsPushed === 150)
-    assert(Seen.pids.size > 1, s"parallel load must keep partitions, saw ${Seen.pids}")
+  test("overlapped loads: a call that throws fails the push with its cause; no call runs after") {
+    val api = new Probes.SalesforceProbe(failKey = 77)
+    val e = intercept[Exception](probeMat(api).run(probeModel()))
+    assert(Probes.messages(e).exists(_.contains("probe failure on record 77")))
+    val calls = api.stats.calls.get()
+    assert(api.stats.active.get() === 0, "in-flight calls must have stopped")
+    Thread.sleep(100)
+    assert(api.stats.calls.get() === calls)
   }
 
   test("unknown app raises the materialization compile error (ref :14)") {
@@ -239,20 +281,6 @@ class PushPipelineSpec extends SparkTestBase {
     assert(r.recordsPushed === 150)
     intercept[IllegalArgumentException] {
       mat.runLegacy(PushModel("mc", MarketingCloudConfig("DE"), s => s.range(1).toDF("record")))
-    }
-  }
-}
-
-/** Top-level (static, serialization-safe) helpers for the serial-load
-  * test: a suite-local class would drag the non-serializable suite
-  * instance into the UDF closure.
-  */
-object PushPipelineSpec {
-  object Seen { val pids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]() }
-  class PartitionRecordingApi extends graft.connector.MockSalesforceBulkApi {
-    override def loadBatch(jobId: String, rec: String, wait: Boolean): String = {
-      Seen.pids.add(org.apache.spark.TaskContext.getPartitionId())
-      super.loadBatch(jobId, rec, wait)
     }
   }
 }

@@ -386,10 +386,15 @@ class StreamingSpec extends SparkTestBase {
   test("StreamingPush: a batch whose push failed after its task row landed is pushed again on redelivery") {
     class FailingLoads extends MockSalesforceBulkApi {
       @volatile var failing = true
+      val closed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       override def loadBatch(jobId: String, recordJson: String, wait: Boolean): String = {
         if (failing && recordJson.contains("\"acct13\""))
           throw new RuntimeException("connector timeout")
         super.loadBatch(jobId, recordJson, wait)
+      }
+      override def closeJob(jobId: String, wait: Boolean): String = {
+        closed.add(jobId)
+        super.closeJob(jobId, wait)
       }
     }
     val sfdc = new FailingLoads
@@ -398,10 +403,17 @@ class StreamingSpec extends SparkTestBase {
       SalesforceConfig("Account", "insert"), "retry_accounts")
     val batch = (1 to 20).map(i => s"""{"Name":"acct$i"}""").toDF("record")
 
-    intercept[Exception](sp.pushBatch(batch, batchId = 7L))
-    // the failed push left its task row (written before the loads), no logs
-    assert(mat.sfdcTasks.read()
-      .filter(col("load_task_name") === "retry_accounts#7").count() === 1)
+    val e = intercept[Exception](sp.pushBatch(batch, batchId = 7L))
+    assert(graft.push.Probes.messages(e).exists(_.contains("connector timeout")),
+      "the failure must carry the connector's message")
+    // the failed push left its task row (written before the loads),
+    // unstamped, and no logs; its remote job was closed exactly once
+    val failedTask = mat.sfdcTasks.read()
+      .filter(col("load_task_name") === "retry_accounts#7").collect()
+    assert(failedTask.length === 1)
+    assert(failedTask.head.getAs[String]("close_metadata") === null)
+    val failedJob = failedTask.head.getAs[String]("job_id")
+    assert(sfdc.closed.toArray.count(_ == failedJob) === 1)
     assert(mat.sfdcLogs.read().count() === 0)
     // foreachBatch redelivers batch 7: it must push, not be skipped
     sfdc.failing = false
