@@ -153,8 +153,8 @@ final class MarketingCloudPush(
         // what StreamingPush's replay guard reads
         logs.append(result.drop("rn"))
         tasks.upsert(taskRow)
-        val n = result.count()
-        PushReport(model.name, skippedEmpty = false, Some(jobId), n, nBatches)
+        // `result` maps `numbered` one row to one row: already counted
+        PushReport(model.name, skippedEmpty = false, Some(jobId), total, nBatches)
       } finally result.unpersist()
     } finally numbered.unpersist()
   }

@@ -48,9 +48,14 @@ final class SnapshotTable(
     fs.exists(dataPath)
   }
 
+  /** Schema from the sidecar [[SchemaSidecar]] writes with every
+    * snapshot, so a read runs no Spark job; a table written before
+    * sidecars existed is inferred from its footers.
+    */
   def read(): DataFrame = {
     AtomicSwap.recover(fs, dataPath)
-    spark.read.parquet(dataPath.toString)
+    SchemaSidecar.read(spark, dataPath).fold(spark.read)(s => spark.read.schema(s))
+      .parquet(dataPath.toString)
   }
 
   /** Time travel — the point of keeping SCD2 history: the table exactly
@@ -114,9 +119,9 @@ final class SnapshotTable(
       .unionByName(withValidity(opened, asOf)))
   }
 
-  /** The swap TrackingTable uses ([[AtomicSwap]]): the full result lands
-    * before the live data is touched.
+  /** The swap TrackingTable uses ([[AtomicSwap]]): the full result, with
+    * its schema sidecar, lands before the live data is touched.
     */
   private def atomicWrite(df: DataFrame): Unit =
-    AtomicSwap.swapIn(fs, dataPath) { tmp => df.write.mode("overwrite").parquet(tmp.toString) }
+    AtomicSwap.swapIn(fs, dataPath)(SchemaSidecar.writeTable(df, _))
 }

@@ -1,9 +1,18 @@
 package graft.tracking
 
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.ParquetProperties
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import graft.util.AtomicSwap
 
 /** Storage-agnostic tracking-table contract: the seam a caller wraps
   * around a [[TrackingTable]] (timing, fault injection, a future
@@ -30,12 +39,29 @@ trait TrackingStore {
   * column-type widening before each upsert
   * (`adapter.expand_target_column_types`, `:31-33`).
   *
-  * Storage is plain Parquet under `path`. Updates rewrite via a temp dir +
-  * atomic rename — the Spark/Parquet analogue of the reference's
-  * backup-rename dance (`:19-27`), since Parquet has no in-place update.
-  * On a real deployment this class is the seam where Delta/Iceberg MERGE
-  * slots in; the public API (`createIfMissing / upsert / updateJoin /
-  * fullRefresh`) is storage-agnostic.
+  * Storage layout, all under `path`:
+  *  - `data/` holds the rows as plain Parquet part files, plus the schema
+  *    sidecar `data/_common_metadata` ([[SchemaSidecar]]): a footer-only
+  *    Parquet summary file carrying the table's schema, the way the
+  *    reference declares each tracking table's columns up front
+  *    (`sfdc_load_tasks.sql:7-17`). `read()` takes the schema from it, so
+  *    neither create nor read runs a Spark job; a plain
+  *    `spark.read.parquet` of `data/` infers the schema from it too, even
+  *    while the table has no rows.
+  *  - `.data.swap_tmp` / `.data.swap_old` are the staging and backup
+  *    siblings of [[graft.util.AtomicSwap]], present only mid-write.
+  *
+  * Which paths rewrite: `upsert`, `updateJoin`, `compact` and a widening
+  * `append` rewrite the whole table into the staging dir, sidecar
+  * included, and swap it in with renames — the Spark/Parquet analogue of
+  * the reference's backup-rename dance (`:19-27`), since Parquet has no
+  * in-place update. So the sidecar always moves with the files it
+  * describes. `createIfMissing` stages an empty dir holding only the
+  * sidecar the same way. A non-widening `append` only adds part files;
+  * the schema, hence the sidecar, stays. `fullRefresh` deletes the table
+  * and creates it afresh. On a real deployment this class is the seam
+  * where Delta/Iceberg MERGE slots in; the public API (`createIfMissing /
+  * upsert / updateJoin / fullRefresh`) is storage-agnostic.
   *
   * Scale: upsert = `existing LEFT ANTI incoming UNION incoming` — one
   * shuffle on the key and a full rewrite, which suits the task tables
@@ -54,26 +80,29 @@ final class TrackingTable(
 
   def exists: Boolean = fs.exists(dataPath)
 
-  /** Ref `:17-18`: first run creates the (empty-schema) table. A crash
-    * between a previous swap's two renames leaves the live dir absent but
-    * the backup present — restore it FIRST, or `exists` would be false and
-    * a fresh empty table would shadow (and permanently strand) the backup.
+  /** Ref `:17-18`: first run creates the (empty-schema) table. */
+  def createIfMissing(): Unit = liveSchema()
+
+  def read(): DataFrame = spark.read.schema(liveSchema()).parquet(dataPath.toString)
+
+  /** The table's current schema, creating the table first if missing.
+    * A crash between a previous swap's two renames leaves the live dir
+    * absent but the backup present — restore it FIRST, or `exists` would
+    * be false and a fresh empty table would shadow (and permanently
+    * strand) the backup. Creating stages an empty dir plus the sidecar
+    * and renames it in (a create that crashed before its rename leaves
+    * only staging, which the next swap clears). A table written before
+    * sidecars existed gets one, from its footers, on first touch.
     */
-  def createIfMissing(): Unit = {
-    graft.util.AtomicSwap.recover(fs, dataPath)
-    if (!exists) {
-      val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      empty.write.mode("overwrite").parquet(dataPath.toString)
+  private def liveSchema(): StructType = {
+    AtomicSwap.recover(fs, dataPath)
+    if (!exists) AtomicSwap.swapIn(fs, dataPath)(tmp => SchemaSidecar.write(spark, tmp, schema))
+    SchemaSidecar.read(spark, dataPath).getOrElse {
+      val inferred = spark.read.parquet(dataPath.toString).schema
+      SchemaSidecar.write(spark, dataPath, inferred)
+      inferred
     }
   }
-
-  def read(): DataFrame = {
-    createIfMissing()
-    spark.read.schema(currentSchema).parquet(dataPath.toString)
-  }
-
-  private def currentSchema: StructType =
-    if (exists) spark.read.parquet(dataPath.toString).schema else schema
 
   /** Ref `:19-27`: explicit rebuild (the `drop-omnata-task-tables` branch). */
   def fullRefresh(): Unit = {
@@ -175,9 +204,56 @@ final class TrackingTable(
     * repaired on the next read/write cycle.
     */
   private def atomicWrite(df: DataFrame): Unit =
-    graft.util.AtomicSwap.swapIn(fs, dataPath) { tmp =>
-      df.write.mode("overwrite").parquet(tmp.toString)
+    AtomicSwap.swapIn(fs, dataPath)(SchemaSidecar.writeTable(df, _))
+}
+
+/** The schema sidecar of a tracking-layer table directory: a Parquet
+  * summary file (`_common_metadata`) with a footer and no row groups,
+  * whose key-value metadata holds the Spark schema the way Spark's own
+  * part files do. Spark's scans skip `_`-prefixed files, and its schema
+  * inference reads a summary file in preference to the part files, so a
+  * plain `spark.read.parquet(dir)` still works on a table with no rows.
+  * Reading it is one small driver-side file read: no Spark job.
+  */
+private[tracking] object SchemaSidecar {
+  private val Name = "_common_metadata"
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Writes `schema` as `dir`'s sidecar, through a rename so a crash
+    * never leaves a torn one.
+    */
+  def write(spark: SparkSession, dir: Path, schema: StructType): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val staged = new Path(dir, s".$Name.tmp")
+    val w = new ParquetFileWriter(HadoopOutputFile.fromPath(staged, conf),
+      new SparkToParquetSchemaConverter(SQLConf.get).convert(schema),
+      ParquetFileWriter.Mode.OVERWRITE, ParquetWriter.DEFAULT_BLOCK_SIZE, 0, null,
+      ParquetProperties.builder().build())
+    w.start()
+    w.end(Map(SparkSchemaKey -> schema.json).asJava)
+    val fs = dir.getFileSystem(conf)
+    require(fs.rename(staged, new Path(dir, Name)), s"SchemaSidecar.write: rename into $dir failed")
+  }
+
+  /** `dir`'s schema, or None when it has no sidecar. */
+  def read(spark: SparkSession, dir: Path): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(dir, Name)
+    if (!p.getFileSystem(conf).exists(p)) None
+    else {
+      // options over the session's conf: the default ones load a fresh
+      // Hadoop Configuration, which costs more than the read itself
+      val meta = Using.resource(ParquetFileReader.open(HadoopInputFile.fromPath(p, conf),
+        HadoopReadOptions.builder(conf).build()))(_.getFooter.getFileMetaData.getKeyValueMetaData)
+      Some(DataType.fromJson(meta.get(SparkSchemaKey)).asInstanceOf[StructType])
     }
+  }
+
+  /** `df` as Parquet part files in `dir`, plus their sidecar. */
+  def writeTable(df: DataFrame, dir: Path): Unit = {
+    df.write.mode("overwrite").parquet(dir.toString)
+    write(df.sparkSession, dir, df.schema)
+  }
 }
 
 object TrackingTable {

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.graft.listeners
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -48,4 +51,19 @@ trait SparkTestBase extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The number of Spark jobs started while `body` runs. */
+  def jobsDuring(body: => Any): Int = {
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    listeners.waitForListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      listeners.waitForListeners(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    jobs.get
+  }
 }

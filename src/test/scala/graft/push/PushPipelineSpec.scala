@@ -65,6 +65,16 @@ class PushPipelineSpec extends SparkTestBase {
     assert(mat.sfdcLogs.read().count() === n)
   }
 
+  // Job-count pin: the model's own scan, the probe count, the task
+  // upsert, the log append and the close stamp. Creating or reading a
+  // tracking table adds none; a new bookkeeping job fails this.
+  test("one Salesforce push into fresh tables runs at most 9 Spark jobs") {
+    val base = tmpDir("push")
+    val mat = new PushMaterializer(spark, base, new MockSalesforceBulkApi(), new MockSfmcApi())
+    val jobs = jobsDuring(mat.run(accountsModel(base)))
+    assert(jobs <= 9, s"one push ran $jobs Spark jobs")
+  }
+
   test("dropTaskTables rebuilds the tracking tables; the next run re-pushes everything") {
     val base = tmpDir("push")
     val sfdc = new MockSalesforceBulkApi()

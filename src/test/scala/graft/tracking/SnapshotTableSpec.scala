@@ -140,4 +140,11 @@ class SnapshotTableSpec extends SparkTestBase {
       .map(r => (r.getString(1), r.getTimestamp(2), Option(r.getTimestamp(3))))
     assert(rows === Array(("A", t1, Some(t2)), ("B", t2, Some(t3)), ("C", t3, None)))
   }
+
+  test("read and asOf take the schema from the sidecar: no Spark job") {
+    val s = snap()
+    s.snapshot(Seq((1L, "A", 10)).toDF("id", "seg", "score"), t1)
+    assert(jobsDuring { s.read(); s.asOf(t1) } === 0)
+    assert(s.read().columns.toSeq === Seq("id", "seg", "score", "valid_from", "valid_to"))
+  }
 }

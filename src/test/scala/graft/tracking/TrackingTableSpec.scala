@@ -1,6 +1,9 @@
 package graft.tracking
 
 import graft.SparkTestBase
+import graft.util.AtomicSwap
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -92,5 +95,47 @@ class TrackingTableSpec extends SparkTestBase {
     assert(nFiles === 1, "small table must compact to one file")
     assert(t.read().orderBy("k").as[(String, Int, String)].collect().toSeq ===
       (1 to 5).map(i => (s"k$i", i, "x")))
+  }
+
+  test("createIfMissing and read() run no Spark job on a fresh, an appended and a widened table") {
+    val t = table()
+    def touch(): DataType = { t.createIfMissing(); t.read().schema("v").dataType }
+    assert(jobsDuring(assert(touch() === IntegerType)) === 0, "fresh table")
+    // a plain reader infers the declared schema of the empty table too
+    assert(spark.read.parquet(s"${t.path}/data").schema.fieldNames.toSeq === Seq("k", "v", "note"))
+    t.append(Seq(("a", 1, "x")).toDF("k", "v", "note"))
+    assert(jobsDuring(assert(touch() === IntegerType)) === 0, "appended table")
+    t.append(Seq(("b", 5000000000L, "y")).toDF("k", "v", "note"))
+    assert(jobsDuring(assert(touch() === LongType)) === 0, "widened table")
+    assert(t.read().count() === 2)
+  }
+
+  test("a table written without a schema sidecar reads back the same rows and schema") {
+    val t = table()
+    val data = s"${t.path}/data"
+    // the earlier layout: an empty part file from the create, then appends
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema).write.parquet(data)
+    Seq(("a", 1, "x"), ("b", 2, null: String)).toDF("k", "v", "note")
+      .write.mode("append").parquet(data)
+    val before = spark.read.parquet(data)
+    val (wantSchema, wantRows) = (before.schema, before.orderBy("k").collect().toSeq)
+    t.createIfMissing()
+    assert(t.read().schema === wantSchema)
+    assert(t.read().orderBy("k").collect().toSeq === wantRows)
+    assert(jobsDuring(t.read()) === 0, "createIfMissing must leave a sidecar behind")
+  }
+
+  test("a create staged but never renamed in does not block the next createIfMissing") {
+    val t = table()
+    val data = new Path(t.path, "data")
+    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the crash: the staging dir holds a partial create, the rename never ran
+    val staged = AtomicSwap.tmpFor(data)
+    fs.create(new Path(staged, "_common_metadata")).close()
+    assert(!t.exists)
+    t.createIfMissing()
+    assert(t.read().schema.fieldNames.toSeq === Seq("k", "v", "note"))
+    assert(t.read().count() === 0)
+    assert(!fs.exists(staged), "the staging dir must not outlive the create")
   }
 }
