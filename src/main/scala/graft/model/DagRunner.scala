@@ -92,11 +92,14 @@ object DagRunner {
     * order; use `run` when side-effect ordering must be canonical.
     *
     * Caveat (same as dbt without warehouse transactions): two CONCURRENT
-    * nodes must not rewrite the same tracking table — the parquet
-    * tmp-dir/rename swap is atomic per writer, not serialized across
-    * writers. Models sharing a log table already depend on it in the
-    * reference (`-- depends_on`), which orders them here too; declare
-    * that edge for any custom nodes sharing mutable state.
+    * nodes must not write the same tracking table — the parquet
+    * tmp-dir/rename swap and the numbered task-row commit are atomic per
+    * writer, not serialized across writers. Depending on a shared
+    * tracking table does not order two models: accounts_load and
+    * churned_accounts both depend on the sfdc tables and are still
+    * siblings. Models that write one tracking table need an explicit
+    * edge between them, as ReferenceIntegrationSpec chains its three
+    * Salesforce models.
     */
   def runParallel(spark: SparkSession, nodes: Seq[DagNode], threads: Int = 4): Seq[String] = {
     order(nodes) // validate names/cycles up front with the same errors

@@ -1,5 +1,6 @@
 package graft.push
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -33,7 +34,9 @@ import org.json4s.jackson.JsonMethods.compact
   *     call per record in `mapPartitions`, up to [[InFlight.Window]] in
   *     flight per task;
   *  8. `insert all when row_number=1 then into tasks into logs else into
-  *     logs` (`:37-42`) → one cached result plan, two appends.
+  *     logs` (`:37-42`) → one cached result plan: the log append, then
+  *     the one task row, collected to the driver and upserted as a local
+  *     frame (a commit with no Spark job).
   *
   * Scale: batches are the unit of external-call parallelism; a 100 TB
   * push is bounded by the remote API, not the engine — the engine's job
@@ -152,7 +155,7 @@ final class MarketingCloudPush(
         // logs first: a task row then implies its logs landed, which is
         // what StreamingPush's replay guard reads
         logs.append(result.drop("rn"))
-        tasks.upsert(taskRow)
+        tasks.upsert(spark.createDataFrame(taskRow.collect().toSeq.asJava, taskRow.schema))
         // `result` maps `numbered` one row to one row: already counted
         PushReport(model.name, skippedEmpty = false, Some(jobId), total, nBatches)
       } finally result.unpersist()

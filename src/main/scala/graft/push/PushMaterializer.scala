@@ -116,9 +116,12 @@ private[push] object Record {
   *  - per-row `SFDC_BULK_API_LOAD_BATCH(...)` → one connector call per
   *    record in `mapPartitions`, up to [[InFlight.Window]] calls in
   *    flight per task (rows stay distributed; no collect);
-  *  - task/log `insert into` → TrackingTable.append;
-  *  - `update ... from` close stamp → TrackingTable.updateJoin (A6). A
-  *    failure between job create and close closes the remote job and
+  *  - task `insert into` → TrackingTable.upsert of one driver-local
+  *    row, committed as one small file with no Spark job;
+  *  - log `insert into` → TrackingTable.append;
+  *  - `update ... from` close stamp (A6) → a second local upsert of the
+  *    same row with `close_metadata` set, which replaces the open row.
+  *    A failure between job create and close closes the remote job and
   *    leaves the stamp unset.
   *
   * Scale: the only materialization is the log append; records never pass
@@ -152,15 +155,18 @@ final class SalesforcePush(
       val meta = api.createJob(cfg.loadType, cfg.objectName, cfg.serialLoad, cfg.externalIdField)
       val jobId = Json.strField(meta, "id")
       import spark.implicits._
+      // The task row, open or stamped: one driver-local row, so each
+      // upsert commits it without a Spark job; creation_time is taken
+      // once, so the stamped row keeps the open row's.
+      val createdAt = java.time.Instant.now()
+      def taskRow(closeMeta: String): DataFrame =
+        Seq((jobId, model.name, cfg.objectName, cfg.loadType,
+          cfg.externalIdField.orNull, createdAt, meta, closeMeta))
+          .toDF("job_id", "load_task_name", "object_name", "operation",
+            "external_id_field", "creation_time", "creation_metadata", "close_metadata")
       try {
         // Task insert (salesforce_bulk_load.sql:21-31).
-        val taskRow = Seq((jobId, model.name, cfg.objectName, cfg.loadType,
-          cfg.externalIdField.orNull, meta))
-          .toDF("job_id", "load_task_name", "object_name", "operation",
-            "external_id_field", "creation_metadata")
-          .withColumn("creation_time", current_timestamp())
-          .withColumn("close_metadata", lit(null).cast("string"))
-        tasks.upsert(taskRow)
+        tasks.upsert(taskRow(null))
 
         // Per-record load + log insert (salesforce_bulk_load.sql:34-48).
         val apiRef = api
@@ -189,11 +195,9 @@ final class SalesforcePush(
           throw e
       }
 
-      // Close + stamp (salesforce_bulk_load.sql:51-56).
-      val closeMeta = api.closeJob(jobId, true)
-      tasks.updateJoin(
-        Seq((jobId, closeMeta)).toDF("job_id", "close_metadata"),
-        Seq("close_metadata"))
+      // Close + stamp (salesforce_bulk_load.sql:51-56): the same row
+      // with close_metadata set replaces the open one.
+      tasks.upsert(taskRow(api.closeJob(jobId, true)))
 
       // One log row per source record (the source is fully cached above).
       PushReport(model.name, skippedEmpty = false, Some(jobId), total)

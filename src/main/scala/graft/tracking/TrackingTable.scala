@@ -1,14 +1,19 @@
 package graft.tracking
 
-import scala.jdk.CollectionConverters._
 import scala.util.Using
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.column.ParquetProperties
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.io.OutputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
@@ -40,40 +45,68 @@ trait TrackingStore {
   * (`adapter.expand_target_column_types`, `:31-33`).
   *
   * Storage layout, all under `path`:
-  *  - `data/` holds the rows as plain Parquet part files, plus the schema
-  *    sidecar `data/_common_metadata` ([[SchemaSidecar]]): a footer-only
-  *    Parquet summary file carrying the table's schema, the way the
-  *    reference declares each tracking table's columns up front
+  *  - `data/` holds the rows as Parquet files, plus the schema sidecar
+  *    `data/_common_metadata` ([[SchemaSidecar]]): a footer-only Parquet
+  *    summary file carrying the table's schema, the way the reference
+  *    declares each tracking table's columns up front
   *    (`sfdc_load_tasks.sql:7-17`). `read()` takes the schema from it, so
   *    neither create nor read runs a Spark job; a plain
   *    `spark.read.parquet` of `data/` infers the schema from it too, even
   *    while the table has no rows.
+  *  - The data files are plain part files (written by Spark) and
+  *    numbered commit files `commit-<n>.parquet` (written by the driver,
+  *    see below). A commit is staged as `data/.commit-<n>.parquet.tmp`
+  *    and renamed in, so a crash before the rename leaves only a
+  *    dot-file that no reader lists and the next commit overwrites.
   *  - `.data.swap_tmp` / `.data.swap_old` are the staging and backup
   *    siblings of [[graft.util.AtomicSwap]], present only mid-write.
   *
-  * Which paths rewrite: `upsert`, `updateJoin`, `compact` and a widening
-  * `append` rewrite the whole table into the staging dir, sidecar
-  * included, and swap it in with renames — the Spark/Parquet analogue of
-  * the reference's backup-rename dance (`:19-27`), since Parquet has no
-  * in-place update. So the sidecar always moves with the files it
-  * describes. `createIfMissing` stages an empty dir holding only the
-  * sidecar the same way. A non-widening `append` only adds part files;
-  * the schema, hence the sidecar, stays. `fullRefresh` deletes the table
-  * and creates it afresh. On a real deployment this class is the seam
-  * where Delta/Iceberg MERGE slots in; the public API (`createIfMissing /
-  * upsert / updateJoin / fullRefresh`) is storage-agnostic.
+  * Resolution: `read()` keeps, for each non-null key, only the rows of
+  * the highest-numbered file that holds that key; a plain file counts as
+  * commit 0, and rows with a null key are all kept (they never match, as
+  * in the reference's delete-then-insert). It resolves only while
+  * numbered files exist, so a table that never took a driver commit (the
+  * log tables) reads as a plain scan. A plain `spark.read.parquet` of
+  * `data/` does not resolve: on a task table it also shows the rows
+  * that later commits superseded.
   *
-  * Scale: upsert = `existing LEFT ANTI incoming UNION incoming` — one
-  * shuffle on the key and a full rewrite, which suits the task tables
-  * (one row per job). The log tables (one row per pushed record) only
-  * take `append`, which writes new files unless the incoming batch
-  * widens a column.
+  * Which paths write what:
+  *  - An `upsert` whose incoming frame is local to the driver (its
+  *    optimized plan is a `LocalRelation`, as for the one task row a
+  *    push creates or stamps) and needs no widening commits its rows as
+  *    one new numbered file from the driver: no Spark job, no join, no
+  *    swap, and no existing file is touched. This is the reference's
+  *    one-row `insert into` / `update … from` on a task table
+  *    (`salesforce_bulk_load.sql:21-31,51-56`).
+  *  - A non-widening `append` to a table without numbered files only
+  *    adds part files; the schema, hence the sidecar, stays.
+  *  - Everything else rewrites the whole table through the resolving
+  *    read into the staging dir, sidecar included, and swaps it in with
+  *    renames (the Spark/Parquet analogue of the reference's
+  *    backup-rename dance, `:19-27`), leaving a plain table: a
+  *    non-local or widening `upsert`, `updateJoin`, `compact`, a widening
+  *    `append` or one to a table that holds numbered files, and an
+  *    upsert that finds [[TrackingTable.FoldAt]] numbered files already
+  *    present, which folds them so the file count stays bounded.
+  *  - `createIfMissing` stages an empty dir holding only the sidecar and
+  *    renames it in; `fullRefresh` deletes the table and creates it
+  *    afresh.
+  * On a real deployment this class is the seam where Delta/Iceberg MERGE
+  * slots in; the public API (`createIfMissing / upsert / updateJoin /
+  * fullRefresh`) is storage-agnostic.
+  *
+  * Scale: a rewriting upsert is `existing LEFT ANTI incoming UNION
+  * incoming` — one shuffle on the key and a full rewrite, which suits
+  * the task tables (one row per job). The log tables (one row per pushed
+  * record) only take `append`, which writes new files unless the
+  * incoming batch widens a column.
   */
 final class TrackingTable(
     spark: SparkSession,
     val path: String,
     val schema: StructType,
     val uniqueKey: String) extends TrackingStore {
+  import TrackingTable.{CommitFile, FoldAt}
 
   private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def dataPath = new Path(path, "data")
@@ -83,7 +116,29 @@ final class TrackingTable(
   /** Ref `:17-18`: first run creates the (empty-schema) table. */
   def createIfMissing(): Unit = liveSchema()
 
-  def read(): DataFrame = spark.read.schema(liveSchema()).parquet(dataPath.toString)
+  def read(): DataFrame = {
+    val live = liveSchema()
+    resolved(live, commits())
+  }
+
+  /** The table's rows under `live`, resolved while `numbered` commits
+    * exist (see the class doc).
+    */
+  private def resolved(live: StructType, numbered: Seq[Long]): DataFrame = {
+    val df = spark.read.schema(live).parquet(dataPath.toString)
+    if (numbered.isEmpty) df
+    else {
+      val n = regexp_extract(col("_metadata.file_name"), CommitFile.regex, 1)
+      df.withColumn("__commit", when(n === "", 0L).otherwise(n.cast(LongType)))
+        .withColumn("__newest", max(col("__commit")).over(Window.partitionBy(col(uniqueKey))))
+        .where(col(uniqueKey).isNull || col("__commit") === col("__newest"))
+        .drop("__commit", "__newest")
+    }
+  }
+
+  /** The numbers of the commit files in `data/`; one driver-side listing. */
+  private def commits(): Seq[Long] =
+    fs.listStatus(dataPath).toSeq.map(_.getPath.getName).collect { case CommitFile(n) => n }
 
   /** The table's current schema, creating the table first if missing.
     * A crash between a previous swap's two renames leaves the live dir
@@ -135,15 +190,31 @@ final class TrackingTable(
 
   /** Incremental upsert — ref `incremental_upsert` call at `:34`
     * (delete-matching-keys + insert): rows in `incoming` replace existing
-    * rows with the same `uniqueKey`; everything else is preserved.
+    * rows with the same `uniqueKey`; everything else is preserved. A
+    * driver-local, non-widening `incoming` commits as one numbered file
+    * while fewer than [[TrackingTable.FoldAt]] exist; otherwise the table
+    * is rewritten (see the class doc).
     */
   def upsert(incoming: DataFrame): Unit = {
-    val existing = read()
-    val widened = widen(existing.schema, incoming.schema)
+    val live = liveSchema()
+    val numbered = commits()
+    val widened = widen(live, incoming.schema)
     val in = conform(incoming, widened)
-    val kept = conform(existing, widened)
-      .join(in.select(col(uniqueKey)), Seq(uniqueKey), "left_anti")
-    atomicWrite(kept.unionByName(in))
+    val local = if (widened != live || numbered.size >= FoldAt) None
+      else in.queryExecution.optimizedPlan match {
+        case r: LocalRelation => Some(r.data)
+        case _ => None
+      }
+    local match {
+      case Some(rows) =>
+        if (rows.nonEmpty)
+          SchemaSidecar.writeFile(spark, dataPath, CommitFile.name(numbered.maxOption.getOrElse(0L) + 1),
+            live, rows)
+      case None =>
+        val kept = conform(resolved(live, numbered), widened)
+          .join(in.select(col(uniqueKey)), Seq(uniqueKey), "left_anti")
+        atomicWrite(kept.unionByName(in))
+    }
   }
 
   /** Plain append (the reference's `insert into` S4 path — used for log
@@ -153,15 +224,18 @@ final class TrackingTable(
     * incoming rows, append new parquet files — O(incoming), the table is
     * never rewritten (the log table grows one row per pushed record
     * forever; rewriting it per run would be O(history) and fatal at
-    * scale). Only a widening schema change falls back to the rewrite.
+    * scale). A widening schema change falls back to the rewrite, and so
+    * does an append to a table holding numbered commits: a plain file
+    * counts as commit 0, so its rows would hide behind theirs.
     */
   def append(incoming: DataFrame): Unit = {
-    val existing = read()
-    val widened = widen(existing.schema, incoming.schema)
-    if (widened == existing.schema)
+    val live = liveSchema()
+    val numbered = commits()
+    val widened = widen(live, incoming.schema)
+    if (widened == live && numbered.isEmpty)
       conform(incoming, widened).write.mode("append").parquet(dataPath.toString)
     else
-      atomicWrite(conform(existing, widened).unionByName(conform(incoming, widened)))
+      atomicWrite(conform(resolved(live, numbered), widened).unionByName(conform(incoming, widened)))
   }
 
   /** Project `df` onto `target`: matching columns (case-insensitive) are
@@ -213,26 +287,51 @@ final class TrackingTable(
   * part files do. Spark's scans skip `_`-prefixed files, and its schema
   * inference reads a summary file in preference to the part files, so a
   * plain `spark.read.parquet(dir)` still works on a table with no rows.
-  * Reading it is one small driver-side file read: no Spark job.
+  * Reading it is one small driver-side file read: no Spark job. Its
+  * writer, [[writeFile]], also writes a task table's commit files.
   */
 private[tracking] object SchemaSidecar {
   private val Name = "_common_metadata"
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
-  /** Writes `schema` as `dir`'s sidecar, through a rename so a crash
-    * never leaves a torn one.
+  /** Writes `schema` as `dir`'s sidecar: a file with no rows. */
+  def write(spark: SparkSession, dir: Path, schema: StructType): Unit =
+    writeFile(spark, dir, Name, schema, Nil)
+
+  /** Writes `rows` (laid out as `schema`) as the Parquet file `dir/name`
+    * from the driver, with Spark's own row writer: no Spark job. The
+    * file is staged as `dir/.name.tmp` (overwriting one a crash left)
+    * and renamed in, so a crash never leaves a torn one under `name`.
     */
-  def write(spark: SparkSession, dir: Path, schema: StructType): Unit = {
+  def writeFile(spark: SparkSession, dir: Path, name: String, schema: StructType,
+      rows: Iterable[InternalRow]): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val staged = new Path(dir, s".$Name.tmp")
-    val w = new ParquetFileWriter(HadoopOutputFile.fromPath(staged, conf),
-      new SparkToParquetSchemaConverter(SQLConf.get).convert(schema),
-      ParquetFileWriter.Mode.OVERWRITE, ParquetWriter.DEFAULT_BLOCK_SIZE, 0, null,
-      ParquetProperties.builder().build())
-    w.start()
-    w.end(Map(SparkSchemaKey -> schema.json).asJava)
-    val fs = dir.getFileSystem(conf)
-    require(fs.rename(staged, new Path(dir, Name)), s"SchemaSidecar.write: rename into $dir failed")
+    val staged = new Path(dir, s".$name.tmp")
+    // the write support reads the schema and the session's Parquet
+    // layout settings from its conf (an empty conf skips loading
+    // Hadoop's default resources); the codec is the session's, as for
+    // Spark's own writes
+    val writeConf = new Configuration(false)
+    val sql = SQLConf.get
+    Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT, SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
+        SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED, SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
+      .foreach(e => writeConf.set(e.key, sql.getConfString(e.key, e.defaultValueString)))
+    ParquetWriteSupport.setSchema(schema, writeConf)
+    val codec = new ParquetOptions(Map.empty[String, String], sql).compressionCodecClassName
+    Using.resource(new RowWriter(HadoopOutputFile.fromPath(staged, conf))
+        .withConf(writeConf).withCompressionCodec(CompressionCodecName.fromConf(codec))
+        .withWriteMode(ParquetFileWriter.Mode.OVERWRITE).build()) { w =>
+      rows.foreach(w.write)
+    }
+    require(dir.getFileSystem(conf).rename(staged, new Path(dir, name)),
+      s"SchemaSidecar.writeFile: rename of $staged failed")
+  }
+
+  private final class RowWriter(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriter](file) {
+    override protected def self(): RowWriter = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport
   }
 
   /** `dir`'s schema, or None when it has no sidecar. */
@@ -258,6 +357,20 @@ private[tracking] object SchemaSidecar {
 
 object TrackingTable {
   import graft.push.Schemas
+
+  /** The number of commit files an upsert finds before it folds them
+    * into a rewrite; a task table holds at most this many plus the
+    * plain files of its last rewrite.
+    */
+  val FoldAt = 32
+
+  /** The name of a driver commit file: `commit-<n>.parquet`. */
+  private[tracking] object CommitFile {
+    val regex = """^commit-(\d+)\.parquet$"""
+    private val Pattern = regex.r
+    def name(n: Long): String = f"commit-$n%010d.parquet"
+    def unapply(fileName: String): Option[Long] = Pattern.findFirstMatchIn(fileName).map(_.group(1).toLong)
+  }
 
   /** The four engine-owned tracking tables (FIXTURES.md §2). */
   def sfdcLoadTasks(spark: SparkSession, base: String) =

@@ -40,6 +40,15 @@ class MarketingCloudSpec extends SparkTestBase {
     assert(payload.startsWith("[[") && payload.contains("ContactNumber"))
   }
 
+  // Job-count pin: the push's numbering, probe count, staging and log
+  // append, and collecting the one task row. Creating or reading a
+  // tracking table and the task upsert (a driver-side commit) add none.
+  test("one Marketing Cloud push into fresh tables runs at most 9 Spark jobs") {
+    val mat = new PushMaterializer(spark, tmpDir("mc"), new MockSalesforceBulkApi(), new MockSfmcApi())
+    val jobs = jobsDuring(mat.run(contactsModel))
+    assert(jobs <= 9, s"one push ran $jobs Spark jobs")
+  }
+
   test("encrypted path stages GPG message rows, not raw records (ref :86-104)") {
     val base = tmpDir("mc-enc")
     val sfmc = new MockSfmcApi()

@@ -138,4 +138,117 @@ class TrackingTableSpec extends SparkTestBase {
     assert(t.read().count() === 0)
     assert(!fs.exists(staged), "the staging dir must not outlive the create")
   }
+
+  /** The table's data files (not the sidecar, not staged commits), with
+    * their modification times.
+    */
+  private def dataFiles(t: TrackingTable): Map[String, Long] =
+    new java.io.File(t.path, "data").listFiles()
+      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+      .map(f => f.getName -> f.lastModified()).toMap
+
+  private def commitFiles(t: TrackingTable) =
+    dataFiles(t).keys.filter(_.startsWith("commit-"))
+
+  private def rows(t: TrackingTable) =
+    t.read().orderBy("k", "v").as[(String, Int, String)].collect().toSeq
+
+  test("a one-row local upsert runs no Spark job and leaves every existing data file in place") {
+    val t = table()
+    t.append(Seq(("a", 1, "x")).toDF("k", "v", "note"))
+    t.upsert(Seq(("b", 2, "y")).toDF("k", "v", "note"))
+    val before = dataFiles(t)
+    Thread.sleep(20)
+    assert(jobsDuring(t.upsert(Seq(("c", 3, "z")).toDF("k", "v", "note"))) === 0)
+    val after = dataFiles(t)
+    assert(before.forall { case (name, m) => after.get(name).contains(m) },
+      "a local upsert must not rewrite or remove existing files")
+    assert(after.size === before.size + 1)
+    assert(rows(t) === Seq(("a", 1, "x"), ("b", 2, "y"), ("c", 3, "z")))
+  }
+
+  test("a local upsert replaces an existing key") {
+    val t = table()
+    t.append(Seq(("a", 1, "x"), ("b", 2, "y")).toDF("k", "v", "note"))
+    t.upsert(Seq(("b", 20, "y2")).toDF("k", "v", "note"))
+    assert(rows(t) === Seq(("a", 1, "x"), ("b", 20, "y2")))
+    t.upsert(Seq(("b", 200, "y3")).toDF("k", "v", "note"))
+    assert(rows(t) === Seq(("a", 1, "x"), ("b", 200, "y3")))
+  }
+
+  test("a DataFrame upsert after local upserts rewrites into a plain table") {
+    val t = table()
+    t.upsert(Seq(("a", 1, "x")).toDF("k", "v", "note"))
+    t.upsert(Seq(("b", 2, "y")).toDF("k", "v", "note"))
+    t.upsert(Seq(("b", 20, "y2"), ("c", 3, "z")).toDF("k", "v", "note").repartition(2))
+    assert(rows(t) === Seq(("a", 1, "x"), ("b", 20, "y2"), ("c", 3, "z")))
+    assert(commitFiles(t).isEmpty, "a rewrite leaves no commit files")
+  }
+
+  test("an append after local upserts keeps its duplicates and the upserted row") {
+    val t = table()
+    t.upsert(Seq(("a", 1, "x")).toDF("k", "v", "note"))
+    t.upsert(Seq(("a", 2, "x2")).toDF("k", "v", "note"))
+    t.append(Seq(("a", 3, "x3"), ("b", 4, "y"), ("b", 4, "y")).toDF("k", "v", "note"))
+    assert(rows(t) === Seq(("a", 2, "x2"), ("a", 3, "x3"), ("b", 4, "y"), ("b", 4, "y")))
+  }
+
+  test("null keys never shadow each other, as with the anti-join") {
+    val t = table()
+    t.append(Seq((null: String, 1, "plain")).toDF("k", "v", "note"))
+    t.upsert(Seq((null: String, 2, "local")).toDF("k", "v", "note"))
+    t.upsert(Seq((null: String, 3, "local2"), ("a", 4, "x")).toDF("k", "v", "note"))
+    assert(rows(t) === Seq((null, 1, "plain"), (null, 2, "local"), (null, 3, "local2"), ("a", 4, "x")))
+    t.upsert(Seq((null: String, 5, "df")).toDF("k", "v", "note").repartition(2))
+    assert(t.read().filter(col("k").isNull).count() === 4)
+  }
+
+  test("a widening local upsert takes the rewrite") {
+    val t = table()
+    t.upsert(Seq(("a", 1, "x")).toDF("k", "v", "note"))
+    t.upsert(Seq(("b", 5000000000L, "big")).toDF("k", "v", "note"))
+    val out = t.read()
+    assert(out.schema("v").dataType === LongType)
+    assert(out.orderBy("k").as[(String, Long, String)].collect().toSeq ===
+      Seq(("a", 1L, "x"), ("b", 5000000000L, "big")))
+    assert(commitFiles(t).isEmpty, "a widening upsert rewrites into a plain table")
+  }
+
+  test("compact folds numbered files into one plain file with identical rows") {
+    val t = table()
+    t.append(Seq(("a", 1, "x"), ("b", 2, "y")).toDF("k", "v", "note"))
+    (1 to 4).foreach(i => t.upsert(Seq((if (i % 2 == 0) "a" else "c", i, s"n$i")).toDF("k", "v", "note")))
+    val want = rows(t)
+    assert(commitFiles(t).size === 4)
+    t.compact()
+    assert(dataFiles(t).size === 1)
+    assert(commitFiles(t).isEmpty)
+    assert(rows(t) === want)
+    assert(want === Seq(("a", 4, "n4"), ("b", 2, "y"), ("c", 3, "n3")))
+  }
+
+  test(s"after 40 local upserts the data dir holds at most ${TrackingTable.FoldAt + 1} part files") {
+    val t = table()
+    (1 to 40).foreach(i => t.upsert(Seq((s"k${i % 7}", i, s"n$i")).toDF("k", "v", "note")))
+    assert(dataFiles(t).size <= TrackingTable.FoldAt + 1, dataFiles(t).keys.toSeq.sorted.mkString(", "))
+    val want = (1 to 40).groupBy(_ % 7).values.map(_.max).map(i => (s"k${i % 7}", i, s"n$i"))
+    assert(rows(t) === want.toSeq.sortBy(_._1))
+  }
+
+  test("a commit left staged is invisible to read() and does not block the next commit") {
+    val t = table()
+    t.upsert(Seq(("a", 1, "x")).toDF("k", "v", "note"))
+    val data = new Path(t.path, "data")
+    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the crash: the next commit's file was written in part, never renamed in
+    val staged = new Path(data, s".${TrackingTable.CommitFile.name(2)}.tmp")
+    val out = fs.create(staged)
+    out.write("PAR1 torn".getBytes("UTF-8"))
+    out.close()
+    assert(rows(t) === Seq(("a", 1, "x")))
+    t.upsert(Seq(("a", 2, "x2")).toDF("k", "v", "note"))
+    t.upsert(Seq(("b", 3, "y")).toDF("k", "v", "note"))
+    assert(rows(t) === Seq(("a", 2, "x2"), ("b", 3, "y")))
+    assert(!fs.exists(staged), "the next commit must replace the staged file")
+  }
 }
