@@ -1,6 +1,69 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** What one bench run recorded besides its per-row times. */
+  private[graft] final case class Run(sfDir: String, load: Double,
+      gcSec: Seq[Double], rssMb: Seq[Long], failed: Seq[String])
+
+  // Locale.ROOT: f"" uses the JVM default locale, and a comma-decimal
+  // locale (de_DE) would emit invalid JSON the driver can't parse.
+  private def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  private def str(v: Option[String]): String = v.fold("null")(x => "\"" + x + "\"")
+
+  /** The result line over the `shown` rows, the other `omitted` rows
+    * summed into `omitted_sec`; `extra` is appended verbatim.
+    */
+  private def line(run: Run, shown: Seq[(String, Double)], omitted: Int,
+      omittedSec: Double, extra: String = ""): String = {
+    val total = shown.map(_._2).sum + omittedSec
+    val qjson = shown.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    val om = if (omitted > 0) s""","omitted":$omitted,"omitted_sec":${fmt(omittedSec)}""" else ""
+    // q_failed names the failing queries (additive, like q_errors and
+    // absent on green runs) so downstream speedup math can EXCLUDE
+    // them — a failed query's recorded time is elapsed-until-crash,
+    // which would otherwise read as a speedup.
+    val qe = if (run.failed.nonEmpty)
+      s""","q_errors":${run.failed.size},"q_failed":[${
+        run.failed.map("\"" + _ + "\"").mkString(",")}]"""
+    else ""
+    s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qjson$om$qe,"sf":"${run.sfDir}","passes":2,"agg":"min","load":${fmt(run.load)},"gc_sec":[${run.gcSec.map(fmt).mkString(",")}],"rss_mb":[${run.rssMb.mkString(",")}]$extra}"""
+  }
+
+  /** A time wider than any row or total this bench produces. */
+  private val WorstSec = 99999.999
+
+  /** The stdout line. The driver captures only the last ~2000 bytes of
+    * output and parses this JSON line out of that tail; sbt appends a
+    * ~75-char "[success]" line after us, and the full per-row map
+    * overflows the window (rounds 1 and 3 lost the whole line). So the
+    * line shows the longest name-ordered prefix of rows that fits 1600
+    * chars with every number at its worst-case width, and sums
+    * the rest into `omitted_sec`. The shown rows depend on the row
+    * names (and on failures, whose names take room) — never on timings,
+    * so every run reports the same rows.
+    */
+  private[graft] def stdoutLine(run: Run, results: Seq[(String, Double)]): String = {
+    val byName = results.sortBy(_._1)
+    val worstRun = run.copy(load = WorstSec, gcSec = run.gcSec.map(_ => WorstSec),
+      rssMb = run.rssMb.map(_ => 9999999L))
+    def fits(k: Int): Boolean = line(worstRun, byName.take(k).map(_._1 -> WorstSec),
+      byName.length - k, WorstSec).length <= 1600
+    val keep = (byName.length to 1 by -1).find(fits).getOrElse(1)
+    line(run, byName.take(keep), byName.length - keep, byName.drop(keep).map(_._2).sum)
+  }
+
+  /** Where a BENCH_FULL.json map came from: host, cores and the commit
+    * (null when it cannot be read, as in an exported source tree).
+    */
+  private def provenance: String = {
+    import scala.sys.process._
+    val host = scala.util.Try(java.net.InetAddress.getLocalHost.getHostName).toOption
+    val commit = scala.util.Try(Seq("git", "rev-parse", "HEAD")
+      .!!(ProcessLogger(_ => ())).trim).toOption.filter(_.matches("[0-9a-f]{40}"))
+    s""","host":${str(host)},"cores":${Runtime.getRuntime.availableProcessors},"commit":${str(commit)}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -67,7 +130,6 @@ object Bench {
     val p2 = pass()
     val (gc2, rss2) = (graft.util.Blocks.gcSec(), graft.util.Blocks.rssMb())
     val results = p1.zip(p2).map { case ((n, a), (_, b)) => n -> math.min(a, b) }
-    val total = results.map(_._2).sum
     // Machine-load context: co-tenant load moved identical-code totals
     // ±40% across rounds and cost a judging cycle to disprove a fake
     // regression — record the 1-min loadavg so cross-round comparisons
@@ -76,44 +138,12 @@ object Bench {
       try java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
       catch { case _: Throwable => -1.0 }
-    // Locale.ROOT: f"" uses the JVM default locale, and a comma-decimal
-    // locale (de_DE) would emit invalid JSON the driver can't parse.
-    def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def line(qs: Seq[(String, Double)], omitted: Int, omittedSec: Double): String = {
-      val qjson = qs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-      val om = if (omitted > 0) s""","omitted":$omitted,"omitted_sec":${fmt(omittedSec)}""" else ""
-      // q_failed names the failing queries (additive, like q_errors and
-      // absent on green runs) so downstream speedup math can EXCLUDE
-      // them — a failed query's recorded time is elapsed-until-crash,
-      // which would otherwise read as a speedup.
-      val qe = if (failed.nonEmpty)
-        s""","q_errors":${failed.size},"q_failed":[${
-          failed.map("\"" + _ + "\"").mkString(",")}]"""
-      else ""
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qjson$om$qe,"sf":"$sfDir","passes":2,"agg":"min","load":${fmt(load)},"gc_sec":[${fmt(gc1 - gc0)},${fmt(gc2 - gc1)}],"rss_mb":[$rss1,$rss2]}"""
-    }
-    // The driver captures only the last ~2000 bytes of output and parses
-    // this JSON line out of that tail; sbt appends a ~75-char "[success]"
-    // line after us. With 80+ queries the full map overflows the window
-    // and the whole line is lost (rounds 1 and 3). So: full per-query map
-    // goes to BENCH_FULL.json; stdout gets the total plus the slowest
-    // queries that fit a 1600-char budget.
-    val full = line(results, 0, 0.0)
+    val run = Run(sfDir, load, Seq(gc1 - gc0, gc2 - gc1), Seq(rss1, rss2),
+      failed.toSeq)
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
-      (full + "\n").getBytes("UTF-8"))
+      (line(run, results, 0, 0.0, provenance) + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }
-    val out =
-      if (full.length <= 1600) full
-      else {
-        val bySlow = results.sortBy(-_._2)
-        var keep = bySlow.length
-        while (keep > 1 && line(bySlow.take(keep).sortBy(_._1),
-            bySlow.length - keep, bySlow.drop(keep).map(_._2).sum).length > 1600)
-          keep -= 1
-        line(bySlow.take(keep).sortBy(_._1),
-          bySlow.length - keep, bySlow.drop(keep).map(_._2).sum)
-      }
-    println(out)
+    println(stdoutLine(run, results))
     spark.stop()
   }
 }

@@ -1318,7 +1318,7 @@ object ScaleProbe {
         val doomed = docs8.filter(col("doc_id") % 11 === 0)
           .select(col("doc_id")).collect().map(_.getLong(0)).toSeq
         val t2 = System.nanoTime()
-        ops.LexIndex.deleteDocs(spark, lexPath, doomed)
+        ops.LexIndex.deleteIds(lexPath, doomed)
         val tDel = (System.nanoTime() - t2) / 1e9
         val t3 = System.nanoTime()
         val rowsAfter = ops.LexIndex.bm25TopK(spark, lexPath,
@@ -1474,10 +1474,10 @@ object ScaleProbe {
         val docs8 = spark.read.parquet(s"$dir/documents.parquet")
           .select(col("doc_id"), col("text"))
         ops.LexIndex.buildIndex(docs8, pinPath)
-        ops.LexIndex.pinIndex(spark, pinPath, "pre")
+        ops.LexIndex.pinIndex(pinPath, "pre")
         val doomed = docs8.filter(col("doc_id") % 13 === 0)
           .select(col("doc_id")).collect().map(_.getLong(0)).toSeq
-        ops.LexIndex.deleteDocs(spark, pinPath, doomed)
+        ops.LexIndex.deleteIds(pinPath, doomed)
         ops.LexIndex.compactIndex(spark, pinPath)
         def dirBytes(p: String): Long = {
           val s = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
@@ -1580,7 +1580,7 @@ object ScaleProbe {
         var bytesCompact = 0L
         val tA0 = System.nanoTime()
         (0 until 24).foreach { i =>
-          ops.LexIndex.appendDocsIdempotent(pa, mkBatch(i), s"tm:$i")
+          ops.LexIndex.appendBatchIdempotent(pa, mkBatch(i), s"tm:$i")
           if ((i + 1) % 4 == 0) {
             ops.LexIndex.compactIndex(spark, pa)
             // a full rewrite re-lands the whole generation
@@ -1597,7 +1597,7 @@ object ScaleProbe {
         val mp = ops.MergePolicy(factor = 4, minMerge = 4, maxMerge = 16)
         val tB0 = System.nanoTime()
         (0 until 24).foreach { i =>
-          ops.LexIndex.appendDocsIdempotent(pb, mkBatch(i), s"tm:$i")
+          ops.LexIndex.appendBatchIdempotent(pb, mkBatch(i), s"tm:$i")
           ops.LexIndex.mergeSegments(spark, pb, mp).foreach { r =>
             bytesMerged += r.bytesIn; fires += 1
           }
@@ -1809,10 +1809,10 @@ object ScaleProbe {
           token = "fsck8x:a")
         ops.Ivf.deleteIds(vecIdx, (0L until 400L).map(_ * 3L))
         ops.Ivf.compactIndex(spark, vecIdx)
-        ops.LexIndex.appendDocsIdempotent(lexPath, docs8.limit(500)
+        ops.LexIndex.appendBatchIdempotent(lexPath, docs8.limit(500)
           .select((col("doc_id") + lit(900L * n)).as("doc_id"), col("text")),
           token = "fsck8x:d")
-        ops.LexIndex.deleteDocs(spark, lexPath, (0L until 400L).map(_ * 3L))
+        ops.LexIndex.deleteIds(lexPath, (0L until 400L).map(_ * 3L))
         val tFv0 = System.nanoTime()
         val (vBad, vNotes) = ops.Ivf.fsckIndex(spark, vecPath)
         val tFv = (System.nanoTime() - tFv0) / 1e9

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.streaming.Ingest
 import graft.util.{Fs, IndexMaint}
 
 /** Size-tiered merge policy (the Lucene TieredMergePolicy / Cassandra
@@ -37,14 +38,17 @@ final case class MergePolicy(factor: Long = 8, minMerge: Int = 8,
 final case class MergeReport(tier: Int, merged: Seq[String],
     newSeg: Option[String], bytesIn: Long, pairsReclaimed: Int)
 
-/** The shared mutation surface of a persisted index family — ONE
-  * implementation of the verb choreography (append / upsert / CDC /
-  * deleteIds / compact / deleteWhere) that [[Ivf]], [[Pq]] and
-  * [[LexIndex]] each used to carry as near-parallel copies. The
-  * protocol invariants live HERE, once, so a fix cannot reach one
-  * family and miss the others (the drift that motivated
-  * [[graft.util.IndexMaint]] for the commit layer, now lifted to the
-  * verb layer):
+/** The lifecycle verb surface of a persisted index family, typed by the
+  * family's [[Handle]] ([[Ivf.IvfIndex]], [[Pq.PqIndex]], or the index
+  * path itself for [[LexIndex]]) — ONE implementation of every verb
+  * (append / upsert / CDC / deleteIds / compact / deleteWhere / merge /
+  * pin / export / fsck) that [[Ivf]], [[Pq]] and [[LexIndex]] each used
+  * to carry as near-parallel copies. Each verb applies the reference's
+  * tracking-table contract (delete the matching keys, then insert —
+  * `tracking_table_materialization.sql:34`) to one family. The protocol
+  * invariants live HERE, once, so a fix cannot reach one family and
+  * miss the others (the drift that motivated [[graft.util.IndexMaint]]
+  * for the commit layer, lifted to the verb layer):
   *
   *  - token check FIRST ([[IndexMaint.tokenGuardedSegment]]): a replay
   *    is a structural no-op — in particular a replayed delete cannot
@@ -61,11 +65,29 @@ final case class MergeReport(tier: Int, merged: Seq[String],
   *    duplicate-id invariant checked on the fresh stage, applied
   *    tokens carried verbatim, one atomic generation commit.
   *
-  * A family provides only what genuinely differs: how a batch encodes
+  * A family provides only what genuinely differs: the path a handle
+  * names and the handle of a committed generation, how a batch encodes
   * into a staged segment, what validation its encode needs, which
-  * sidecars a delete must adjust and a compaction must rewrite.
+  * sidecars a delete must adjust, a compaction must rewrite, a pin must
+  * record and an export must re-land.
   */
-private[ops] trait IndexFamily {
+trait IndexFamily {
+
+  /** What a caller holds to name one index of this family. A type
+    * member, not a type parameter: the handle class is declared inside
+    * the family object, and `object Ivf extends IndexFamily[Ivf.IvfIndex]`
+    * is an illegal cyclic reference.
+    */
+  type Handle
+
+  /** The index root `index` names. */
+  protected def pathOf(index: Handle): String
+
+  /** The handle of generation `gen` of the index at `path` — what a
+    * verb that commits a new generation returns (the vector families
+    * re-read their quantizer sidecars from it).
+    */
+  protected def indexAt(path: String, gen: String): Handle
 
   /** The id column the tombstone/upsert machinery keys on. */
   protected def idCol: String = "vec_id"
@@ -106,34 +128,58 @@ private[ops] trait IndexFamily {
     */
   protected def afterTombstones(spark: SparkSession, gen: String): Unit = ()
 
-  /** Token-guarded O(Δ) append — disjoint-ids contract (an existing id
-    * belongs on [[upsertSegment]]).
+  /** Extra manifest entries a pin of generation `gen` records (the
+    * lexical removed-stats adjustment). Default: none.
     */
-  final def appendSegment(path: String, batch: DataFrame, token: String): Boolean =
-    IndexMaint.tokenGuardedSegment(path, token, "append") { (gen, stage) =>
-      encodeToStage(gen, validateAndPin(projected(batch, Nil), "append", token),
-        stage)
-    }
+  protected def pinExtra(gen: String): Map[String, String] = Map.empty
 
-  /** Tokenless O(Δ) append — callers that manage their own replay
-    * story; still encoded against the LIVE generation's sidecars and
-    * committed by one atomic segment rename.
+  /** Re-land into an export's staged generation the root sidecars whose
+    * live value advances past pin time. Default: nothing — every root
+    * sidecar is immutable within a generation.
     */
-  final def appendAnonSegment(path: String, batch: DataFrame): Unit =
+  protected def exportFixup: (IndexMaint.Snapshot, String) => Unit = (_, _) => ()
+
+  // ---- appends, upserts, CDC, deletes ----------------------------------------
+
+  /** Tokenless O(Δ) append: encode `batch` against the LIVE
+    * generation's sidecars and commit it as an anonymous segment by one
+    * atomic rename — existing data files are never rewritten. Callers
+    * that can be replayed use [[appendBatchIdempotent]].
+    */
+  final def appendBatch(index: Handle, batch: DataFrame): Unit = {
+    val path = pathOf(index)
     IndexMaint.withMutation(path, op = "append") {
       val gen = IndexMaint.liveGen(path)
       val stage = IndexMaint.newStageDir(path, "append")
       encodeToStage(gen, batch, stage)
       IndexMaint.commitSegmentAnon(gen, stage)
     }
+  }
 
-  /** Delete-then-insert in ONE leased mutation (the reference's
-    * `incremental_upsert` contract): the batch's ids are tombstoned
-    * across the segments present NOW, then the batch commits as a new
-    * segment that postdates the delete.
+  /** [[appendBatch]] guarded by a per-batch token, so an at-least-once
+    * replay (a streaming checkpoint replays its last uncommitted batch)
+    * does not re-append: an applied `token` makes the call a no-op that
+    * returns false. The encoded batch and its token commit by ONE atomic
+    * segment rename ([[IndexMaint.commitSegment]]), so there is no
+    * applied-but-unrecorded state; rebalances and compactions carry
+    * applied tokens into the new generation. Disjoint-ids contract: an
+    * existing id belongs on [[upsertBatchIdempotent]].
     */
-  final def upsertSegment(path: String, batch: DataFrame, token: String): Boolean =
-    IndexMaint.tokenGuardedSegment(path, token, "upsert") { (gen, stage) =>
+  final def appendBatchIdempotent(index: Handle, batch: DataFrame, token: String): Boolean =
+    IndexMaint.tokenGuardedSegment(pathOf(index), token, "append") { (gen, stage) =>
+      encodeToStage(gen, validateAndPin(projected(batch, Nil), "append", token),
+        stage)
+    }
+
+  /** Delete-then-insert in ONE leased, token-guarded mutation (the
+    * reference's `incremental_upsert` contract): the batch's ids are
+    * tombstoned across the segments present NOW, then the batch commits
+    * as a new segment that postdates the delete, so the new rows win
+    * structurally. A replay no-ops entirely. The id list is driver
+    * metadata (one batch's keys — the tombstone contract).
+    */
+  final def upsertBatchIdempotent(index: Handle, batch: DataFrame, token: String): Boolean =
+    IndexMaint.tokenGuardedSegment(pathOf(index), token, "upsert") { (gen, stage) =>
       val pinned = validateAndPin(projected(batch, Nil).localCheckpoint(),
         "upsert", token)
       val ids = pinned.select(col(idCol)).distinct()
@@ -143,14 +189,19 @@ private[ops] trait IndexFamily {
       encodeToStage(gen, pinned, stage)
     }
 
-  /** Apply one op-tagged CDC micro-batch as ONE leased token-guarded
-    * mutation: verbs validated and adds validated BEFORE the tombstone
-    * write, delete+upsert ids tombstoned, insert+upsert rows committed
-    * as one token-carrying segment — zero-row for a pure-delete batch,
-    * so its token is durable.
+  /** Apply one CDC micro-batch — rows tagged by an `op` column with an
+    * [[IndexMaint.CdcOps]] verb — as ONE leased, token-guarded
+    * mutation: verbs and adds validated BEFORE the tombstone write,
+    * delete+upsert ids tombstoned, insert+upsert rows committed as one
+    * token-carrying segment. `insert` rows skip the tombstone write (the
+    * producer asserts the id is new; an insert for an existing id is a
+    * duplicate [[compactIndex]] refuses loudly). A PURE-DELETE batch
+    * still commits a zero-row segment, so its token is durable and a
+    * replayed delete cannot re-hide a later batch's re-insert. Unknown
+    * verbs fail before any mutation.
     */
-  final def cdcSegment(path: String, batch: DataFrame, token: String): Boolean =
-    IndexMaint.tokenGuardedSegment(path, token, "cdc") { (gen, stage) =>
+  final def applyCdcIdempotent(index: Handle, batch: DataFrame, token: String): Boolean =
+    IndexMaint.tokenGuardedSegment(pathOf(index), token, "cdc") { (gen, stage) =>
       val pinned = projected(batch, Seq("op")).localCheckpoint()
       val doomed = IndexMaint.cdcDoomedIds(pinned, idCol, cdcContext(token))
       val adds = validateAndPin(IndexMaint.cdcAdds(pinned), "cdc", token)
@@ -161,18 +212,28 @@ private[ops] trait IndexFamily {
       encodeToStage(gen, adds, stage)
     }
 
-  /** Logical takedown: tombstone `ids` across the segments present now
-    * (bounded metadata, capped), honored immediately by every read
-    * through the family's `indexData`; physical reclamation at the
-    * next compact/rebalance. Returns the distinct tombstoned-id count.
+  /** Logical takedown — the tracking-table delete-matching-keys analog:
+    * tombstone `ids` across the segments present now (bounded metadata,
+    * capped), honored immediately by every read through the family's
+    * `indexData`; physical reclamation at the next compact/rebalance.
+    * Replays are set-union no-ops; appending a deleted id afterwards
+    * re-inserts it. Returns the distinct tombstoned-id count.
     */
-  final def deleteIdsCore(spark: SparkSession, path: String, ids: Seq[Long]): Int =
+  final def deleteIds(index: Handle, ids: Seq[Long]): Int = {
+    val path = pathOf(index)
     IndexMaint.withMutation(path, op = "delete") {
       val gen = IndexMaint.liveGen(path)
       val n = IndexMaint.addTombstones(gen, ids)
-      afterTombstones(spark, gen)
+      afterTombstones(SparkSession.active, gen)
       n
     }
+  }
+
+  /** Tokens of batches already folded into the index (bounded: one
+    * committed segment or consolidated line per applied batch).
+    */
+  final def appliedTokens(index: Handle): Set[String] =
+    IndexMaint.appliedTokens(IndexMaint.liveGen(pathOf(index)))
 
   // ---- compaction / retention rewrite ---------------------------------------
 
@@ -234,6 +295,77 @@ private[ops] trait IndexFamily {
     */
   protected def pinSurvivors: Boolean = false
 
+  /** Compact the live generation WITHOUT retraining: the accrued
+    * per-batch segments re-land as ONE segment with tombstoned rows
+    * physically dropped, the same encoding and sidecars, every applied
+    * token carried verbatim, committed atomically — replay detection,
+    * drift baselines and screen results are identical before and after,
+    * with fewer files to open. `sweepKey` records a keyed rewrite in the
+    * carried sweep set (the `*Cached` memos' proof it already ran).
+    * Returns the handle of the committed generation.
+    */
+  final def compactIndex(spark: SparkSession, index: Handle,
+      sweepKey: Option[String] = None): Handle =
+    indexAt(pathOf(index), compactGeneration(spark, pathOf(index), None, sweepKey))
+
+  /** Bulk delete by predicate — the retention/TTL path. A corpus-scale
+    * removal would blow the bounded-metadata tombstone contract, so it
+    * is ONE filtered compaction: survivors (a NULL predicate result
+    * keeps the row) rewritten as a fresh generation, generation
+    * baselines recomputed over them, prior tombstones subsumed, tokens
+    * carried. The complement of [[deleteIds]]: tombstones for bounded
+    * takedown lists, a rewrite for corpus-scale strata — readers never
+    * see a half-applied delete either way.
+    */
+  final def deleteWhere(spark: SparkSession, index: Handle, doomed: Column,
+      sweepKey: Option[String] = None): Handle =
+    indexAt(pathOf(index),
+      compactGeneration(spark, pathOf(index), Some(doomed), sweepKey))
+
+  /** Re-land the live generation as ONE segment with tombstoned rows
+    * (and `doomed` matches, if given) physically dropped — compaction
+    * and the corpus-scale `deleteWhere` retention rewrite are the SAME
+    * protocol with and without the predicate. Returns the committed
+    * generation path.
+    */
+  private def compactGeneration(spark: SparkSession, path: String,
+      doomed: Option[Column], sweepKey: Option[String]): String =
+    IndexMaint.withMutation(path,
+      op = if (doomed.isDefined) "deleteWhere" else "compact") {
+      val gen = IndexMaint.liveGen(path)
+      val hadDeletes = IndexMaint.readTombstones(gen).nonEmpty || doomed.isDefined
+      // NULL predicate results keep the row: only a definite match is a
+      // delete — a NULL metadata cell must not destroy a row
+      val withSeg = {
+        val d0 = compactSurvivors(spark, path)
+        val d = doomed.map(p => d0.filter(not(coalesce(p, lit(false))))).getOrElse(d0)
+        if (pinSurvivors) d.localCheckpoint() else d
+      }
+      // a fully-deleted index has no schema to re-land — refuse loudly
+      // (drop the index instead), on BOTH paths, before any staging
+      require(!withSeg.isEmpty,
+        s"${compactLabel(path)}: no $rowNoun survives (all tombstoned or " +
+          "matching the deleteWhere predicate); drop the index instead")
+      val stage = IndexMaint.newStageDir(path, "compact")
+      val segBase = s"$stage/seg=base"
+      if (!uniqueCheckReadsStage) requireUniqueSurvivors(spark, withSeg, segBase, path)
+      writeSurvivorStage(spark, withSeg.drop("seg"), segBase, gen)
+      if (uniqueCheckReadsStage) requireUniqueSurvivors(spark, withSeg, segBase, path)
+      writeGenSidecars(spark, stage, gen, hadDeletes)
+      IndexMaint.writeConsolidatedTokens(stage, IndexMaint.appliedTokens(gen))
+      // the successor derives from the same (source, shape) build with
+      // the same applied sweeps — a later cached-build or cached-sweep
+      // miss must reopen it, not rebuild or re-rewrite; a keyed
+      // deleteWhere also RECORDS itself in the carried set, so its own
+      // memo miss can prove the rewrite already happened
+      IndexMaint.carryBuildKey(gen, stage)
+      val sweeps = IndexMaint.readSweepKeys(gen) ++ sweepKey
+      if (sweeps.nonEmpty) IndexMaint.writeSweepKeys(stage, sweeps)
+      val committed = IndexMaint.commitGeneration(path, stage)
+      afterCommit(path)
+      committed
+    }
+
   // ---- tiered segment merge ---------------------------------------------------
 
   /** Family hook after a merge stage is fully assembled (e.g. the
@@ -248,7 +380,8 @@ private[ops] trait IndexFamily {
     * carried by hard link — zero data bytes moved for them; only the
     * merged group is rewritten. Returns None (no commit at all) when no
     * tier has accumulated `minMerge` segments, so an ingest loop can
-    * call this after every batch and pay only a metadata listing.
+    * call this after every batch and pay only a metadata listing. The
+    * handle stays valid: generation sidecars carry verbatim.
     *
     * Live content is IDENTICAL before and after — the one observable
     * change besides file counts is physical reclamation scoped to the
@@ -262,13 +395,15 @@ private[ops] trait IndexFamily {
     * untouched segments' own token files carry verbatim — content
     * unchanged means every baseline still describes the same corpus.
     *
-    * The full-generation [[compactGeneration]] rewrite remains the
-    * right verb for takedown reclamation across ALL segments and for
-    * deleteWhere; this is the bounded-write-amplification maintenance
-    * step a long-lived ingest stream runs instead of it.
+    * The full-generation [[compactIndex]] rewrite remains the right
+    * verb for takedown reclamation across ALL segments, as
+    * [[deleteWhere]] is for retention; this is the
+    * bounded-write-amplification maintenance step a long-lived ingest
+    * stream runs instead of it.
     */
-  final def mergeSmallSegments(spark: SparkSession, path: String,
-      policy: MergePolicy = MergePolicy()): Option[MergeReport] =
+  final def mergeSegments(spark: SparkSession, index: Handle,
+      policy: MergePolicy = MergePolicy()): Option[MergeReport] = {
+    val path = pathOf(index)
     IndexMaint.withMutation(path, op = "merge") {
       val gen = IndexMaint.liveGen(path)
       val sizes = IndexMaint.segmentValues(gen)
@@ -322,6 +457,40 @@ private[ops] trait IndexFamily {
         MergeReport(tier, merged, newSeg, group.map(_._2).sum, inTombs.length)
       }
     }
+  }
+
+  // ---- pins and exports ---------------------------------------------------------
+
+  /** Pin the live state under `label` ([[IndexMaint.pinLive]]):
+    * generation + segment set + tombstone pairs + the family's
+    * [[pinExtra]] entries. Quantizers need no entry — they are
+    * generation sidecars, and nothing retrains in place (a rebalance
+    * commits a NEW generation the pin protects the old one from reaping
+    * through). An existing label refuses loudly; [[pinIndexIfAbsent]] is
+    * the replay-safe first-pin-wins form.
+    */
+  final def pinIndex(path: String, label: String): Unit = {
+    IndexMaint.pinLive(path, label, pinExtra)
+    ()
+  }
+
+  /** First-pin-wins [[pinIndex]] — replayed pipelines keep their first
+    * snapshot ([[IndexMaint.pinLiveIfAbsent]]).
+    */
+  final def pinIndexIfAbsent(path: String, label: String): Unit = {
+    IndexMaint.pinLiveIfAbsent(path, label, pinExtra)
+    ()
+  }
+
+  /** Materialize the snapshot pinned as `label` into `destRoot` as a
+    * STANDALONE index ([[IndexMaint.exportSnapshot]]): live reads of the
+    * export ≡ the family's as-of readers against the pin, and stay so
+    * after the source unpins or mutates. Root sidecars carry verbatim;
+    * the family's [[exportFixup]] re-lands any whose live value advanced
+    * past pin time.
+    */
+  final def exportIndexSnapshot(path: String, label: String, destRoot: String): String =
+    IndexMaint.exportSnapshot(path, label, destRoot, exportFixup)
 
   // ---- fsck (operator health check) ------------------------------------------
 
@@ -366,47 +535,18 @@ private[ops] trait IndexFamily {
     }
   }
 
-  /** Re-land the live generation as ONE segment with tombstoned rows
-    * (and `doomed` matches, if given) physically dropped — compaction
-    * and the corpus-scale `deleteWhere` retention rewrite are the SAME
-    * protocol with and without the predicate. Returns the committed
-    * generation path.
+  // ---- streaming ingest ----------------------------------------------------------
+
+  /** The [[Ingest]] loop's verbs for a stream of `prefix:`-tokened
+    * batches applied by `apply`: the handle's path, and the maintenance
+    * verbs [[compactIndex]] and [[mergeSegments]] come from this family;
+    * the drift check and its repair are the family's own.
     */
-  final def compactGeneration(spark: SparkSession, path: String,
-      doomed: Option[Column], sweepKey: Option[String] = None): String =
-    IndexMaint.withMutation(path,
-      op = if (doomed.isDefined) "deleteWhere" else "compact") {
-      val gen = IndexMaint.liveGen(path)
-      val hadDeletes = IndexMaint.readTombstones(gen).nonEmpty || doomed.isDefined
-      // NULL predicate results keep the row: only a definite match is a
-      // delete — a NULL metadata cell must not destroy a row
-      val withSeg = {
-        val d0 = compactSurvivors(spark, path)
-        val d = doomed.map(p => d0.filter(not(coalesce(p, lit(false))))).getOrElse(d0)
-        if (pinSurvivors) d.localCheckpoint() else d
-      }
-      // a fully-deleted index has no schema to re-land — refuse loudly
-      // (drop the index instead), on BOTH paths, before any staging
-      require(!withSeg.isEmpty,
-        s"${compactLabel(path)}: no $rowNoun survives (all tombstoned or " +
-          "matching the deleteWhere predicate); drop the index instead")
-      val stage = IndexMaint.newStageDir(path, "compact")
-      val segBase = s"$stage/seg=base"
-      if (!uniqueCheckReadsStage) requireUniqueSurvivors(spark, withSeg, segBase, path)
-      writeSurvivorStage(spark, withSeg.drop("seg"), segBase, gen)
-      if (uniqueCheckReadsStage) requireUniqueSurvivors(spark, withSeg, segBase, path)
-      writeGenSidecars(spark, stage, gen, hadDeletes)
-      IndexMaint.writeConsolidatedTokens(stage, IndexMaint.appliedTokens(gen))
-      // the successor derives from the same (source, shape) build with
-      // the same applied sweeps — a later cached-build or cached-sweep
-      // miss must reopen it, not rebuild or re-rewrite; a keyed
-      // deleteWhere also RECORDS itself in the carried set, so its own
-      // memo miss can prove the rewrite already happened
-      IndexMaint.carryBuildKey(gen, stage)
-      val sweeps = IndexMaint.readSweepKeys(gen) ++ sweepKey
-      if (sweeps.nonEmpty) IndexMaint.writeSweepKeys(stage, sweeps)
-      val committed = IndexMaint.commitGeneration(path, stage)
-      afterCommit(path)
-      committed
-    }
+  protected final def ingestFamily(prefix: String,
+      apply: (Handle, DataFrame, String) => Boolean,
+      drift: Option[(SparkSession, Handle) => (Boolean, Double)],
+      rebalance: (SparkSession, Handle) => Handle): Ingest.Family[Handle] =
+    Ingest.Family(prefix, pathOf, apply, drift, rebalance,
+      compact = (spark, index) => compactIndex(spark, index),
+      merge = (spark, index, p) => mergeSegments(spark, index, p))
 }

@@ -28,6 +28,10 @@ object Ivf extends IndexFamily {
   // ---- IndexFamily hooks: the shared verb choreography parameterized
   // by the IVF encode (cell assignment against the LIVE generation's
   // quantizer) and the cell-partitioned layout -------------------------------
+  type Handle = IvfIndex
+  override protected def pathOf(index: IvfIndex): String = index.path
+  override protected def indexAt(path: String, gen: String): IvfIndex =
+    IvfIndex(path, readCentroids(gen))
   override protected def cdcContext(token: String): String = s"applyCdc($token)"
   override protected def compactLabel(path: String): String = s"compactIndex($path)"
 
@@ -41,6 +45,9 @@ object Ivf extends IndexFamily {
   override protected def compactSurvivors(spark: SparkSession,
       path: String): DataFrame = indexData(spark, path)
 
+  // a rewrite re-lands the same rows with the same assignments (`cid`
+  // is carried, never recomputed) as one file per cell, so screens open
+  // one file set per probed cell instead of one per appended batch
   override protected def writeSurvivorStage(spark: SparkSession,
       survivors: DataFrame, segBase: String, gen: String): Unit =
     survivors.repartition(col("cid"))
@@ -359,40 +366,8 @@ object Ivf extends IndexFamily {
     */
   def loadIndex(path: String): IvfIndex =
     graft.util.IndexMaint.lockFor(path).synchronized {
-      IvfIndex(path, readCentroids(graft.util.IndexMaint.liveGen(path)))
+      indexAt(path, graft.util.IndexMaint.liveGen(path))
     }
-
-  /** Pin the live vector state under `label`
-    * ([[graft.util.IndexMaint.pinLive]]): generation + segment set +
-    * tombstone pairs. The quantizer needs no manifest entry — centroids
-    * are a generation sidecar, and nothing retrains in place (a
-    * drift-triggered rebalance commits a NEW generation, which the pin
-    * protects the old one from reaping through). An existing label
-    * refuses loudly ([[graft.util.IndexMaint.pinLive]]);
-    * [[pinIndexIfAbsent]] is the replay-safe first-pin-wins form.
-    */
-  def pinIndex(path: String, label: String): Unit = {
-    graft.util.IndexMaint.pinLive(path, label)
-    ()
-  }
-
-  /** First-pin-wins [[pinIndex]] — replayed pipelines keep their first
-    * snapshot ([[graft.util.IndexMaint.pinLiveIfAbsent]]).
-    */
-  def pinIndexIfAbsent(path: String, label: String): Unit = {
-    graft.util.IndexMaint.pinLiveIfAbsent(path, label)
-    ()
-  }
-
-  /** Materialize the snapshot pinned as `label` into `destRoot` as a
-    * STANDALONE IVF index ([[graft.util.IndexMaint.exportSnapshot]]):
-    * live [[screenBatch]] reads of the export ≡ [[screenBatchAsOf]]
-    * against the pin. No fixup needed — every IVF root sidecar
-    * (centroids, drift baseline, derivation keys) is immutable within
-    * a generation, so the carried copies ARE the pin-time values.
-    */
-  def exportIndexSnapshot(path: String, label: String, destRoot: String): String =
-    graft.util.IndexMaint.exportSnapshot(path, label, destRoot)
 
   /** [[screenBatch]] against the snapshot pinned as `label` —
     * bit-identical to a screen at pin time, whatever appends, upserts,
@@ -481,108 +456,18 @@ object Ivf extends IndexFamily {
       emb.filter(col("vec_id") % 10 === 0), k = 5, nprobe = 4)
   }
 
-  // ---- idempotent append (streaming at-least-once replay) -------------------
-
-  /** Tokens of batches already folded into the index (bounded: one
-    * committed segment or consolidated line per applied batch).
-    */
-  def appliedTokens(index: IvfIndex): Set[String] =
-    graft.util.IndexMaint.appliedTokens(graft.util.IndexMaint.liveGen(index.path))
-
-  /** [[appendBatch]] guarded by a per-batch token so an at-least-once
-    * replay (streaming checkpoint replays the last uncommitted batch on
-    * restart) does NOT re-append the same vectors: if `token` is
-    * already applied the call is a no-op and returns false. The encoded
-    * batch and its token are staged together and committed by ONE
-    * atomic segment rename ([[graft.util.IndexMaint.commitSegment]]) —
-    * a crash at any point leaves either an invisible stage (the replay
-    * re-runs and commits once) or the fully-committed segment with its
-    * token (the replay is detected); there is no applied-but-unrecorded
-    * state. [[rebalance]] carries applied tokens into the new
-    * generation, so batches already re-encoded stay deduplicated across
-    * generations.
-    */
-  def appendBatchIdempotent(index: IvfIndex, batch: DataFrame, token: String): Boolean =
-    appendSegment(index.path, batch, token)
-
-  /** Delete ids from the index — the takedown/GDPR path every 100 TB
-    * corpus index needs and the engine's tracking-table delete-matching-
-    * keys analog (reference tracking_table_materialization.sql:34).
-    * LOGICAL delete now (ids land in the generation's tombstone sidecar
-    * under the mutation lease, atomically replaced — bounded metadata),
-    * PHYSICAL reclamation at the next [[compactIndex]]/[[rebalance]].
-    * Every read honors the set immediately ([[indexData]]); replaying a
-    * delete is structurally idempotent (set union); appending a deleted
-    * id afterwards re-inserts it (later insert wins). Returns the
-    * tombstone-set size after the union — the dial a maintenance job
-    * compacts on.
-    */
-  def deleteIds(index: IvfIndex, ids: Seq[Long]): Int =
-    deleteIdsCore(org.apache.spark.sql.SparkSession.active, index.path, ids)
-
-  /** Delete-then-insert in ONE leased mutation — the reference's
-    * tracking-table upsert semantics (`incremental_upsert`: delete
-    * matching keys, insert the batch) on the vector index, for the most
-    * common production mutation: re-embedded documents. The batch's ids
-    * are tombstoned across the segments present NOW, then the batch
-    * commits as a new segment that postdates the delete — so the new
-    * vectors win structurally. Token-guarded end to end: a replayed
-    * upsert no-ops entirely (the tombstones it would re-add are already
-    * set-union no-ops, and the segment's token is detected first).
-    *
-    * Crash ordering matters and is deliberate: tombstones land BEFORE
-    * the segment commit. The only torn state — ids hidden, new rows not
-    * yet visible — is exactly what the at-least-once retry heals,
-    * because the token only becomes visible with the segment commit, so
-    * the retry re-runs both halves. The reverse order would record the
-    * token first and leave permanent duplicates. The id list is driver
-    * metadata (one upsert batch's keys — the tombstone contract).
-    */
-  def upsertBatchIdempotent(index: IvfIndex, batch: DataFrame, token: String): Boolean =
-    upsertSegment(index.path, batch, token)
-
-  /** The CDC verbs [[applyCdcIdempotent]] accepts — see
-    * [[graft.util.IndexMaint.CdcOps]] (shared by every family).
-    */
-  val CdcOps: Set[String] = graft.util.IndexMaint.CdcOps
-
-  /** Apply one CDC micro-batch — rows tagged by an `op` column with a
-    * [[CdcOps]] verb — as ONE leased, token-guarded mutation: the
-    * delete+upsert ids are tombstoned across the segments present now,
-    * then the insert+upsert rows commit as one new segment carrying
-    * the token ([[upsertBatchIdempotent]]'s crash ordering: tombstones
-    * BEFORE the segment commit, so the at-least-once retry heals the
-    * only torn state). `insert` rows skip the tombstone write — the
-    * producer is asserting the id is new, so the delete probe would be
-    * wasted metadata churn at takedown-sidecar scale. A producer that
-    * violates that contract (insert for an existing id) creates a
-    * duplicate that [[compactIndex]] detects and fails loudly on
-    * ([[graft.util.IndexMaint.requireUniqueIds]], remedy: `upsert`).
-    *
-    * A PURE-DELETE batch still commits a (zero-row) segment: the token
-    * must become durable, because a replayed delete re-tombstones
-    * against the segments present AT REPLAY TIME — which may include a
-    * later batch's legitimate re-insert of the same id. Token-first
-    * detection makes the replay a structural no-op instead.
-    */
-  def applyCdcIdempotent(index: IvfIndex, batch: DataFrame, token: String): Boolean =
-    cdcSegment(index.path, batch, token)
-
   /** The [[graft.streaming.Ingest]] loop's verbs for a screened append
     * stream (`ingest:` tokens, [[appendBatchIdempotent]]): the drift
     * check is [[driftStats]] (statistic: `meanCosNow`), repaired by
     * [[rebalance]].
     */
   val appendIngest: graft.streaming.Ingest.Family[IvfIndex] =
-    graft.streaming.Ingest.Family(prefix = "ingest", path = _.path,
-      apply = appendBatchIdempotent,
+    ingestFamily("ingest", appendBatchIdempotent,
       drift = Some { (spark, index) =>
         val d = driftStats(spark, index)
         (d.drifted(), d.meanCosNow)
       },
-      rebalance = (spark, index) => rebalance(spark, index),
-      compact = (spark, index) => compactIndex(spark, index),
-      merge = (spark, index, p) => mergeSegments(spark, index, p))
+      rebalance = (spark, index) => rebalance(spark, index))
 
   /** [[appendIngest]] for a CDC stream (`cdc:` tokens, [[applyCdcIdempotent]]). */
   val cdcIngest: graft.streaming.Ingest.Family[IvfIndex] =
@@ -654,75 +539,6 @@ object Ivf extends IndexFamily {
       .select(col("vec_id") +: col("embedding") +:
         Similarity.l2norm(col("embedding")).as("nrm") +: extras: _*)
       .withColumn("cid", ArrayExprs.nearestCentroid(col("embedding"), index.centroids))
-  }
-
-  /** Fold a new `(vec_id, embedding)` batch INTO the index: assign
-    * against the frozen quantizer (pure scan work over the batch) and
-    * commit an anonymous segment into the live generation — O(Δ) end to
-    * end, existing data files are never rewritten. No replay token:
-    * callers that can be replayed use [[appendBatchIdempotent]].
-    */
-  def appendBatch(index: IvfIndex, batch: DataFrame): Unit =
-    appendAnonSegment(index.path, batch)
-
-  /** Compact the live generation WITHOUT retraining: the O(N)-rewrite /
-    * O(1)-semantics maintenance op between rebalances. The append-only
-    * path accrues one file set per committed batch per cell, so after B
-    * appends a probed cell costs B file opens (and B footer reads) —
-    * at 100 TB with minute-level streaming batches that is thousands of
-    * small files per cell within a day, and open-cost starts to rival
-    * scan cost. Compaction re-lands the SAME rows (same quantizer, same
-    * assignments — `cid` is carried, never recomputed) as ONE
-    * cell-partitioned segment with one file per cell (`repartition` on
-    * cid; a skewed mega-cell would use the (cid, salt) split the
-    * SemDeDup path derives), carries the centroid + cell-stat sidecars
-    * and every applied token verbatim, and commits atomically — so
-    * replay detection, drift baselines and screen results are all
-    * byte-identical before and after (IvfSpec + the `sim_ivf_compacted`
-    * oracle row prove it; ScaleProbe records the file-count collapse).
-    */
-  def compactIndex(spark: SparkSession, index: IvfIndex,
-      sweepKey: Option[String] = None): IvfIndex =
-    compactCore(spark, index, doomed = None, sweepKey)
-
-  /** One size-tiered merge step ([[IndexFamily.mergeSmallSegments]]):
-    * coalesce same-tier small append segments, hard-link the rest —
-    * bytes rewritten per stream batch stay O(log batches) amortized,
-    * vs the (B/c)·|index| a [[compactIndex]]-every-c-batches cadence
-    * pays. The handle stays valid: quantizer and drift baseline carry
-    * verbatim (live content is unchanged).
-    */
-  def mergeSegments(spark: SparkSession, index: IvfIndex,
-      policy: MergePolicy = MergePolicy()): Option[MergeReport] =
-    mergeSmallSegments(spark, index.path, policy)
-
-  /** Bulk delete by predicate — the retention/TTL path. A mass removal
-    * (drop a source, an age stratum, a whole month) would blow the
-    * bounded-metadata tombstone contract — millions of (seg, id) pairs
-    * in a driver-side sidecar slowing every screen's anti-join — so it
-    * is instead ONE filtered compaction: survivors rewritten as a
-    * fresh generation with the predicate applied scan-side, the drift
-    * baseline recomputed over survivors, any prior tombstones subsumed
-    * by the rewrite, applied tokens carried. The complement of
-    * [[deleteIds]]: tombstones for bounded takedown lists, a rewrite
-    * for corpus-scale strata — both end in the same generation
-    * protocol, so readers never see a half-applied delete.
-    */
-  def deleteWhere(spark: SparkSession, index: IvfIndex,
-      doomed: org.apache.spark.sql.Column,
-      sweepKey: Option[String] = None): IvfIndex =
-    compactCore(spark, index, Some(doomed), sweepKey)
-
-  private def compactCore(spark: SparkSession, index: IvfIndex,
-      doomed: Option[org.apache.spark.sql.Column],
-      sweepKey: Option[String] = None): IvfIndex = {
-    // the shared skeleton: indexData subtracts the tombstone set, so
-    // compaction IS the physical reclamation — deleted rows are dropped
-    // from the rewrite and the new generation carries no tombstone
-    // sidecar; metadata columns (filtered search) ride through the star
-    // projection
-    val committed = compactGeneration(spark, index.path, doomed, sweepKey)
-    IvfIndex(index.path, readCentroids(committed))
   }
 
   // ---- index maintenance: drift detection + rebalance -----------------------

@@ -37,6 +37,10 @@ object LexIndex extends IndexFamily {
   // ---- IndexFamily hooks: the shared verb choreography parameterized
   // by the postings encode (tokenize → tb-bucketed postings + doc dir +
   // stats sidecar, all committing atomically with the segment) --------------
+  // the handle is the index path: stats and postings are read per query
+  type Handle = String
+  override protected def pathOf(path: String): String = path
+  override protected def indexAt(path: String, gen: String): String = path
   override protected def idCol: String = "doc_id"
   override protected def cdcContext(token: String): String = s"applyCdcDocs($token)"
   override protected def compactLabel(path: String): String = s"compactIndex($path)"
@@ -69,6 +73,9 @@ object LexIndex extends IndexFamily {
     p
   }
 
+  // a takedown (deleteIds, or the tombstones of an upsert or CDC batch)
+  // leaves the postings untouched and adjusts the serving constants from
+  // the doc-dir sidecars — O(doc dirs of the affected segments)
   override protected def afterTombstones(spark: SparkSession, gen: String): Unit =
     refreshRemoved(spark, gen)
 
@@ -362,22 +369,6 @@ object LexIndex extends IndexFamily {
     LexStats(raw.nDocs - n, raw.sumDl - s)
   }
 
-  /** Takedown: hide `ids` from every query and from the scoring
-    * constants, without touching the term-bucketed postings — the
-    * [[Ivf.deleteIds]] contract on the lexical index. Segment-scoped
-    * tombstones give "later insert wins" structurally (an append is a
-    * new segment, outside every prior delete's scope), and the doc-dir
-    * sidecars supply the deleted docs' dl so the stats adjustment is
-    * O(doc-dir of affected segments), never a postings scan. The
-    * adjustment is DERIVABLE state — recomputed from the full tombstone
-    * set on every delete ([[refreshRemoved]]) — so replays and retries
-    * after a crash between the two sidecar writes always land the exact
-    * value. Physical reclamation happens at [[compactIndex]]. Returns
-    * the distinct tombstoned-id count.
-    */
-  def deleteDocs(spark: SparkSession, path: String, ids: Seq[Long]): Int =
-    deleteIdsCore(spark, path, ids)
-
   /** Recompute the takedown stats adjustment from the FULL tombstone
     * set (bounded by [[graft.util.IndexMaint.tombstonePairCap]])
     * against the doc-dir sidecars and atomically REPLACE the sidecar —
@@ -420,40 +411,6 @@ object LexIndex extends IndexFamily {
       (r.getLong(0), r.getLong(1))
     }.getOrElse((0L, 0L))
   }
-
-  /** Re-land the live generation as ONE segment with tombstoned rows
-    * physically dropped: postings rewritten bucket-partitioned, the doc
-    * dir and stats recomputed over survivors, tombstones and the
-    * takedown adjustment cleared, applied tokens carried verbatim (a
-    * replayed append still no-ops), committed by the standard atomic
-    * generation flip. The [[Ivf.compactIndex]] contract for postings.
-    */
-  def compactIndex(spark: SparkSession, path: String,
-      sweepKey: Option[String] = None): String =
-    compactGeneration(spark, path, doomed = None, sweepKey = sweepKey)
-
-  /** One size-tiered merge step over the postings segments
-    * ([[IndexFamily.mergeSmallSegments]]): the bounded-write-
-    * amplification alternative to [[compactIndex]] for long-lived CDC
-    * streams — an append touches up to 64 `tb` partitions, so file
-    * growth is steepest on this family and the merge matters most here.
-    */
-  def mergeSegments(spark: SparkSession, path: String,
-      policy: MergePolicy = MergePolicy()): Option[MergeReport] =
-    mergeSmallSegments(spark, path, policy)
-
-  /** Bulk delete by doc predicate — the [[Ivf.deleteWhere]] retention
-    * path on the postings: a corpus-scale removal would blow both
-    * bounded-metadata contracts (the tombstone sidecar AND the doc-dir
-    * stats walk), so it is ONE filtered compaction — survivors
-    * rewritten bucket-partitioned, doc dir + stats recomputed over
-    * them, prior tombstones and takedown adjustments subsumed, tokens
-    * carried ([[IndexFamily.compactGeneration]] with the hooks above).
-    */
-  def deleteDocsWhere(spark: SparkSession, path: String,
-      doomed: org.apache.spark.sql.Column,
-      sweepKey: Option[String] = None): String =
-    compactGeneration(spark, path, Some(doomed), sweepKey)
 
   /** Build the persisted postings for a `(doc_id, text)` corpus: ONE
     * tokenize scan, bucketed write, stats sidecar, atomic generation
@@ -527,57 +484,15 @@ object LexIndex extends IndexFamily {
       .write.mode("overwrite").parquet(s"$segDir/$TermMetaName")
   }
 
-  /** Token-guarded O(Δ) postings append (the
-    * [[Ivf.appendBatchIdempotent]] contract): the batch's postings AND
-    * its stats sidecar land with the token in ONE atomic segment
-    * rename, so a replay can neither double-count postings nor
-    * double-count n_docs/Σdl. Appended doc_ids are assumed disjoint
-    * from the indexed corpus (the vector-index append contract).
-    */
-  def appendDocsIdempotent(path: String, docs: DataFrame, token: String): Boolean =
-    appendSegment(path, docs, token)
-
-  /** Delete-then-insert in ONE leased mutation — [[appendDocsIdempotent]]
-    * without the disjoint-ids assumption (the
-    * [[Ivf.upsertBatchIdempotent]] contract, the reference's
-    * tracking-table upsert): the batch's doc_ids are tombstoned across
-    * the segments present now (with the doc-dir-sourced stats
-    * adjustment), then the batch commits as a new segment that
-    * postdates the delete — re-crawled documents replace their old
-    * postings atomically from any reader's view. Tombstones land BEFORE
-    * the segment commit: the only torn crash state (old postings
-    * hidden, new not yet visible) is healed by the at-least-once retry,
-    * since the token is only visible once the segment commits.
-    */
-  def upsertDocsIdempotent(path: String, docs: DataFrame, token: String): Boolean =
-    upsertSegment(path, docs, token)
-
-  /** Apply one CDC micro-batch of documents — rows tagged by an `op`
-    * column with a [[graft.util.IndexMaint.CdcOps]] verb — as ONE
-    * leased, token-guarded mutation (the [[Ivf.applyCdcIdempotent]]
-    * contract on the lexical index): delete+upsert doc_ids are
-    * tombstoned with their doc-dir-sourced stats adjustment, then the
-    * insert+upsert docs commit as one new segment (postings + doc dir
-    * + stats sidecar) carrying the token. A pure-delete batch commits
-    * a zero-row segment so its token is durable and a replayed delete
-    * cannot re-hide a later batch's legitimate re-insert. Unknown
-    * verbs fail loudly before any mutation.
-    */
-  def applyCdcDocs(path: String, batch: DataFrame, token: String): Boolean =
-    cdcSegment(path, batch, token)
-
   /** The [[graft.streaming.Ingest]] loop's verbs for a document CDC
-    * stream (`docs:` tokens, [[applyCdcDocs]]). The lexical index has no
-    * drift check: its stats are exact, not a trained quantizer, so the
-    * only maintenance is segment hygiene — steepest on this family,
-    * since an append touches up to 64 `tb` partitions.
+    * stream (`docs:` tokens, [[applyCdcIdempotent]]). The lexical index
+    * has no drift check: its stats are exact, not a trained quantizer,
+    * so the only maintenance is segment hygiene — steepest on this
+    * family, since an append touches up to 64 `tb` partitions.
     */
   val docIngest: graft.streaming.Ingest.Family[String] =
-    graft.streaming.Ingest.Family(prefix = "docs", path = identity,
-      apply = applyCdcDocs, drift = None,
-      rebalance = (_, path) => path,
-      compact = (spark, path) => { compactIndex(spark, path); path },
-      merge = (spark, path, p) => mergeSegments(spark, path, p))
+    ingestFamily("docs", applyCdcIdempotent, drift = None,
+      rebalance = (_, path) => path)
 
   /** The live postings relation (partition columns `seg`, `tb`), MINUS
     * tombstoned docs — the [[Ivf.indexData]] reader contract: every
@@ -916,7 +831,7 @@ object LexIndex extends IndexFamily {
     * corpus constants and global df, so an allowed doc's score is
     * IDENTICAL to its unfiltered score — the filter narrows the page,
     * not the statistics (corpus removal that should shift stats is
-    * [[deleteDocs]]/[[deleteDocsWhere]], not a filter). The allow-set
+    * [[deleteIds]]/[[deleteWhere]], not a filter). The allow-set
     * semi-joins the fetched postings BEFORE scoring, so disallowed docs
     * never reach the score aggregation or the rank window; the join
     * broadcasts when the set is small and shuffles when it is not —
@@ -949,54 +864,26 @@ object LexIndex extends IndexFamily {
     Search.topK(shaped, Search.rationalIdf, k)
   }
 
-  /** Pin the live lexical state under `label`
-    * ([[graft.util.IndexMaint.pinLive]]): the manifest records the
-    * generation, segment set and tombstone pairs, plus the lexical
-    * removed-stats adjustment as an `x-` entry — everything
+  /** The lexical pin extras ([[pinIndex]]): the removed-stats
+    * adjustment as of pin time, as an `x-` manifest entry — with the
+    * generation, segment set and tombstone pairs, everything
     * [[bm25TopKAsOf]] needs to reproduce this exact scoring state after
-    * any number of later mutations. An existing label refuses loudly;
-    * [[pinIndexIfAbsent]] is the replay-safe first-pin-wins form.
+    * any number of later mutations.
     */
-  def pinIndex(spark: SparkSession, path: String, label: String): Unit = {
-    graft.util.IndexMaint.pinLive(path, label, pinExtra)
-    ()
-  }
-
-  /** The lexical family's manifest extras: the removed-stats adjustment
-    * as of pin time.
-    */
-  private def pinExtra(gen: String): Map[String, String] = {
+  override protected def pinExtra(gen: String): Map[String, String] = {
     val (n, s) = readRemoved(gen)
     Map("x-removed" -> s"$n,$s")
   }
 
-  /** First-pin-wins [[pinIndex]]
-    * ([[graft.util.IndexMaint.pinLiveIfAbsent]]).
-    */
-  def pinIndexIfAbsent(spark: SparkSession, path: String, label: String): Unit = {
-    graft.util.IndexMaint.pinLiveIfAbsent(path, label, pinExtra)
-    ()
-  }
-
-  /** Materialize the snapshot pinned as `label` into `destRoot` as a
-    * STANDALONE lexical index ([[graft.util.IndexMaint.exportSnapshot]])
-    * — live [[bm25TopK]] reads of the export are bit-identical to
-    * [[bm25TopKAsOf]] against the pin, and stay so after the source
-    * unpins or mutates. The one root sidecar whose live value advances
-    * past pin time — the removed-stats takedown adjustment — is
-    * re-landed from the manifest's `x-removed` copy, so the export's
-    * serving constants are the pin's, not the source's current ones.
-    */
-  def exportIndexSnapshot(path: String, label: String, destRoot: String): String =
-    graft.util.IndexMaint.exportSnapshot(path, label, destRoot,
-      fixup = removedStatsFixup)
-
-  /** The ONE export fixup this family needs — re-land the pin-time
-    * removed-stats adjustment into the staged generation. Shared by
+  /** The ONE export fixup this family needs: the removed-stats takedown
+    * adjustment is the one root sidecar whose live value advances past
+    * pin time, so it is re-landed from the manifest's `x-removed` copy
+    * and the export serves the pin's constants — live [[bm25TopK]] reads
+    * of the export ≡ [[bm25TopKAsOf]] against the pin. Shared by
     * [[exportIndexSnapshot]] and [[exportHybridSnapshot]] so the two
     * export paths cannot diverge in serving constants.
     */
-  private val removedStatsFixup: (graft.util.IndexMaint.Snapshot, String) => Unit =
+  override protected val exportFixup: (graft.util.IndexMaint.Snapshot, String) => Unit =
     (snap, stage) => {
       val (rn, rs) = removedOfSnapshot(snap)
       java.nio.file.Files.write(
@@ -1032,7 +919,7 @@ object LexIndex extends IndexFamily {
   def exportHybridSnapshot(lexPath: String, vecPath: String, label: String,
       destLex: String, destVec: String): (String, String) =
     graft.util.IndexMaint.exportPair(lexPath, vecPath, label, destLex, destVec,
-      fixupA = removedStatsFixup)
+      fixupA = exportFixup)
 
   /** Corpus constants of a PINNED snapshot: the manifest's segments'
     * stats sidecars summed, minus the removed adjustment AS OF PIN TIME
@@ -1647,15 +1534,6 @@ object LexIndex extends IndexFamily {
   private val builtMemo =
     new graft.util.BoundedCache[(String, Long), String](max = 64)
 
-  /** Session memo for one-shot retention sweeps in registered queries —
-    * now the shared [[graft.util.IndexMaint.sweepOnce]] (one
-    * implementation across families; this alias keeps existing callers
-    * unchanged).
-    */
-  private def sweepOnce(path: String, srcDir: String, sweepKey: String)(
-      sweep: => Unit): Unit =
-    graft.util.IndexMaint.sweepOnce(path, srcDir, sweepKey)(sweep)
-
   /** [[buildIndex]] memoized per (path, source fingerprint) — the
     * [[Ivf.buildIndexCached]] pattern verbatim (one BoundedCache idiom
     * across families): deterministic build, one derivation per session,
@@ -1740,13 +1618,13 @@ object LexIndex extends IndexFamily {
     buildIndexCached(docs, s"$dir/documents.parquet", path)
     val doomed = docs.filter(col("doc_id") % 7 === 3)
       .select(col("doc_id")).collect().map(_.getLong(0)).toSeq
-    deleteDocs(spark, path, doomed)
+    deleteIds(path, doomed)
     bm25TopK(spark, path, Search.fixtureQueries, 5)
   }
 
   /** Registered `search_bm25_upserted`: re-crawl on the persisted
     * postings — every % 7 == 3 doc whose successor exists takes its
-    * successor's text via ONE [[upsertDocsIdempotent]] (a donor join,
+    * successor's text via ONE [[upsertBatchIdempotent]] (a donor join,
     * so the replacement texts are real table values). The oracle is the
     * in-memory twin over the EFFECTIVE corpus: old postings invisible,
     * replacements scored with their new tf/dl, n_docs unchanged (an
@@ -1774,7 +1652,7 @@ object LexIndex extends IndexFamily {
     val path = graft.util.Fs.sessionTempDir("lex_index_mrg", dir)
     buildIndexCached(docs, s"$dir/documents.parquet", path)
     (0 until 4).foreach { b =>
-      appendDocsIdempotent(path,
+      appendBatchIdempotent(path,
         docs.filter(col("doc_id") % 9 === b)
           .select((col("doc_id") + lit((b + 1) * 3000000L)).as("doc_id"),
             col("text")),
@@ -1784,7 +1662,7 @@ object LexIndex extends IndexFamily {
       .unionAll(docs.filter(col("doc_id") % 9 === 0 && col("doc_id") % 4 === 1)
         .select((col("doc_id") + lit(3000000L)).as("doc_id")))
       .distinct().collect().map(_.getLong(0)).toSeq
-    deleteDocs(spark, path, doomed)
+    deleteIds(path, doomed)
     // minMerge=2 + two steps: fires even if the near-equal wave sizes
     // straddle a tier boundary — any merge outcome is serving-invariant,
     // which is exactly what the oracle asserts
@@ -1802,12 +1680,12 @@ object LexIndex extends IndexFamily {
     val batch = docs.filter(col("doc_id") % 7 === 3)
       .join(donor, col("did") === col("doc_id") + 1)
       .select(col("doc_id"), col("dtext").as("text"))
-    upsertDocsIdempotent(path, batch, "upsq:1")
+    upsertBatchIdempotent(path, batch, "upsq:1")
     bm25TopK(spark, path, Search.fixtureQueries, 5)
   }
 
   /** Registered `search_bm25_retention`: the corpus-scale delete on the
-    * postings — a whole stratum (% 5 == 1) leaves via [[deleteDocsWhere]]'s
+    * postings — a whole stratum (% 5 == 1) leaves via [[deleteWhere]]'s
     * one filtered compaction, and BM25 must equal the in-memory twin
     * over survivors (stats, df and ranks all track) — the same claim as
     * `search_bm25_deleted` through the rewrite path the tombstone
@@ -1819,8 +1697,8 @@ object LexIndex extends IndexFamily {
     val path = graft.util.Fs.sessionTempDir("lex_index_ret", dir)
     buildIndexCached(docs, s"$dir/documents.parquet", path)
     val sweepKey = "deleteWhere|retention:doc_id%5==1"
-    sweepOnce(path, s"$dir/documents.parquet", sweepKey) {
-      deleteDocsWhere(spark, path, col("doc_id") % 5 === 1, Some(sweepKey))
+    graft.util.IndexMaint.sweepOnce(path, s"$dir/documents.parquet", sweepKey) {
+      deleteWhere(spark, path, col("doc_id") % 5 === 1, Some(sweepKey))
     }
     bm25TopK(spark, path, Search.fixtureQueries, 5)
   }
@@ -1861,14 +1739,14 @@ object LexIndex extends IndexFamily {
     val docs = Catalog(spark, dir).ref("documents").select(col("doc_id"), col("text"))
     val path = graft.util.Fs.sessionTempDir("lex_index_asof", dir)
     buildIndexCached(docs, s"$dir/documents.parquet", path)
-    pinIndexIfAbsent(spark, path, "pre")
+    pinIndexIfAbsent(path, "pre")
     // one-shot post-pin wave (sweepOnce — the Ivf.ivfAsOf rationale):
     // the CDC token already no-ops the wave on replay, but the
     // compaction used to re-rewrite identical survivors every bench
     // pass; the keyed compaction makes the skip durable
     graft.util.IndexMaint.sweepOnce(path, s"$dir/documents.parquet",
       "wave|asofq") {
-      applyCdcDocs(path, asOfCdcWave(docs), "asof:cdc:1")
+      applyCdcIdempotent(path, asOfCdcWave(docs), "asof:cdc:1")
       compactIndex(spark, path, Some("wave|asofq"))
       ()
     }
@@ -1891,11 +1769,11 @@ object LexIndex extends IndexFamily {
     val docs = Catalog(spark, dir).ref("documents").select(col("doc_id"), col("text"))
     val path = graft.util.Fs.sessionTempDir("lex_index_expsrc", dir)
     buildIndexCached(docs, s"$dir/documents.parquet", path)
-    pinIndexIfAbsent(spark, path, "pre")
+    pinIndexIfAbsent(path, "pre")
     // one-shot post-pin wave (sweepOnce — the Ivf.ivfAsOf rationale)
     graft.util.IndexMaint.sweepOnce(path, s"$dir/documents.parquet",
       "wave|expq") {
-      applyCdcDocs(path, asOfCdcWave(docs), "expq:cdc:1")
+      applyCdcIdempotent(path, asOfCdcWave(docs), "expq:cdc:1")
       compactIndex(spark, path, Some("wave|expq"))
       ()
     }
@@ -2005,8 +1883,8 @@ object LexIndex extends IndexFamily {
     // the bounded-takedown route through hybrid is already pinned by
     // search_bm25_deleted + the tombstone specs
     val sweepKey = "deleteWhere|takedown:doc_id%6==2"
-    sweepOnce(path, s"$dir/documents.parquet", sweepKey) {
-      deleteDocsWhere(spark, path, col("doc_id") % 6 === 2, Some(sweepKey))
+    graft.util.IndexMaint.sweepOnce(path, s"$dir/documents.parquet", sweepKey) {
+      deleteWhere(spark, path, col("doc_id") % 6 === 2, Some(sweepKey))
     }
     // the SAME takedown on the vector index — the semantic stage now
     // honors it through the index's own delete machinery (a filtered
@@ -2260,7 +2138,7 @@ object LexIndex extends IndexFamily {
         .join(vecDonor, col("did") === col("vec_id") + 1)
         .select(col("vec_id"), col("demb").as("embedding"),
           lit("upsert").as("op")))
-    applyCdcDocs(lexPath, docBatch, "hasof:cdc:1")
+    applyCdcIdempotent(lexPath, docBatch, "hasof:cdc:1")
     Ivf.applyCdcIdempotent(Ivf.loadIndex(vecPath), vecBatch, "hasof:cdc:1")
     hybridPageAsOf(spark, lexPath, "pre", vecPath, "pre",
       Search.fixtureQueries, nprobe = 16)
@@ -2309,7 +2187,7 @@ object LexIndex extends IndexFamily {
         .join(vecDonor, col("did") === col("vec_id") + 1)
         .select(col("vec_id"), col("demb").as("embedding"),
           lit("upsert").as("op")))
-    applyCdcDocs(lexPath, docBatch, "hexp:cdc:1")
+    applyCdcIdempotent(lexPath, docBatch, "hexp:cdc:1")
     Ivf.applyCdcIdempotent(Ivf.loadIndex(vecPath), vecBatch, "hexp:cdc:1")
     val dLex = graft.util.Fs.sessionTempDir("lex_index_hexpdl", dir)
     val dVec = graft.util.Fs.sessionTempDir("hybrid_ivf_hexpdv", dir)

@@ -51,7 +51,53 @@ import graft.functions.ArrayExprs
   * this extends the engine for LLM-training-data curation (embedding
   * dedup / retrieval at 100 TB), per the build brief.
   */
-object Pq {
+object Pq extends IndexFamily {
+
+  // ---- IndexFamily hooks, for both encodings: every hook reads the
+  // quantizer — and with it the encoding — from the generation it writes
+  // against, so a stale handle can neither commit codes from a
+  // superseded quantizer nor a segment in the wrong layout. The fit
+  // baseline carries through a rewrite unless rows were dropped -------------
+  type Handle = PqIndex
+  override protected def pathOf(index: PqIndex): String = index.path
+  override protected def cdcContext(token: String): String = s"applyCdc($token)"
+  override protected def compactLabel(path: String): String = s"compactIndex($path)"
+
+  private def genIndex(gen: String): PqIndex =
+    indexAt(java.nio.file.Paths.get(gen).getParent.toString, gen)
+
+  override protected def encodeToStage(gen: String, batch: DataFrame,
+      stage: String): Unit = {
+    val q = genIndex(gen)
+    writeCodes(dropD2(codesWithD2(batch, q), q.codebooks.size), stage, q)
+  }
+
+  override protected def compactSurvivors(spark: SparkSession,
+      path: String): DataFrame = indexData(spark, path)
+
+  // flat codes are m bytes/vector, so one file holds millions of them;
+  // residual codes re-land as one directory per cell
+  override protected def writeSurvivorStage(spark: SparkSession,
+      survivors: DataFrame, segBase: String, gen: String): Unit = {
+    val q = genIndex(gen)
+    writeCodes(if (q.coarse.isDefined) survivors.repartition(col("cid"))
+      else survivors.repartition(1), segBase, q)
+  }
+
+  override protected def writeGenSidecars(spark: SparkSession, stage: String,
+      gen: String, hadDeletes: Boolean): Unit = {
+    val q = genIndex(gen)
+    writeQuantizer(stage, q)
+    // codes are unchanged, so the encode-time fit baseline is carried —
+    // compaction must not reset the drift reference. Deletion is the
+    // exception: recomputed from the just-written survivor stage, never
+    // a second old-generation scan through the anti-join
+    if (hadDeletes)
+      writeSubStats(stage, storedSubStats(spark.read.parquet(s"$stage/seg=base"), q))
+    else writeSubStats(stage, readSubStats(gen))
+  }
+
+  override protected def afterCommit(path: String): Unit = dropBuildMemo(path)
 
   /** Sub-quantizer codebooks: `m` sequences of `kSub` double centroids
     * of dimension D/m. Trained on the same bounded md5-ordered sample as
@@ -641,7 +687,7 @@ object Pq {
     * with, as a handle — the centroid sidecar exists exactly for
     * residual generations, so it IS the encoding.
     */
-  private def indexAt(path: String, gen: String): PqIndex =
+  override protected def indexAt(path: String, gen: String): PqIndex =
     PqIndex(path, readCodebooks(gen), Ivf.readCentroidsOpt(gen))
 
   /** [[indexAt]] for a screen kernel, refused unless `gen` holds the
@@ -888,94 +934,6 @@ object Pq {
       indexAt(path, graft.util.IndexMaint.liveGen(path))
     }
 
-  /** The [[IndexFamily]] verb choreography for both encodings: every
-    * hook reads the quantizer — and with it the encoding — from the
-    * generation it writes against, so a stale handle can neither commit
-    * codes from a superseded quantizer nor a segment in the wrong
-    * layout. The fit baseline carries through a rewrite unless rows
-    * were dropped.
-    */
-  private object Family extends IndexFamily {
-    override protected def cdcContext(token: String): String = s"applyCdc($token)"
-    override protected def compactLabel(path: String): String = s"compactIndex($path)"
-
-    private def genIndex(gen: String): PqIndex =
-      indexAt(java.nio.file.Paths.get(gen).getParent.toString, gen)
-
-    override protected def encodeToStage(gen: String, batch: DataFrame,
-        stage: String): Unit = {
-      val q = genIndex(gen)
-      writeCodes(dropD2(codesWithD2(batch, q), q.codebooks.size), stage, q)
-    }
-
-    override protected def compactSurvivors(spark: SparkSession,
-        path: String): DataFrame = indexData(spark, path)
-
-    // flat codes are m bytes/vector, so one file holds millions of
-    // them; residual codes re-land as one directory per cell
-    override protected def writeSurvivorStage(spark: SparkSession,
-        survivors: DataFrame, segBase: String, gen: String): Unit = {
-      val q = genIndex(gen)
-      writeCodes(if (q.coarse.isDefined) survivors.repartition(col("cid"))
-        else survivors.repartition(1), segBase, q)
-    }
-
-    override protected def writeGenSidecars(spark: SparkSession, stage: String,
-        gen: String, hadDeletes: Boolean): Unit = {
-      val q = genIndex(gen)
-      writeQuantizer(stage, q)
-      // codes are unchanged, so the encode-time fit baseline is carried
-      // — compaction must not reset the drift reference. Deletion is
-      // the exception: recomputed from the just-written survivor stage,
-      // never a second old-generation scan through the anti-join
-      if (hadDeletes)
-        writeSubStats(stage, storedSubStats(spark.read.parquet(s"$stage/seg=base"), q))
-      else writeSubStats(stage, readSubStats(gen))
-    }
-
-    override protected def afterCommit(path: String): Unit = dropBuildMemo(path)
-  }
-
-  /** Encode a new batch against the FROZEN quantizer and commit it as
-    * an anonymous segment — O(Δ). This is the path that erodes fit
-    * under shift. Replayable callers use [[appendBatchIdempotent]].
-    */
-  def appendBatch(index: PqIndex, batch: DataFrame): Unit =
-    Family.appendAnonSegment(index.path, batch)
-
-  /** Compact the live generation's accrued append segments into one
-    * re-laid-out segment WITHOUT re-encoding — [[Ivf.compactIndex]]'s
-    * contract: same quantizer, same codes, same fit baseline, same
-    * applied tokens, fewer files. Streaming ingest commits one file set
-    * per micro-batch; after B batches every screen opens B footers for
-    * what is logically one relation. Flat codes re-land as one file,
-    * residual codes as one file per cell.
-    */
-  def compactIndex(spark: SparkSession, index: PqIndex,
-      sweepKey: Option[String] = None): PqIndex =
-    indexAt(index.path, Family.compactGeneration(spark, index.path, None, sweepKey))
-
-  /** One size-tiered merge step ([[IndexFamily.mergeSmallSegments]]) —
-    * the bounded-write-amplification maintenance step for streamed code
-    * appends; the handle stays valid (quantizer and fit baseline carry
-    * verbatim).
-    */
-  def mergeSegments(spark: SparkSession, index: PqIndex,
-      policy: MergePolicy = MergePolicy()): Option[MergeReport] =
-    Family.mergeSmallSegments(spark, index.path, policy)
-
-  /** Structural + data fsck of a PQ index ([[IndexFamily.fsckIndex]]). */
-  def fsckIndex(spark: SparkSession, path: String): (Seq[String], Seq[String]) =
-    Family.fsckIndex(spark, path)
-
-  /** Bulk delete by predicate — the [[Ivf.deleteWhere]] retention path
-    * on the PQ codes: one filtered compaction instead of a
-    * corpus-scale tombstone list.
-    */
-  def deleteWhere(spark: SparkSession, index: PqIndex,
-      doomed: org.apache.spark.sql.Column): PqIndex =
-    indexAt(index.path, Family.compactGeneration(spark, index.path, Some(doomed)))
-
   /** Current per-subspace fit vs the build-time sidecar: one index scan
     * into an m-row aggregate, scored with the live generation's own
     * quantizer and compared to that generation's baseline. Codes are
@@ -1062,20 +1020,7 @@ object Pq {
       .orderBy("query_id", "rank")
   }
 
-  // ---- idempotent append + instrumentation (streaming replay safety) --------
-
-  /** [[appendBatch]] guarded by a per-batch token (the
-    * [[Ivf.appendBatchIdempotent]] contract): the encoded batch and its
-    * token stage together and commit by ONE atomic segment rename, so
-    * an at-least-once replay either re-runs a crashed stage (commits
-    * once) or detects the committed token (no-ops) — no
-    * applied-but-unrecorded state exists. Encoding resolves the LIVE
-    * generation's quantizer and layout, so a stale handle cannot commit
-    * codes from a superseded generation. [[rebalance]] carries applied
-    * tokens into the new generation.
-    */
-  def appendBatchIdempotent(index: PqIndex, batch: DataFrame, token: String): Boolean =
-    Family.appendSegment(index.path, batch, token)
+  // ---- streaming ingest + instrumentation -----------------------------------
 
   /** The [[graft.streaming.Ingest]] loop's verbs for a screened append
     * stream (`ingest:` tokens, [[appendBatchIdempotent]]), in either
@@ -1083,44 +1028,12 @@ object Pq {
     * `meanD2Now`), repaired by [[rebalance]].
     */
   val appendIngest: graft.streaming.Ingest.Family[PqIndex] =
-    graft.streaming.Ingest.Family(prefix = "ingest", path = _.path,
-      apply = appendBatchIdempotent,
+    ingestFamily("ingest", appendBatchIdempotent,
       drift = Some { (spark, index) =>
         val d = pqDriftStats(spark, index)
         (d.drifted(), d.meanD2Now)
       },
-      rebalance = (spark, index) => rebalance(spark, index),
-      compact = (spark, index) => compactIndex(spark, index),
-      merge = (spark, index, p) => mergeSegments(spark, index, p))
-
-  /** Delete-then-insert in ONE leased mutation — the
-    * [[Ivf.upsertBatchIdempotent]] contract on the PQ index: tombstone
-    * the batch's ids across the segments present now, then commit the
-    * re-encoded batch as a new segment that postdates the delete.
-    * Tombstones-first ordering so the at-least-once retry heals the
-    * only torn crash state (see the IVF variant's scaladoc).
-    */
-  def upsertBatchIdempotent(index: PqIndex, batch: DataFrame, token: String): Boolean =
-    Family.upsertSegment(index.path, batch, token)
-
-  /** Apply one CDC micro-batch — the [[Ivf.applyCdcIdempotent]]
-    * contract on the PQ index: delete+upsert ids tombstoned across the
-    * segments present now, insert+upsert rows re-encoded and committed
-    * as one token-carrying segment (zero-row for a pure-delete batch,
-    * so its token is durable and a replayed delete cannot re-hide a
-    * later re-insert).
-    */
-  def applyCdcIdempotent(index: PqIndex, batch: DataFrame, token: String): Boolean =
-    Family.cdcSegment(index.path, batch, token)
-
-  /** Delete ids from the index ([[Ivf.deleteIds]] contract): logical
-    * tombstone now — honored immediately by every screen through
-    * [[indexData]] — physical reclamation at [[compactIndex]] /
-    * [[rebalance]]; a later append of the same id re-inserts it.
-    */
-  def deleteIds(index: PqIndex, ids: Seq[Long]): Int =
-    Family.deleteIdsCore(org.apache.spark.sql.SparkSession.active,
-      index.path, ids)
+      rebalance = (spark, index) => rebalance(spark, index))
 
   /** [[pqDriftStats]] invocation counter — the amortization evidence
     * counter for the streaming ingest spec.
@@ -1178,37 +1091,6 @@ object Pq {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("vec_id"), col("d2"))
   }
-
-  /** Pin the live PQ state under `label` — the [[Ivf.pinIndex]]
-    * contract on the code index: generation + segment set + tombstone
-    * pairs; codebooks are a generation sidecar (nothing retrains in
-    * place — a rebalance commits a NEW generation the pin protects the
-    * old one from reaping through). An existing label refuses loudly;
-    * [[pinIndexIfAbsent]] is the replay-safe first-pin-wins form.
-    */
-  def pinIndex(path: String, label: String): Unit = {
-    graft.util.IndexMaint.pinLive(path, label)
-    ()
-  }
-
-  /** First-pin-wins [[pinIndex]]
-    * ([[graft.util.IndexMaint.pinLiveIfAbsent]]).
-    */
-  def pinIndexIfAbsent(path: String, label: String): Unit = {
-    graft.util.IndexMaint.pinLiveIfAbsent(path, label)
-    ()
-  }
-
-  /** Materialize the snapshot pinned as `label` into `destRoot` as a
-    * STANDALONE code index ([[graft.util.IndexMaint.exportSnapshot]]) in
-    * either encoding: every root sidecar (codebooks, the residual
-    * layout's coarse quantizer, derivation keys) is immutable within a
-    * generation, so the carried copies are the pin-time values and live
-    * [[adcTopK]] / [[screenTopKResidual]] reads of the export ≡ the
-    * as-of readers against the pin.
-    */
-  def exportIndexSnapshot(path: String, label: String, destRoot: String): String =
-    graft.util.IndexMaint.exportSnapshot(path, label, destRoot)
 
   /** [[adcTopK]] against the snapshot pinned as `label` — bit-identical
     * to an ADC screen at pin time: LUTs build from the PINNED

@@ -31,19 +31,19 @@ class ExportSpec extends SparkTestBase {
     // a pre-pin append (its token must carry into the export) and a
     // pre-pin takedown (the removed-stats adjustment must be non-zero,
     // so the fixup has something real to re-land)
-    LexIndex.appendDocsIdempotent(path,
+    LexIndex.appendBatchIdempotent(path,
       (100 until 120).map(i => (i.toLong, s"alpha epsilon w$i"))
         .toDF("doc_id", "text"), "exp:pre")
-    LexIndex.deleteDocs(spark, path, Seq(3L, 10L, 101L))
+    LexIndex.deleteIds(path, Seq(3L, 10L, 101L))
     val qs = Seq("q1" -> "gamma", "q1" -> "beta", "q2" -> "epsilon")
-    LexIndex.pinIndex(spark, path, "rel")
+    LexIndex.pinIndex(path, "rel")
     val want = LexIndex.bm25TopK(spark, path, qs, 5)
       .collect().map(_.toString).sorted.toSeq
     // the source moves on: post-pin append + takedown
-    LexIndex.appendDocsIdempotent(path,
+    LexIndex.appendBatchIdempotent(path,
       (200 until 230).map(i => (i.toLong, s"alpha delta w$i"))
         .toDF("doc_id", "text"), "exp:post")
-    LexIndex.deleteDocs(spark, path, Seq(5L, 6L))
+    LexIndex.deleteIds(path, Seq(5L, 6L))
     val dest = s"$base/export"
     LexIndex.exportIndexSnapshot(path, "rel", dest)
     val got = LexIndex.bm25TopK(spark, dest, qs, 5)
@@ -79,10 +79,10 @@ class ExportSpec extends SparkTestBase {
     assert(bad.isEmpty, bad.mkString("; "))
     // token semantics: a batch INSIDE the pinned view still no-ops; the
     // post-pin batch was never in the manifest, so it applies
-    assert(!LexIndex.appendDocsIdempotent(dest,
+    assert(!LexIndex.appendBatchIdempotent(dest,
       Seq((100L, "alpha epsilon w100")).toDF("doc_id", "text"), "exp:pre"),
       "a batch already inside the pinned view must replay as a no-op")
-    assert(LexIndex.appendDocsIdempotent(dest,
+    assert(LexIndex.appendBatchIdempotent(dest,
       (200 until 230).map(i => (i.toLong, s"alpha delta w$i"))
         .toDF("doc_id", "text"), "exp:post"),
       "a post-pin batch is NOT in the export and must apply")
@@ -162,10 +162,10 @@ class ExportSpec extends SparkTestBase {
     val want = LexIndex.hybridPageAsOf(spark, lexPath, "rel", vecPath, "rel",
       qs, nprobe = 4).collect().map(_.toString).sorted.toSeq
     // both sides move on after the pin — the export must see none of it
-    LexIndex.appendDocsIdempotent(lexPath,
+    LexIndex.appendBatchIdempotent(lexPath,
       (200 until 220).map(i => (i.toLong, s"alpha beta w$i")).toDF("doc_id", "text"),
       "ep:post")
-    LexIndex.deleteDocs(spark, lexPath, Seq(3L))
+    LexIndex.deleteIds(lexPath, Seq(3L))
     Ivf.appendBatchIdempotent(Ivf.loadIndex(vecPath), vecs(300 until 320), "ep:post")
     Ivf.deleteIds(Ivf.loadIndex(vecPath), Seq(9L))
     val (dLex, dVec) = (s"$base/dlex", s"$base/dvec")
@@ -212,7 +212,7 @@ class ExportSpec extends SparkTestBase {
       "the foreign directory's contents are untouched by the refusal")
     // two independent pins carry different created stamps — no pinPair
     // barrier, no wave-consistency promise
-    LexIndex.pinIndex(spark, lexPath, "solo")
+    LexIndex.pinIndex(lexPath, "solo")
     Thread.sleep(5)
     Ivf.pinIndex(vecPath, "solo")
     val eStamp = intercept[IllegalArgumentException](
@@ -233,16 +233,16 @@ class ExportSpec extends SparkTestBase {
       val docs = (0 until 60).map(i => (i.toLong, s"alpha beta w$i"))
         .toDF("doc_id", "text")
       LexIndex.buildIndex(docs, s"$base/src")
-      LexIndex.pinIndex(spark, s"$base/src", "rel")
+      LexIndex.pinIndex(s"$base/src", "rel")
       val d = s"$base/exp"
       LexIndex.exportIndexSnapshot(s"$base/src", "rel", d)
-      assert(LexIndex.appendDocsIdempotent(d,
+      assert(LexIndex.appendBatchIdempotent(d,
         Seq((100L, "alpha gamma fresh")).toDF("doc_id", "text"), "lc:a"))
-      assert(LexIndex.applyCdcDocs(d,
+      assert(LexIndex.applyCdcIdempotent(d,
         Seq((101L, "alpha gamma fresh2", "insert"), (5L, "", "delete"),
           (7L, "alpha delta recrawled", "upsert")).toDF("doc_id", "text", "op"),
         "lc:c"))
-      assert(LexIndex.appendDocsIdempotent(d,
+      assert(LexIndex.appendBatchIdempotent(d,
         Seq((102L, "alpha gamma fresh3")).toDF("doc_id", "text"), "lc:b"))
       assert(LexIndex.mergeSegments(spark, d, P).isDefined,
         "a tiered merge must fire on the exported clone")
@@ -250,8 +250,8 @@ class ExportSpec extends SparkTestBase {
       val page = LexIndex.bm25TopK(spark, d, qs, 5)
         .collect().map(_.toString).sorted.toSeq
       assert(page.nonEmpty)
-      LexIndex.pinIndex(spark, d, "post")
-      LexIndex.deleteDocs(spark, d, Seq(101L))
+      LexIndex.pinIndex(d, "post")
+      LexIndex.deleteIds(d, Seq(101L))
       assert(LexIndex.bm25TopKAsOf(spark, d, "post", qs, 5)
         .collect().map(_.toString).sorted.toSeq === page,
         "the clone's own pin serves as-of across its own later mutations")

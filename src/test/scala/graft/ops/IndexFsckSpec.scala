@@ -209,13 +209,13 @@ class IndexFsckSpec extends SparkTestBase {
     // crash window 2: the takedown adjustment is lost after a delete —
     // that is the torn state the protocol itself can produce, so it is
     // a NOTE naming the heal, not a violation
-    LexIndex.deleteDocs(spark, path, Seq(1L, 2L))
+    LexIndex.deleteIds(path, Seq(1L, 2L))
     Files.delete(Paths.get(gen, "_lex_removed.txt"))
     val (bad2, notes2) = LexIndex.fsckIndex(spark, path)
     assert(bad2.isEmpty, s"a protocol-producible crash state must not be a violation: $bad2")
     assert(notes2.exists(n => n.contains("takedown adjustment") && n.contains("heals")),
       notes2.mkString("; "))
-    LexIndex.deleteDocs(spark, path, Seq(1L)) // retry heals
+    LexIndex.deleteIds(path, Seq(1L)) // retry heals
     assert(LexIndex.fsckIndex(spark, path)._2
       .forall(!_.contains("takedown adjustment")))
     assert(LexIndex.fsckIndex(spark, path)._1.isEmpty)
@@ -285,12 +285,12 @@ class IndexFsckSpec extends SparkTestBase {
     val docs = (0 until 50).map(i => (i.toLong, s"alpha w$i")).toDF("doc_id", "text")
     val lexPath = tmpDir("fsck_life") + "/lex"
     LexIndex.buildIndex(docs, lexPath)
-    LexIndex.appendDocsIdempotent(lexPath,
+    LexIndex.appendBatchIdempotent(lexPath,
       Seq((100L, "alpha new")).toDF("doc_id", "text"), "l:a")
-    LexIndex.upsertDocsIdempotent(lexPath,
+    LexIndex.upsertBatchIdempotent(lexPath,
       Seq((5L, "beta recrawl")).toDF("doc_id", "text"), "l:u")
-    LexIndex.deleteDocs(spark, lexPath, Seq(7L))
-    LexIndex.applyCdcDocs(lexPath,
+    LexIndex.deleteIds(lexPath, Seq(7L))
+    LexIndex.applyCdcIdempotent(lexPath,
       Seq((200L, "gamma", "insert"), (9L, "x", "delete")).toDF("doc_id", "text", "op"),
       "l:c")
     assert(LexIndex.fsckIndex(spark, lexPath)._1.isEmpty)

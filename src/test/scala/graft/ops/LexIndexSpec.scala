@@ -64,12 +64,12 @@ class LexIndexSpec extends SparkTestBase {
     LexIndex.buildIndex(d1, path)
     val s1 = LexIndex.readStats(path)
     assert(s1 === LexIndex.LexStats(100L, 300L))
-    assert(LexIndex.appendDocsIdempotent(path, d2, "batch:1"))
+    assert(LexIndex.appendBatchIdempotent(path, d2, "batch:1"))
     val s2 = LexIndex.readStats(path)
     assert(s2 === LexIndex.LexStats(150L, 400L),
       "per-segment stats sidecars must sum to the union corpus")
     // replay no-ops — neither postings nor stats double-count
-    assert(!LexIndex.appendDocsIdempotent(path, d2, "batch:1"))
+    assert(!LexIndex.appendBatchIdempotent(path, d2, "batch:1"))
     assert(LexIndex.readStats(path) === s2)
     // the appended docs are queryable and df reflects the union: 'alpha'
     // appears in all 150 docs, so its rational idf is minimal but its
@@ -117,7 +117,7 @@ class LexIndexSpec extends SparkTestBase {
     val d1 = (0 until 100).map(i => (i.toLong, s"alpha filler$i beta")).toDF("doc_id", "text")
     val path = tmpDir("lex_delete") + "/index"
     LexIndex.buildIndex(d1, path)
-    assert(LexIndex.deleteDocs(spark, path, (0L until 50L)) === 50)
+    assert(LexIndex.deleteIds(path, (0L until 50L)) === 50)
     // stats track survivors immediately (50 docs x dl 3)
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(50L, 150L))
     // raw segment sidecars are untouched — the adjustment is a sidecar,
@@ -131,21 +131,21 @@ class LexIndexSpec extends SparkTestBase {
     assert(got.collect().map(_.toString).sorted.toSeq ===
       inMemoryBm25(d1.filter(col("doc_id") >= 50), "alpha", 50L, 150L, 100))
     // idempotent: re-deleting the same ids must not double-subtract
-    assert(LexIndex.deleteDocs(spark, path, (0L until 50L)) === 50)
+    assert(LexIndex.deleteIds(path, (0L until 50L)) === 50)
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(50L, 150L))
     // later insert wins: doc 7 comes back as a NEW segment with new text
     val readd = Seq((7L, "alpha resurrected")).toDF("doc_id", "text")
-    assert(LexIndex.appendDocsIdempotent(path, readd, "readd:7"))
+    assert(LexIndex.appendBatchIdempotent(path, readd, "readd:7"))
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(51L, 152L))
     val after = LexIndex.bm25TopK(spark, path, Seq("q" -> "alpha"), 100)
     assert(after.count() === 51L)
     assert(after.filter(col("doc_id") === 7L).count() === 1L,
       "a post-delete append must re-insert exactly once")
     // a REPLAY of that append cannot resurrect anything further
-    assert(!LexIndex.appendDocsIdempotent(path, readd, "readd:7"))
+    assert(!LexIndex.appendBatchIdempotent(path, readd, "readd:7"))
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(51L, 152L))
     // deleting doc 7 again covers the NEW segment too
-    assert(LexIndex.deleteDocs(spark, path, Seq(7L)) === 50)
+    assert(LexIndex.deleteIds(path, Seq(7L)) === 50)
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(50L, 150L))
     assert(LexIndex.bm25TopK(spark, path, Seq("q" -> "alpha"), 100)
       .filter(col("doc_id") === 7L).count() === 0L)
@@ -155,7 +155,7 @@ class LexIndexSpec extends SparkTestBase {
     val d1 = (0 until 100).map(i => (i.toLong, s"alpha filler$i beta")).toDF("doc_id", "text")
     val path = tmpDir("lex_heal") + "/index"
     LexIndex.buildIndex(d1, path)
-    LexIndex.deleteDocs(spark, path, (0L until 30L))
+    LexIndex.deleteIds(path, (0L until 30L))
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(70L, 210L))
     // simulate the torn crash state: tombstones durable, the stats
     // adjustment lost (the crash window the delta-based accounting
@@ -167,12 +167,12 @@ class LexIndexSpec extends SparkTestBase {
     // the at-least-once retry of the SAME delete recomputes the
     // adjustment from the full tombstone set — fully healed, not
     // delta-skipped
-    LexIndex.deleteDocs(spark, path, (0L until 30L))
+    LexIndex.deleteIds(path, (0L until 30L))
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(70L, 210L),
       "the retry must rederive the adjustment from the full tombstone set")
     // and any LATER unrelated delete heals it too (derivable state)
     java.nio.file.Files.delete(java.nio.file.Paths.get(gen, "_lex_removed.txt"))
-    LexIndex.deleteDocs(spark, path, Seq(99L))
+    LexIndex.deleteIds(path, Seq(99L))
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(69L, 207L),
       "an unrelated later delete must still reproduce the full adjustment")
   }
@@ -183,7 +183,7 @@ class LexIndexSpec extends SparkTestBase {
     LexIndex.buildIndex(d1, path)
     // re-crawl docs 5 and 6: new text drops 'alpha', shrinks dl 3 -> 2
     val recrawl = Seq((5L, "gamma delta"), (6L, "gamma epsilon")).toDF("doc_id", "text")
-    assert(LexIndex.upsertDocsIdempotent(path, recrawl, "crawl:1"))
+    assert(LexIndex.upsertBatchIdempotent(path, recrawl, "crawl:1"))
     // an update, not a shrink: n_docs unchanged, sum_dl tracks the edit
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(100L, 298L))
     val alpha = LexIndex.bm25TopK(spark, path, Seq("q" -> "alpha"), 200)
@@ -198,11 +198,11 @@ class LexIndexSpec extends SparkTestBase {
     assert(gamma.collect().map(_.toString).sorted.toSeq ===
       inMemoryBm25(effective, "gamma", 100L, 298L, 200))
     // a replayed upsert no-ops entirely — stats, postings, tombstones
-    assert(!LexIndex.upsertDocsIdempotent(path, recrawl, "crawl:1"))
+    assert(!LexIndex.upsertBatchIdempotent(path, recrawl, "crawl:1"))
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(100L, 298L))
     assert(LexIndex.bm25TopK(spark, path, Seq("q" -> "gamma"), 200).count() === 2L)
     // a SECOND re-crawl of doc 5 (new token) wins over the first
-    assert(LexIndex.upsertDocsIdempotent(path,
+    assert(LexIndex.upsertBatchIdempotent(path,
       Seq((5L, "alpha restored zeta")).toDF("doc_id", "text"), "crawl:2"))
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(100L, 299L))
     val alpha2 = LexIndex.bm25TopK(spark, path, Seq("q" -> "alpha"), 200)
@@ -224,7 +224,7 @@ class LexIndexSpec extends SparkTestBase {
     LexIndex.buildIndex(d1, path)
     // unknown verb: loud failure, nothing tombstoned, stats untouched
     val e = intercept[IllegalArgumentException] {
-      LexIndex.applyCdcDocs(path,
+      LexIndex.applyCdcIdempotent(path,
         Seq((1L, "x", "merge")).toDF("doc_id", "text", "op"), "cdc:bad")
     }
     assert(e.getMessage.contains("merge"))
@@ -233,14 +233,14 @@ class LexIndexSpec extends SparkTestBase {
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(60L, 120L))
     // pure-delete batch: stats adjust, token durable, replay no-ops
     val del = (0 until 5).map(i => (i.toLong, "", "delete")).toDF("doc_id", "text", "op")
-    assert(LexIndex.applyCdcDocs(path, del, "cdc:d1"))
+    assert(LexIndex.applyCdcIdempotent(path, del, "cdc:d1"))
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(55L, 110L))
-    assert(!LexIndex.applyCdcDocs(path, del, "cdc:d1"))
+    assert(!LexIndex.applyCdcIdempotent(path, del, "cdc:d1"))
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(55L, 110L))
     // mixed batch: one insert (new id), one upsert (re-crawl doc 7)
     val mixed = Seq((900L, "alpha fresh gamma", "insert"),
       (7L, "gamma beta", "upsert")).toDF("doc_id", "text", "op")
-    assert(LexIndex.applyCdcDocs(path, mixed, "cdc:m1"))
+    assert(LexIndex.applyCdcIdempotent(path, mixed, "cdc:m1"))
     // n_docs: -5 deletes +1 insert (the upsert holds); sum_dl tracks
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(56L, 113L))
     val alpha = LexIndex.bm25TopK(spark, path, Seq("q" -> "alpha"), 100)
@@ -253,7 +253,7 @@ class LexIndexSpec extends SparkTestBase {
     // an insert-contract violation (insert for the EXISTING doc 30, new
     // disjoint-vocab text) is refused loudly at compaction — the doc
     // now spans two segments, which only a tombstoned re-add may
-    assert(LexIndex.applyCdcDocs(path,
+    assert(LexIndex.applyCdcIdempotent(path,
       Seq((30L, "zeta eta theta", "insert")).toDF("doc_id", "text", "op"),
       "cdc:dup"))
     val dup = intercept[IllegalArgumentException] {
@@ -268,8 +268,8 @@ class LexIndexSpec extends SparkTestBase {
     LexIndex.buildIndex(d1, path)
     // mix the two delete paths: a bounded takedown, then a retention
     // sweep whose rewrite subsumes the tombstones
-    LexIndex.deleteDocs(spark, path, Seq(5L))
-    LexIndex.deleteDocsWhere(spark, path, col("doc_id") % 3 === 1)
+    LexIndex.deleteIds(path, Seq(5L))
+    LexIndex.deleteWhere(spark, path, col("doc_id") % 3 === 1)
     val gen = graft.util.IndexMaint.liveGen(path)
     assert(graft.util.IndexMaint.readTombstones(gen).isEmpty)
     assert(graft.util.IndexMaint.segmentValues(gen) === Seq("base"))
@@ -282,7 +282,7 @@ class LexIndexSpec extends SparkTestBase {
       inMemoryBm25(d1.filter(col("doc_id") % 3 =!= 1 && col("doc_id") =!= 5L),
         "alpha", 59L, 177L, 200))
     val e = intercept[IllegalArgumentException] {
-      LexIndex.deleteDocsWhere(spark, path, col("doc_id") >= 0L)
+      LexIndex.deleteWhere(spark, path, col("doc_id") >= 0L)
     }
     assert(e.getMessage.contains("drop the index"))
   }
@@ -294,13 +294,13 @@ class LexIndexSpec extends SparkTestBase {
     assert(e1.getMessage.contains("duplicate doc_id"))
     LexIndex.buildIndex(Seq((0L, "alpha")).toDF("doc_id", "text"), path)
     assert(intercept[IllegalArgumentException] {
-      LexIndex.appendDocsIdempotent(path, dup, "b:1")
+      LexIndex.appendBatchIdempotent(path, dup, "b:1")
     }.getMessage.contains("duplicate doc_id"))
     assert(intercept[IllegalArgumentException] {
-      LexIndex.upsertDocsIdempotent(path, dup, "b:2")
+      LexIndex.upsertBatchIdempotent(path, dup, "b:2")
     }.getMessage.contains("duplicate doc_id"))
     assert(intercept[IllegalArgumentException] {
-      LexIndex.applyCdcDocs(path, dup.withColumn("op", lit("insert")), "b:3")
+      LexIndex.applyCdcIdempotent(path, dup.withColumn("op", lit("insert")), "b:3")
     }.getMessage.contains("duplicate doc_id"))
     // none of the refused mutations recorded a token or landed postings
     val gen = graft.util.IndexMaint.liveGen(path)
@@ -309,7 +309,7 @@ class LexIndexSpec extends SparkTestBase {
     // a CDC batch pairing a DELETE and an INSERT of the same id is
     // legitimate (segment-scoped: the delete covers old segments, the
     // insert postdates it) — distinctness binds only within the adds
-    assert(LexIndex.applyCdcDocs(path,
+    assert(LexIndex.applyCdcIdempotent(path,
       Seq((0L, "", "delete"), (0L, "alpha reborn", "insert"))
         .toDF("doc_id", "text", "op"), "b:4"))
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(1L, 2L))
@@ -321,8 +321,8 @@ class LexIndexSpec extends SparkTestBase {
     val d2 = (80 until 120).map(i => (i.toLong, s"alpha extra$i tail")).toDF("doc_id", "text")
     val path = tmpDir("lex_compact") + "/index"
     LexIndex.buildIndex(d1, path)
-    assert(LexIndex.appendDocsIdempotent(path, d2, "batch:c1"))
-    LexIndex.deleteDocs(spark, path, Seq(3L, 90L, 91L))
+    assert(LexIndex.appendBatchIdempotent(path, d2, "batch:c1"))
+    LexIndex.deleteIds(path, Seq(3L, 90L, 91L))
     val before = LexIndex.bm25TopK(spark, path, Seq("q" -> "alpha"), 200)
       .collect().map(_.toString).sorted.toSeq
     val statsBefore = LexIndex.liveStats(path)
@@ -344,9 +344,9 @@ class LexIndexSpec extends SparkTestBase {
     assert(LexIndex.indexData(spark, path)
       .filter(col("doc_id").isin(3L, 90L, 91L)).count() === 0L)
     // applied tokens carried: the replayed batch still no-ops
-    assert(!LexIndex.appendDocsIdempotent(path, d2, "batch:c1"))
+    assert(!LexIndex.appendBatchIdempotent(path, d2, "batch:c1"))
     // and fresh appends land on the compacted generation
-    assert(LexIndex.appendDocsIdempotent(path,
+    assert(LexIndex.appendBatchIdempotent(path,
       Seq((200L, "alpha fresh")).toDF("doc_id", "text"), "batch:c2"))
     assert(LexIndex.liveStats(path) === LexIndex.LexStats(
       statsBefore.nDocs + 1, statsBefore.sumDl + 2))
@@ -409,7 +409,7 @@ class LexIndexSpec extends SparkTestBase {
       "a bag-of-words co-occurrence without adjacency must not match; " +
         "repeated phrases must count occurrences")
     // takedowns reach phrase reads through the same one shared read
-    LexIndex.deleteDocs(spark, path, Seq(4L))
+    LexIndex.deleteIds(path, Seq(4L))
     assert(LexIndex.phraseTopK(spark, path, Seq("p" -> "alpha beta"), 10)
       .collect().map(_.getLong(2)).toSeq === Seq(1L, 5L))
     // the positional payload survives physical reclamation
@@ -643,10 +643,10 @@ class LexIndexSpec extends SparkTestBase {
     LexIndex.buildIndex(docs, path)
     // takedown (tombstones make the sidecar df an over-count), an
     // upsert (old copy tombstoned, new segment re-counts), an append
-    LexIndex.deleteDocs(spark, path, (0 until 300 by 9).map(_.toLong))
-    assert(LexIndex.upsertDocsIdempotent(path,
+    LexIndex.deleteIds(path, (0 until 300 by 9).map(_.toLong))
+    assert(LexIndex.upsertBatchIdempotent(path,
       Seq((40L, "needle needle stop dense")).toDF("doc_id", "text"), "ms:ups"))
-    assert(LexIndex.appendDocsIdempotent(path,
+    assert(LexIndex.appendBatchIdempotent(path,
       (300 until 330).map(i => (i.toLong, s"stop extra$i")).toDF("doc_id", "text"),
       "ms:app"))
     val qs = Seq("qa" -> "needle", "qa" -> "stop", "qb" -> "word3", "qb" -> "stop")
@@ -748,13 +748,13 @@ class LexIndexSpec extends SparkTestBase {
     val qs = Seq("q" -> "alpha", "q" -> "w3")
     val atPin = LexIndex.bm25TopK(spark, path, qs, 5)
       .collect().map(_.toString).sorted.toSeq
-    LexIndex.pinIndex(spark, path, "pre")
+    LexIndex.pinIndex(path, "pre")
     // every in-place mutation class, then the rewrite class
-    assert(LexIndex.appendDocsIdempotent(path,
+    assert(LexIndex.appendBatchIdempotent(path,
       (200 until 260).map(i => (i.toLong, s"alpha w3 boost$i")).toDF("doc_id", "text"),
       "pin:app"))
-    LexIndex.deleteDocs(spark, path, Seq(3L, 16L, 29L))
-    assert(LexIndex.upsertDocsIdempotent(path,
+    LexIndex.deleteIds(path, Seq(3L, 16L, 29L))
+    assert(LexIndex.upsertBatchIdempotent(path,
       Seq((42L, "alpha alpha w3 w3 rewritten")).toDF("doc_id", "text"), "pin:ups"))
     val live = LexIndex.bm25TopK(spark, path, qs, 5)
       .collect().map(_.toString).sorted.toSeq
@@ -773,9 +773,9 @@ class LexIndexSpec extends SparkTestBase {
     val (bad, notes) = graft.util.IndexMaint.fsckRoot(path)
     assert(bad.isEmpty, bad.mkString("; "))
     assert(notes.exists(_.contains("pinned")), notes.mkString("; "))
-    // the RETENTION rewrite path (deleteDocsWhere — a filtered survivor
+    // the RETENTION rewrite path (deleteWhere — a filtered survivor
     // rewrite, not a compaction) must respect the pin the same way
-    LexIndex.deleteDocsWhere(spark, path, col("doc_id") % 4 === 1)
+    LexIndex.deleteWhere(spark, path, col("doc_id") % 4 === 1)
     assert(LexIndex.bm25TopKAsOf(spark, path, "pre", qs, 5)
       .collect().map(_.toString).sorted.toSeq === atPin,
       "the pinned generation must survive the retention rewrite's reap")

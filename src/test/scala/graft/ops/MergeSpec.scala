@@ -5,7 +5,7 @@ import graft.util.IndexMaint
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
-/** Size-tiered segment merging ([[IndexFamily.mergeSmallSegments]]):
+/** Size-tiered segment merging ([[IndexFamily.mergeSegments]]):
   * the bounded-write-amplification maintenance step for streamed
   * appends. Pins, per family: serving is byte-identical across a
   * partial merge, replay tokens stay durable, per-segment tombstone
@@ -124,16 +124,16 @@ class MergeSpec extends SparkTestBase {
     val docs = (0 until 80).map(i => (i.toLong, s"alpha w$i ${if (i % 2 == 0) "beta" else "gamma"}"))
       .toDF("doc_id", "text")
     LexIndex.buildIndex(docs, path)
-    LexIndex.appendDocsIdempotent(path,
+    LexIndex.appendBatchIdempotent(path,
       (100 until 105).map(i => (i.toLong, s"alpha beta extra$i")).toDF("doc_id", "text"), "lm:a")
-    LexIndex.appendDocsIdempotent(path,
+    LexIndex.appendBatchIdempotent(path,
       (110 until 115).map(i => (i.toLong, s"alpha gamma extra$i")).toDF("doc_id", "text"), "lm:b")
     // delete docs that live in the first append — the merge must
     // reclaim them physically AND keep the scoring constants exact
-    LexIndex.deleteDocs(spark, path, Seq(101L, 102L))
-    LexIndex.appendDocsIdempotent(path,
+    LexIndex.deleteIds(path, Seq(101L, 102L))
+    LexIndex.appendBatchIdempotent(path,
       (120 until 125).map(i => (i.toLong, s"alpha beta extra$i")).toDF("doc_id", "text"), "lm:c")
-    LexIndex.appendDocsIdempotent(path,
+    LexIndex.appendBatchIdempotent(path,
       (130 until 135).map(i => (i.toLong, s"alpha gamma extra$i")).toDF("doc_id", "text"), "lm:d")
     val qs = Seq("q1" -> "alpha", "q1" -> "beta", "q2" -> "gamma")
     val statsBefore = LexIndex.liveStats(path)

@@ -322,7 +322,7 @@ class PinSpec extends SparkTestBase {
     assert(IndexMaint.readSnapshot(vecPath, "rel").isDefined)
     intercept[IllegalStateException](Ivf.pinIndex(vecPath, "rel"))
     Ivf.pinIndexIfAbsent(vecPath, "rel") // replay: no throw
-    intercept[IllegalStateException](LexIndex.pinIndex(spark, lexPath, "rel"))
-    LexIndex.pinIndexIfAbsent(spark, lexPath, "rel")
+    intercept[IllegalStateException](LexIndex.pinIndex(lexPath, "rel"))
+    LexIndex.pinIndexIfAbsent(lexPath, "rel")
   }
 }

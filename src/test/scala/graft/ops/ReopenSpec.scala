@@ -237,19 +237,19 @@ class ReopenSpec extends SparkTestBase {
     val docs = spark.read.parquet(s"$d/docs.parquet")
     val path = tmpDir("reopen_lex_ret")
     LexIndex.buildIndex(docs, path)
-    LexIndex.deleteDocsWhere(spark, path, col("doc_id") % 4 === 1,
+    LexIndex.deleteWhere(spark, path, col("doc_id") % 4 === 1,
       Some("deleteWhere|quarter"))
     val g1 = IndexMaint.liveGenOpt(path).get
     assert(IndexMaint.readSweepKeys(g1) === Set("deleteWhere|quarter"))
     // a later content-preserving commit must not lose the record
-    LexIndex.deleteDocs(spark, path, Seq(0L, 4L))
+    LexIndex.deleteIds(path, Seq(0L, 4L))
     LexIndex.compactIndex(spark, path)
     val g2 = IndexMaint.liveGenOpt(path).get
     assert(g2 !== g1)
     assert(IndexMaint.readSweepKeys(g2) === Set("deleteWhere|quarter"),
       "compaction must carry the applied-sweep record")
     // and independent sweeps compose as a set
-    LexIndex.deleteDocsWhere(spark, path, col("doc_id") % 4 === 2,
+    LexIndex.deleteWhere(spark, path, col("doc_id") % 4 === 2,
       Some("deleteWhere|half"))
     assert(IndexMaint.readSweepKeys(IndexMaint.liveGenOpt(path).get) ===
       Set("deleteWhere|quarter", "deleteWhere|half"))
@@ -262,18 +262,18 @@ class ReopenSpec extends SparkTestBase {
     val docs = spark.read.parquet(s"$d/docs.parquet")
     val path = tmpDir("reopen_lex_epoch_idx")
     LexIndex.buildIndex(docs, path)
-    LexIndex.deleteDocsWhere(spark, path, col("doc_id") % 4 === 1,
+    LexIndex.deleteWhere(spark, path, col("doc_id") % 4 === 1,
       Some("deleteWhere|epoch1"))
     // a doc appended AFTER the sweep, matching the predicate: the
     // recorded key is a one-shot receipt, not a standing policy — the
     // doc is served until a new enforcement epoch runs
-    assert(LexIndex.appendDocsIdempotent(path,
+    assert(LexIndex.appendBatchIdempotent(path,
       Seq((101L, "alpha beta late")).toDF("doc_id", "text"), "epoch:a"))
     def served(): Set[Long] = LexIndex.indexData(spark, path)
       .select("doc_id").distinct().as[Long].collect().toSet
     assert(served().contains(101L), "post-sweep append is outside the epoch")
     // the escape hatch: the same predicate under a fresh per-epoch key
-    LexIndex.deleteDocsWhere(spark, path, col("doc_id") % 4 === 1,
+    LexIndex.deleteWhere(spark, path, col("doc_id") % 4 === 1,
       Some("deleteWhere|epoch2"))
     assert(!served().contains(101L), "a fresh key re-enforces the predicate")
     assert(IndexMaint.readSweepKeys(IndexMaint.liveGenOpt(path).get) ===

@@ -621,7 +621,7 @@ class StreamingSpec extends SparkTestBase {
     assert(graft.ops.LexIndex.liveStats(path) ===
       graft.ops.LexIndex.LexStats(75L, 155L))
     // a deleted doc comes back through a later legitimate append …
-    assert(graft.ops.LexIndex.appendDocsIdempotent(path,
+    assert(graft.ops.LexIndex.appendBatchIdempotent(path,
       Seq((3L, "alpha resurrected")).toDF("doc_id", "text"), "readd:3"))
     // … and a FULL stream replay (fresh checkpoint) no-ops every token:
     // tokens survive compaction, so even the compacted delete cannot
