@@ -306,7 +306,7 @@ trait IndexFamily {
     */
   final def compactIndex(spark: SparkSession, index: Handle,
       sweepKey: Option[String] = None): Handle =
-    indexAt(pathOf(index), compactGeneration(spark, pathOf(index), None, sweepKey))
+    compactGeneration(spark, pathOf(index), None, sweepKey)
 
   /** Bulk delete by predicate — the retention/TTL path. A corpus-scale
     * removal would blow the bounded-metadata tombstone contract, so it
@@ -319,17 +319,16 @@ trait IndexFamily {
     */
   final def deleteWhere(spark: SparkSession, index: Handle, doomed: Column,
       sweepKey: Option[String] = None): Handle =
-    indexAt(pathOf(index),
-      compactGeneration(spark, pathOf(index), Some(doomed), sweepKey))
+    compactGeneration(spark, pathOf(index), Some(doomed), sweepKey)
 
   /** Re-land the live generation as ONE segment with tombstoned rows
     * (and `doomed` matches, if given) physically dropped — compaction
     * and the corpus-scale `deleteWhere` retention rewrite are the SAME
     * protocol with and without the predicate. Returns the committed
-    * generation path.
+    * generation's handle.
     */
   private def compactGeneration(spark: SparkSession, path: String,
-      doomed: Option[Column], sweepKey: Option[String]): String =
+      doomed: Option[Column], sweepKey: Option[String]): Handle =
     IndexMaint.withMutation(path,
       op = if (doomed.isDefined) "deleteWhere" else "compact") {
       val gen = IndexMaint.liveGen(path)
@@ -363,7 +362,7 @@ trait IndexFamily {
       if (sweeps.nonEmpty) IndexMaint.writeSweepKeys(stage, sweeps)
       val committed = IndexMaint.commitGeneration(path, stage)
       afterCommit(path)
-      committed
+      indexAt(path, committed)
     }
 
   // ---- tiered segment merge ---------------------------------------------------

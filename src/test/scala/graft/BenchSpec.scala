@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class BenchSpec extends AnyFunSuite {
 
   private val names = SparkEntry.queries.keys.toSeq
-  private val run = Bench.Run("/root/testdata/sf0.1", 2.5, Seq(1.3, 1.4),
+  private val run = Bench.Run("testdata/sf0.1", 2.5, Seq(1.3, 1.4),
     Seq(2900L, 2950L), Nil)
 
   private def shown(line: String): Seq[String] = {
