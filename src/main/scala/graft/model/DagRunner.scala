@@ -91,15 +91,14 @@ object DagRunner {
     * dbt), so this returns the set-equal executed names in completion
     * order; use `run` when side-effect ordering must be canonical.
     *
-    * Caveat (same as dbt without warehouse transactions): two CONCURRENT
-    * nodes must not write the same tracking table — the parquet
-    * tmp-dir/rename swap and the numbered task-row commit are atomic per
-    * writer, not serialized across writers. Depending on a shared
-    * tracking table does not order two models: accounts_load and
-    * churned_accounts both depend on the sfdc tables and are still
-    * siblings. Models that write one tracking table need an explicit
-    * edge between them, as ReferenceIntegrationSpec chains its three
-    * Salesforce models.
+    * Concurrent nodes may write the same tracking table: every write to
+    * one takes the table's lease, so the writes of sibling models (such
+    * as accounts_load and churned_accounts, which share the sfdc tables
+    * without an edge between them) serialize per write, as transactions
+    * on the reference's warehouse tables do. The lease orders single
+    * writes, not whole runs: two models' log rows and task rows
+    * interleave in the tables. A push's connector calls run inside its
+    * log append, so sibling pushes into one log table take turns there.
     */
   def runParallel(spark: SparkSession, nodes: Seq[DagNode], threads: Int = 4): Seq[String] = {
     order(nodes) // validate names/cycles up front with the same errors

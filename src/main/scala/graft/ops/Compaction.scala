@@ -11,8 +11,8 @@ import graft.util.AtomicSwap
   * partition; at scale that murders scan planning (one task per tiny
   * file, listing/NameNode pressure, per-file row-group overhead).
   * Compaction rewrites a directory into ~`targetBytes` files and swaps
-  * the result in with [[graft.util.AtomicSwap]] — the same discipline
-  * `tracking.TrackingTable` uses, shared rather than re-implemented.
+  * the result in with [[graft.util.AtomicSwap]], so the directory stays
+  * a plain Parquet (or Hive-layout) directory any reader can scan.
   *
   * Design:
   *  - file PLANNING is driver-side metadata work: the input listing

@@ -234,10 +234,9 @@ object Relational {
   /** Ref: salesforce_bulk_load.sql:52-56 — `update tasks set close_metadata
     * = f(...) from tmp where job_id = METADATA:"id"`. Spark/Parquet has no
     * in-place update: read target, left-join the update source, coalesce
-    * the new value, rewrite (TrackingTable.updateJoin does that with an
-    * atomic swap; this query exposes the post-update relation). The push
-    * pipeline stamps its one task row without a rewrite: it upserts the
-    * stamped row as a driver-local commit.
+    * the new value, rewrite; this query exposes the post-update relation.
+    * The push pipeline stamps its one task row without a rewrite: it
+    * upserts the stamped row as a driver-local commit.
     */
   def j3UpdateJoin(spark: SparkSession, dir: String): DataFrame = {
     val c = Catalog(spark, dir)

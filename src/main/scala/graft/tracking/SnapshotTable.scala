@@ -1,11 +1,9 @@
 package graft.tracking
 
 import java.sql.Timestamp
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.util.AtomicSwap
 
 /** dbt-snapshot materialization (SCD type 2, `check` strategy) — the
   * remaining dbt table-with-history surface next to the reference's
@@ -27,6 +25,12 @@ import graft.util.AtomicSwap
   * partitioned so only key-ranges present in `incoming` rewrite, with
   * identical join/interval semantics.
   *
+  * Storage is a [[TableRoot]], as for [[TrackingTable]]: each `snapshot`
+  * and `pruneHistory` runs under the table's lease, reads the live
+  * generation and commits its result as a new one, so the plan never
+  * overwrites its own input and a crash before the pointer flip leaves
+  * the previous history live.
+  *
   * Change detection is null-safe equality (`<=>`) over `checkCols`, so a
   * NULL→value or value→NULL transition counts as a change, like dbt's
   * column-comparison predicate.
@@ -37,26 +41,13 @@ final class SnapshotTable(
     val keyCol: String,
     val checkCols: Seq[String]) {
 
-  private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def dataPath = new Path(path, "data")
+  private val root = new TableRoot(spark, path)
 
-  /** Restores the data left as backup by a swap that crashed between its
-    * two renames, so a crash never reads as "no table yet".
+  /** The live generation's rows; its schema comes from the sidecar, so a
+    * read runs no Spark job.
     */
-  def exists: Boolean = {
-    AtomicSwap.recover(fs, dataPath)
-    fs.exists(dataPath)
-  }
-
-  /** Schema from the sidecar [[SchemaSidecar]] writes with every
-    * snapshot, so a read runs no Spark job; a table written before
-    * sidecars existed is inferred from its footers.
-    */
-  def read(): DataFrame = {
-    AtomicSwap.recover(fs, dataPath)
-    SchemaSidecar.read(spark, dataPath).fold(spark.read)(s => spark.read.schema(s))
-      .parquet(dataPath.toString)
-  }
+  def read(): DataFrame = root.read(root.current.getOrElse(
+    throw new IllegalStateException(s"$path holds no snapshot yet")))
 
   /** Time travel — the point of keeping SCD2 history: the table exactly
     * as it stood at `ts` (rows whose interval covers it). A pure filter,
@@ -73,55 +64,46 @@ final class SnapshotTable(
     * only the depth of recoverable history shrinks (the SCD2 analogue
     * of VACUUM retention).
     */
-  def pruneHistory(horizon: Timestamp): Unit = {
-    if (!exists) return
-    val kept = read().localCheckpoint()
-      .filter(col("valid_to").isNull || col("valid_to") >= lit(horizon))
-    atomicWrite(kept)
-  }
+  def pruneHistory(horizon: Timestamp): Unit = root.mutate("pruneHistory")(_.foreach { gen =>
+    root.commitRows(root.read(gen)
+      .filter(col("valid_to").isNull || col("valid_to") >= lit(horizon)))
+  })
 
   private def withValidity(df: DataFrame, from: Timestamp): DataFrame =
     df.withColumn("valid_from", lit(from).cast(TimestampType))
       .withColumn("valid_to", lit(null).cast(TimestampType))
 
-  def snapshot(incoming0: DataFrame, asOf: Timestamp): Unit = {
+  def snapshot(incoming0: DataFrame, asOf: Timestamp): Unit = root.mutate("snapshot") { gen =>
     val incoming = incoming0.select((keyCol +: checkCols).map(col): _*)
-    if (!exists) {
-      atomicWrite(withValidity(incoming, asOf))
-      return
+    if (gen.isEmpty) root.commitRows(withValidity(incoming, asOf))
+    else {
+      val existing = root.read(gen.get)
+      val history = existing.filter(col("valid_to").isNotNull)
+      val current = existing.filter(col("valid_to").isNull)
+
+      val in = incoming.select(
+        col(keyCol).as("__k") +: checkCols.map(c => col(c).as(s"__in_$c")): _*)
+      val joined = current.join(in, col(keyCol) === col("__k"), "full_outer")
+      val changed = checkCols
+        .map(c => !(col(c) <=> col(s"__in_$c")))
+        .reduce(_ || _)
+
+      // current rows: keep as-is unless the incoming batch changed them
+      val keptOrClosed = joined.filter(col(keyCol).isNotNull)
+        .select(
+          (col(keyCol) +: checkCols.map(col)) :+
+            col("valid_from") :+
+            when(col("__k").isNotNull && changed, lit(asOf).cast(TimestampType))
+              .otherwise(col("valid_to")).as("valid_to"): _*)
+      // incoming rows that open a new interval: brand-new keys, or keys
+      // whose current row was just closed
+      val opened = joined.filter(col("__k").isNotNull &&
+          (col(keyCol).isNull || changed))
+        .select(col("__k").as(keyCol) +: checkCols.map(c => col(s"__in_$c").as(c)): _*)
+
+      root.commitRows(history
+        .unionByName(keptOrClosed)
+        .unionByName(withValidity(opened, asOf)))
     }
-    val existing = read().localCheckpoint() // the plan below overwrites its own input
-    val history = existing.filter(col("valid_to").isNotNull)
-    val current = existing.filter(col("valid_to").isNull)
-
-    val in = incoming.select(
-      col(keyCol).as("__k") +: checkCols.map(c => col(c).as(s"__in_$c")): _*)
-    val joined = current.join(in, col(keyCol) === col("__k"), "full_outer")
-    val changed = checkCols
-      .map(c => !(col(c) <=> col(s"__in_$c")))
-      .reduce(_ || _)
-
-    // current rows: keep as-is unless the incoming batch changed them
-    val keptOrClosed = joined.filter(col(keyCol).isNotNull)
-      .select(
-        (col(keyCol) +: checkCols.map(col)) :+
-          col("valid_from") :+
-          when(col("__k").isNotNull && changed, lit(asOf).cast(TimestampType))
-            .otherwise(col("valid_to")).as("valid_to"): _*)
-    // incoming rows that open a new interval: brand-new keys, or keys
-    // whose current row was just closed
-    val opened = joined.filter(col("__k").isNotNull &&
-        (col(keyCol).isNull || changed))
-      .select(col("__k").as(keyCol) +: checkCols.map(c => col(s"__in_$c").as(c)): _*)
-
-    atomicWrite(history
-      .unionByName(keptOrClosed)
-      .unionByName(withValidity(opened, asOf)))
   }
-
-  /** The swap TrackingTable uses ([[AtomicSwap]]): the full result, with
-    * its schema sidecar, lands before the live data is touched.
-    */
-  private def atomicWrite(df: DataFrame): Unit =
-    AtomicSwap.swapIn(fs, dataPath)(SchemaSidecar.writeTable(df, _))
 }

@@ -1,5 +1,6 @@
 package graft.tracking
 
+import java.nio.file.{Files, Paths}
 import scala.util.Using
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -17,7 +18,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
-import graft.util.AtomicSwap
+import graft.util.{Fs, IndexMaint}
 
 /** Storage-agnostic tracking-table contract: the seam a caller wraps
   * around a [[TrackingTable]] (timing, fault injection, a future
@@ -44,55 +45,54 @@ trait TrackingStore {
   * column-type widening before each upsert
   * (`adapter.expand_target_column_types`, `:31-33`).
   *
-  * Storage layout, all under `path`:
-  *  - `data/` holds the rows as Parquet files, plus the schema sidecar
-  *    `data/_common_metadata` ([[SchemaSidecar]]): a footer-only Parquet
-  *    summary file carrying the table's schema, the way the reference
-  *    declares each tracking table's columns up front
-  *    (`sfdc_load_tasks.sql:7-17`). `read()` takes the schema from it, so
-  *    neither create nor read runs a Spark job; a plain
-  *    `spark.read.parquet` of `data/` infers the schema from it too, even
-  *    while the table has no rows.
-  *  - The data files are plain part files (written by Spark) and
-  *    numbered commit files `commit-<n>.parquet` (written by the driver,
-  *    see below). A commit is staged as `data/.commit-<n>.parquet.tmp`
-  *    and renamed in, so a crash before the rename leaves only a
-  *    dot-file that no reader lists and the next commit overwrites.
-  *  - `.data.swap_tmp` / `.data.swap_old` are the staging and backup
-  *    siblings of [[graft.util.AtomicSwap]], present only mid-write.
+  * Storage layout: `path` is a [[TableRoot]], a root of
+  * [[graft.util.IndexMaint]] generations plus the live pointer and the
+  * lease file. The live generation holds the rows as Parquet files, plus
+  * the schema sidecar `_common_metadata` ([[SchemaSidecar]]): a
+  * footer-only Parquet summary file carrying the table's schema, the way
+  * the reference declares each tracking table's columns up front
+  * (`sfdc_load_tasks.sql:7-17`). `read()` takes the schema from it, so
+  * neither create nor read runs a Spark job; a plain `spark.read.parquet`
+  * of the live generation infers the schema from it too, even while the
+  * table has no rows. The data files are plain part files (written by
+  * Spark) and numbered commit files `commit-<n>.parquet` (written by the
+  * driver, see below). A commit file is staged as `.commit-<n>.parquet.tmp`
+  * and renamed in, so a crash before the rename leaves only a dot-file
+  * that no reader lists and the next commit overwrites.
   *
   * Resolution: `read()` keeps, for each non-null key, only the rows of
   * the highest-numbered file that holds that key; a plain file counts as
   * commit 0, and rows with a null key are all kept (they never match, as
   * in the reference's delete-then-insert). It resolves only while
   * numbered files exist, so a table that never took a driver commit (the
-  * log tables) reads as a plain scan. A plain `spark.read.parquet` of
-  * `data/` does not resolve: on a task table it also shows the rows
-  * that later commits superseded.
+  * log tables) reads as a plain scan. A plain scan of the live generation
+  * does not resolve: on a task table it also shows the rows that later
+  * commits superseded.
   *
-  * Which paths write what:
+  * Every write runs under the root's lease, so concurrent writers
+  * serialize. Which writes do what:
   *  - An `upsert` whose incoming frame is local to the driver (its
   *    optimized plan is a `LocalRelation`, as for the one task row a
   *    push creates or stamps) and needs no widening commits its rows as
-  *    one new numbered file from the driver: no Spark job, no join, no
-  *    swap, and no existing file is touched. This is the reference's
-  *    one-row `insert into` / `update … from` on a task table
-  *    (`salesforce_bulk_load.sql:21-31,51-56`).
+  *    one new numbered file in the live generation, from the driver: no
+  *    Spark job, no join, and no existing file is touched. This is the
+  *    reference's one-row `insert into` / `update … from` on a task
+  *    table (`salesforce_bulk_load.sql:21-31,51-56`).
   *  - A non-widening `append` to a table without numbered files only
-  *    adds part files; the schema, hence the sidecar, stays.
-  *  - Everything else rewrites the whole table through the resolving
-  *    read into the staging dir, sidecar included, and swaps it in with
-  *    renames (the Spark/Parquet analogue of the reference's
-  *    backup-rename dance, `:19-27`), leaving a plain table: a
-  *    non-local or widening `upsert`, `updateJoin`, `compact`, a widening
-  *    `append` or one to a table that holds numbered files, and an
-  *    upsert that finds [[TrackingTable.FoldAt]] numbered files already
-  *    present, which folds them so the file count stays bounded.
-  *  - `createIfMissing` stages an empty dir holding only the sidecar and
-  *    renames it in; `fullRefresh` deletes the table and creates it
-  *    afresh.
+  *    adds part files to the live generation; the schema, hence the
+  *    sidecar, stays.
+  *  - Everything else writes the whole table through the resolving read
+  *    into a new generation, sidecar included, and commits it by the
+  *    pointer flip (the analogue of the reference's backup-rename dance,
+  *    `:19-27`), leaving a plain table: a non-local or widening `upsert`,
+  *    `compact`, a widening `append` or one to a table that holds
+  *    numbered files, and an upsert that finds [[TrackingTable.FoldAt]]
+  *    numbered files already present, which folds them so the file count
+  *    stays bounded.
+  *  - `createIfMissing` commits a generation holding only the sidecar;
+  *    `fullRefresh` commits such an empty generation over the live one.
   * On a real deployment this class is the seam where Delta/Iceberg MERGE
-  * slots in; the public API (`createIfMissing / upsert / updateJoin /
+  * slots in; the public API (`createIfMissing / upsert / append /
   * fullRefresh`) is storage-agnostic.
   *
   * Scale: a rewriting upsert is `existing LEFT ANTI incoming UNION
@@ -108,24 +108,28 @@ final class TrackingTable(
     val uniqueKey: String) extends TrackingStore {
   import TrackingTable.{CommitFile, FoldAt}
 
+  private val root = new TableRoot(spark, path)
   private def fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def dataPath = new Path(path, "data")
 
-  def exists: Boolean = fs.exists(dataPath)
+  def exists: Boolean = root.current.isDefined
+
+  /** Runs `f` on the live generation under the lease, creating it first. */
+  private def mutate[A](op: String)(f: String => A): A =
+    root.mutate(op)(gen => f(gen.getOrElse(root.commitEmpty(schema))))
 
   /** Ref `:17-18`: first run creates the (empty-schema) table. */
-  def createIfMissing(): Unit = liveSchema()
+  def createIfMissing(): Unit = if (root.live.isEmpty) mutate("create")(_ => ())
 
   def read(): DataFrame = {
-    val live = liveSchema()
-    resolved(live, commits())
+    val gen = root.live.getOrElse(mutate("create")(identity))
+    resolved(gen, root.schema(gen), commits(gen))
   }
 
-  /** The table's rows under `live`, resolved while `numbered` commits
-    * exist (see the class doc).
+  /** The rows of generation `gen` under `live`, resolved while `numbered`
+    * commits exist (see the class doc).
     */
-  private def resolved(live: StructType, numbered: Seq[Long]): DataFrame = {
-    val df = spark.read.schema(live).parquet(dataPath.toString)
+  private def resolved(gen: String, live: StructType, numbered: Seq[Long]): DataFrame = {
+    val df = spark.read.schema(live).parquet(gen)
     if (numbered.isEmpty) df
     else {
       val n = regexp_extract(col("_metadata.file_name"), CommitFile.regex, 1)
@@ -136,44 +140,26 @@ final class TrackingTable(
     }
   }
 
-  /** The numbers of the commit files in `data/`; one driver-side listing. */
-  private def commits(): Seq[Long] =
-    fs.listStatus(dataPath).toSeq.map(_.getPath.getName).collect { case CommitFile(n) => n }
-
-  /** The table's current schema, creating the table first if missing.
-    * A crash between a previous swap's two renames leaves the live dir
-    * absent but the backup present — restore it FIRST, or `exists` would
-    * be false and a fresh empty table would shadow (and permanently
-    * strand) the backup. Creating stages an empty dir plus the sidecar
-    * and renames it in (a create that crashed before its rename leaves
-    * only staging, which the next swap clears). A table written before
-    * sidecars existed gets one, from its footers, on first touch.
-    */
-  private def liveSchema(): StructType = {
-    AtomicSwap.recover(fs, dataPath)
-    if (!exists) AtomicSwap.swapIn(fs, dataPath)(tmp => SchemaSidecar.write(spark, tmp, schema))
-    SchemaSidecar.read(spark, dataPath).getOrElse {
-      val inferred = spark.read.parquet(dataPath.toString).schema
-      SchemaSidecar.write(spark, dataPath, inferred)
-      inferred
-    }
-  }
+  /** The numbers of the commit files in `gen`; one driver-side listing. */
+  private def commits(gen: String): Seq[Long] =
+    fs.listStatus(new Path(gen)).toSeq.map(_.getPath.getName).collect { case CommitFile(n) => n }
 
   /** Ref `:19-27`: explicit rebuild (the `drop-omnata-task-tables` branch). */
-  def fullRefresh(): Unit = {
-    if (fs.exists(new Path(path))) fs.delete(new Path(path), true)
-    createIfMissing()
-  }
+  def fullRefresh(): Unit = root.mutate("fullRefresh")(_ => root.commitEmpty(schema))
 
   /** Widen target types so incoming data fits — ref `:31-33`
     * (`expand_target_column_types`). String stays string (Spark strings
-    * are unbounded); numeric widenings follow the standard lattice.
+    * are unbounded); numeric widenings follow the standard lattice. Two
+    * decimals widen to the larger integer-digit count plus the larger
+    * scale, capped at 38 digits, as Spark's own wider-decimal rule does.
     */
   private[tracking] def widen(existing: StructType, incoming: StructType): StructType = {
     def wider(a: DataType, b: DataType): DataType = (a, b) match {
       case (x, y) if x == y => x
       case (d1: DecimalType, d2: DecimalType) =>
-        DecimalType(math.max(d1.precision, d2.precision), math.max(d1.scale, d2.scale))
+        val scale = math.max(d1.scale, d2.scale)
+        val digits = math.max(d1.precision - d1.scale, d2.precision - d2.scale)
+        DecimalType(math.min(digits + scale, DecimalType.MAX_PRECISION), scale)
       case (IntegerType, LongType) | (LongType, IntegerType) => LongType
       case (FloatType, DoubleType) | (DoubleType, FloatType) => DoubleType
       case (i, DoubleType) if Seq(IntegerType, LongType, FloatType).contains(i) => DoubleType
@@ -195,9 +181,9 @@ final class TrackingTable(
     * while fewer than [[TrackingTable.FoldAt]] exist; otherwise the table
     * is rewritten (see the class doc).
     */
-  def upsert(incoming: DataFrame): Unit = {
-    val live = liveSchema()
-    val numbered = commits()
+  def upsert(incoming: DataFrame): Unit = mutate("upsert") { gen =>
+    val live = root.schema(gen)
+    val numbered = commits(gen)
     val widened = widen(live, incoming.schema)
     val in = conform(incoming, widened)
     val local = if (widened != live || numbered.size >= FoldAt) None
@@ -208,12 +194,12 @@ final class TrackingTable(
     local match {
       case Some(rows) =>
         if (rows.nonEmpty)
-          SchemaSidecar.writeFile(spark, dataPath, CommitFile.name(numbered.maxOption.getOrElse(0L) + 1),
+          SchemaSidecar.writeFile(spark, new Path(gen), CommitFile.name(numbered.maxOption.getOrElse(0L) + 1),
             live, rows)
       case None =>
-        val kept = conform(resolved(live, numbered), widened)
+        val kept = conform(resolved(gen, live, numbered), widened)
           .join(in.select(col(uniqueKey)), Seq(uniqueKey), "left_anti")
-        atomicWrite(kept.unionByName(in))
+        root.commitRows(kept.unionByName(in))
     }
   }
 
@@ -228,14 +214,14 @@ final class TrackingTable(
     * does an append to a table holding numbered commits: a plain file
     * counts as commit 0, so its rows would hide behind theirs.
     */
-  def append(incoming: DataFrame): Unit = {
-    val live = liveSchema()
-    val numbered = commits()
+  def append(incoming: DataFrame): Unit = mutate("append") { gen =>
+    val live = root.schema(gen)
+    val numbered = commits(gen)
     val widened = widen(live, incoming.schema)
     if (widened == live && numbered.isEmpty)
-      conform(incoming, widened).write.mode("append").parquet(dataPath.toString)
+      conform(incoming, widened).write.mode("append").parquet(gen)
     else
-      atomicWrite(conform(resolved(live, numbered), widened).unionByName(conform(incoming, widened)))
+      root.commitRows(conform(resolved(gen, live, numbered), widened).unionByName(conform(incoming, widened)))
   }
 
   /** Project `df` onto `target`: matching columns (case-insensitive) are
@@ -246,39 +232,66 @@ final class TrackingTable(
       (if (df.columns.exists(_.equalsIgnoreCase(f.name))) col(f.name).cast(f.dataType)
       else lit(null).cast(f.dataType)).as(f.name)): _*)
 
-  /** Update-with-join (A6) — ref `salesforce_bulk_load.sql:52-56`:
-    * `update t set col = f(u.*) from u where t.key = u.key`. `updates`
-    * must carry `uniqueKey` plus the columns to stamp; unmatched target
-    * rows keep their values.
-    */
-  def updateJoin(updates: DataFrame, setCols: Seq[String]): Unit = {
-    val existing = read()
-    val u = updates.select((uniqueKey +: setCols).map(col): _*)
-      .withColumnsRenamed(setCols.map(c => c -> s"__new_$c").toMap)
-    val updated = existing.join(u, Seq(uniqueKey), "left")
-      .select(existing.columns.map { c =>
-        if (setCols.contains(c)) coalesce(col(s"__new_$c"), col(c)).as(c) else col(c)
-      }.toSeq: _*)
-    atomicWrite(updated)
-  }
-
   /** Data-identical rewrite into max(1, bytes/128MB) files. */
-  def compact(): Unit = {
-    if (!exists) return
-    val bytes = fs.getContentSummary(dataPath).getLength
-    val nFiles = math.max(1L, bytes / (128L << 20)).toInt
-    atomicWrite(read().repartition(nFiles))
+  def compact(): Unit = if (exists) mutate("compact") { gen =>
+    val nFiles = math.max(1L, fs.getContentSummary(new Path(gen)).getLength / (128L << 20)).toInt
+    root.commitRows(resolved(gen, root.schema(gen), commits(gen)).repartition(nFiles))
+  }
+}
+
+/** The storage of [[TrackingTable]] and [[SnapshotTable]]: `path` is a
+  * root of [[graft.util.IndexMaint]] generations, each a plain Parquet
+  * directory with its schema sidecar. Writes run under the root's lease
+  * ([[mutate]]); a whole-table write commits a new generation
+  * ([[commitRows]]), so a crash leaves the previous one live. Reads take no
+  * lease. A table in the earlier `<path>/data` layout is adopted on first
+  * touch: copied into a generation, committed, and only then deleted.
+  */
+private[tracking] final class TableRoot(spark: SparkSession, path: String) {
+  private val legacy = Paths.get(path, "data")
+
+  /** The live generation; None while the table never committed one. */
+  def live: Option[String] = IndexMaint.liveGenOpt(path)
+
+  /** [[live]], adopting a table still in the `data/` layout first. */
+  def current: Option[String] =
+    if (live.isDefined || !Files.isDirectory(legacy)) live else mutate("adopt")(identity)
+
+  /** Runs `f` on the live generation (None: no table yet) under the
+    * root's lease, adopting a `data/` table first. `f` must not call
+    * `mutate` again: leases never nest.
+    */
+  def mutate[A](op: String)(f: Option[String] => A): A = IndexMaint.withMutation(path, op) {
+    val gen = live.orElse(if (Files.isDirectory(legacy)) Some(commit(adopt)) else None)
+    Fs.deleteRecursively(legacy.toString) // adopted, now or before a crash
+    f(gen)
   }
 
-  /** Rewrite via the shared scratch-dir + rename swap
-    * ([[graft.util.AtomicSwap]]; the Parquet analogue of the reference's
-    * backup-rename at `:19-27`). The plan is materialized to the scratch
-    * dir BEFORE the old data is touched, so a failed write never
-    * corrupts the table, and a crash between the swap's renames is
-    * repaired on the next read/write cycle.
+  private def adopt(stage: Path): Unit = {
+    Fs.copyRecursively(legacy.toString, stage.toString)
+    if (SchemaSidecar.read(spark, stage).isEmpty)
+      SchemaSidecar.write(spark, stage, spark.read.parquet(stage.toString).schema)
+  }
+
+  def schema(gen: String): StructType = SchemaSidecar.read(spark, new Path(gen))
+    .getOrElse(throw new IllegalStateException(s"$gen has no schema sidecar"))
+
+  def read(gen: String): DataFrame = spark.read.schema(schema(gen)).parquet(gen)
+
+  /** Commits what `write` stages as the live generation; returns its
+    * path. Callers hold the lease ([[mutate]]).
     */
-  private def atomicWrite(df: DataFrame): Unit =
-    AtomicSwap.swapIn(fs, dataPath)(SchemaSidecar.writeTable(df, _))
+  private def commit(write: Path => Unit): String = {
+    val stage = IndexMaint.newStageDir(path, "write")
+    write(new Path(stage))
+    IndexMaint.commitGeneration(path, stage)
+  }
+
+  /** `df` committed as the new live generation. */
+  def commitRows(df: DataFrame): String = commit(SchemaSidecar.writeTable(df, _))
+
+  /** A generation with no rows, holding only `schema`'s sidecar. */
+  def commitEmpty(schema: StructType): String = commit(SchemaSidecar.write(spark, _, schema))
 }
 
 /** The schema sidecar of a tracking-layer table directory: a Parquet

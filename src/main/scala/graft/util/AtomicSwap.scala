@@ -2,8 +2,8 @@ package graft.util
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Shared rewrite-and-swap discipline for directory-shaped tables
-  * (used by `tracking.TrackingTable` and `ops.Compaction`): materialize
+/** Rewrite-and-swap discipline for plain directory-shaped tables (used
+  * by `ops.Compaction`, whose directories must stay plain): materialize
   * the new contents to a scratch sibling FIRST, then rename the live
   * directory aside and the scratch in. A failed write never touches the
   * live data; the only non-atomic exposure is the instant between the

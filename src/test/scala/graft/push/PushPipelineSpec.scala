@@ -3,6 +3,8 @@ package graft.push
 import graft.SparkTestBase
 import graft.connector.{MockSalesforceBulkApi, MockSfmcApi}
 import graft.model._
+import graft.tracking.TrackingTable
+import graft.util.IndexMaint
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -13,8 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 class PushPipelineSpec extends SparkTestBase {
 
-  private def accountsModel(tracking: String): PushModel = PushModel(
-    name = "accounts_load",
+  private def accountsModel(tracking: String, name: String = "accounts_load"): PushModel = PushModel(
+    name = name,
     config = SalesforceConfig("Account", "upsert", Some("AccountID__c")),
     build = (s: SparkSession) => {
       // Ref accounts_load.sql:14-30 — RECORD construction + incremental
@@ -23,11 +25,11 @@ class PushPipelineSpec extends SparkTestBase {
         .select(to_json(struct(
           col("c_name").as("Name"),
           col("c_custkey").cast("string").as("AccountID__c"))).as("record"))
-      val logsPath = new java.io.File(s"$tracking/sfdc_load_task_logs/data")
-      if (!logsPath.exists()) recs
+      val logTable = TrackingTable.sfdcLoadTaskLogs(s, tracking)
+      if (!logTable.exists) recs
       else {
-        val logs = s.read.parquet(logsPath.toString)
-          .filter(col("load_task_name") === "accounts_load" &&
+        val logs = logTable.read()
+          .filter(col("load_task_name") === name &&
             get_json_object(col("result"), "$.success") === "true")
           .select(get_json_object(col("record"), "$.AccountID__c").as("logged_id"))
         recs.join(logs,
@@ -51,8 +53,8 @@ class PushPipelineSpec extends SparkTestBase {
     assert(task.getAs[String]("close_metadata") != null, "close_metadata must be stamped (A6)")
     assert(task.getAs[String]("operation") === "upsert")
     // the open row and its stamp are two commits: a plain scan of the
-    // data dir still shows both, with one creation_time
-    val versions = spark.read.parquet(s"$base/sfdc_load_tasks/data")
+    // live generation still shows both, with one creation_time
+    val versions = spark.read.parquet(IndexMaint.liveGen(s"$base/sfdc_load_tasks"))
       .select(col("close_metadata").isNull, col("creation_time")).collect()
     assert(versions.map(_.getBoolean(0)).sorted.toSeq === Seq(false, true) &&
       versions.map(_.get(1)).distinct.length === 1 && task.get(task.fieldIndex("creation_time")) === versions(0).get(1),
@@ -81,6 +83,20 @@ class PushPipelineSpec extends SparkTestBase {
     val mat = new PushMaterializer(spark, base, new MockSalesforceBulkApi(), new MockSfmcApi())
     val jobs = jobsDuring(mat.run(accountsModel(base)))
     assert(jobs <= 5, s"one push ran $jobs Spark jobs")
+  }
+
+  test("two Salesforce models sharing the sfdc tables run as parallel siblings without an edge") {
+    val base = tmpDir("push")
+    val mat = new PushMaterializer(spark, base, new MockSalesforceBulkApi(), new MockSfmcApi())
+    val n = spark.read.parquet(s"$sf/customer.parquet").count()
+    val models = Seq("accounts_load", "accounts_copy").map(accountsModel(base, _))
+    DagRunner.runParallel(spark, models.map(m => DagNode(m.name, Set.empty, s => mat.run(m))))
+    val logged = mat.sfdcLogs.read().groupBy("load_task_name").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(logged === Map("accounts_load" -> n, "accounts_copy" -> n))
+    val tasks = mat.sfdcTasks.read().collect()
+    assert(tasks.map(_.getAs[String]("load_task_name")).sorted.toSeq === Seq("accounts_copy", "accounts_load"))
+    assert(tasks.forall(_.getAs[String]("close_metadata") != null), "each task row must be stamped")
   }
 
   test("dropTaskTables rebuilds the tracking tables; the next run re-pushes everything") {

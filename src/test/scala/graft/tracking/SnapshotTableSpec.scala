@@ -1,8 +1,9 @@
 package graft.tracking
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import graft.SparkTestBase
-import graft.util.AtomicSwap
+import graft.util.IndexMaint
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
@@ -42,20 +43,32 @@ class SnapshotTableSpec extends SparkTestBase {
       (4L, "D", t2, None)))
   }
 
-  test("a swap that crashed between its two renames keeps the history") {
+  test("a generation moved in but never pointed to keeps the history") {
     val s = snap()
     s.snapshot(Seq((1L, "A", 10), (2L, "B", 20)).toDF("id", "seg", "score"), t1)
     s.snapshot(Seq((1L, "A2", 10), (2L, "B", 20)).toDF("id", "seg", "score"), t2)
-    // the crash: live data renamed to the backup, the new data not yet in
-    val data = new Path(s.path, "data")
-    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(data, AtomicSwap.backupFor(data)))
+    // the crash: the next generation (here one without rows) was moved
+    // in next to the live one, the pointer flip never ran
+    val live = Paths.get(IndexMaint.liveGen(s.path))
+    val orphan = live.resolveSibling(f"gen-${live.getFileName.toString.stripPrefix("gen-").toLong + 1}%09d")
+    Files.createDirectory(orphan)
+    SchemaSidecar.write(spark, new Path(orphan.toString), s.read().schema)
+    assert(s.read().count() === 3)
     s.snapshot(Seq((1L, "A2", 10), (2L, "B2", 20)).toDF("id", "seg", "score"), t3)
     val rows = s.read().orderBy("id", "valid_from").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getTimestamp(3), Option(r.getTimestamp(4))))
     assert(rows === Array(
       (1L, "A", t1, Some(t2)), (1L, "A2", t2, None),
       (2L, "B", t1, Some(t3)), (2L, "B2", t3, None)))
+    assert(!Files.exists(orphan), "the next commit reaps the orphan")
+  }
+
+  test("a second snapshot runs at most 3 Spark jobs") {
+    val s = snap()
+    s.snapshot(Seq((1L, "A", 10), (2L, "B", 20)).toDF("id", "seg", "score"), t1)
+    val jobs = jobsDuring(s.snapshot(Seq((1L, "A2", 10), (3L, "C", 30)).toDF("id", "seg", "score"), t2))
+    assert(jobs <= 3, s"the second snapshot ran $jobs Spark jobs")
+    assert(s.read().count() === 4)
   }
 
   test("re-running the identical batch is a no-op (idempotent snapshots)") {

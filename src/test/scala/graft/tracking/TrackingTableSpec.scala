@@ -1,7 +1,7 @@
 package graft.tracking
 
 import graft.SparkTestBase
-import graft.util.AtomicSwap
+import graft.util.IndexMaint
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -16,6 +16,9 @@ class TrackingTableSpec extends SparkTestBase {
     StructField("note", StringType)))
 
   private def table() = new TrackingTable(spark, tmpDir("tt"), schema, "k")
+
+  /** The table's live generation directory. */
+  private def liveDir(t: TrackingTable) = new java.io.File(IndexMaint.liveGen(t.path))
 
   test("createIfMissing yields an empty relation with the declared schema") {
     val t = table()
@@ -35,7 +38,7 @@ class TrackingTableSpec extends SparkTestBase {
   test("append keeps duplicates and never rewrites existing files (the log-table insert path)") {
     val t = table()
     t.append(Seq(("a", 1, "x")).toDF("k", "v", "note"))
-    val dataDir = new java.io.File(t.path, "data")
+    val dataDir = liveDir(t)
     val before = dataDir.listFiles().filter(_.getName.endsWith(".parquet"))
       .map(f => f.getName -> f.lastModified()).toMap
     Thread.sleep(20)
@@ -69,27 +72,33 @@ class TrackingTableSpec extends SparkTestBase {
     assert(out.filter(col("k") === "a").head().getLong(1) === 1L)
   }
 
-  test("updateJoin stamps matched rows and preserves the rest (A6)") {
-    val t = table()
-    t.upsert(Seq(("a", 1, null), ("b", 2, null)).toDF("k", "v", "note"))
-    t.updateJoin(Seq(("a", "closed")).toDF("k", "note"), Seq("note"))
-    val out = t.read().orderBy("k").collect()
-    assert(out(0).getString(2) === "closed")
-    assert(out(1).isNullAt(2))
+  test("a widening decimal upsert keeps the integer digits of both sides") {
+    val t = new TrackingTable(spark, tmpDir("tt"), StructType(Seq(
+      StructField("k", StringType), StructField("d", DecimalType(10, 2)))), "k")
+    t.upsert(Seq(("a", BigDecimal("12345678.90"))).toDF("k", "d").select(col("k"), col("d").cast("decimal(10,2)")))
+    t.upsert(Seq(("b", BigDecimal("1.2345"))).toDF("k", "d").select(col("k"), col("d").cast("decimal(5,4)")))
+    val out = t.read()
+    assert(out.schema("d").dataType === DecimalType(12, 4))
+    assert(out.orderBy("k").collect().map(_.getDecimal(1)).toSeq ===
+      Seq(new java.math.BigDecimal("12345678.9000"), new java.math.BigDecimal("1.2345")))
   }
 
   test("fullRefresh drops all rows (drop-omnata-task-tables var, ref :19-27)") {
     val t = table()
     t.upsert(Seq(("a", 1, "x")).toDF("k", "v", "note"))
+    val before = t.read()
     t.fullRefresh()
     assert(t.read().count() === 0)
+    assert(t.read().schema.fieldNames.toSeq === Seq("k", "v", "note"))
+    // an empty generation is committed over the live one: a reader that
+    // resolved the table before the refresh still reads its rows
+    assert(before.count() === 1)
   }
 
   test("compact merges accumulated append files, data identical") {
     val t = table()
     (1 to 5).foreach(i => t.append(Seq((s"k$i", i, "x")).toDF("k", "v", "note")))
-    val dataDir = new java.io.File(t.path, "data")
-    def nFiles = dataDir.listFiles().count(_.getName.endsWith(".parquet"))
+    def nFiles = liveDir(t).listFiles().count(_.getName.endsWith(".parquet"))
     assert(nFiles >= 5)
     t.compact()
     assert(nFiles === 1, "small table must compact to one file")
@@ -102,7 +111,7 @@ class TrackingTableSpec extends SparkTestBase {
     def touch(): DataType = { t.createIfMissing(); t.read().schema("v").dataType }
     assert(jobsDuring(assert(touch() === IntegerType)) === 0, "fresh table")
     // a plain reader infers the declared schema of the empty table too
-    assert(spark.read.parquet(s"${t.path}/data").schema.fieldNames.toSeq === Seq("k", "v", "note"))
+    assert(spark.read.parquet(liveDir(t).getPath).schema.fieldNames.toSeq === Seq("k", "v", "note"))
     t.append(Seq(("a", 1, "x")).toDF("k", "v", "note"))
     assert(jobsDuring(assert(touch() === IntegerType)) === 0, "appended table")
     t.append(Seq(("b", 5000000000L, "y")).toDF("k", "v", "note"))
@@ -123,27 +132,43 @@ class TrackingTableSpec extends SparkTestBase {
     assert(t.read().schema === wantSchema)
     assert(t.read().orderBy("k").collect().toSeq === wantRows)
     assert(jobsDuring(t.read()) === 0, "createIfMissing must leave a sidecar behind")
+    assert(!new java.io.File(data).exists, "the adopted data dir must be gone")
+  }
+
+  test("a task table in the data-dir layout is adopted with its sidecar and commit files") {
+    val t = table()
+    val data = new Path(t.path, "data")
+    // the earlier layout: plain part files, the sidecar, and a commit
+    // file that supersedes key b
+    Seq(("a", 1, "x"), ("b", 2, "y")).toDF("k", "v", "note").write.parquet(data.toString)
+    SchemaSidecar.write(spark, data, schema)
+    val commit = tmpDir("commit")
+    Seq(("b", 20, "y2")).toDF("k", "v", "note").coalesce(1).write.mode("overwrite").parquet(commit)
+    val part = new java.io.File(commit).listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part.toPath, new java.io.File(data.toString, TrackingTable.CommitFile.name(1)).toPath)
+    assert(rows(t) === Seq(("a", 1, "x"), ("b", 20, "y2")))
+    t.upsert(Seq(("c", 3, "z")).toDF("k", "v", "note"))
+    assert(rows(t) === Seq(("a", 1, "x"), ("b", 20, "y2"), ("c", 3, "z")))
+    assert(commitFiles(t).size === 2, "the adopted commit file keeps its number")
   }
 
   test("a create staged but never renamed in does not block the next createIfMissing") {
     val t = table()
-    val data = new Path(t.path, "data")
-    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the crash: the staging dir holds a partial create, the rename never ran
-    val staged = AtomicSwap.tmpFor(data)
-    fs.create(new Path(staged, "_common_metadata")).close()
+    // the crash: a stage holds a partial create, its commit never ran
+    val staged = new java.io.File(IndexMaint.newStageDir(t.path, "write"))
+    java.nio.file.Files.createFile(new java.io.File(staged, "_common_metadata").toPath)
     assert(!t.exists)
     t.createIfMissing()
     assert(t.read().schema.fieldNames.toSeq === Seq("k", "v", "note"))
     assert(t.read().count() === 0)
-    assert(!fs.exists(staged), "the staging dir must not outlive the create")
+    assert(!staged.exists, "the staging dir must not outlive the create")
   }
 
   /** The table's data files (not the sidecar, not staged commits), with
     * their modification times.
     */
   private def dataFiles(t: TrackingTable): Map[String, Long] =
-    new java.io.File(t.path, "data").listFiles()
+    liveDir(t).listFiles()
       .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
       .map(f => f.getName -> f.lastModified()).toMap
 
@@ -238,7 +263,7 @@ class TrackingTableSpec extends SparkTestBase {
   test("a commit left staged is invisible to read() and does not block the next commit") {
     val t = table()
     t.upsert(Seq(("a", 1, "x")).toDF("k", "v", "note"))
-    val data = new Path(t.path, "data")
+    val data = new Path(liveDir(t).getPath)
     val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the crash: the next commit's file was written in part, never renamed in
     val staged = new Path(data, s".${TrackingTable.CommitFile.name(2)}.tmp")
@@ -250,5 +275,21 @@ class TrackingTableSpec extends SparkTestBase {
     t.upsert(Seq(("b", 3, "y")).toDF("k", "v", "note"))
     assert(rows(t) === Seq(("a", 2, "x2"), ("b", 3, "y")))
     assert(!fs.exists(staged), "the next commit must replace the staged file")
+  }
+
+  test("concurrent local upserts of distinct keys into one table all land") {
+    val t = table()
+    t.createIfMissing()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val done = (0 until 8).map { w =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = (0 until 3).foreach(i =>
+            t.upsert(Seq((s"w$w-$i", w * 10 + i, "x")).toDF("k", "v", "note")))
+        })
+      }
+      done.foreach(_.get())
+    } finally pool.shutdown()
+    assert(rows(t) === (for (w <- 0 until 8; i <- 0 until 3) yield (s"w$w-$i", w * 10 + i, "x")).sortBy(_._1))
   }
 }
